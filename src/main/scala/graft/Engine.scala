@@ -5,7 +5,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 
 import scala.reflect.ClassTag
-import scala.util.hashing.MurmurHash3
 
 /** Spark-native re-expression of the reference's generic map-reduce harness.
   *
@@ -55,7 +54,14 @@ object Engine {
   /** Sort elements by serialized byte size, then round-robin, so every chunk
     * gets a similar size mix (Simple.pm:133-144). */
   case object VolumeUniform extends ChunkMethod
-  /** Seeded random shuffle then round-robin (Simple.pm:50-58). */
+  /** Seeded random shuffle then round-robin (Simple.pm:50-58), done
+    * without sorting: one job counts each input partition, which gives
+    * every element its global index i and the total N; a seeded keyed
+    * bijection π on [0, N) ([[Scramble]]) then sends element i to chunk
+    * π(i) mod n, and one `partitionBy` deals the elements out. Since π
+    * permutes [0, N), chunk sizes differ by at most 1, exactly as
+    * round-robin over a shuffled list; the assignment depends only on
+    * the input order and the seed. */
   case object ElementShuffle extends ChunkMethod
   /** Deterministic round-robin in input order (Simple.pm:59-65). */
   case object ElementSequential extends ChunkMethod
@@ -68,6 +74,49 @@ object Engine {
 
   private def roundRobin[T: ClassTag](indexed: RDD[(Long, T)], n: Int): RDD[T] =
     indexed.partitionBy(new ModPartitioner(n)).values
+
+  /** Seeded keyed bijection on [0, size): a 4-round balanced Feistel
+    * network over the smallest even bit width whose range covers `size`,
+    * cycle-walked back into range (re-applied while the image is
+    * ≥ `size`; each walk stays on the input's own cycle, so it ends and
+    * the restriction is still a bijection). The range is at most 4×
+    * `size`, so a lookup averages at most 4 walks. The round function is
+    * a splitmix64 finalizer over the half and a seed-derived round key —
+    * pure arithmetic, no allocation per element. */
+  private[graft] final class Scramble(size: Long, seed: Long) extends Serializable {
+    private val half = {
+      var h = 1
+      while (h < 31 && (1L << (2 * h)) < size) h += 1
+      h
+    }
+    private val mask = (1L << half) - 1
+    private val keys = Array.tabulate(4)(r => mix(seed + (r + 1) * 0x9E3779B97F4A7C15L))
+
+    private def mix(x: Long): Long = {
+      var z = x
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+      z ^ (z >>> 31)
+    }
+
+    private def feistel(x: Long): Long = {
+      var l = x >>> half
+      var r = x & mask
+      var k = 0
+      while (k < 4) {
+        val t = l ^ (mix(r ^ keys(k)) & mask)
+        l = r; r = t; k += 1
+      }
+      (l << half) | r
+    }
+
+    def apply(i: Long): Long = {
+      require(i >= 0 && i < size, s"index $i outside [0, $size)")
+      var x = feistel(i)
+      while (x >= size) x = feistel(x)
+      x
+    }
+  }
 
   /** Split `ds` into exactly `n` chunks (= partitions) per `method`.
     * Equivalent of `create_assigned_data` minus the worker-URL pairing,
@@ -83,16 +132,22 @@ object Engine {
         // element i -> chunk i % n, as Simple.pm:60-62.
         roundRobin(ds.rdd.zipWithIndex().map { case (v, i) => (i % n, v) }, n)
       case ElementShuffle =>
-        // Seeded stand-in for List::Util::shuffle (Simple.pm:53): order by a
-        // hash of (index, seed), then round-robin. Deterministic under a
-        // fixed seed, uniformly scrambling like the original.
-        val scrambled = ds.rdd.zipWithIndex()
-          .map { case (v, i) =>
-            (MurmurHash3.productHash((i, seed)).toLong & 0xffffffffL, v) }
-          .sortByKey()
-          .values
-        roundRobin(scrambled.zipWithIndex().map(_.swap).map {
-          case (i, v) => (i % n, v) }, n)
+        // `input` is evaluated twice, by the size job and by the shuffle,
+        // and must yield the same elements both times (as zipWithIndex
+        // also requires); a partition that grew in between fails
+        // Scramble's index check instead of walking forever.
+        val input = ds.rdd
+        val sizes = input.mapPartitions { it =>
+          var c = 0L
+          while (it.hasNext) { it.next(); c += 1 }
+          Iterator.single(c)
+        }.collect()
+        val offsets = sizes.scanLeft(0L)(_ + _)
+        val perm = new Scramble(offsets.last, seed)
+        roundRobin(input.mapPartitionsWithIndex { (p, it) =>
+          var i = offsets(p)
+          it.map { v => val slot = perm(i) % n; i += 1; (slot, v) }
+        }, n)
       case VolumeUniform =>
         // Schwartzian sort by serialized size then round-robin
         // (Simple.pm:133-144); the reference measures MessagePack bytes, we

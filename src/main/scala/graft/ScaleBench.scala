@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BooleanType
@@ -169,7 +170,7 @@ object ScaleBench {
       df.drop("copy").repartition(parts)
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
 
-    val rd = (n: String) => spark.read.parquet(s"$base/$n.parquet")
+    val rd = (n: String) => Tables.load(spark, base, n)
 
     // fixed dimensions: copied once, unchanged
     rd("region").write.mode("overwrite").parquet(s"$out/region.parquet")

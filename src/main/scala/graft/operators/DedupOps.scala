@@ -1474,7 +1474,7 @@ object DedupOps {
     val isBatch = col("doc_id") % IngestMod === IngestRem
     screenBatch(docs, docs.where(isBatch),
       docs.where(!isBatch).select(sha2(col("text"), 256).as("h")).distinct(),
-      s.read.parquet(dedupIndexKeys(s, dir)))
+      Tables.read(s, dedupIndexKeys(s, dir)))
   }
 
   /** d8's screen core against an EXPLICIT index — factored out so the

@@ -513,7 +513,7 @@ object MultimodalOps {
   def m2rImageFeaturesReal(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     imageFeaturesVia(ImageIoCodec)(
-      s.read.parquet(pngBlobs(s, dir))
+      Tables.read(s, pngBlobs(s, dir))
         .select(col("doc_id"), col("blob")).as[(Long, Array[Byte])])
   }
 
@@ -547,7 +547,7 @@ object MultimodalOps {
   def m5rAudioEnergyReal(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     audioEnergyVia(WavPcm)(
-      s.read.parquet(wavBlobs(s, dir))
+      Tables.read(s, wavBlobs(s, dir))
         .select(col("doc_id"), col("blob")).as[(Long, Array[Byte])])
   }
 
@@ -597,7 +597,7 @@ object MultimodalOps {
   def m12rAudioTrimReal(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     audioTrimVia(WavPcm)(
-      s.read.parquet(wavBlobs(s, dir))
+      Tables.read(s, wavBlobs(s, dir))
         .select(col("doc_id"), col("blob")).as[(Long, Array[Byte])])
   }
 

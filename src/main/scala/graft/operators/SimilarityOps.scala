@@ -270,7 +270,7 @@ object SimilarityOps {
       import s.implicits._
       val path = centroidsPath(s, dir, k)
       if (completedTable(path)) {
-        val cs = s.read.parquet(path).orderBy($"cell_id")
+        val cs = Tables.read(s, path).orderBy($"cell_id")
           .select($"c_vec").as[Seq[Double]].collect().map(_.toArray)
         require(cs.length == k,
           s"persisted quantizer at $path holds ${cs.length} centroids, expected $k")
@@ -656,7 +656,7 @@ object SimilarityOps {
       .getOrElse(sys.error("s3: corpus has no vec_id 0"))
     val one = Seq((qid, qv.toSeq)).toDF("query_id", "q_emb")
     val cells = localProbes(qv, centroids, nprobe)
-    val corpus = s.read.parquet(layout)
+    val corpus = Tables.read(s, layout)
       .where($"cell".isInCollection(cells))
       .select($"vec_id".as("neighbor_id"), $"embedding".as("c_emb"))
     val sims = corpus.join(broadcast(one), $"neighbor_id" =!= $"query_id")
@@ -838,7 +838,7 @@ object SimilarityOps {
       import s.implicits._
       val path = pqCodebooksPath(s, dir)
       if (completedTable(path)) {
-        val rows = s.read.parquet(path)
+        val rows = Tables.read(s, path)
           .select($"m", $"code", $"c_vec").as[(Int, Int, Seq[Double])]
           .collect() // M×K rows — bounded by the codebook size, never data
         require(rows.length == PqM * PqK,
@@ -993,7 +993,7 @@ object SimilarityOps {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
     val queries = lutQueryRelation(s, dir)
-    val approx = s.read.parquet(pqCodesTable(s, dir))
+    val approx = Tables.read(s, pqCodesTable(s, dir))
       .select($"vec_id".as("neighbor_id"), $"codes", $"vnorm")
       .join(broadcast(queries), $"neighbor_id" =!= $"query_id")
       .select($"query_id", $"neighbor_id", $"q_emb", adcCos.as("approx_cos"))
@@ -1081,7 +1081,7 @@ object SimilarityOps {
   def s7IvfPq(s: SparkSession, dir: String, k: Int, nprobe: Int): DataFrame = {
     val (probedQueries, cells) = probedQuerySide(s, dir, k, nprobe)
     val approx = codeTableCandidates(s,
-        s.read.parquet(ivfPqTable(s, dir, k)), probedQueries, cells)
+        Tables.read(s, ivfPqTable(s, dir, k)), probedQueries, cells)
       .select(col("query_id"), col("neighbor_id"), col("q_emb"),
         adcCos.as("approx_cos"))
     shortlistRerank(approx, Tables.embeddings(s, dir),
@@ -1120,7 +1120,7 @@ object SimilarityOps {
     val cells = probedQueries.select($"cell".cast("int")).distinct()
       .as[Int].collect().toSeq // bounded by queries × nprobe
     codeTableCandidates(s,
-      s.read.parquet(ivfPqTable(s, dir, k)), probedQueries, cells)
+      Tables.read(s, ivfPqTable(s, dir, k)), probedQueries, cells)
   }
 
   /** The probed-cell ADC candidate join against ANY cell-partitioned

@@ -203,8 +203,13 @@ object GenStore {
     * single read of the generation dir's partitions. */
   private def loadGen(s: SparkSession, path: String, gen: String): DataFrame = {
     val byOwner = ownerMap(path, gen).toSeq.groupBy(_._2)
-    if (byOwner.isEmpty) s.read.parquet(s"$path/$gen")
+    if (byOwner.isEmpty) Tables.read(s, s"$path/$gen")
     else byOwner.toSeq.sortBy(_._1).map { case (owner, dirs) =>
+      // Still inferred per read, the one documented exception to
+      // Tables.read: a multi-path basePath read discovers its partition
+      // columns from a SUBSET of the owner's directories, and no spec
+      // yet proves a schema memoized over that subset's listing equals
+      // the inferred one.
       s.read.option("basePath", s"$path/$owner")
         .parquet(dirs.map { case (d, _) => s"$path/$owner/$d" }: _*)
     }.reduce(_ unionByName _)
@@ -388,7 +393,7 @@ object GenStore {
     val newGen = f"gen-$genNum%06d-p${ProcessHandle.current().pid()}" +
       s"s${stagingSeq.incrementAndGet()}$MaintSuffix"
     fragmented.toSeq.sortBy(_._1).foreach { case (d, o) =>
-      s.read.parquet(s"$path/$o/$d").coalesce(targetFiles)
+      Tables.read(s, s"$path/$o/$d").coalesce(targetFiles)
         .write.mode("overwrite").parquet(s"$path/$newGen/$d")
     }
     carry(path, newGen, owners.filterNot { case (d, _) => fragmented.contains(d) },

@@ -152,7 +152,7 @@ object Layouts {
     * the two named directories are listed and read; at 100 TB that is
     * the difference between scanning ~10% and 100% of the corpus. */
   def src1PartitionPrune(s: SparkSession, dir: String): DataFrame = {
-    val part = s.read.parquet(documentsBySource(s, dir))
+    val part = Tables.read(s, documentsBySource(s, dir))
     part.where(col("source").isInCollection(Seq("src3", "src7")))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("docs"),
@@ -336,7 +336,7 @@ object Layouts {
     // bare-column comparisons (timestamp literals, not unix_micros(ts))
     // so BOTH residual predicates reach the parquet reader as
     // PushedFilters and row-group stats actually skip
-    s.read.parquet(g.path)
+    Tables.read(s, g.path)
       .where(col("zb").isInCollection(cands) &&
         col("user_id") >= u1 && col("user_id") < u2 &&
         col("ts") >= timestamp_micros(lit(t1)) &&
@@ -414,7 +414,7 @@ object Layouts {
     val parts = math.max(1,
       math.ceil(layoutBytes(frag).toDouble / CompactTargetBytes).toInt)
     writeOnce("graft_events_compacted", dir) {
-      s.read.parquet(frag).coalesce(parts)
+      Tables.read(s, frag).coalesce(parts)
     }
   }
 
@@ -426,7 +426,7 @@ object Layouts {
     * from [[FragmentFiles]] to the size-derived target; no shuffle in
     * the rewrite plan). */
   def src4Compaction(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(compactedEvents(s, dir))
+    Tables.read(s, compactedEvents(s, dir))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("events"),
         countDistinct(col("user_id")).as("users"),

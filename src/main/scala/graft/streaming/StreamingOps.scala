@@ -220,7 +220,7 @@ object StreamingOps {
       "graft_st6_sink", dir, "event_type") {
       hourlyTypeCounts(Tables.events(s, dir))
     }
-    s.read.parquet(path).select(
+    Tables.read(s, path).select(
       col("hour_start"), col("event_type"), col("n_events"),
       col("min_value"), col("max_value"))
   }
@@ -386,7 +386,7 @@ object StreamingOps {
       .distinct().collect().map(_.getLong(0)).toSeq // <= UpsertBuckets
     val log =
       if (!exists) batch
-      else s.read.parquet(path)
+      else Tables.read(s, path)
         .where(col("kb").isInCollection(touched)).drop("kb")
         .withColumn("op", lit("i"))
         .unionByName(batch)
@@ -430,7 +430,7 @@ object StreamingOps {
         .foreach(b => upsertBatch(s, p, b))
       p
     })
-    s.read.parquet(path).select(col("o_orderkey"), col("o_custkey"),
+    Tables.read(s, path).select(col("o_orderkey"), col("o_custkey"),
       col("o_orderstatus"), col("o_totalprice"), col("o_orderpriority"))
   }
 
@@ -454,8 +454,8 @@ object StreamingOps {
     val isBatch =
       col("doc_id") % DedupOps.IngestMod === DedupOps.IngestRem
     DedupOps.nearDupHits(docs.where(isBatch),
-        s.read.parquet(DedupOps.dedupIndexKeys(s, dir)),
-        s.read.parquet(DedupOps.dedupIndexShingles(s, dir)), 0.8)
+        Tables.read(s, DedupOps.dedupIndexKeys(s, dir)),
+        Tables.read(s, DedupOps.dedupIndexShingles(s, dir)), 0.8)
       .dropDuplicates("doc_id", "doc_b")
   }
 
@@ -597,8 +597,8 @@ object StreamingOps {
       col("doc_id") % DedupOps.IngestMod === DedupOps.IngestRem
     ingestAttributeSheet(docs.where(isBatch),
       docs.where(!isBatch).select(sha2(col("text"), 256).as("h")).distinct(),
-      s.read.parquet(DedupOps.dedupIndexKeys(s, dir)),
-      s.read.parquet(DedupOps.dedupIndexShingles(s, dir)))
+      Tables.read(s, DedupOps.dedupIndexKeys(s, dir)),
+      Tables.read(s, DedupOps.dedupIndexShingles(s, dir)))
   }
 
   // Oracle: st10's battery subqueries joined to st7's exact CTE and

@@ -106,4 +106,46 @@ class EngineSpec extends SparkSpec with TableDrivenPropertyChecks {
       ds, _.sum, parts => parts.sorted.apply(parts.length / 2))
     assert(got > 0)
   }
+
+  /** `xs` as a Dataset split into `parts` input partitions, order kept. */
+  private def dsOf(xs: Seq[Long], parts: Int) =
+    spark.createDataset(spark.sparkContext.parallelize(xs, parts))
+
+  private def shuffledChunks(xs: Seq[Long], n: Int, parts: Int, seed: Long) =
+    Engine.chunk(dsOf(xs, parts), n, Engine.ElementShuffle, seed)
+      .rdd.glom().collect().map(_.toSeq).toSeq
+
+  // 0, 1, 2, a prime, and both sides of the Feistel domain's 4^k steps
+  private val shuffleSizes = Seq(0, 1, 2, 997, 255, 256, 257, 1023, 1024, 1025)
+
+  test("ElementShuffle's scramble is a bijection on [0, N)") {
+    for (size <- shuffleSizes ++ (3 to 70); seed <- Seq(0L, 42L, -7L)) {
+      val perm = new Engine.Scramble(size, seed)
+      assert((0 until size).map(i => perm(i.toLong)).sorted ===
+        (0 until size).map(_.toLong), s"N=$size seed=$seed")
+    }
+  }
+
+  test("ElementShuffle is an exact partition balanced within 1, on 1 and several input partitions") {
+    for (size <- shuffleSizes; parts <- Seq(1, 5)) {
+      val xs = (0 until size).map(_.toLong)
+      val chunks = shuffledChunks(xs, 7, parts, 42L)
+      assert(chunks.length === 7)
+      assert(chunks.flatten.sorted === xs, s"N=$size parts=$parts")
+      val sizes = chunks.map(_.length)
+      assert(sizes.max - sizes.min <= 1, s"N=$size parts=$parts sizes $sizes")
+    }
+  }
+
+  test("ElementShuffle membership is fixed by the seed and the input order") {
+    val xs = (0 until 997).map(_.toLong)
+    def members(parts: Int, seed: Long) =
+      shuffledChunks(xs, 8, parts, seed).map(_.toSet)
+    val base = members(1, 42L)
+    assert(members(1, 42L) === base, "same seed, same chunks")
+    assert(members(4, 42L) === base, "input partitioning must not matter")
+    assert(members(1, 43L) !== base, "a different seed must deal differently")
+    assert(base !== xs.groupBy(_ % 8).toSeq.sortBy(_._1).map(_._2.toSet),
+      "a shuffle must not deal in input order")
+  }
 }

@@ -12,16 +12,6 @@ import graft.sources.Tables
   * are partition-layout-independent. */
 class TablesFillCoresSpec extends SparkSpec {
 
-  private def withConfs[T](kv: (String, String)*)(f: => T): T = {
-    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("fillCores on: sub-split-size documents gain a doc_id hash repartition; off: plain scan") {
     val on = withConfs("spark.graft.scan.fillCores" -> "true",
         "spark.graft.scan.fillCores.minBytes" -> "1") {
@@ -96,5 +86,26 @@ class TablesFillCoresSpec extends SparkSpec {
           .as[(String, Long)].collect().toSeq.sorted
       }
     assert(rollup(on = true) == rollup(on = false))
+  }
+
+  test("a rewritten documents table is sized from its new listing, not a stale count") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_floor_rewrite").toString
+    def write(docs: Int): Unit = {
+      val rnd = new scala.util.Random(docs)
+      (0 until docs).map(i => (i.toLong, rnd.alphanumeric.take(400).mkString))
+        .toDF("doc_id", "text")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    }
+    def floored: Boolean =
+      withConfs("spark.graft.scan.fillCores" -> "true",
+          "spark.graft.scan.fillCores.minBytes" -> "65536") {
+        Tables.documents(spark, dir).queryExecution.optimizedPlan.toString
+          .contains("RepartitionByExpression")
+      }
+    write(10) // a few KB: below the bar
+    assert(!floored, "a table below minBytes must not be floored")
+    write(2000) // ~600 KB of random text: above the bar
+    assert(floored, "the rewritten, larger table must be sized afresh and floored")
   }
 }
