@@ -1,98 +1,59 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main — runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line with per-query seconds.
   *
-  * Methodology (pinned in round 11 per the verdict's ask): a full warm-up
-  * pass first (session init, parquet footer reads, one-time index/layout
-  * builds, JIT + whole-stage-codegen compilation all land there), then
+  * Methodology (pinned in round 11 per the verdict's ask, shared with
+  * ScaleBench through [[Session.passes]]): a full warm-up pass first, then
   * THREE timed passes reporting the per-query MEDIAN. Without the warm-up
   * the first query absorbs ~4s of startup; the median (vs the old
   * 2-pass min) is robust to a single loaded pass in either direction —
   * r10's two full runs differed by 10% on the min-of-2, which was most of
   * the round-over-round signal. The JSON line is printed as the last
   * stdout line AND written to target/bench.json so the driver can parse
-  * either; the full per-pass times ride in target/bench_passes.json for
-  * noise analysis.
+  * either; the full per-pass times and every failure's cause ride in
+  * target/bench_passes.json for noise analysis.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to the host's cores (the driver pins SPARK_GRAFT_CPUS=32);
-    // a literal would oversubscribe smaller machines.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The warm-up pass's documented job ("JIT + whole-stage-codegen
-      // compilation all land there") silently stopped working once the
-      // surface passed ~100 queries: the JVM-wide generated-class cache
-      // holds 100 entries (spark.sql.codegen.cache.maxEntries, static
-      // conf), and one pass over 158 queries emits several hundred
-      // distinct fragments — by the time a query's timed pass runs, its
-      // warm-up-compiled classes are long evicted and every pass pays
-      // Janino again (measured round 18: ~46 ms mean per compile,
-      // dozens of fragments on the composition queries). 4096 entries
-      // keeps the whole surface's fragments resident so the timed
-      // passes measure steady-state execution, exactly what the
-      // methodology note above promises. Not a local[32]-ism: any
-      // long-lived deployment serving a query fleet wants its codegen
-      // cache sized to the fleet. Env-overridable (default unchanged)
-      // solely so the r19 A/B could quantify this conf's share of the
-      // r18 speedup with everything else held fixed — see
-      // dev/records/bench_codegen_cache_ab_r19.md; the driver never
-      // sets the env. */
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // CacheManager matches canonicalized plans, so a persist() left over
-      // from an earlier pass (or an earlier query — d6 rebuilds d1/d2's
-      // relations) would silently skip the whole candidate-generation
-      // stage. Clear so every timing covers the full operator, cold-cache.
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      // noop write, not count(): under count() ColumnPruning strips every
-      // output column the action doesn't reference, so narrow-map queries
-      // timed as bare scans and k1's aggregation-state blowup was
-      // invisible (found by ScaleBench round 6). The noop sink evaluates
-      // every output column end-to-end with zero driver transfer.
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
+    val runs = Session.passes(SparkEntry.queries.toSeq) { (_, n, fn) =>
+      val outcome = Session.run(spark, n, fn, sfDir)
+      outcome match {
+        case f: Session.Failed => System.err.println(s"[bench] $n $f")
+        case _ =>
+      }
+      outcome
     }
-
-    SparkEntry.queries.foreach { case (n, fn) => once(n, fn) } // warm-up
-    val passes = (1 to 3).map(_ =>
-      SparkEntry.queries.map { case (n, fn) => n -> once(n, fn) })
-    val results = SparkEntry.queries.keys.map { n =>
-      val ts = passes.map(_(n))
-      // any pass failing must surface as -1, not hide behind the
-      // successful passes' times
-      n -> (if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply(ts.size / 2))
-    }.toMap
+    // any pass failing must surface as -1, not hide behind the
+    // successful passes' times
+    val results = runs.map { case (n, os) => n -> Session.median(os).fold(-1.0)(_.totalS) }
+    def secs(o: Session.Outcome): Double = o match {
+      case ok: Session.Ok => ok.totalS
+      case _ => -1.0
+    }
 
     // Millisecond precision: full doubles made the line ~2× longer and the
     // driver's stdout tail-parse has truncated it two rounds running.
     def ms3(v: Double): Double = math.rint(v * 1000) / 1000
+    def obj(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 
-    // per-pass detail for noise analysis (not part of the driver contract)
-    val passesJson = passes.zipWithIndex.map { case (p, i) =>
-      "\"pass" + (i + 1) + "\":" + p.map { case (k, v) => "\"" + k + "\":" + ms3(v) }
-        .mkString("{", ",", "}")
-    }.mkString("{", ",", "}")
+    // per-pass detail for noise analysis (not part of the JSON line),
+    // plus the first timed failure of each failing query
+    val perPass = (0 until Session.TimedPasses).map { i =>
+      s"pass${i + 1}" -> obj(runs.map { case (n, os) => n -> ms3(secs(os(i))).toString })
+    }
+    val errors = runs.flatMap { case (n, os) =>
+      os.collectFirst { case f: Session.Failed => n -> Session.jsonString(f.toString) }
+    }
     Files.createDirectories(Paths.get("target"))
-    Files.writeString(Paths.get("target/bench_passes.json"), passesJson + "\n")
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + ms3(v) }
-      .mkString("{", ",", "}")
+    Files.writeString(Paths.get("target/bench_passes.json"),
+      obj(perPass :+ ("errors" -> obj(errors))) + "\n")
+    val qs = obj(results.map { case (k, v) => k -> ms3(v).toString })
     // Per-query pass-to-pass spread (max−min over the three timed
     // passes): the measured noise floor, recorded so a round-over-round
     // delta can be judged against THIS run's own variability instead of
@@ -101,16 +62,13 @@ object Bench {
     // not regression, when it is within max(2×spread, 0.3 s) of the
     // prior round AND flat-to-better at the 10×/20× scale points; only
     // deltas exceeding both bounds need a root cause.
-    val spread = SparkEntry.queries.keys.map { n =>
-      val ts = passes.map(_(n))
-      n -> (if (ts.exists(_ < 0)) -1.0 else ts.max - ts.min)
-    }.toMap
-    val sp = spread.map { case (k, v) => "\"" + k + "\":" + ms3(v) }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.filter(_ >= 0).sum else 0.0
+    val sp = obj(runs.map { case (n, os) =>
+      val ts = os.map(secs)
+      n -> ms3(if (ts.exists(_ < 0)) -1.0 else ts.max - ts.min).toString
+    })
+    val total = results.values.filter(_ >= 0).sum
     val json =
       s"""{"metric":"total","value":${ms3(total)},"unit":"sec","queries":$qs,"spread":$sp,"sf":"$sfDir"}"""
-    Files.createDirectories(Paths.get("target"))
     Files.writeString(Paths.get("target/bench.json"), json + "\n")
     // The driver's stdout capture keeps only the last ~2 KB; the full
     // per-query line (~2.4 KB at 85+ queries) overflows it, which is

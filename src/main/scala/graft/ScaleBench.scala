@@ -37,8 +37,8 @@ import java.nio.file.{Files, Paths}
   *
   * Output: one JSON line (stdout + target/scale_bench.json) with
   * per-query seconds, output rows, and contract-boolean status.
-  * Methodology matches Bench: full warm-up pass, then two timed passes,
-  * per-query min, cold cache per timed query.
+  * Methodology is Bench's ([[Session.passes]]): full warm-up pass, then
+  * three timed passes, per-query median, cold cache per timed query.
   */
 object ScaleBench {
 
@@ -84,63 +84,45 @@ object ScaleBench {
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       Paths.get("target", s"scale${factor}x").toAbsolutePath.toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fleet-sized codegen class cache — see the note in graft.Bench
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     if (!Files.exists(Paths.get(out, "_SCALE_DONE")))
       build(spark, base, factor, out)
 
-    def once(fn: (SparkSession, String) => DataFrame): (Double, Long, Boolean) = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      try {
-        val df = fn(spark, out)
-        // Timed action = noop write, same as Bench: evaluates every output
-        // column end-to-end (count() would let ColumnPruning strip the
-        // computed columns — it hid k1's per-distinct-user HLL buffers).
-        df.write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        // Contract booleans + row count checked UNTIMED afterwards.
-        val contracts = df.schema.fields
-          .filter(f => f.dataType == BooleanType && ContractCols(f.name))
-          .map(f => min(col(f.name)).as(f.name)) // min(bool): false iff any false
-        val row = df.agg(count(lit(1)).as("n"), contracts.toSeq: _*).head()
-        val ok = (1 until row.length).forall(i => !row.isNullAt(i) && row.getBoolean(i))
-        (sec, row.getLong(0), ok)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          (-1.0, -1L, false)
-      }
+    /** Row count and contract status of a frame the timed run has built. */
+    def check(df: DataFrame): (Long, Boolean) = {
+      val contracts = df.schema.fields
+        .filter(f => f.dataType == BooleanType && ContractCols(f.name))
+        .map(f => min(col(f.name)).as(f.name)) // min(bool): false iff any false
+      val row = df.agg(count(lit(1)).as("n"), contracts.toSeq: _*).head()
+      (row.getLong(0), (1 until row.length).forall(i => !row.isNullAt(i) && row.getBoolean(i)))
     }
 
     // Progress marker per (phase, query) on stderr — when a scale leg
     // dies mid-suite (r19: an 80× executor OOM), the last marker names
     // the culprit; without it the failure is an anonymous stage id.
-    def traced(phase: String)(n: String, fn: (SparkSession, String) => DataFrame)
-        : (Double, Long, Boolean) = {
+    val runs = Session.passes(SparkEntry.queries.toSeq) { (phase, n, fn) =>
       System.err.println(s"[scalebench] $phase $n")
-      once(fn)
+      var built: DataFrame = null
+      val outcome = Session.run(spark, n, fn, out,
+        (name, df) => { built = df; Session.noop(name, df) })
+      outcome match {
+        case f: Session.Failed =>
+          System.err.println(s"[scalebench] $phase $n FAILED $f")
+          (outcome, -1L, false)
+        case _ =>
+          // contract booleans + row count, checked UNTIMED after the run
+          try { val (rows, ok) = check(built); (outcome, rows, ok) }
+          catch { case e: Throwable =>
+            System.err.println(s"[scalebench] $phase $n contract check FAILED " +
+              s"${e.getClass.getName}: ${e.getMessage}")
+            (outcome, -1L, false)
+          }
+      }
     }
-    val qs = SparkEntry.queries
-    qs.foreach { case (n, fn) => traced("warmup")(n, fn) } // warm-up
-    val pass1 = qs.map { case (n, fn) => n -> traced("pass1")(n, fn) }
-    val pass2 = qs.map { case (n, fn) => n -> traced("pass2")(n, fn) }
-    val results = pass1.map { case (n, (t1, rows1, ok1)) =>
-      val (t2, _, ok2) = pass2(n)
-      val t = if (t1 < 0 || t2 < 0) -1.0 else math.min(t1, t2)
-      n -> ((t, rows1, ok1 && ok2))
+    val results = runs.map { case (n, ps) =>
+      n -> ((Session.median(ps.map(_._1)).fold(-1.0)(_.totalS), ps.head._2,
+        ps.forall(_._3)))
     }
 
     val qsJson = results.toSeq.sortBy(_._1).map { case (n, (t, rows, ok)) =>

@@ -1,57 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The scan-parallelism floor (Tables.fillCores) is inactive at the
-      // driver's correctness SF — sf0.01/documents.parquet is 65 KB, under
-      // the 256 KB default minBytes guard — so without this the oracle
-      // would only ever cover the UNfloored plan while the bench times the
-      // floored one (the r18 verification gap). Forcing the byte bar to 1
-      // makes every dump here execute the repartitioned plan end-to-end;
-      // results are layout-independent by spec (TablesFillCoresSpec pins
-      // floor-on == floor-off), and the dump is not timed.
-      .config("spark.graft.scan.fillCores.minBytes", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The scan-parallelism floor (Tables.fillCores) is inactive at the
+    // correctness SF — sf0.01/documents.parquet is 65 KB, under
+    // the 256 KB default minBytes guard — so without this the oracle
+    // would only ever cover the UNfloored plan while the bench times the
+    // floored one (the r18 verification gap). Forcing the byte bar to 1
+    // makes every dump here execute the repartitioned plan end-to-end;
+    // results are layout-independent by spec (TablesFillCoresSpec pins
+    // floor-on == floor-off), and the dump is not timed.
+    val spark = Session.local("spark.graft.scan.fillCores.minBytes" -> "1")
     new java.io.File(outDir).mkdirs()
-    // dev-only: SPARK_GRAFT_ONLY=k5_x,t14_y restricts the dump to named
-    // queries for fast iteration; the driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    // SPARK_GRAFT_ONLY=k5_x,t14_y restricts the dump to named queries for
+    // fast iteration.
+    Session.selectedQueries.foreach { case (name, fn) =>
+      Session.run(spark, name, fn, sfDir,
+        (n, df) => df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$n")) match {
+        case f: Session.Failed => System.err.println(s"[verify] $name failed: $f")
+        case _ =>
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Session.jsonString(k)}: ${Session.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -2677,24 +2677,8 @@ object TextOps {
     * what the old inner-join + LEFT-join + coalesce spelling produced
     * for pred_lang — and conf_micro is the e9 spelling verbatim
     * (best score div greatest(n_tri, 1)). */
-  private[graft] def langSignals(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val profile = langProfileRows(s, dir)
-    val best = bestLangStruct(profileLangs(profile))
-    val docs = Tables.documents(s, dir)
-    docs.select($"doc_id", $"text")
-      .join(profileScores(docs, $"text", Seq($"doc_id"), profile,
-          withNTri = true),
-        Seq("doc_id"), "left")
-      .select($"doc_id", best.getField("c").as("pred_lang"),
-        best.getField("s").as("sc"), $"n_tri", $"text")
-      .select($"doc_id", $"pred_lang",
-        expr("sc div greatest(n_tri, 1)").as("conf_micro"),
-        stopHitsExpr($"pred_lang", $"text").as("stop_hits"),
-        blockHitsExpr($"pred_lang", $"text").as("block_hits"))
-      .withColumn("stop_keep", $"stop_hits" >= LangStopsMinHits)
-      .withColumn("block_keep", $"block_hits" === 0)
-  }
+  private[graft] def langSignals(s: SparkSession, dir: String): DataFrame =
+    langScored(s, dir, withNTri = true)
 
   /** The gate-only relation behind t24, t26 and the e5 sheet — the
     * ORIGINAL inner-join scorer, deliberately NOT a view of
@@ -2704,18 +2688,30 @@ object TextOps {
     * routed the gates through it. Consumers that need conf_micro (the
     * funnel frame) take [[langSignals]]; consumers that don't keep the
     * cheap pass. */
-  private[graft] def langGates(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def langGates(s: SparkSession, dir: String): DataFrame =
+    langScored(s, dir, withNTri = false)
+
+  /** The shared body of [[langSignals]] and [[langGates]]: one profile
+    * scoring pass (its shape chosen by `withNTri`, which also adds
+    * conf_micro), then the common tail — pred_lang → stop/block hit
+    * folds → keep flags. */
+  private def langScored(s: SparkSession, dir: String, withNTri: Boolean): DataFrame = {
     import s.implicits._
     val profile = langProfileRows(s, dir)
     val best = bestLangStruct(profileLangs(profile))
     val docs = Tables.documents(s, dir)
+    val (scoreCols, confCols) =
+      if (withNTri) (Seq(best.getField("s").as("sc"), $"n_tri"),
+        Seq(expr("sc div greatest(n_tri, 1)").as("conf_micro")))
+      else (Nil, Nil)
     docs.select($"doc_id", $"text")
-      .join(profileScores(docs, $"text", Seq($"doc_id"), profile),
+      .join(profileScores(docs, $"text", Seq($"doc_id"), profile, withNTri),
         Seq("doc_id"), "left")
-      .select($"doc_id", best.getField("c").as("pred_lang"), $"text")
-      .select($"doc_id", $"pred_lang",
+      .select(Seq($"doc_id", best.getField("c").as("pred_lang")) ++ scoreCols :+
+        $"text": _*)
+      .select(Seq($"doc_id", $"pred_lang") ++ confCols ++ Seq(
         stopHitsExpr($"pred_lang", $"text").as("stop_hits"),
-        blockHitsExpr($"pred_lang", $"text").as("block_hits"))
+        blockHitsExpr($"pred_lang", $"text").as("block_hits")): _*)
       .withColumn("stop_keep", $"stop_hits" >= LangStopsMinHits)
       .withColumn("block_keep", $"block_hits" === 0)
   }

@@ -1,89 +1,57 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Session
 import java.nio.file.{Files, Paths}
 
-/** Whole-surface stage profiler — [[AnnProfile]]'s build/plan/exec split
-  * generalized to every registered query (round 18's measure-first
-  * instrument, guide §1): after the bench's own warm-up pass, each query's
-  * wall time divides into
+/** Whole-surface stage profiler: after the bench's own warm-up pass, each
+  * query's wall time divides into [[graft.Session.run]]'s three parts —
   *
   *  - `build`: constructing the DataFrame (driver-side memo lookups,
   *    bounded collects inside the operator — trained profiles, centroid
   *    literals, store path resolution);
   *  - `plan`: forcing analysis → optimization → physical planning
   *    (`queryExecution.executedPlan`);
-  *  - `exec`: the noop-sink write minus the above (job time, including
-  *    AQE re-planning, codegen compilation and task scheduling).
+  *  - `exec`: the noop-sink write (job time, including the write's own
+  *    re-planning, AQE, codegen compilation and task scheduling).
   *
-  * Optionally dumps `.explain("formatted")` per query (args: [outDir] for
-  * the plan files; env SPARK_GRAFT_PROFILE_QUERIES to restrict the set).
+  * Prints one JSON line per (pass, query), then each query's median pass
+  * sorted by exec. Optionally dumps `.explain("formatted")` per query
+  * (args: [outDir] for the plan files). `SPARK_GRAFT_ONLY` restricts the
+  * set, e.g. to the ANN tier:
+  * `SPARK_GRAFT_ONLY=s1_cosine_topk,s2_ann_ivf,s5_pq_rerank,s7_ivfpq,s8_ivfpq_upsert_serve`.
   * Dev instrument only — the bench contract lives in [[graft.Bench]]. */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val planDir = args.headOption
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match Bench's codegen-cache sizing so profiles measure the same
-      // steady state the bench times (see the note in graft.Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
+    val qs = Session.selectedQueries.sortBy(_._1)
 
-    val keep = sys.env.get("SPARK_GRAFT_PROFILE_QUERIES")
-      .map(_.split(",").map(_.trim).toSet)
-    val qs: Seq[(String, (SparkSession, String) => DataFrame)] =
-      graft.SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => keep.forall(_.contains(n)) }
-
-    def sec(t0: Long): Double = (System.nanoTime() - t0) / 1e9
     def ms3(v: Double): Double = math.rint(v * 1000) / 1000
-
-    // cold pass: one-time index builds/trains/publishes land here
-    qs.foreach { case (n, fn) =>
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => println(s"""{"stage":"cold","query":"$n","error":"${e.getClass.getSimpleName}"}""") }
-      println(s"""{"stage":"cold","query":"$n","sec":${ms3(sec(t0))}}""")
+    val runs = Session.passes(qs) { (phase, n, fn) =>
+      val outcome = Session.run(spark, n, fn, sfDir)
+      println(outcome match {
+        case Session.Ok(b, p, e) =>
+          s"""{"stage":"$phase","query":"$n","build":${ms3(b)},"plan":${ms3(p)},"exec":${ms3(e)}}"""
+        case f: Session.Failed =>
+          s"""{"stage":"$phase","query":"$n","error":${Session.jsonString(f.toString)}}"""
+      })
+      outcome
     }
-    val agg = scala.collection.mutable.Map.empty[String, (Double, Double, Double)]
-    for (pass <- 1 to 2) {
+    planDir.foreach { d =>
+      Files.createDirectories(Paths.get(d))
       qs.foreach { case (n, fn) =>
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val tBuild = sec(t0)
-        val t1 = System.nanoTime()
-        df.queryExecution.executedPlan
-        val tPlan = sec(t1)
-        val t2 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        val tExec = sec(t2)
-        println(s"""{"stage":"warm$pass","query":"$n","build":${ms3(tBuild)},"plan":${ms3(tPlan)},"exec":${ms3(tExec)},"total":${ms3(tBuild + tPlan + tExec)}}""")
-        if (pass == 2) {
-          agg(n) = (tBuild, tPlan, tExec)
-          planDir.foreach { d =>
-            Files.createDirectories(Paths.get(d))
-            Files.writeString(Paths.get(d, s"$n.txt"),
-              df.queryExecution.explainString(
-                org.apache.spark.sql.execution.FormattedMode))
-          }
-        }
+        Session.run(spark, n, fn, sfDir, (n, df) => Files.writeString(Paths.get(d, s"$n.txt"),
+          df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)))
       }
     }
-    val rows = agg.toSeq.sortBy(-_._2._3)
-    println("==== last-pass summary (sorted by exec desc) ====")
-    rows.foreach { case (n, (b, p, e)) =>
-      println(f"$n%-28s build=${ms3(b)}%7.3f plan=${ms3(p)}%7.3f exec=${ms3(e)}%7.3f")
-    }
+    println("==== median pass per query (sorted by exec desc) ====")
+    runs.toSeq
+      .flatMap { case (n, os) => Session.median(os).map(n -> _) }
+      .sortBy(-_._2.execS)
+      .foreach { case (n, Session.Ok(b, p, e)) =>
+        println(f"$n%-28s build=${ms3(b)}%7.3f plan=${ms3(p)}%7.3f exec=${ms3(e)}%7.3f")
+      }
     spark.stop()
   }
 }

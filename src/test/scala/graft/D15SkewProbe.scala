@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.DedupOps
-import org.apache.spark.sql.SparkSession
 
 /** Dev probe (test scope, never shipped): sizes
   * [[DedupOps.PrefixSwitchRatio]] from measurement (the T21ScaleProbe
@@ -15,23 +14,14 @@ import org.apache.spark.sql.SparkSession
   */
 object D15SkewProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("d15-skew-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     import spark.implicits._
 
-    def time(f: => org.apache.spark.sql.DataFrame): Double = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      f.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def time(f: => org.apache.spark.sql.DataFrame): Double =
+      Session.run(spark, "d15-skew-probe", (_, _) => f, "") match {
+        case ok: Session.Ok => ok.totalS
+        case failed => sys.error(failed.toString)
+      }
 
     def probe(label: String, dir: String): Unit = {
       val (s1, s2) = DedupOps.dfSkewStats(spark, dir)

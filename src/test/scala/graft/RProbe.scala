@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: the dispatch statistic R on the fixture and the ScaleBench
   * replicas — records that content-decorrelated replication keeps R in
   * the naive band (SCALING.md round 16). */
 object RProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val dirs = if (args.nonEmpty) args.toSeq else Seq(
       "/root/testdata/sf0.1", "/root/repo/target/scale10x",
       "/root/repo/target/scale20x", "/root/repo/target/scale80x")

@@ -5,25 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites — one JVM-wide SparkSession (local[4]). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the plan-pinning suites audit the AT-SCALE plan shape; the
-      // small-input parallelism floor (Tables.fillCores, round 18) would
-      // put a Repartition over every fixture scan. TablesFillCoresSpec
-      // covers the floor's own behavior by toggling the conf per-test.
-      .config("spark.graft.scan.fillCores", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4,
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString,
+    // the plan-pinning suites audit the AT-SCALE plan shape; the
+    // small-input parallelism floor (Tables.fillCores, round 18) would
+    // put a Repartition over every fixture scan. TablesFillCoresSpec
+    // covers the floor's own behavior by toggling the conf per-test.
+    "spark.graft.scan.fillCores" -> "false")
 }
 
 abstract class SparkSpec extends AnyFunSuite {

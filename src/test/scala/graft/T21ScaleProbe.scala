@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.SimilarityOps
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
 
 /** Dev probe (test scope, never shipped): times t21's two paths head to
   * head on a scale replica, to size [[SimilarityOps.EvalBroadcastCap]]
@@ -13,23 +12,14 @@ import org.apache.spark.sql.SparkSession
 object T21ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/target/scale80x")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("t21-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val emb = Tables.embeddings(spark, dir)
     println(s"N=${emb.count()}")
-    def time(label: String)(f: => org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val df = f
-      df.write.format("noop").mode("overwrite").save()
-      println(f"$label%-10s ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
+    def time(label: String)(f: => org.apache.spark.sql.DataFrame): Unit =
+      println(Session.run(spark, label, (_, _) => f, dir) match {
+        case ok: Session.Ok => f"$label%-10s ${ok.totalS}%.1f s"
+        case failed => f"$label%-10s $failed"
+      })
     val k = SimilarityOps.ivfK(SimilarityOps.corpusCount(spark, dir))
     val cents = SimilarityOps.centroidsFor(spark, dir, k)
     println(s"k=$k")

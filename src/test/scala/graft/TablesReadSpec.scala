@@ -150,19 +150,7 @@ class TablesReadSpec extends SparkSpec {
     // docs may still name the call.
     val bare = ("""\.read(\s*\.options?\((?:[^()]|\([^()]*\))*\))*\s*""" +
       """(\.parquet\(|\.format\(\s*"parquet"\s*\))""").r
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val walk = java.nio.file.Files.walk(root)
-    val found = try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-        .flatMap { f =>
-          val code = java.nio.file.Files.readString(f)
-            .replaceAll("(?s)/\\*.*?\\*/", "")
-            .replaceAll("//[^\n]*", "")
-          val n = bare.findAllIn(code).length
-          if (n == 0) None else Some(root.relativize(f).toString -> n)
-        }.toMap
-    } finally walk.close()
+    val found = SourceScan.matches(bare, "src/main/scala")
     val allowed = Map(
       // the inference Tables.read itself memoizes
       "graft/sources/Tables.scala" -> 1,
