@@ -74,17 +74,18 @@ object Session {
     override def toString: String = s"$errorClass: $message"
   }
 
-  /** Run one query: clear the cache, then time build, plan and sink.
+  /** Run one query: time build, plan and sink inside one
+    * [[graft.sources.Materialize.scoped]] scope, which owns every relation
+    * the query materializes and releases it when the query ends.
     *
-    * CacheManager matches canonicalized plans, so a persist() left over
-    * from an earlier query (d6 rebuilds d1/d2's relations) would silently
-    * skip a whole stage; the cache is cleared before the query so every
-    * timing covers the full operator, and after it so a long-lived
-    * session does not keep the query's eager materializations. */
+    * CacheManager matches canonicalized plans, so a relation left cached
+    * by an earlier query (d6 rebuilds d1/d2's relations) would silently
+    * skip a whole stage; the scope releases each query's materializations
+    * so every timing covers the full operator, and a long-lived session
+    * does not keep them. */
   def run(spark: SparkSession, name: String, fn: Query, dir: String,
-      sink: Sink = noop): Outcome = {
-    spark.catalog.clearCache()
-    try {
+      sink: Sink = noop): Outcome =
+    try graft.sources.Materialize.scoped {
       val t0 = System.nanoTime()
       val df = fn(spark, dir)
       val t1 = System.nanoTime()
@@ -95,8 +96,7 @@ object Session {
       Ok((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)
     } catch {
       case e: Throwable => Failed(e.getClass.getName, String.valueOf(e.getMessage))
-    } finally spark.catalog.clearCache()
-  }
+    }
 
   /** Timed passes after the warm-up pass. */
   val TimedPasses = 3

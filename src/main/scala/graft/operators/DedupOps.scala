@@ -187,7 +187,7 @@ object DedupOps {
 
   /** Exact Jaccard between two shingle sets — reference implementation of
     * the verify kernel (the operators run the native array_intersect form
-    * in [[verifyPairs]]; specs use this to compute ground truth). The
+    * in [[verifiedSetMetrics]]; specs use this to compute ground truth). The
     * division is long/long in double, bit-identical to the oracle's
     * CAST(c AS DOUBLE)/(na+nb-c). */
   private[graft] def jaccardExact(a: Seq[String], b: Seq[String]): Double = {
@@ -216,57 +216,27 @@ object DedupOps {
     .select(col("p.doc_a"), col("p.doc_b"))
     .dropDuplicates("doc_a", "doc_b")
 
-  /** Exact-Jaccard verify of candidate pairs (doc_a, doc_b) against the
-    * j ≥ threshold contract.
+  /** The ONE exact-verify scaffold behind d2, d3, d6, d7, d8 and the
+    * prefix arms: every set metric of each candidate pair (doc_a, doc_b),
+    * over the candidate relation [[graft.sources.Materialize]]d once.
     *
     * Shuffle discipline: shingle payloads are computed only for candidate
     * ids (small by LSH design) and joined back per pair side — at 100 TB
     * this is the difference between shuffling the corpus ~bands times and
-    * shuffling an id list once. The persist + count() is deliberate (the
-    * same eager materialization MLlib's LSH models use): `pairs` is
-    * referenced three times (verify join ×2 + candidate-id derivation)
-    * and lambda exprIds defeat ReuseExchange, so without it the whole
-    * signature pipeline re-executes per reference; the count also gives
-    * the optimizer real statistics, so the candidate-id join broadcasts
-    * when pairs are small and gracefully shuffles when they are not.
-    * Pairs are (long, long) — linear in corpus and orders of magnitude
-    * smaller than it, safe to cache at any scale.
-    *
-    * Contract notes: building the DataFrame therefore RUNS the candidate
-    * stage eagerly (like fitting an MLlib model), and the cached pair
-    * relation lives until the session ends or `spark.catalog.clearCache()`
-    * — one id-pair relation per operator build, not per query execution. */
-  private def verifyPairs(docs: DataFrame, pairs0: DataFrame,
-                          threshold: Double): DataFrame =
-    verifiedSetMetrics(docs, pairs0)
-      .where(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
-
-  /** The ONE exact-verify scaffold behind [[verifyPairs]] and the
-    * prefix arms: candidate pairs eagerly materialized,
-    * shingling AFTER the candidate filter (computing the sets below the
-    * join would re-shingle the whole corpus once per pair side), |∩| via
-    * native array_intersect over the distinct trigram-hash sets (same
-    * values as over the string sets), every set metric emitted —
-    * long/long division in double, identical to the oracles' formulas.
-    * Consumers filter and project; Catalyst prunes the columns they
-    * drop, so the jaccard-only path pays nothing for the containment
-    * columns. */
-  private def verifiedSetMetrics(docs: DataFrame, pairs0: DataFrame): DataFrame =
-    verifiedSetMetricsOn(docs, eagerPairs(pairs0))
-
-  /** Persist + materialize a candidate-pair relation (the eager half of
-    * [[verifiedSetMetrics]], exposed so the dir-keyed prefix entry
-    * points can memoize THIS relation per corpus fingerprint instead of
-    * pinning a fresh copy per invocation). */
-  private def eagerPairs(pairs0: DataFrame): DataFrame = {
-    val pairs = pairs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
-    pairs
-  }
-
-  /** The verify scaffold over an ALREADY-materialized pair relation. */
-  private def verifiedSetMetricsOn(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    * shuffling an id list once; shingling runs AFTER the candidate filter
+    * (computing the sets below the join would re-shingle the whole corpus
+    * once per pair side). The pair relation is referenced three times
+    * (verify join ×2 + candidate-id derivation), hence the
+    * materialization; its count lets the candidate-id join broadcast when
+    * pairs are small and shuffle when they are not. Pairs are (long, long)
+    * — linear in corpus and orders of magnitude smaller than it, safe to
+    * cache at any scale. |∩| is native array_intersect over the distinct
+    * trigram-hash sets (same values as over the string sets), long/long
+    * division in double, identical to the oracles' formulas. Consumers
+    * filter and project; Catalyst prunes the columns they drop, so the
+    * jaccard-only path pays nothing for the containment columns. */
+  private def verifiedSetMetrics(docs: DataFrame, candidates: DataFrame): DataFrame = {
+    val pairs = graft.sources.Materialize(candidates)
     val candIds = pairs.select(explode(array(col("doc_a"), col("doc_b")))
       .as("doc_id")).distinct()
     val candSh = withShingleHashes(docs.join(candIds, Seq("doc_id")))
@@ -281,53 +251,26 @@ object DedupOps {
           .as("jaccard"))
   }
 
-  /** d2: MinHash-LSH near-duplicate pairs, exact-verified at j ≥ 0.8.
-    * Signatures are one narrow pass over each document (O(n) total);
-    * candidates come from the banded equi-join; only candidates pay the
-    * exact set comparison. This is the 100 TB dedup path.
-    *
-    * UDF-free: trigram sets are the native 64-bit hash arrays of
-    * [[withShingleHashes]] (shared with d4), band keys come from the
-    * codegen'd [[graft.functions.minhashBandKeys]] expression, and the
-    * verify is a native array_intersect — the whole operator stays in
-    * whole-stage codegen. */
   /** MinHash-verified near-dup pairs over an arbitrary (doc_id, text)
-    * relation — the reusable core of d2 and the pipeline operator d6. */
+    * relation — the reusable core of d2 and the pipeline operators d6 and
+    * d7. Building it RUNS the candidate stage (see [[verifiedSetMetrics]]). */
   private def minhashPairs(docs: DataFrame, threshold: Double): DataFrame = {
     val keyed = withShingleHashes(docs).select(col("doc_id"),
       posexplode(graft.functions.minhashBandKeys(
         col("hs"), MinHash.NumHashes, MinHash.Rows)).as(Seq("band", "key")))
-    verifyPairs(docs, bucketPairs(keyed), threshold)
+    verifiedSetMetrics(docs, bucketPairs(keyed))
+      .where(col("jaccard") >= threshold)
+      .select("doc_a", "doc_b", "jaccard")
   }
-
-  /** The verified-pair relation, memoized per (session, corpus
-    * fingerprint, docs variant): constructing it RUNS the candidate +
-    * verify stage eagerly and persists the pairs (see [[verifyPairs]]),
-    * so before this memo every query touching the near-dup machinery —
-    * d2, d6, d7, and each capstone through them — re-ran an identical
-    * LSH pass at build time. A real deployment computes verified pairs
-    * once per corpus snapshot and reuses them downstream (the quantizer
-    * memo's fit-once discipline applied to the dedup tier); the
-    * fingerprint validates the entry, so a corpus rewrite both misses
-    * the memo AND evicts the stale pair relation — its persisted RDD
-    * blocks are released instead of pinning the JVM lifetime. */
-  private val pairMemo =
-    new graft.sources.FingerprintMemo[DataFrame](_.unpersist(false))
-
-  private def minhashPairsFor(s: SparkSession, dir: String, variant: String)
-      (docs: => DataFrame): DataFrame =
-    pairMemo.getOrBuild(s, graft.sources.Layouts.dirTag(dir), variant,
-      graft.sources.Layouts.tableFingerprint(dir, "documents"))(
-      minhashPairs(docs, 0.8))
 
   /** Connected-component labels, memoized per (session, corpus
     * fingerprint, graph variant): the CC iteration runs its actions
     * EAGERLY at build time (one localCheckpoint per propagation round),
     * so an unmemoized caller re-labels an identical graph on every
-    * construction — same fit-once discipline as [[pairMemo]], and the
-    * same fingerprint-validated staleness guard with eviction. */
-  private val ccMemo =
-    new graft.sources.FingerprintMemo[DataFrame](_.unpersist(false))
+    * construction; the fingerprint validates the entry, so a corpus
+    * rewrite rebuilds and replaces it. The labels are checkpointed, not
+    * cached: the ContextCleaner frees a replaced entry's blocks. */
+  private val ccMemo = new graft.sources.FingerprintMemo[DataFrame]
 
   private def ccLabelsFor(s: SparkSession, dir: String, table: String,
       variant: String)(edges: => DataFrame): DataFrame =
@@ -347,8 +290,18 @@ object DedupOps {
       min(col("doc_id")).over(
         Window.partitionBy(sha2(col("text"), 256))).as("canon_id"))
 
+  /** d2: MinHash-LSH near-duplicate pairs, exact-verified at j ≥ 0.8.
+    * Signatures are one narrow pass over each document (O(n) total);
+    * candidates come from the banded equi-join; only candidates pay the
+    * exact set comparison. This is the 100 TB dedup path.
+    *
+    * UDF-free: trigram sets are the native 64-bit hash arrays of
+    * [[withShingleHashes]] (shared with d4), band keys come from the
+    * codegen'd [[graft.functions.minhashBandKeys]] expression, and the
+    * verify is a native array_intersect — the whole operator stays in
+    * whole-stage codegen. */
   def d2MinhashLsh(s: SparkSession, dir: String): DataFrame =
-    minhashPairsFor(s, dir, "full")(Tables.documents(s, dir))
+    minhashPairs(Tables.documents(s, dir), 0.8)
 
   /** The word-trigram shingle relation + per-doc set sizes + the exact
     * shared-shingle pair counts — ONE SQL spelling of the brute-force
@@ -479,7 +432,9 @@ object DedupOps {
           s"p -> bit_count(p.fa ^ p.fb) <= ${HammingMax})))")).as("p"))
       .select(col("p.doc_a"), col("p.doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-    verifyPairs(docs, pairs, 0.8)
+    verifiedSetMetrics(docs, pairs)
+      .where(col("jaccard") >= 0.8)
+      .select("doc_a", "doc_b", "jaccard")
   }
 
   /** Oracle for d3: identical md5-based fingerprints in DuckDB, brute-force
@@ -547,7 +502,7 @@ object DedupOps {
     * filtering (AllPairs/PPJoin: order each doc's trigrams by ascending
     * df; j ≥ t forces a shared trigram within the first n−⌈t·n⌉+1 — join
     * only those prefixes, then exact-verify candidates via
-    * [[verifyPairs]]). Measured here it LOSES ~2× (extra df join + per-doc
+    * [[verifiedSetMetrics]]). Measured here it LOSES ~2× (extra df join + per-doc
     * rank window + verify pass ≈ 4-7s vs 2.5s at sf0.1) because this
     * corpus's max trigram df is 25 — there is no explosion to prevent.
     * Since round 16 the choice is AUTOMATIC (t21's measure-then-guard
@@ -584,8 +539,7 @@ object DedupOps {
     * unbounded quadratic. */
   private[graft] val PrefixSwitchRatio = 32L
 
-  private val dfStatsMemo =
-    new graft.sources.FingerprintMemo[(Long, Long)](_ => ())
+  private val dfStatsMemo = new graft.sources.FingerprintMemo[(Long, Long)]
 
   /** (Σdf, Σdf²) over the corpus trigram-hash df relation — the cheap
     * statistic guarding the d4/d15 prefix dispatch: one scan + one
@@ -679,36 +633,10 @@ object DedupOps {
     * identical by construction (spec-asserted). See SCALING.md. */
   def d4PrefixJaccard(s: SparkSession, dir: String, t: Double = 0.5): DataFrame = {
     val docs = Tables.documents(s, dir)
-    verifiedSetMetricsOn(docs, prefixPairsFor(s, dir, "d4prefix", t.toString)(
-        prefixCandidates(docs, t)))
+    verifiedSetMetrics(docs, prefixCandidates(docs, t))
       .where(col("jaccard") >= t)
       .select("doc_a", "doc_b", "jaccard")
   }
-
-  /** The prefix arms' materialized candidate-pair relation, memoized per
-    * (corpus fingerprint, FAMILY) — one pinned (long, long) relation per
-    * corpus snapshot instead of one per invocation (the pairMemo
-    * discipline applied to the dir-keyed prefix entry points; a corpus
-    * rewrite misses the memo and unpersists the stale relation).
-    * private[graft]: the spec asserts the one-entry-per-family bound. */
-  private[graft] val prefixPairMemo =
-    new graft.sources.FingerprintMemo[DataFrame](_.unpersist(false))
-
-  /** τ rides the VALIDITY TOKEN, not the memo key: the public prefix
-    * entry points take caller-supplied thresholds, and keying the memo
-    * by `family:τ` pinned one MEMORY_AND_DISK pair relation per distinct
-    * τ for the snapshot's lifetime with no eviction bound (ADVICE r16).
-    * Folding τ into the fingerprint token instead means a second τ for
-    * the same (dir, family) MISSES, rebuilds, and EVICTS (unpersists)
-    * the first through the memo's evict-on-roll path — at most one live
-    * pair relation per (dir, family), whatever τ sequence callers use;
-    * the dispatch-default τ path re-hits as long as no other τ
-    * intervened. */
-  private def prefixPairsFor(s: SparkSession, dir: String, family: String,
-      tauTag: String)(pairs0: => DataFrame): DataFrame =
-    prefixPairMemo.getOrBuild(s, graft.sources.Layouts.dirTag(dir), family,
-      graft.sources.Layouts.tableFingerprint(dir, "documents") + "|" + tauTag)(
-      eagerPairs(pairs0))
 
   /** [[d4PrefixJaccard]]'s candidate stage, exposed so the skew spec can
     * assert the claim the switch exists for: one stopword-grade trigram
@@ -805,8 +733,7 @@ object DedupOps {
   def d15PrefixContainment(s: SparkSession, dir: String,
       tau: Double = ContainTau): DataFrame = {
     val docs = Tables.documents(s, dir)
-    verifiedSetMetricsOn(docs, prefixPairsFor(s, dir, "d15prefix", tau.toString)(
-        containPrefixCandidates(docs, tau)))
+    verifiedSetMetrics(docs, containPrefixCandidates(docs, tau))
       .where(greatest(col("cont_a"), col("cont_b")) >= tau)
   }
 
@@ -920,9 +847,10 @@ object DedupOps {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
     // single-pass bucket candidates (same shuffle discipline as
-    // verifyPairs: one codegen'd banding pass, id-only exchange, native
-    // pair-gen)
-    val pairs = emb
+    // verifiedSetMetrics: one codegen'd banding pass, id-only exchange,
+    // native pair-gen), materialized: the tiny pair relation feeds both
+    // verify joins and the candidate ids, so the hyperplane pass runs once
+    val pairs = graft.sources.Materialize(emb
       .select($"vec_id", posexplode(graft.functions.signLshBandKeys(
         $"embedding", SignLsh.NumBands, SignLsh.BandBits, SignLsh.Dim, SignLsh.Seed))
         .as(Seq("band", "key")))
@@ -934,11 +862,7 @@ object DedupOps {
           "transform(slice(ids, i + 2, size(ids) - i - 1), " +
           "y -> struct(x AS vec_a, y AS vec_b))))")).as("p"))
       .select($"p.vec_a", $"p.vec_b")
-      .dropDuplicates("vec_a", "vec_b")
-      // see verifiedPairs: multi-referenced tiny relation, eagerly cached
-      // so the hyperplane pass runs once and the optimizer sees real stats
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
+      .dropDuplicates("vec_a", "vec_b"))
     val candIds = pairs.select(explode(array($"vec_a", $"vec_b")).as("vec_id")).distinct()
     val candEmb = emb.join(candIds, Seq("vec_id"))
     pairs
@@ -1022,7 +946,7 @@ object DedupOps {
     val flagged = withCanonId(Tables.documents(s, dir))
       .withColumn("canon", col("doc_id") === col("canon_id"))
     val canonical = flagged.where(col("canon")).select("doc_id", "text")
-    val dropB = minhashPairsFor(s, dir, "canonical")(canonical)
+    val dropB = minhashPairs(canonical, 0.8)
       .select(col("doc_b").as("doc_id")).distinct()
     flagged.select(col("doc_id"), col("canon"))
       .join(dropB.withColumn("neardup", lit(true)), Seq("doc_id"), "left")
@@ -1236,9 +1160,9 @@ object DedupOps {
     val flagged = withCanonId(Tables.documents(s, dir))
     val canonical = flagged.where(col("doc_id") === col("canon_id"))
       .select("doc_id", "text")
-    // the canonical pair set is d6's — one shared memoized relation
+    // the canonical pair set is d6's
     val labels = ccLabelsFor(s, dir, "documents", "canonical-minhash")(
-      minhashPairsFor(s, dir, "canonical")(canonical))
+      minhashPairs(canonical, 0.8))
     flagged.select(col("doc_id"), col("canon_id"))
       .join(labels.withColumnRenamed("node", "canon_id"), Seq("canon_id"), "left")
       .select(col("doc_id"),
@@ -1494,7 +1418,8 @@ object DedupOps {
         Seq("band", "key"))
       .select(col("doc_id").as("doc_a"), col("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-    val nearHits = verifyPairs(docs, candidates, 0.8)
+    val nearHits = verifiedSetMetrics(docs, candidates)
+      .where(col("jaccard") >= 0.8)
       .select(col("doc_a").as("doc_id")).distinct()
       .withColumn("dup_near", lit(true))
 

@@ -778,17 +778,14 @@ object MultimodalOps {
     *
     * The sheet is consumed THREE times — [[imagePairsOf]]'s small- and
     * big-bucket branches (the r12 degenerate-bucket guard split it into
-    * two filters of one relation) plus the final degree join. Persist
-    * the tiny (id, 4×int16) relation eagerly (the d5 verifiedPairs
-    * discipline) so payload bytes are read and fingerprinted ONCE per
-    * corpus pass instead of once per consumer — at a billion blobs the
-    * payload re-scan is the whole cost; the sheet is ~36 B/row at any
-    * scale. */
+    * two filters of one relation) plus the final degree join.
+    * Materialize the tiny (id, 4×int16) relation so payload bytes are
+    * read and fingerprinted ONCE per corpus pass instead of once per
+    * consumer — at a billion blobs the payload re-scan is the whole
+    * cost; the sheet is ~36 B/row at any scale. */
   private[graft] def neardupDegreesOf(sheet: DataFrame): DataFrame = {
     import sheet.sparkSession.implicits._
-    val hashed = sheet
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hashed.count()
+    val hashed = graft.sources.Materialize(sheet)
     // explode, not a union of two selections — a union plans the whole
     // pair machinery twice; exploded endpoints keep it a single subtree
     val degree = imagePairsOf(hashed)
@@ -1331,22 +1328,18 @@ object MultimodalOps {
   private[graft] def videoNeardupOf(
       blobs: org.apache.spark.sql.Dataset[(Long, Array[Byte])]): DataFrame = {
     import blobs.sparkSession.implicits._
-    val sheet = shotSheetOf(blobs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sheet.count()
+    val sheet = graft.sources.Materialize(shotSheetOf(blobs))
     val gated = sheet.where($"n_frames" >= ShotMinFrames)
       .select(($"doc_id" * ShotKeyBase + $"shot_id").as("doc_id"),
         $"b0", $"b1", $"b2", $"b3")
     // packed-key order is (doc, shot) lexicographic, so doc_a < doc_b
     // on keys ⇒ da <= db; the da ≠ db filter leaves da < db pairs only
-    val sp = imagePairsOf(gated)
+    val sp = graft.sources.Materialize(imagePairsOf(gated)
       .select(expr(s"doc_a div ${ShotKeyBase}L").as("da"),
         pmod($"doc_a".cast("long"), lit(ShotKeyBase)).as("sa"),
         expr(s"doc_b div ${ShotKeyBase}L").as("db"),
         pmod($"doc_b".cast("long"), lit(ShotKeyBase)).as("sb"))
-      .where($"da" =!= $"db")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sp.count()
+      .where($"da" =!= $"db"))
     val matched = sp
       .select(explode(array(struct($"da".as("d"), $"sa".as("s")),
         struct($"db".as("d"), $"sb".as("s")))).as("x"))

@@ -543,11 +543,11 @@ object PipelineOps {
     * map-side-combined argmax over the ONE embeddings scan), one
     * documents scan pruned to (doc_id, token count) at the scan, one
     * vec_id equi-join between them — the (vec_id, cluster, t) relation
-    * is persisted eagerly (20-byte rows; both the k-row supply aggregate
-    * and the final output read it, and without the persist the N·k
-    * assignment subtree would plan TWICE — the k5b discipline). The
-    * plan itself is k rows: aggregate broadcast, scalar min attached as
-    * a broadcast 1-row cross join (p3's device), draw a narrow map.
+    * is materialized (20-byte rows; both the k-row supply aggregate and
+    * the final output read it, and without it the N·k assignment
+    * subtree would plan TWICE). The plan itself is k rows: aggregate
+    * broadcast, scalar min attached as a broadcast 1-row cross join
+    * (p3's device), draw a narrow map.
     * Nothing downstream of the aggregate scales with data. */
   def e8TopicMix(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -567,9 +567,7 @@ object PipelineOps {
     val toks = Tables.documents(s, dir)
       .select($"doc_id".as("vec_id"),
         size(split($"text", " ")).cast("long").as("t"))
-    val withT = assign.join(toks, Seq("vec_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    withT.count()
+    val withT = graft.sources.Materialize(assign.join(toks, Seq("vec_id")))
     val perC = withT.groupBy($"cluster")
       .agg(sum($"t").as("cluster_tokens"), count(lit(1)).as("cluster_docs"))
     val plan = perC
@@ -726,9 +724,9 @@ object PipelineOps {
     * (token counts + the sha2-window exact bit, e6's device), one
     * broadcast-profile scoring scan, and id-width joins. The CASE fold
     * and the (≤ stages+1)-row kill aggregate collapse map-side; the tiny
-    * per-stage relation is persisted eagerly (k5b discipline) so the
-    * totals row and the funnel arithmetic both read ONE aggregate, and
-    * every window downstream runs over ≤ |stages| rows. */
+    * per-stage relation is materialized so the totals row and the
+    * funnel arithmetic both read ONE aggregate, and every window
+    * downstream runs over ≤ |stages| rows. */
   /** First-failing-stage index over the signal frame's columns under an
     * arbitrary ruleset; NULL = the doc survives the whole funnel
     * (shared by e9, e10's cut, and e11's two-ruleset diff). */
@@ -746,10 +744,8 @@ object PipelineOps {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val f = e9SignalFrame(s, dir)
-    val perStage = f.select(killStageCol.as("ks"), $"n_toks")
-      .groupBy($"ks").agg(count(lit(1)).as("kd"), sum($"n_toks").as("kt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    perStage.count()
+    val perStage = graft.sources.Materialize(f.select(killStageCol.as("ks"), $"n_toks")
+      .groupBy($"ks").agg(count(lit(1)).as("kd"), sum($"n_toks").as("kt")))
     val skel = funnelStages.zipWithIndex
       .map { case ((n, _, _), i) => (i, n) }.toDF("stage_idx", "stage")
     val before = Window.orderBy($"stage_idx")
@@ -1021,8 +1017,8 @@ object PipelineOps {
   private[graft] def rulesetTagOf(
       stages: Seq[(String, org.apache.spark.sql.Column, String)]): String =
     java.security.MessageDigest.getInstance("MD5")
-      .digest((e9FrameCtesSql + " " + killCaseSqlOf(stages) + " " +
-        e5Sql + " " + SamplingOps.p8Sql)
+      .digest((e9FrameCtesSql + "\u0000" + killCaseSqlOf(stages) + "\u0000" +
+        e5Sql + "\u0000" + SamplingOps.p8Sql)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString.take(8)
 

@@ -572,7 +572,7 @@ object SamplingOps {
         s"f${graft.sources.Layouts.tableFingerprint(dir, "documents")}_" +
         graft.sources.Layouts.dirTag(dir)).toAbsolutePath.toString
 
-  private val dsirMemo = new graft.sources.FingerprintMemo[Array[Long]](_ => ())
+  private val dsirMemo = new graft.sources.FingerprintMemo[Array[Long]]
 
   /** Dense ratio vector (length [[TextOps.ClfBuckets]], neutral-filled)
     * for `dir`'s corpus — trained once per corpus fingerprint,
@@ -669,9 +669,9 @@ object SamplingOps {
   def p7EpochPlan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // both the totals and the plan read the S-row supply relation:
-    // persist it eagerly (the k5b discipline) so the corpus-touching
-    // aggregate runs ONCE, not once per consumer
-    val perSrc = Tables.documents(s, dir)
+    // materialize it so the corpus-touching aggregate runs ONCE, not
+    // once per consumer
+    val perSrc = graft.sources.Materialize(Tables.documents(s, dir)
       .select($"source", size(split($"text", " ")).cast("long").as("t"))
       .groupBy($"source").agg(sum($"t").as("tokens"))
       // digit-free source names carry an explicit default suffix of 0
@@ -680,9 +680,7 @@ object SamplingOps {
       // throws (ADVICE r13); TRY_CAST below mirrors the non-ANSI CAST
       .withColumn("raw",
         lit(1L) + pmod(coalesce(regexp_extract($"source", "(\\d+)", 1)
-          .cast("long"), lit(0L)), lit(4L)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    perSrc.count()
+          .cast("long"), lit(0L)), lit(4L))))
     val tot = perSrc.agg(sum($"tokens").as("tt"), sum($"raw").as("ww"))
     perSrc.crossJoin(broadcast(tot))
       .select($"source", $"tokens",
@@ -751,21 +749,18 @@ object SamplingOps {
     * is recomputed independently by BOTH engines from the corpus.
     *
     * Scale shape: one corpus scan collapsing map-side to |languages|
-    * rows (persisted eagerly — the k5b discipline — so the trainer's
-    * collect and the registered output consume ONE aggregate), the two
-    * scalars attached as broadcast 1-row cross joins (p3's device), then
-    * narrow arithmetic. The micro-unit product `tokens * 10⁶` bounds the
+    * rows (materialized, so the trainer's collect and the registered
+    * output consume ONE aggregate), the two scalars attached as
+    * broadcast 1-row cross joins (p3's device), then narrow arithmetic. The micro-unit product `tokens * 10⁶` bounds the
     * per-language supply at ~9.2×10¹² tokens before BIGINT overflow; a
     * 100 TB deployment respells that one product over DECIMAL(38,0)
     * (Spark decimal ≡ DuckDB HUGEINT, both exact). */
   def p9TemperatureMix(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val perLang = Tables.documents(s, dir)
+    val perLang = graft.sources.Materialize(Tables.documents(s, dir)
       .select($"lang", size(split($"text", " ")).cast("long").as("t"))
       .groupBy($"lang").agg(sum($"t").as("tokens"))
-      .where($"tokens" > 0L)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    perLang.count()
+      .where($"tokens" > 0L))
     val weights = alphaWeightsMicro(
       perLang.collect().map(r => r.getString(0) -> r.getLong(1)))
     graft.sources.TrainedOracle.publish("p9_temperature_mix", p9SqlFor(weights))

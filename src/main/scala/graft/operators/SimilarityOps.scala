@@ -1682,8 +1682,9 @@ object SimilarityOps {
     val isEval = $"vec_id" % graft.operators.TextOps.DecontMod === 0
     val ev = emb.where(isEval)
       .select($"vec_id".as("ev_id"), $"embedding".as("ev_emb"))
-    val evCells = assignCells(ev, "ev_id", "ev_emb", centroids)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // materialized: the radius aggregate below and the candidate join
+    // both read the cell-assigned eval slice
+    val evCells = graft.sources.Materialize(assignCells(ev, "ev_id", "ev_emb", centroids))
     val clamp = (c: Column) => greatest(lit(-1.0), least(lit(1.0), c))
     // the centroid is an arbitrary reference point — float-rounding it
     // is sound because the radius AND the query bounds both use the

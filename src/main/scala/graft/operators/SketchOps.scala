@@ -424,12 +424,10 @@ object SketchOps {
     * `matches` against [[sourceOverlap]]'s. */
   private[graft] def signatureOverlap(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
-    // both pair-join sides read the signature relation: persist the
-    // S-row (source, n, 128 longs) result eagerly (the d5/m6 discipline)
-    // so the corpus-touching gram pass runs ONCE, not once per side
-    val perSrc = perSourceSig(gramSets(docs))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    perSrc.count()
+    // both pair-join sides read the signature relation: materialize the
+    // S-row (source, n, 128 longs) result so the corpus-touching gram
+    // pass runs ONCE, not once per side
+    val perSrc = graft.sources.Materialize(perSourceSig(gramSets(docs)))
     val a = perSrc.select($"source".as("source_a"), $"n".as("n_a"), $"sig".as("sig_a"))
     val b = perSrc.select($"source".as("source_b"), $"n".as("n_b"), $"sig".as("sig_b"))
     a.join(broadcast(b), $"source_a" < $"source_b")

@@ -279,8 +279,7 @@ object TextOps {
         s"f${graft.sources.Layouts.tableFingerprint(dir, "documents")}_" +
         graft.sources.Layouts.dirTag(dir)).toAbsolutePath.toString
 
-  private val profileMemo =
-    new graft.sources.FingerprintMemo[Seq[(String, String, Long)]](_ => ())
+  private val profileMemo = new graft.sources.FingerprintMemo[Seq[(String, String, Long)]]
 
   /** Collected profile rows for `dir` — trained once per corpus
     * fingerprint, persisted, memoized; the collect is bounded by
@@ -775,7 +774,7 @@ object TextOps {
         s"f${graft.sources.Layouts.tableFingerprint(dir, "documents")}_" +
         graft.sources.Layouts.dirTag(dir)).toAbsolutePath.toString
 
-  private val t4cMemo = new graft.sources.FingerprintMemo[Seq[String]](_ => ())
+  private val t4cMemo = new graft.sources.FingerprintMemo[Seq[String]]
 
   /** The LEARNED vocabulary for `dir`'s corpus — trained once per corpus
     * fingerprint (driver loop under [[DriverBpeTypeCap]] word types,
@@ -1851,8 +1850,8 @@ object TextOps {
     * PUBLISHED atomically under target/ as a 9-row table; a warm
     * process — and a warm JVM through the in-process memo — pays zero
     * corpus-scan jobs to serve t13. */
-  private val bm25Memo = new graft.sources.FingerprintMemo[
-    (Seq[(Int, String, Long)], Long, Long)](_ => ())
+  private val bm25Memo =
+    new graft.sources.FingerprintMemo[(Seq[(Int, String, Long)], Long, Long)]
 
   private def bm25QuerySide(s: SparkSession, dir: String)
       : (Seq[(Int, String, Long)], Long, Long) =
@@ -2323,13 +2322,12 @@ object TextOps {
     // WHOLE scoring subtree (bigram explode + model join + per-doc
     // aggregate) once per reference: r19's plan audit found the duplicate
     // pair of scoring exchanges in every e5-sheet consumer (e5–e7,
-    // e9–e11, p8). Persisting the narrow (doc_id, lang, score_micro)
-    // relation computes the scoring once per query. Eager count, k5b
-    // discipline; the decompressed-stats broadcast-flip lesson
-    // (Tables.fillCores) does not apply — three thin columns, and the
-    // only join consuming this relation is an explicit broadcast(cuts).
-    val scored = scoredIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    scored.count()
+    // e9–e11, p8). Materializing the narrow (doc_id, lang, score_micro)
+    // relation computes the scoring once per query; the
+    // decompressed-stats broadcast-flip lesson (Tables.fillCores) does
+    // not apply — three thin columns, and the only join consuming this
+    // relation is an explicit broadcast(cuts).
+    val scored = graft.sources.Materialize(scoredIn)
     val hist = scored.groupBy($"lang", $"score_micro")
       .agg(count(lit(1)).as("c"))
     val classes = hist
@@ -2521,7 +2519,7 @@ object TextOps {
         s"f${graft.sources.Layouts.tableFingerprint(dir, "documents")}_" +
         graft.sources.Layouts.dirTag(dir)).toAbsolutePath.toString
 
-  private val clfMemo = new graft.sources.FingerprintMemo[Array[Long]](_ => ())
+  private val clfMemo = new graft.sources.FingerprintMemo[Array[Long]]
 
   /** Dense weight vector (length [[ClfBuckets]]) for `dir`'s corpus —
     * trained once per corpus fingerprint, persisted, memoized per JVM.

@@ -8,19 +8,20 @@ import org.apache.spark.sql.SparkSession
   * the old corpus can never be served again — which also means keeping
   * it is a pure leak: before this class, the dedup/BM25 memos keyed on
   * the fingerprint itself, so a corpus regeneration mid-process left the
-  * stale entry (and its persisted candidate-pair RDDs / localCheckpoint
-  * blocks) pinned for the JVM lifetime. A lookup whose fingerprint
-  * differs from the stored entry's rebuilds, REPLACES the entry, and
-  * releases the stale value through `onEvict` — at most one live entry
-  * per (session, tag, variant).
+  * stale entry pinned for the JVM lifetime. A lookup whose fingerprint
+  * differs from the stored entry's rebuilds and REPLACES the entry — at
+  * most one live entry per (session, tag, variant). Values hold nothing
+  * that needs an explicit release: driver-side arrays and scalars, or
+  * localCheckpointed frames whose blocks the ContextCleaner frees once
+  * the replaced entry is unreachable. Cached relations belong to a query
+  * scope ([[Materialize]]), never to a memo.
   *
   * Concurrency: the decision section is serialized (builds are rare —
   * once per corpus snapshot), but the build itself runs outside the
   * lock so Spark jobs never execute under it; if two threads race the
-  * same build, the loser's freshly built value is released through
-  * `onEvict` and the winner's is served to both.
+  * same build, the winner's value is served to both.
   */
-private[graft] final class FingerprintMemo[V](onEvict: V => Unit) {
+private[graft] final class FingerprintMemo[V] {
   private val m = scala.collection.mutable.Map
     .empty[(SparkSession, String, String), (String, V)]
 
@@ -33,20 +34,14 @@ private[graft] final class FingerprintMemo[V](onEvict: V => Unit) {
         val built = build
         m.synchronized {
           // a stopped session's entries can never be served again either
-          // — purge them so the memo cannot pin dead SparkSessions (no
-          // onEvict: unpersist needs the very context that is gone)
+          // — purge them so the memo cannot pin dead SparkSessions
           m.filterInPlace { case ((sess, _, _), _) =>
             (sess eq s) || !sess.sparkContext.isStopped
           }
           m.get(key) match {
-            case Some((f, v)) if f == fingerprint =>
-              // a racer installed the same snapshot first — serve its
-              // value and release the duplicate we just built
-              onEvict(built); v
-            case stale =>
-              stale.foreach { case (_, v) => onEvict(v) }
-              m.put(key, (fingerprint, built))
-              built
+            // a racer installed the same snapshot first — serve its value
+            case Some((f, v)) if f == fingerprint => v
+            case _ => m.put(key, (fingerprint, built)); built
           }
         }
     }

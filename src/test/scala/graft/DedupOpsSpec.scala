@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.DedupOps
+import graft.sources.Materialize
 import org.apache.spark.sql.functions._
 
 class DedupOpsSpec extends SparkSpec {
@@ -223,14 +224,20 @@ class DedupOpsSpec extends SparkSpec {
     assert(d4 === rows(DedupOps.d4InvertedJaccard(spark, dir)))
     assert(d4.map(r => (r.getLong(0), r.getLong(1))).contains((5L, n.toLong)))
 
-    // the prefix arm's candidate relation is memoized per corpus
-    // fingerprint: repeated invocations pin NO additional relations
-    val persisted = spark.sparkContext.getPersistentRDDs.size
-    DedupOps.d15PrefixContainment(spark, dir).count()
-    DedupOps.d15PrefixContainment(spark, dir).count()
-    DedupOps.d4PrefixJaccard(spark, dir).count()
-    assert(spark.sparkContext.getPersistentRDDs.size === persisted,
-      "re-invoking the prefix arms must reuse the memoized pair relation")
+    // re-invoking the prefix arms reuses the pair relations this test's
+    // scope already cached; a new τ caches its own, which the nested
+    // scope releases: afterwards the session is back at baseline
+    val (rdds0, cached0) = (persistedRdds, cachedEntries)
+    Materialize.scoped {
+      DedupOps.d15PrefixContainment(spark, dir).count()
+      DedupOps.d4PrefixJaccard(spark, dir).count()
+      assert(cachedEntries === cached0, "re-invocations must reuse the cached pairs")
+      DedupOps.d15PrefixContainment(spark, dir, 0.8).count()
+      assert(cachedEntries === cached0 + 1)
+    }
+    assert(cachedEntries === cached0,
+      "the scope must release the pair relation it cached, and only that one")
+    assert(persistedRdds.subsetOf(rdds0))
   }
 
   test("dfSkewStats: decimal Σdf² is exact vs a BigInt replay (the overflow-proof path)") {
@@ -247,7 +254,7 @@ class DedupOpsSpec extends SparkSpec {
       "Σdf² must be exact — the decimal aggregate may not round or wrap")
   }
 
-  test("prefix pair memo: a second τ for the same family EVICTS the first — one live relation per (dir, family), no per-τ pinning") {
+  test("d4 prefix arm at three thresholds in one scope pins nothing after it exits") {
     val docs = (0 until 60).map { i =>
       (i.toLong, s"hot stop word u${i}a u${i}b u${i}c u${i}d")
     } :+ (60L, "hot stop word u5a u5b u5c u5d")
@@ -255,26 +262,15 @@ class DedupOpsSpec extends SparkSpec {
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
 
-    val persisted0 = spark.sparkContext.getPersistentRDDs.size
-    val memo0 = DedupOps.prefixPairMemo.size
-    DedupOps.d4PrefixJaccard(spark, dir, 0.45).count()
-    val persisted1 = spark.sparkContext.getPersistentRDDs.size
-    // distinct τ values for the same (dir, family): each MISSES on the
-    // validity token and unpersists its predecessor, so the pinned-RDD
-    // count never exceeds the first build's (ADVICE r16 — before this,
-    // every τ pinned its own MEMORY_AND_DISK relation for the corpus
-    // snapshot's lifetime)
-    DedupOps.d4PrefixJaccard(spark, dir, 0.55).count()
-    DedupOps.d4PrefixJaccard(spark, dir, 0.65).count()
-    assert(spark.sparkContext.getPersistentRDDs.size === persisted1,
-      "each new τ must evict (unpersist) the previous τ's pair relation")
-    assert(DedupOps.prefixPairMemo.size === memo0 + 1,
-      "the memo holds ONE entry per (dir, family), never one per τ")
-    assert(persisted1 === persisted0 + 1)
-    // and the default-τ dispatch path still re-hits (no rebuild churn):
-    // same τ twice adds nothing
-    DedupOps.d4PrefixJaccard(spark, dir, 0.65).count()
-    assert(spark.sparkContext.getPersistentRDDs.size === persisted1)
+    // every τ caches its own candidate pairs; the scope that owns the
+    // queries releases all of them, whatever τ sequence callers use
+    val (rdds0, cached0) = (persistedRdds, cachedEntries)
+    Materialize.scoped {
+      for (t <- Seq(0.45, 0.55, 0.65)) DedupOps.d4PrefixJaccard(spark, dir, t).count()
+      assert(cachedEntries === cached0 + 3, "one pair relation per τ, inside the scope")
+    }
+    assert(cachedEntries === cached0, "no pair relation may outlive its scope")
+    assert(persistedRdds.subsetOf(rdds0), "no cached RDD may outlive its scope")
   }
 
   test("d15: prefix-filter variant is output-identical on the sf0.001 corpus; output superset of symmetric j>=0.9 pairs") {

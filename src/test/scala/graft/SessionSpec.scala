@@ -1,6 +1,10 @@
 package graft
 
+import graft.operators.DedupOps
+import graft.sources.Materialize
 import org.apache.spark.sql.functions.{lit, raise_error}
+import org.apache.spark.storage.StorageLevel
+import org.scalatest.funsuite.AnyFunSuite
 
 /** `graft.Session`: the one session factory and the one query runner. */
 class SessionSpec extends SparkSpec {
@@ -36,8 +40,7 @@ class SessionSpec extends SparkSpec {
   test("a good query returns non-negative build, plan and exec times and leaves no cached relation") {
     var rows = -1L
     val out = Session.run(spark, "q1_agg", (s, d) => {
-      val base = graft.operators.ReferenceQueries.q1Agg(s, d).persist()
-      base.count() // an eager materialization, as several operators do
+      val base = Materialize(graft.operators.ReferenceQueries.q1Agg(s, d))
       base.limit(5)
     }, sf, (_, df) => rows = df.count())
     out match {
@@ -72,5 +75,92 @@ class SessionSpec extends SparkSpec {
     assert(SourceScan.matches(builder, "src/main/scala") ===
       Map("graft/Session.scala" -> 1), msg)
     assert(SourceScan.matches(builder, "src/test/scala") === Map.empty, msg)
+  }
+
+  test("every registered query leaves the CacheManager empty after Session.run") {
+    assert(spark.sharedState.cacheManager.isEmpty)
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val out = Session.run(spark, name, fn, sf)
+      assert(out.isInstanceOf[Session.Ok], s"$name: $out")
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left a cached relation")
+    }
+  }
+
+  test("a scope releases what it materialized; a nested scope releases only its own") {
+    val base = cachedEntries
+    Materialize.scoped {
+      val outer = Materialize(spark.range(50).selectExpr("id * 3 AS x"))
+      assert(outer.storageLevel === StorageLevel.MEMORY_AND_DISK)
+      Materialize.scoped {
+        Materialize(spark.range(50).selectExpr("id * 5 AS y"))
+        // the outer scope's plan again: reused, not re-owned
+        Materialize(spark.range(50).selectExpr("id * 3 AS x"))
+        assert(cachedEntries === base + 2)
+      }
+      assert(cachedEntries === base + 1, "the inner scope releases its own relation")
+      assert(outer.storageLevel === StorageLevel.MEMORY_AND_DISK,
+        "the outer scope's relation outlives the inner scope")
+    }
+    assert(cachedEntries === base)
+  }
+
+  test("a scope whose body throws still releases what it materialized") {
+    val base = cachedEntries
+    val e = intercept[IllegalStateException](Materialize.scoped {
+      Materialize(spark.range(50).selectExpr("id * 11 AS z"))
+      assert(cachedEntries === base + 1)
+      throw new IllegalStateException("boom in scope")
+    })
+    assert(e.getMessage === "boom in scope")
+    assert(cachedEntries === base)
+  }
+
+  test("two d2 builds around a corpus rewrite in one scope leave nothing cached after it") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_d2_rewrite").toString
+    def write(tag: String): Unit = (0 until 40).map { i =>
+      (i.toLong, s"$tag common words here u${i % 20}a u${i % 20}b u${i % 20}c")
+    }.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val (rdds0, cached0) = (persistedRdds, cachedEntries)
+    Materialize.scoped {
+      write("alpha")
+      assert(DedupOps.d2MinhashLsh(spark, dir).count() > 0)
+      write("beta gamma")
+      assert(DedupOps.d2MinhashLsh(spark, dir).count() > 0)
+      assert(cachedEntries > cached0)
+    }
+    // both builds' candidate pairs belong to the scope, the first one's
+    // too, although the rewrite made it unreachable from any later query
+    assert(cachedEntries === cached0, "no candidate-pair relation may outlive its scope")
+    assert(persistedRdds.subsetOf(rdds0), "no cached RDD may outlive its scope")
+  }
+
+  test("eager persists go through Materialize; nothing in src/main clears the whole cache") {
+    assert(SourceScan.matches("""\.persist\(""".r, "src/main/scala") === Map(
+      "graft/sources/Materialize.scala" -> 1,
+      // self-releasing try/finally persists: k3, k5, t4c's BPE counts, CC
+      "graft/operators/SketchOps.scala" -> 2,
+      "graft/operators/TextOps.scala" -> 1,
+      "graft/operators/DedupOps.scala" -> 1),
+      "materialize through graft.sources.Materialize, which a query scope releases")
+    assert(SourceScan.matches("clearCache".r, "src/main/scala") === Map.empty,
+      "a query releases what it owns through its Materialize scope")
+  }
+}
+
+/** [[Materialize]] with no scope open: the path a harness that calls the
+  * operators directly takes. Not a [[SparkSpec]], whose tests each run in
+  * a scope. */
+class MaterializeUnscopedSpec extends AnyFunSuite {
+  test("Materialize outside any scope returns a cached, already computed frame") {
+    val spark = TestSpark.spark
+    val df = Materialize(spark.range(50).selectExpr("id * 13 AS w"))
+    try {
+      assert(df.storageLevel === StorageLevel.MEMORY_AND_DISK)
+      assert(spark.sparkContext.getRDDStorageInfo.exists(_.numCachedPartitions > 0),
+        "the count must have filled the cache")
+      assert(df.count() === 50)
+    } finally df.unpersist(blocking = true)
+    assert(df.storageLevel === StorageLevel.NONE)
   }
 }

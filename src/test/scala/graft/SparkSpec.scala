@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites — one JVM-wide SparkSession (local[4]). */
@@ -18,6 +19,22 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Each test owns what it materializes: the scope releases it when the
+    * test ends, so the JVM-wide session does not collect cached relations
+    * across the suites. */
+  override def withFixture(test: NoArgTest): Outcome =
+    graft.sources.Materialize.scoped(super.withFixture(test))
+
+  /** Relations the CacheManager holds (`numCachedEntries` is private[sql]
+    * in Scala, a public method in bytecode). */
+  protected def cachedEntries: Int = {
+    val cm = spark.sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
+
+  /** Ids of the RDDs the session keeps persisted (cached or checkpointed). */
+  protected def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   /** Run `f` with session confs set, restoring the previous values. */
   protected def withConfs[T](kv: (String, String)*)(f: => T): T = {
