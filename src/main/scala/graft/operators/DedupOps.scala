@@ -274,9 +274,8 @@ object DedupOps {
 
   private def ccLabelsFor(s: SparkSession, dir: String, table: String,
       variant: String)(edges: => DataFrame): DataFrame =
-    ccMemo.getOrBuild(s,
-      graft.sources.Layouts.dirTag(dir) + "#" + table, variant,
-      graft.sources.Layouts.tableFingerprint(dir, table))(
+    ccMemo.getOrBuild(s, dir + "#" + table, variant,
+      Tables.tablesId(s, dir, table))(
       connectedComponents(edges))
 
   /** `(doc_id, text, canon_id)` with canon_id = the exact-dup group's
@@ -547,8 +546,8 @@ object DedupOps {
     * fingerprint (shared by d4 and d15 at every τ, priced once per
     * corpus snapshot — the quantizer-memo discipline). */
   private[graft] def dfSkewStats(s: SparkSession, dir: String): (Long, Long) =
-    dfStatsMemo.getOrBuild(s, graft.sources.Layouts.dirTag(dir), "dfstats",
-      graft.sources.Layouts.tableFingerprint(dir, "documents")) {
+    dfStatsMemo.getOrBuild(s, dir, "dfstats",
+        Tables.tablesId(s, dir, "documents")) {
       dfSkewStatsOf(withShingleHashes(Tables.documents(s, dir)))
     }
 
@@ -1290,7 +1289,7 @@ object DedupOps {
   private[graft] val IngestRem = 7
 
   /** Path of the PERSISTED dedup index: the standing corpus's (doc_id,
-    * band, key) MinHash band keys, written once per (dir, JVM),
+    * band, key) MinHash band keys, written once per corpus state,
     * partitioned by band — the structure a production dedup service
     * maintains between ingests so each new batch probes an index instead
     * of re-scanning the corpus. Deterministic content (seeded minhash),
@@ -1303,8 +1302,8 @@ object DedupOps {
         col("hs"), MinHash.NumHashes, MinHash.Rows)).as(Seq("band", "key")))
 
   private[graft] def dedupIndexKeys(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.writeOncePartitioned(
-      "graft_dedup_index_keys", dir, "band") {
+    graft.sources.Layouts.writeOncePartitioned(s,
+      "graft_dedup_index_keys", dir, "band", "documents") {
       bandKeysOf(Tables.documents(s, dir)
         .where(!(col("doc_id") % IngestMod === IngestRem)))
     }
@@ -1342,7 +1341,8 @@ object DedupOps {
     * pay the exact-Jaccard check against these stored sets instead of
     * re-shingling corpus text. Same write-once discipline as the keys. */
   private[graft] def dedupIndexShingles(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.writeOnce("graft_dedup_index_shingles", dir) {
+    graft.sources.Layouts.writeOnce(s, "graft_dedup_index_shingles", dir,
+        "documents") {
       withShingleHashes(Tables.documents(s, dir)
         .where(!(col("doc_id") % IngestMod === IngestRem)))
         .select(col("doc_id"), col("hs"))

@@ -489,10 +489,10 @@ object MultimodalOps {
 
   /** Write-once REAL media fixtures: every doc's text bytes re-encoded as
     * an actual PNG / WAV container (the encoders are the same JDK codecs
-    * the queries then decode with). One corpus pass each, per (dir, JVM),
+    * the queries then decode with). One corpus pass each, per corpus state,
     * like every other one-time layout build. */
   private def pngBlobs(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.writeOnce("graft_png_blobs", dir) {
+    graft.sources.Layouts.writeOnce(s, "graft_png_blobs", dir, "documents") {
       import s.implicits._
       withBlob(s, dir).select(col("doc_id"), col("blob")).as[(Long, Array[Byte])]
         .mapPartitions(_.map { case (id, b) => (id, pngStrip(b)) })
@@ -500,7 +500,7 @@ object MultimodalOps {
     }
 
   private def wavBlobs(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.writeOnce("graft_wav_blobs", dir) {
+    graft.sources.Layouts.writeOnce(s, "graft_wav_blobs", dir, "documents") {
       import s.implicits._
       withBlob(s, dir).select(col("doc_id"), col("blob")).as[(Long, Array[Byte])]
         .mapPartitions(_.map { case (id, b) => (id, wavContainer(b)) })

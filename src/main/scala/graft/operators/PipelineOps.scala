@@ -934,7 +934,7 @@ object PipelineOps {
         $"stage" * SamplingOps.PackShards + $"shard")
   }
 
-  private val cutStores = scala.collection.concurrent.TrieMap.empty[String, String]
+  private val cutStores = new graft.sources.FingerprintMemo[String]
 
   /** The committed release-cut store (fingerprint-named root, built once
     * per corpus snapshot): the cut relation folded through
@@ -946,11 +946,11 @@ object PipelineOps {
     * compact, and a racing builder's lost claim is the winner doing
     * identical work (deterministic content per fingerprint). */
   /** FingerprintMemo's evict-on-roll discipline applied to the committed
-    * cut roots (ADVICE r16): building a snapshot's root deletes the dead
-    * sibling roots a previous corpus fingerprint committed for the SAME
-    * (prefix, dirTag) — and drops their [[cutStores]] entries — because
-    * without the sweep every corpus regeneration in a long-lived
-    * deployment leaks a full release-cut copy on disk. Scoped to the
+    * cut roots on disk (ADVICE r16): building a snapshot's root deletes
+    * the dead sibling roots a previous corpus fingerprint committed for
+    * the SAME (prefix, dirTag) — the memo replaces its own entry on the
+    * roll — because without the sweep every corpus regeneration in a
+    * long-lived deployment leaks a full release-cut copy on disk. Scoped to the
     * exact prefix + `_dirTag` suffix (dirTag is a fixed-width md5 tag),
     * so roots of other corpora, dirs, or store families are never
     * touched; the sweep runs before the new root is built, so a crash
@@ -966,11 +966,9 @@ object PipelineOps {
         val n = p.getFileName.toString
         n != keepName && n.startsWith(prefix) && n.endsWith("_" + dirTag)
       }.foreach { p =>
-        cutStores.remove(p.toAbsolutePath.toString)
-        // two builders can race this sweep (the TrieMap's
-        // getOrElseUpdate body is not atomic — e10 and e11 both build
-        // roots): a sibling the other thread already deleted mid-walk
-        // surfaces as an IO error here, and losing that race is as
+        // two builders can race this sweep (the memo's build runs outside
+        // its lock — e10 and e11 both build roots): a sibling the other
+        // thread already deleted mid-walk surfaces as an IO error here, and losing that race is as
         // good as winning it — the condemned root is gone either way
         try graft.sources.Layouts.deleteRecursively(p)
         catch {
@@ -1026,10 +1024,11 @@ object PipelineOps {
       stages: Seq[(String, org.apache.spark.sql.Column, String)]): String = {
     import graft.sources.{GenStore, Layouts}
     val dirTag = Layouts.dirTag(dir)
-    val name = s"graft_release_cut_v${ver}_r${rulesetTagOf(stages)}_" +
-      s"f${Layouts.tableFingerprint(dir, "documents")}_$dirTag"
-    val path = java.nio.file.Paths.get("target", name).toAbsolutePath.toString
-    cutStores.getOrElseUpdate(path, {
+    val path = Layouts.artifactPath(s,
+      s"graft_release_cut_v${ver}_r${rulesetTagOf(stages)}", dir, "documents")
+    val name = java.nio.file.Paths.get(path).getFileName.toString
+    // one live root per (version, dir), as the sweep keeps on disk
+    cutStores.getOrBuild(s, dir, s"v$ver", path) {
       sweepStaleCutRoots(s"graft_release_cut_v${ver}_", dirTag, name)
       sweepStaleCutRoots("graft_release_cut_f", dirTag, name)
       def tolerateRace(body: => Unit): Unit =
@@ -1041,7 +1040,7 @@ object PipelineOps {
       tolerateRace(GenStore.compact(s, path, targetFiles = 1, maxFiles = 4,
         mode = GenStore.Manifest))
       path
-    })
+    }
   }
 
   private[graft] def releaseCutStore(s: SparkSession, dir: String): String =

@@ -566,24 +566,21 @@ object SamplingOps {
           s" div (((cn * $DsirMicro) div tn) + 1)").as("r"))
   }
 
-  private[graft] def dsirModelPath(dir: String): String =
-    java.nio.file.Paths.get("target",
-      s"graft_dsir_v${DsirVersion}_d${TextOps.ClfBuckets}_" +
-        s"f${graft.sources.Layouts.tableFingerprint(dir, "documents")}_" +
-        graft.sources.Layouts.dirTag(dir)).toAbsolutePath.toString
+  private[graft] def dsirModelPath(s: SparkSession, dir: String): String =
+    graft.sources.Layouts.artifactPath(s,
+      s"graft_dsir_v${DsirVersion}_d${TextOps.ClfBuckets}", dir, "documents")
 
   private val dsirMemo = new graft.sources.FingerprintMemo[Array[Long]]
 
   /** Dense ratio vector (length [[TextOps.ClfBuckets]], neutral-filled)
     * for `dir`'s corpus — trained once per corpus fingerprint,
-    * persisted, memoized per JVM (t18's clfWeightVector discipline; the
+    * persisted, memoized per session (t18's clfWeightVector discipline; the
     * collect is D-bounded — the model IS the collected artifact). Fails
     * loudly on an empty training relation. */
-  private def dsirRatioVector(s: SparkSession, dir: String): Array[Long] =
-    dsirMemo.getOrBuild(s, graft.sources.Layouts.dirTag(dir), "",
-      graft.sources.Layouts.tableFingerprint(dir, "documents")) {
+  private def dsirRatioVector(s: SparkSession, dir: String): Array[Long] = {
+    val path = dsirModelPath(s, dir)
+    dsirMemo.getOrBuild(s, dir, "", path) {
         import s.implicits._
-        val path = dsirModelPath(dir)
         if (!graft.sources.Layouts.completedTable(path)) {
           val rdf = dsirRatiosOf(Tables.documents(s, dir))
           graft.sources.Layouts.publishAtomically(rdf, path, files = 1)
@@ -596,6 +593,7 @@ object SamplingOps {
         rows.foreach { case (b, v) => r(b.toInt) = v }
         r
       }
+  }
 
   private val p6Sql = {
     import graft.sources.Hash60

@@ -273,11 +273,9 @@ object TextOps {
       .select($"lang", $"g", expr("(c * 1000000L) div tot").as("w"))
   }
 
-  private[graft] def langProfilePath(dir: String): String =
-    java.nio.file.Paths.get("target",
-      s"graft_t2b_profiles_v${ProfileVersion}_m${ProfileTopM}_" +
-        s"f${graft.sources.Layouts.tableFingerprint(dir, "documents")}_" +
-        graft.sources.Layouts.dirTag(dir)).toAbsolutePath.toString
+  private[graft] def langProfilePath(s: SparkSession, dir: String): String =
+    graft.sources.Layouts.artifactPath(s,
+      s"graft_t2b_profiles_v${ProfileVersion}_m${ProfileTopM}", dir, "documents")
 
   private val profileMemo = new graft.sources.FingerprintMemo[Seq[(String, String, Long)]]
 
@@ -285,11 +283,10 @@ object TextOps {
     * fingerprint, persisted, memoized; the collect is bounded by
     * langs × [[ProfileTopM]]. Fails loudly on an unlabeled/empty
     * reference slice. */
-  private[graft] def langProfileRows(s: SparkSession, dir: String): Seq[(String, String, Long)] =
-    profileMemo.getOrBuild(s, graft.sources.Layouts.dirTag(dir), "",
-      graft.sources.Layouts.tableFingerprint(dir, "documents")) {
+  private[graft] def langProfileRows(s: SparkSession, dir: String): Seq[(String, String, Long)] = {
+    val path = langProfilePath(s, dir)
+    profileMemo.getOrBuild(s, dir, "", path) {
         import s.implicits._
-        val path = langProfilePath(dir)
         if (!graft.sources.Layouts.completedTable(path)) {
           graft.sources.Layouts.publishAtomically(
             langProfilesOf(Tables.documents(s, dir)), path, files = 1)
@@ -301,6 +298,7 @@ object TextOps {
           s"t2b: reference slice at $dir trained an empty profile")
         rows
       }
+  }
 
   // The trained-profile CTEs ([[langProfilesOf]]'s SQL half: corpus
   // trigram stream, reference-slice counts, top-M micro-unit weights) —
@@ -768,11 +766,9 @@ object TextOps {
     pieces.result().distinct
   }
 
-  private[graft] def t4cVocabPath(dir: String): String =
-    java.nio.file.Paths.get("target",
-      s"graft_t4c_vocab_v${BpeTrainVersion}_n${BpeMerges}_" +
-        s"f${graft.sources.Layouts.tableFingerprint(dir, "documents")}_" +
-        graft.sources.Layouts.dirTag(dir)).toAbsolutePath.toString
+  private[graft] def t4cVocabPath(s: SparkSession, dir: String): String =
+    graft.sources.Layouts.artifactPath(s,
+      s"graft_t4c_vocab_v${BpeTrainVersion}_n${BpeMerges}", dir, "documents")
 
   private val t4cMemo = new graft.sources.FingerprintMemo[Seq[String]]
 
@@ -781,11 +777,10 @@ object TextOps {
     * distributed loop past it), persisted as a (rank, piece) table, and
     * memoized. Content is deterministic per corpus (exact counts,
     * lexicographic tie-break), so load ≡ retrain. */
-  private[graft] def learnedBpeVocab(s: SparkSession, dir: String): Seq[String] =
-    t4cMemo.getOrBuild(s, graft.sources.Layouts.dirTag(dir), "",
-      graft.sources.Layouts.tableFingerprint(dir, "documents")) {
+  private[graft] def learnedBpeVocab(s: SparkSession, dir: String): Seq[String] = {
+    val path = t4cVocabPath(s, dir)
+    t4cMemo.getOrBuild(s, dir, "", path) {
         import s.implicits._
-        val path = t4cVocabPath(dir)
         if (!graft.sources.Layouts.completedTable(path)) {
           val wc = Tables.documents(s, dir)
             .select(explode(regexp_extract_all(
@@ -808,6 +803,7 @@ object TextOps {
           s"t4c: corpus at $dir learned an empty merge vocabulary")
         rows.map(_._2).toSeq
       }
+  }
 
   /** t4c: BPE vocabulary TRAINING — the half t4b consumes: the Sennrich
     * merge loop learns the corpus' own subword vocabulary, persists it
@@ -1124,11 +1120,9 @@ object TextOps {
     * fingerprint-named, so a regenerated corpus rolls the name and can
     * never be scored against a stale model (the
     * [[SimilarityOps.centroidsPath]] discipline applied to the LM). */
-  private[graft] def lmModelPath(dir: String): String =
-    java.nio.file.Paths.get("target",
-      s"graft_bigram_lm_v${LmVersion}_" +
-        s"f${graft.sources.Layouts.tableFingerprint(dir, "documents")}_" +
-        graft.sources.Layouts.dirTag(dir)).toAbsolutePath.toString
+  private[graft] def lmModelPath(s: SparkSession, dir: String): String =
+    graft.sources.Layouts.artifactPath(s,
+      s"graft_bigram_lm_v${LmVersion}", dir, "documents")
 
   /** The TRAINED bigram model `(ch, bh, pq)`: per distinct bigram, its
     * micro-unit conditional probability p(w2|w1) quantized in PURE
@@ -1149,21 +1143,19 @@ object TextOps {
     * attach context totals — the model relation is vocab²-bounded,
     * far smaller than the corpus. */
   private[graft] def lmModel(s: SparkSession, dir: String): DataFrame =
-    lmModelAt(s, lmModelPath(dir), Tables.documents(s, dir))
+    lmModelAt(s, lmModelPath(s, dir), Tables.documents(s, dir))
 
   /** The reference-slice model for [[t15RefLmScore]]: identical
     * training formula over ONLY the held-out slice (doc_id %
     * [[DecontMod]] == 0 — t10's convention), persisted under its own
     * fingerprint-named path. */
   private[graft] def refLmModel(s: SparkSession, dir: String): DataFrame =
-    lmModelAt(s, refLmModelPath(dir),
+    lmModelAt(s, refLmModelPath(s, dir),
       Tables.documents(s, dir).where(col("doc_id") % DecontMod === 0))
 
-  private[graft] def refLmModelPath(dir: String): String =
-    java.nio.file.Paths.get("target",
-      s"graft_ref_bigram_lm_v${LmVersion}_" +
-        s"f${graft.sources.Layouts.tableFingerprint(dir, "documents")}_" +
-        graft.sources.Layouts.dirTag(dir)).toAbsolutePath.toString
+  private[graft] def refLmModelPath(s: SparkSession, dir: String): String =
+    graft.sources.Layouts.artifactPath(s,
+      s"graft_ref_bigram_lm_v${LmVersion}", dir, "documents")
 
   // `train` is BY-NAME: the corpus relation must not even be resolved on
   // the warm path (building it reads parquet footers — a Spark job the
@@ -1835,11 +1827,9 @@ object TextOps {
   /** Path of the persisted BM25 query-side stats for `dir`'s documents
     * corpus — fingerprint-named like [[lmModelPath]], so a regenerated
     * corpus rolls the name and can never serve stale retrieval stats. */
-  private[graft] def bm25StatsPath(dir: String): String =
-    java.nio.file.Paths.get("target",
-      s"graft_bm25_stats_v${Bm25Version}_" +
-        s"f${graft.sources.Layouts.tableFingerprint(dir, "documents")}_" +
-        graft.sources.Layouts.dirTag(dir)).toAbsolutePath.toString
+  private[graft] def bm25StatsPath(s: SparkSession, dir: String): String =
+    graft.sources.Layouts.artifactPath(s,
+      s"graft_bm25_stats_v${Bm25Version}", dir, "documents")
 
   /** Driver-side retrieval scalars, persisted per corpus fingerprint
     * (the [[lmModel]] discipline applied to the query side): the 9
@@ -1854,11 +1844,10 @@ object TextOps {
     new graft.sources.FingerprintMemo[(Seq[(Int, String, Long)], Long, Long)]
 
   private def bm25QuerySide(s: SparkSession, dir: String)
-      : (Seq[(Int, String, Long)], Long, Long) =
-    bm25Memo.getOrBuild(s, graft.sources.Layouts.dirTag(dir), "",
-      graft.sources.Layouts.tableFingerprint(dir, "documents")) {
+      : (Seq[(Int, String, Long)], Long, Long) = {
+    val path = bm25StatsPath(s, dir)
+    bm25Memo.getOrBuild(s, dir, "", path) {
         import s.implicits._
-        val path = bm25StatsPath(dir)
         if (!graft.sources.Layouts.completedTable(path)) {
           val docs = Tables.documents(s, dir)
           val row = docs.agg(count(lit(1)), sum(size(words($"text"))),
@@ -1897,6 +1886,7 @@ object TextOps {
             s"maxdl=$maxdl, avgdl=$avgdl) — rescale the idf quantum")
         (rows.map(r => (r._1, r._2, r._3)).toSeq, n, avgdl)
       }
+  }
 
   /** t13: BM25 top-k retrieval over the corpus — the search primitive a
     * curation pipeline runs for targeted decontamination and corpus
@@ -2513,24 +2503,21 @@ object TextOps {
           .as("w"))
   }
 
-  private[graft] def clfModelPath(dir: String): String =
-    java.nio.file.Paths.get("target",
-      s"graft_clf_v${ClfVersion}_d${ClfBuckets}_" +
-        s"f${graft.sources.Layouts.tableFingerprint(dir, "documents")}_" +
-        graft.sources.Layouts.dirTag(dir)).toAbsolutePath.toString
+  private[graft] def clfModelPath(s: SparkSession, dir: String): String =
+    graft.sources.Layouts.artifactPath(s,
+      s"graft_clf_v${ClfVersion}_d${ClfBuckets}", dir, "documents")
 
   private val clfMemo = new graft.sources.FingerprintMemo[Array[Long]]
 
   /** Dense weight vector (length [[ClfBuckets]]) for `dir`'s corpus —
-    * trained once per corpus fingerprint, persisted, memoized per JVM.
+    * trained once per corpus fingerprint, persisted, memoized per session.
     * The collect is D-bounded (the model IS the collected artifact —
     * the bm25QuerySide precedent). Fails loudly on an empty slice: a
     * classifier trained on nothing must not silently score zeros. */
-  private def clfWeightVector(s: SparkSession, dir: String): Array[Long] =
-    clfMemo.getOrBuild(s, graft.sources.Layouts.dirTag(dir), "",
-      graft.sources.Layouts.tableFingerprint(dir, "documents")) {
+  private def clfWeightVector(s: SparkSession, dir: String): Array[Long] = {
+    val path = clfModelPath(s, dir)
+    clfMemo.getOrBuild(s, dir, "", path) {
         import s.implicits._
-        val path = clfModelPath(dir)
         if (!graft.sources.Layouts.completedTable(path)) {
           val wdf = classifierWeightsOf(Tables.documents(s, dir))
           graft.sources.Layouts.publishAtomically(wdf, path, files = 1)
@@ -2543,6 +2530,7 @@ object TextOps {
         rows.foreach { case (b, v) => w(b.toInt) = v }
         w
       }
+  }
 
   /** t16's rule battery + t18's classifier verdict fused as ONE narrow
     * projection over ONE documents scan (round 19, guide §2.4): both

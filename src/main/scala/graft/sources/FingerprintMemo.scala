@@ -2,19 +2,21 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-/** In-process memo keyed by (session, location tag, variant) whose
-  * entries are VALIDATED by a corpus fingerprint. The fingerprint rolls
-  * whenever the underlying table is rewritten, so an entry built against
-  * the old corpus can never be served again — which also means keeping
-  * it is a pure leak: before this class, the dedup/BM25 memos keyed on
-  * the fingerprint itself, so a corpus regeneration mid-process left the
-  * stale entry pinned for the JVM lifetime. A lookup whose fingerprint
-  * differs from the stored entry's rebuilds and REPLACES the entry — at
-  * most one live entry per (session, tag, variant). Values hold nothing
-  * that needs an explicit release: driver-side arrays and scalars, or
-  * localCheckpointed frames whose blocks the ContextCleaner frees once
-  * the replaced entry is unreachable. Cached relations belong to a query
-  * scope ([[Materialize]]), never to a memo.
+/** The one driver-side memo: entries keyed by (session, location tag,
+  * variant) and VALIDATED by a fingerprint derived from
+  * [[Tables.fingerprint]] — the listing id itself, or an artifact path
+  * named by it ([[Layouts.artifactPath]]). The fingerprint rolls whenever
+  * an underlying table is rewritten, so an entry built against the old
+  * files is never served again; a lookup whose fingerprint differs from
+  * the stored entry's rebuilds and REPLACES the entry — at most one live
+  * entry per (session, tag, variant), so a long-lived session neither
+  * serves stale state nor collects one entry per corpus state. Entries
+  * of stopped sessions are purged on the next build. A spec simulates a
+  * fresh process with `spark.newSession()`. Values hold nothing that
+  * needs an explicit release: driver-side arrays and scalars, artifact
+  * paths, or localCheckpointed frames whose blocks the ContextCleaner
+  * frees once the replaced entry is unreachable. Cached relations belong
+  * to a query scope ([[Materialize]]), never to a memo.
   *
   * Concurrency: the decision section is serialized (builds are rare —
   * once per corpus snapshot), but the build itself runs outside the

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Partitioned storage layouts as a first-class, oracle-checked query
@@ -11,44 +11,55 @@ import org.apache.spark.sql.functions._
   * partitioned by a routing column (source/date/language) so that
   * single-slice queries read only their slice — the scan's
   * `PartitionFilters` replace a full-corpus filter. [[documentsBySource]]
-  * materializes that layout once per JVM (like a real deployment's
+  * materializes that layout once per corpus state (like a real deployment's
   * one-time ETL); [[src1PartitionPrune]] then answers a two-source
   * question against it with a pruned scan (2 of 20 directories read —
   * asserted in LayoutsSpec).
   */
 object Layouts {
 
-  private val written = scala.collection.concurrent.TrieMap.empty[String, String]
+  private val written = new FingerprintMemo[String]
 
-  /** Write-once partitioned layout: materializes `df` partitioned by
-    * `partCol` under target/ (keeping all writes inside the repo working
-    * directory) on FIRST use per (name, source dir, JVM) and returns the
-    * path. `name` must encode every parameter that changes the file
-    * contents (e.g. the quantizer's k) — the cache key is (name, dir).
-    * Deterministic producers only: rewriting must give identical rows, so
-    * reuse across queries/bench passes mirrors the write-once table this
-    * stands in for. */
-  def writeOncePartitioned(name: String, dir: String, partCol: String)
-      (df: => DataFrame): String =
-    written.getOrElseUpdate(s"$name#$dir", {
-      // md5 prefix, not String.hashCode: distinct source dirs must never
-      // alias the same on-disk layout (same rule as bucketedTable)
-      val out = java.nio.file.Paths.get("target",
-        name + "_" + dirTag(dir)).toAbsolutePath.toString
-      df.write.mode("overwrite").partitionBy(partCol).parquet(out)
-      out
-    })
+  /** Absolute path of the driver-side artifact `name` derived from
+    * `dir`'s testdata `tables`: `target/<name>_f<fingerprint>_<dirTag>`
+    * under the working directory, the fingerprint being the tables'
+    * [[Tables.fingerprint]]. A rewritten corpus therefore gets a new
+    * path: it never overwrites a path an earlier plan still reads, and a
+    * persisted artifact is never loaded stale. `name` must encode every
+    * other parameter that changes the artifact's content (trainer
+    * version, k, ...). */
+  def artifactPath(s: SparkSession, name: String, dir: String,
+      tables: String*): String =
+    java.nio.file.Paths.get("target",
+      s"${name}_f${Tables.tablesId(s, dir, tables: _*)}_${dirTag(dir)}")
+      .toAbsolutePath.toString
+
+  /** Write-once partitioned layout: materializes `df`, derived from
+    * `dir`'s testdata `tables`, partitioned by `partCol` at its
+    * [[artifactPath]] on first use per (session, name, dir, corpus state)
+    * and returns the path; a rewrite of any of `tables` writes a fresh
+    * copy. Deterministic producers only: rewriting must give identical
+    * rows, so reuse across queries/bench passes mirrors the write-once
+    * table this stands in for. */
+  def writeOncePartitioned(s: SparkSession, name: String, dir: String,
+      partCol: String, tables: String*)(df: => DataFrame): String =
+    writeLayout(s, name, dir, tables)(df.write.partitionBy(partCol))
 
   /** Unpartitioned write-once layout — same contract as
     * [[writeOncePartitioned]] for tables with no routing column (e.g. the
     * PQ code table, keyed only by vec_id). */
-  def writeOnce(name: String, dir: String)(df: => DataFrame): String =
-    written.getOrElseUpdate(s"$name#$dir", {
-      val out = java.nio.file.Paths.get("target",
-        name + "_" + dirTag(dir)).toAbsolutePath.toString
-      df.write.mode("overwrite").parquet(out)
+  def writeOnce(s: SparkSession, name: String, dir: String,
+      tables: String*)(df: => DataFrame): String =
+    writeLayout(s, name, dir, tables)(df.write)
+
+  private def writeLayout(s: SparkSession, name: String, dir: String,
+      tables: Seq[String])(w: => DataFrameWriter[Row]): String = {
+    val out = artifactPath(s, name, dir, tables: _*)
+    written.getOrBuild(s, dir, name, out) {
+      w.mode("overwrite").parquet(out)
       out
-    })
+    }
+  }
 
   /** Recursive delete of a local path tree (no-op if absent) — shared by
     * the atomic-publish devices that must clear torn staging directories
@@ -106,44 +117,17 @@ object Layouts {
     }
   }
 
-  /** File-listing fingerprint of a testdata table: md5 prefix over the
-    * sorted (relative path, size, nanosecond mtime) of every file plus
-    * the file count — a pure filesystem-metadata operation, no Spark
-    * job. Any regeneration rewrites files (new part-file UUIDs, sizes or
-    * mtimes), so a persisted artifact named by this fingerprint can
-    * never be silently served stale (same contract as
-    * [[graft.operators.SimilarityOps.corpusFingerprint]], which owns the
-    * full caveat documentation). */
-  private[graft] def tableFingerprint(dir: String, table: String): String = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val p = Paths.get(dir, s"$table.parquet")
-    val files =
-      if (Files.isDirectory(p)) {
-        val walk = Files.walk(p)
-        try walk.iterator().asScala.filter(Files.isRegularFile(_)).toList
-        finally walk.close()
-      } else List(p)
-    val desc = files.map(f =>
-      s"${p.getParent.relativize(f)}:${Files.size(f)}:" +
-        s"${Files.getLastModifiedTime(f).to(java.util.concurrent.TimeUnit.NANOSECONDS)}")
-      .sorted.mkString(s"n=${files.length}\n", "\n", "")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(desc.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-  }
-
   /** 64-bit md5-prefix tag of a source dir for on-disk layout names.
     * Distinct dirs colliding is possible in principle (any finite tag) but
     * at 2^-64 per pair it is ignorable; the point of md5 over
     * String.hashCode is distribution quality — hashCode's 32 bits over
     * similar path strings collide in practice. */
-  private[graft] def dirTag(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
+  private[graft] def dirTag(dir: String): String = Tables.md5Tag(dir)
 
   /** Path of the by-source partitioned copy of `documents`. */
   def documentsBySource(s: SparkSession, dir: String): String =
-    writeOncePartitioned("graft_docs_by_source", dir, "source") {
+    writeOncePartitioned(s, "graft_docs_by_source", dir, "source",
+        "documents") {
       Tables.documents(s, dir)
     }
 
@@ -171,22 +155,19 @@ object Layouts {
 
   /** Write-once bucketed copy of a testdata table, registered in the
     * session catalog (bucket metadata only exists through the catalog, so
-    * this is `saveAsTable` with an explicit external path under target/).
-    * The table name encodes EVERY layout parameter — (table, bucket key,
-    * bucket count, source dir) — so a second identical call is a
-    * metadata hit while any differing parameter is a different table
-    * (same-table-different-key must never alias; the dir tag is a 64-bit
-    * md5 prefix — see [[dirTag]]). Concurrent first callers are
-    * serialized through the same TrieMap device as
-    * [[writeOncePartitioned]] — a bare check-then-saveAsTable would race
-    * two writers onto one path. */
+    * this is `saveAsTable` with an explicit external path, the table's
+    * [[artifactPath]]). The table name is that path's file name, so it
+    * encodes EVERY layout parameter — (table, bucket key, bucket count,
+    * corpus fingerprint, source dir) — so a second identical call is a
+    * metadata hit while any differing parameter, or a rewritten table, is
+    * a different table (same-table-different-key must never alias). */
   def bucketedTable(s: SparkSession, dir: String, table: String,
                     key: String, buckets: Int): String = {
-    val tname = s"graft_${table}_${key}_bk${buckets}_${dirTag(dir)}"
-    written.getOrElseUpdate(tname, {
+    val name = s"graft_${table}_${key}_bk$buckets"
+    val path = artifactPath(s, name, dir, table)
+    val tname = java.nio.file.Paths.get(path).getFileName.toString
+    written.getOrBuild(s, dir, name, path) {
       if (!s.catalog.tableExists(tname)) {
-        val path = java.nio.file.Paths.get("target", tname)
-          .toAbsolutePath.toString
         Tables.load(s, dir, table).write
           .mode("overwrite")
           .bucketBy(buckets, key)
@@ -196,7 +177,7 @@ object Layouts {
           .saveAsTable(tname)
       }
       tname
-    })
+    }
   }
 
   /** src2: shuffle-free fact-fact join off co-bucketed layouts — lineitem
@@ -242,15 +223,15 @@ object Layouts {
 
   /** Grid geometry of the (user, time) z-order layout for one source dir:
     * the layout path plus the exact integer mapping from raw values to
-    * grid cells. Memoized per dir so prune-time bucket enumeration uses
-    * the SAME arithmetic that wrote the layout. */
+    * grid cells. Memoized per dir and events fingerprint so prune-time
+    * bucket enumeration uses the SAME arithmetic that wrote the layout. */
   final case class ZGrid(path: String, uMin: Long, uSpan: Long, uWidth: Long,
                          tMin: Long, tSpan: Long, tWidth: Long) {
     def ubOf(u: Long): Long = (u - uMin) / uWidth
     def tbOf(t: Long): Long = (t - tMin) / tWidth
   }
 
-  private val zgrids = scala.collection.concurrent.TrieMap.empty[String, ZGrid]
+  private val zgrids = new FingerprintMemo[ZGrid]
 
   /** Bit-interleave two `ZBits`-wide cell coordinates into one z-value
     * (driver-side twin of the codegen'd column form in
@@ -285,7 +266,7 @@ object Layouts {
     * sorted by (user_id, ts), so parquet row-group min/max statistics
     * prune WITHIN the touched buckets too. */
   def zorderedEvents(s: SparkSession, dir: String): ZGrid =
-    zgrids.getOrElseUpdate(dir, {
+    zgrids.getOrBuild(s, dir, "", Tables.tablesId(s, dir, "events")) {
       val b = Tables.events(s, dir)
         .agg(min(col("user_id")), max(col("user_id")),
           min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
@@ -295,7 +276,8 @@ object Layouts {
       val (uSpan, tSpan) = (uMax - uMin + 1, tMax - tMin + 1)
       val uW = math.max(1L, (uSpan + ZCells - 1) / ZCells)
       val tW = math.max(1L, (tSpan + ZCells - 1) / ZCells)
-      val path = writeOncePartitioned("graft_events_zorder", dir, "zb") {
+      val path = writeOncePartitioned(s, "graft_events_zorder", dir, "zb",
+          "events") {
         val ub = expr(s"(user_id - ${uMin}L) div ${uW}L")
         val tb = expr(s"(unix_micros(ts) - ${tMin}L) div ${tW}L")
         // the sort MUST lead with zb: FileFormatWriter requires its
@@ -308,7 +290,7 @@ object Layouts {
           .sortWithinPartitions(col("zb"), col("user_id"), col("ts"))
       }
       ZGrid(path, uMin, uSpan, uW, tMin, tSpan, tW)
-    })
+    }
 
   /** src3: a 2-D box query (user range x time range) answered off the
     * z-ordered layout. The box's corner cells bound a rectangle of grid
@@ -396,7 +378,7 @@ object Layouts {
   /** The fragmented ingest layout: events deliberately written as
     * [[FragmentFiles]] tiny files. */
   private[graft] def fragmentedEvents(s: SparkSession, dir: String): String =
-    writeOnce("graft_events_fragmented", dir) {
+    writeOnce(s, "graft_events_fragmented", dir, "events") {
       Tables.events(s, dir).repartition(FragmentFiles)
     }
 
@@ -413,7 +395,7 @@ object Layouts {
     val frag = fragmentedEvents(s, dir)
     val parts = math.max(1,
       math.ceil(layoutBytes(frag).toDouble / CompactTargetBytes).toInt)
-    writeOnce("graft_events_compacted", dir) {
+    writeOnce(s, "graft_events_compacted", dir, "events") {
       Tables.read(s, frag).coalesce(parts)
     }
   }
@@ -451,7 +433,7 @@ object Layouts {
     * per-batch ingest loop leaves behind in a generational store. */
   private[graft] val StoreFragFiles = 24
 
-  private val docStores = scala.collection.concurrent.TrieMap.empty[String, String]
+  private val docStores = new FingerprintMemo[String]
 
   /** A [[GenStore]] of `documents` partitioned by source, built
     * FRAGMENTED (the initial fold runs with [[StoreFragFiles]] write
@@ -463,11 +445,9 @@ object Layouts {
     * build that crashed between fold and compact. */
   private[graft] def compactedDocStore(s: SparkSession, dir: String,
       mode: GenStore.Mode = GenStore.Links): String = {
-    val tag = if (mode == GenStore.Manifest) "m" else ""
-    val path = java.nio.file.Paths.get("target",
-      s"graft_doc_store_${tag}f${tableFingerprint(dir, "documents")}_" + dirTag(dir))
-      .toAbsolutePath.toString
-    docStores.getOrElseUpdate(path, {
+    val name = if (mode == GenStore.Manifest) "graft_doc_store_m" else "graft_doc_store"
+    val path = artifactPath(s, name, dir, "documents")
+    docStores.getOrBuild(s, dir, name, path) {
       // Deterministic content per fingerprint-named root: a racing
       // process building the same store commits identical content, so a
       // lost claim (fold or compact) is the winner doing our work —
@@ -482,7 +462,7 @@ object Layouts {
       tolerateRace(GenStore.compact(s, path, targetFiles = 1, maxFiles = 4,
         mode = mode))
       path
-    })
+    }
   }
 
   /** src5: generational-store compaction, end-to-end under the oracle

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampNTZType, TimestampType}
 
-/** Parquet scan helpers over the testdata tables (TESTDATA.md), and the
-  * engine's one parquet read path, [[Tables.read]].
+/** Parquet scan helpers over the testdata tables (TESTDATA.md), the
+  * engine's one parquet read path, [[Tables.read]], and its one listing,
+  * [[Tables.fingerprint]].
   *
   * Reading through `spark.read.parquet` keeps the scan declarative so
   * Catalyst pushes filters and prunes columns down to the parquet reader —
@@ -18,17 +19,10 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampN
   * job time and 65–70 ms of driver time per read on a 4-core local
   * session, paid by every query build. [[read]] infers once and then
   * reads with `spark.read.schema(memo).parquet(path)`, which launches no
-  * job. The memo holds one entry per path, valid while its key matches:
-  *
-  *  - the listing fingerprint — file count, total bytes and newest
-  *    modification time of the files under the path, from one listing
-  *    (one `listStatus` for a flat table, one per directory for a
-  *    partitioned layout), so a rewritten path is re-inferred;
-  *  - the session's schema-affecting confs ([[SchemaConfs]]), so e.g.
-  *    flipping `nanosAsLong` re-infers `events.ts`.
-  *
-  * A mismatch re-infers and REPLACES the entry, so the memo stays
-  * bounded by the number of distinct paths read. A path that lists no
+  * job. The schema memo is a [[FingerprintMemo]] per (session, path),
+  * valid while the path's [[fingerprint]] and the session's
+  * schema-affecting confs ([[SchemaConfs]]) stand still, so a rewritten
+  * path or e.g. a flipped `nanosAsLong` re-infers. A path that lists no
   * files (missing, or a glob) is inferred on every read, so a failed
   * inference raises exactly what `spark.read.parquet` raises. Every
   * parquet read in `src/main` goes through [[read]]; `TablesReadSpec`
@@ -36,7 +30,10 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampN
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    read(spark, s"$dir/$name.parquet")
+    read(spark, path(dir, name))
+
+  /** Path of testdata table `name` under `dir`. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   /** Read the parquet table (file, part-file directory or partitioned
     * layout) at `path` with its memoized schema — see the header. */
@@ -53,48 +50,79 @@ object Tables {
     "spark.sql.caseSensitive",
     "spark.sql.sources.partitionColumnTypeInference.enabled")
 
-  /** What one listing of a table path says about its files. */
-  private final case class Listing(files: Int, bytes: Long, newestMtime: Long)
+  /** What one listing of a table path says: `id` fingerprints its files,
+    * `files` counts them and `bytes` sums their lengths. */
+  final case class Fingerprint(id: String, files: Int, bytes: Long)
 
-  private final case class SchemaEntry(listing: Listing,
-      confs: Seq[Option[String]], schema: StructType)
-
-  private val schemaMemo =
-    scala.collection.concurrent.TrieMap.empty[String, SchemaEntry]
-
-  /** Files under `path` (recursively, so partition dirs count), or the
-    * empty listing when nothing is there (a missing path, or a glob). */
-  private def list(s: SparkSession, path: String): Listing = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    var (files, bytes, newest) = (0, 0L, 0L)
-    try {
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
+  /** The one listing behind every driver-side memo and artifact name:
+    * the files under `path` (recursively, so a partitioned layout's
+    * directories count), walked with Hadoop `listStatus` so it lists
+    * HDFS and object stores as well as the local disk. `id` is a 64-bit
+    * md5 prefix over the sorted (relative path, length, modification
+    * time) of every file, so a Spark overwrite (new part-file names, even
+    * at the same row count), an added or removed file, a resized file or
+    * a moved mtime each roll it. It is a metadata walk: no Spark job and
+    * no footer read (at 100 TB even a footer-only count is a distributed
+    * job over every file; a listing is namenode round-trips).
+    *
+    * `listStatus`, not `listFiles`: the latter builds a
+    * `LocatedFileStatus`, which loads each file's permissions, and on
+    * the local filesystem without native Hadoop that starts one
+    * subprocess per file (Hadoop 3.4.2 on a 4-core host: 3.7 ms for a
+    * one-file table, against 22–43 µs for this walk). Spark's own
+    * `HadoopFSUtils` avoids it likewise.
+    *
+    * Given up: Hadoop reports mtimes in milliseconds, so a rewrite of
+    * the same path to the same length within one millisecond keeps the
+    * id. Spark never rewrites that way (each write names new part
+    * files); on a store with coarser mtimes the window widens to its
+    * tick, and object-store etags would close it in production. A path
+    * with no files (missing, or a glob) lists as `files == 0`. */
+  def fingerprint(s: SparkSession, path: String): Fingerprint = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val root = new Path(path)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val lines = Seq.newBuilder[String]
+    var (files, bytes) = (0, 0L)
+    def walk(st: FileStatus, rel: String): Unit =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).foreach(c => walk(c, s"$rel/${c.getPath.getName}"))
+      else {
         files += 1
-        bytes += f.getLen
-        newest = math.max(newest, f.getModificationTime)
+        bytes += st.getLen
+        lines += s"$rel:${st.getLen}:${st.getModificationTime}"
       }
-    } catch { case _: java.io.FileNotFoundException => }
-    Listing(files, bytes, newest)
+    try walk(fs.getFileStatus(root), root.getName)
+    catch { case _: java.io.FileNotFoundException => }
+    Fingerprint(md5Tag(lines.result().sorted.mkString("\n")), files, bytes)
   }
+
+  /** The fingerprint id of testdata `tables` under `dir`: one table's own
+    * id, or an md5 tag over several. */
+  private[graft] def tablesId(s: SparkSession, dir: String,
+      tables: String*): String = tables match {
+    case Seq(t) => fingerprint(s, path(dir, t)).id
+    case ts => md5Tag(ts.map(t => fingerprint(s, path(dir, t)).id).mkString(":"))
+  }
+
+  /** 64-bit md5 prefix of `text`, as 16 hex chars. */
+  private[graft] def md5Tag(text: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(text.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
+
+  private val schemaMemo = new FingerprintMemo[StructType]
 
   /** [[read]] plus the listing it made, so a caller that needs the
     * table's bytes ([[documents]]' scan floor) lists once per scan. */
-  private def readListed(s: SparkSession, path: String): (DataFrame, Listing) = {
-    val listing = list(s, path)
-    val confs = SchemaConfs.map(s.conf.getOption)
-    val schema = schemaMemo.get(path) match {
-      case Some(e) if e.listing == listing && e.confs == confs => e.schema
-      case _ =>
-        // raises what spark.read.parquet raises for a missing path
-        val inferred = s.read.parquet(path).schema
-        // an empty listing fingerprints nothing: never serve it
-        if (listing.files > 0)
-          schemaMemo.put(path, SchemaEntry(listing, confs, inferred))
-        inferred
-    }
+  private def readListed(s: SparkSession, path: String): (DataFrame, Fingerprint) = {
+    val listing = fingerprint(s, path)
+    // raises what spark.read.parquet raises for a missing path
+    def infer = s.read.parquet(path).schema
+    val schema =
+      // an empty listing fingerprints nothing: never serve it
+      if (listing.files == 0) infer
+      else schemaMemo.getOrBuild(s, path,
+        SchemaConfs.map(s.conf.getOption).mkString(","), listing.id)(infer)
     (s.read.schema(schema).parquet(path), listing)
   }
 
@@ -220,7 +248,7 @@ object Tables {
       throw new IllegalStateException(s"unsupported events.ts encoding: $other")
   }
   def documents(s: SparkSession, d: String): DataFrame = {
-    val (df, listing) = readListed(s, s"$d/documents.parquet")
+    val (df, listing) = readListed(s, path(d, "documents"))
     fillCores(s, df, listing.bytes, "doc_id")
   }
   /** embeddings stays UNfloored — A/B'd separately in round 19 per the

@@ -206,8 +206,8 @@ object StreamingOps {
 
   /** st6: the SINK end of the streaming story — [[hourlyTypeCounts]]
     * materialized to a parquet table partitioned by event_type and read
-    * back (write-once per JVM via the shared layout helper, the same
-    * standing-in-for-a-real-table discipline as src1/s3). On a stream
+    * back (write-once per corpus state via the shared layout helper, the
+    * same standing-in-for-a-real-table discipline as src1/s3). On a stream
     * the same materialization runs through `foreachBatch` with
     * complete-mode overwrite — each micro-batch idempotently rewrites
     * the small aggregate table, so replays after failure converge to the
@@ -216,8 +216,8 @@ object StreamingOps {
     * result). Downstream readers get partition pruning on event_type
     * for free — the sink IS a layout. */
   def st6StreamSink(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Layouts.writeOncePartitioned(
-      "graft_st6_sink", dir, "event_type") {
+    val path = graft.sources.Layouts.writeOncePartitioned(s,
+      "graft_st6_sink", dir, "event_type", "events") {
       hourlyTypeCounts(Tables.events(s, dir))
     }
     Tables.read(s, path).select(
@@ -408,8 +408,7 @@ object StreamingOps {
     }
   }
 
-  private val upsertStores =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val upsertStores = new graft.sources.FingerprintMemo[String]
 
   /** st8: the upsert SINK — q23's manufactured CDC stream applied batch
     * by batch (snapshot, updates, deletes) into the partitioned keyed
@@ -420,16 +419,15 @@ object StreamingOps {
     * [[upsertBatch]] body through a MemoryStream's foreachBatch and
     * proves mode equality plus re-delivery idempotence. */
   def st8UpsertSink(s: SparkSession, dir: String): DataFrame = {
-    val path = upsertStores.getOrElseUpdate(dir, {
-      val p = java.nio.file.Paths.get("target",
-        "graft_st8_store_" + graft.sources.Layouts.dirTag(dir))
-        .toAbsolutePath.toString
+    val p = graft.sources.Layouts.artifactPath(s, "graft_st8_store", dir,
+      "orders")
+    val path = upsertStores.getOrBuild(s, dir, "", p) {
       deleteRecursively(p) // a fresh fold IS the operator; stale stores
-                           // from prior JVMs would resurrect tombstones
+                           // from prior sessions would resurrect tombstones
       graft.operators.RelationalQueries.cdcBatches(s, dir)
         .foreach(b => upsertBatch(s, p, b))
       p
-    })
+    }
     Tables.read(s, path).select(col("o_orderkey"), col("o_custkey"),
       col("o_orderstatus"), col("o_totalprice"), col("o_orderpriority"))
   }

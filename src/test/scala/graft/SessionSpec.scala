@@ -77,6 +77,51 @@ class SessionSpec extends SparkSpec {
     assert(SourceScan.matches(builder, "src/test/scala") === Map.empty, msg)
   }
 
+  test("a corpus rewritten mid-session: s2, s5, s6 and src1 answer from the new files") {
+    import spark.implicits._
+    import graft.operators.SimilarityOps
+    import graft.sources.{Layouts, Tables}
+    def tmp() = java.nio.file.Files.createTempDirectory("graft_rewrite").toString
+    // `dir` is rewritten in place; `copy` holds the new corpus from the
+    // start, so no memo of any scope has seen an older state of it
+    val (dir, copy) = (tmp(), tmp())
+    // 400 vectors around 8 seeded directions: the same row count for
+    // every seed, different vectors
+    def embeddings(seed: Long) = {
+      val rng = new scala.util.Random(seed)
+      val dirs = Array.fill(8)(Array.fill(64)(rng.nextGaussian()))
+      (0 until 400).map(id => (id.toLong,
+        dirs(id % 8).map(x => (x + 0.15 * rng.nextGaussian()).toFloat).toSeq))
+        .toDF("vec_id", "embedding")
+    }
+    def write(dir: String, emb: org.apache.spark.sql.DataFrame,
+        docs: org.apache.spark.sql.DataFrame): Unit = {
+      emb.write.mode("overwrite").parquet(Tables.path(dir, "embeddings"))
+      docs.write.mode("overwrite").parquet(Tables.path(dir, "documents"))
+    }
+    val queries: Seq[(String, Session.Query)] = Seq(
+      "s2" -> SimilarityOps.s2AnnIvf _,
+      "s5" -> SimilarityOps.s5PqRerank _,
+      "s6" -> SimilarityOps.s6CentroidOutlier _,
+      "src1" -> Layouts.src1PartitionPrune _)
+    def rows(s: org.apache.spark.sql.SparkSession, q: Session.Query, dir: String) =
+      q(s, dir).collect().map(_.toString).sorted.toSeq
+
+    val docs = Tables.documents(spark, sf)
+    write(dir, embeddings(1), docs)
+    val before = queries.map { case (_, q) => rows(spark, q, dir) }
+    write(dir, embeddings(2), docs.where($"doc_id" % 2 === 0))
+    write(copy, embeddings(2), docs.where($"doc_id" % 2 === 0))
+    val fresh = spark.newSession()
+    val wrong = queries.zip(before).flatMap { case ((name, q), old) =>
+      val (now, want) = (rows(spark, q, dir), rows(fresh, q, copy))
+      if (want == old) Some(s"$name: the rewrite did not change the answer")
+      else if (now != want) Some(s"$name: answered from the old corpus")
+      else None
+    }
+    assert(wrong.isEmpty, wrong.mkString("; "))
+  }
+
   test("every registered query leaves the CacheManager empty after Session.run") {
     assert(spark.sharedState.cacheManager.isEmpty)
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -315,12 +315,13 @@ class SimilarityOpsSpec extends SparkSpec {
     val trained = SimilarityOps.centroidsFor(spark, dir, k)
     val books = SimilarityOps.pqCodebooksFor(spark, dir)
 
-    // simulate a fresh JVM: drop the memos — the next call must LOAD
-    SimilarityOps.resetIndexMemos()
-    val loaded = SimilarityOps.centroidsFor(spark, dir, k)
+    // simulate a fresh JVM: a new session has no memo entries — the next
+    // call must LOAD
+    val fresh = spark.newSession()
+    val loaded = SimilarityOps.centroidsFor(fresh, dir, k)
     assert(loaded.length === trained.length)
     trained.zip(loaded).foreach { case (a, b) => assert(a.toSeq === b.toSeq) }
-    val loadedBooks = SimilarityOps.pqCodebooksFor(spark, dir)
+    val loadedBooks = SimilarityOps.pqCodebooksFor(fresh, dir)
     assert(loadedBooks.length === books.length)
     books.zip(loadedBooks).foreach { case (ba, bb) =>
       assert(ba.length === bb.length)
@@ -335,8 +336,7 @@ class SimilarityOpsSpec extends SparkSpec {
     val sentinel = trained.zipWithIndex.map { case (c, i) => (i, c.map(_ + 1.0).toSeq) }
     sentinel.toSeq.toDF("cell_id", "c_vec").repartition(1)
       .write.mode("overwrite").parquet(path)
-    SimilarityOps.resetIndexMemos()
-    val reloaded = SimilarityOps.centroidsFor(spark, dir, k)
+    val reloaded = SimilarityOps.centroidsFor(spark.newSession(), dir, k)
     reloaded.zip(trained).foreach { case (r, t) =>
       assert(r.toSeq === t.map(_ + 1.0).toSeq, "load must come from the persisted table")
     }
@@ -344,19 +344,17 @@ class SimilarityOpsSpec extends SparkSpec {
     // a TORN table (no _SUCCESS — the crashed-writer state) must NOT be
     // loaded: the load gate treats it as absent and retrains
     java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_SUCCESS"))
-    SimilarityOps.resetIndexMemos()
-    val retrained = SimilarityOps.centroidsFor(spark, dir, k)
+    val retrained = SimilarityOps.centroidsFor(spark.newSession(), dir, k)
     retrained.zip(trained).foreach { case (r, t) =>
       assert(r.toSeq === t.toSeq, "torn table must be ignored and retrained")
     }
-    SimilarityOps.resetIndexMemos()
   }
 
   test("warm corpus metadata resolves with ZERO Spark jobs (no pre-load corpus scan)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_meta").toString
     clustered().write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val n0 = SimilarityOps.corpusCount(spark, dir) // cold: counts + writes sidecar
-    SimilarityOps.resetIndexMemos()                // simulate a fresh process
+    val fresh = spark.newSession()                 // simulate a fresh process
 
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -366,10 +364,10 @@ class SimilarityOpsSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val n1 = SimilarityOps.corpusCount(spark, dir)
+      val n1 = SimilarityOps.corpusCount(fresh, dir)
       assert(n1 === n0, "sidecar count must equal the counted value")
-      val p1 = SimilarityOps.centroidsPath(spark, dir, 16)
-      val p2 = SimilarityOps.pqCodebooksPath(spark, dir)
+      val p1 = SimilarityOps.centroidsPath(fresh, dir, 16)
+      val p2 = SimilarityOps.pqCodebooksPath(fresh, dir)
       assert(p1.contains("_f") && p2.contains("_f"))
       // listener events post asynchronously — give the bus time to drain
       // before asserting ABSENCE
@@ -380,15 +378,16 @@ class SimilarityOpsSpec extends SparkSpec {
 
     // regeneration safety: rewriting the corpus (same count, new files)
     // must change the fingerprint and therefore every index-table name
-    val fp0 = SimilarityOps.corpusFingerprint(dir)
+    def corpusFingerprint = graft.sources.Tables.fingerprint(spark,
+      graft.sources.Tables.path(dir, "embeddings")).id
+    val fp0 = corpusFingerprint
     val p0 = SimilarityOps.centroidsPath(spark, dir, 16)
     Thread.sleep(1100) // ensure a distinct mtime even on coarse filesystems
     clustered().write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    assert(SimilarityOps.corpusFingerprint(dir) !== fp0,
+    assert(corpusFingerprint !== fp0,
       "rewritten corpus files must change the fingerprint")
     assert(SimilarityOps.centroidsPath(spark, dir, 16) !== p0,
       "index-table names must roll with the corpus fingerprint")
-    SimilarityOps.resetIndexMemos()
   }
 
   test("s8: folded index content equals a from-scratch full-corpus index; serve is recall-green") {

@@ -144,6 +144,83 @@ class TablesReadSpec extends SparkSpec {
     assert(memo.getMessage === plain.getMessage)
   }
 
+  test("Tables.fingerprint rolls on every rewrite shape and only on a rewrite") {
+    import java.nio.file.{Files, Path, Paths}
+    import java.nio.file.attribute.FileTime
+    import scala.jdk.CollectionConverters._
+    def fp(path: String) = Tables.fingerprint(spark, path)
+    def parts(dir: String): Seq[Path] = {
+      val st = Files.list(Paths.get(dir))
+      try st.iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
+        .toSeq.sortBy(_.toString)
+      finally st.close()
+    }
+    // the local filesystem lists no .crc checksum files, and a rewrite
+    // rewrites them with their data file
+    def bytesUnder(dir: String): Long = {
+      val st = Files.walk(Paths.get(dir))
+      try st.iterator().asScala.filter(Files.isRegularFile(_))
+        .filterNot(_.getFileName.toString.endsWith(".crc")).map(Files.size).sum
+      finally st.close()
+    }
+
+    val t = s"${tmp("fp")}/t.parquet"
+    spark.range(100).coalesce(2).write.parquet(t)
+    val f0 = fp(t)
+    assert(fp(t) === f0, "an untouched table keeps its fingerprint")
+    assert(f0.bytes === bytesUnder(t))
+    // a Spark overwrite with the same row count names new part files
+    spark.range(100).coalesce(2).write.mode("overwrite").parquet(t)
+    val f1 = fp(t)
+    assert(f1.id !== f0.id, "a same-count overwrite must roll the fingerprint")
+    // a file added, then a file removed
+    val extra = Paths.get(t, "part-extra.parquet")
+    Files.copy(parts(t).head, extra)
+    assert(fp(t).id !== f1.id, "a file added")
+    assert(fp(t).files === f1.files + 1)
+    Files.delete(extra)
+    assert(fp(t) === f1, "the same files list to the same fingerprint")
+    Files.delete(parts(t).last)
+    val f2 = fp(t)
+    assert(f2.id !== f1.id, "a file removed")
+    assert(f2.files === f1.files - 1)
+    // the same name with a different size, its mtime put back
+    val a = parts(t).head
+    val mtime = Files.getLastModifiedTime(a)
+    Files.write(a, Files.readAllBytes(a) :+ 0.toByte)
+    Files.setLastModifiedTime(a, mtime)
+    val f3 = fp(t)
+    assert(f3.id !== f2.id, "a resized file")
+    assert(f3.bytes === f2.bytes + 1)
+    // the same name and size, the mtime moved by one second
+    Files.setLastModifiedTime(a, FileTime.fromMillis(mtime.toMillis + 1000))
+    assert(fp(t).id !== f3.id, "a moved mtime")
+
+    // a change inside a partitioned (nested) layout
+    val p = s"${tmp("fp")}/p.parquet"
+    spark.range(60).selectExpr("id", "id % 3 AS k").write.partitionBy("k").parquet(p)
+    val g0 = fp(p)
+    val nested = parts(s"$p/k=1").head
+    assert(g0.files > parts(s"$p/k=1").size && g0.bytes === bytesUnder(p))
+    Files.setLastModifiedTime(nested,
+      FileTime.fromMillis(Files.getLastModifiedTime(nested).toMillis + 1000))
+    assert(fp(p).id !== g0.id, "a nested file's change must roll the fingerprint")
+
+    assert(fp(s"${tmp("fp")}/missing.parquet").files === 0)
+  }
+
+  test("one memo device and one listing: no TrieMap outside TrainedOracle, no listFiles in src/main") {
+    // driver-side state is a FingerprintMemo over Tables.fingerprint;
+    // TrainedOracle is Verify's ordering registry, keyed on query names
+    assert(SourceScan.matches("TrieMap".r, "src/main/scala") ===
+      Map("graft/sources/TrainedOracle.scala" -> 1))
+    // listFiles/listLocatedStatus load each file's permissions, which
+    // forks a subprocess per file on a local filesystem without native
+    // Hadoop; Tables.fingerprint walks with listStatus
+    assert(SourceScan.matches("""listFiles\(|listLocatedStatus\(""".r,
+      "src/main/scala") === Map.empty)
+  }
+
   test("no bare parquet read in src/main outside Tables.read and its documented exception") {
     // A bare read infers the schema with a Spark job on every call; new
     // read sites must go through Tables.read. Comments are stripped so

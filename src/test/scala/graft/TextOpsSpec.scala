@@ -118,7 +118,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("t8 model persists: a warm process loads the shipped LM with zero training jobs; scores unchanged") {
     val dir = sf
-    val path = TextOps.lmModelPath(dir)
+    val path = TextOps.lmModelPath(spark, dir)
     // cold pass (or an earlier test's): trains and publishes the model
     val cold = TextOps.t8BigramLm(spark, dir)
       .as[(Long, Long, Double, Boolean)].collect().sortBy(_._1)
