@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{Layouts, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1288,12 +1288,6 @@ object DedupOps {
   private[graft] val IngestMod = 10
   private[graft] val IngestRem = 7
 
-  /** Path of the PERSISTED dedup index: the standing corpus's (doc_id,
-    * band, key) MinHash band keys, written once per corpus state,
-    * partitioned by band — the structure a production dedup service
-    * maintains between ingests so each new batch probes an index instead
-    * of re-scanning the corpus. Deterministic content (seeded minhash),
-    * so the write-once reuse mirrors the standing index it stands for. */
   /** (doc_id, band, key) MinHash band keys of `docs` — the rows the
     * persisted index stores and an incoming batch computes fresh. */
   private[graft] def bandKeysOf(docs: DataFrame): DataFrame =
@@ -1301,12 +1295,21 @@ object DedupOps {
       posexplode(graft.functions.minhashBandKeys(
         col("hs"), MinHash.NumHashes, MinHash.Rows)).as(Seq("band", "key")))
 
+  /** Path of the PERSISTED dedup index: the standing corpus's (doc_id,
+    * band, key) MinHash band keys, written once per corpus state,
+    * partitioned by band — the structure a production dedup service
+    * maintains between ingests so each new batch probes an index instead
+    * of re-scanning the corpus. Deterministic content (seeded minhash),
+    * so the write-once reuse mirrors the standing index it stands for;
+    * the name carries the signature shape ([[MinHash]] hashes and rows
+    * per band), so a retuned banding never serves the old keys. */
   private[graft] def dedupIndexKeys(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.writeOncePartitioned(s,
-      "graft_dedup_index_keys", dir, "band", "documents") {
+    Layouts.publish(Layouts.artifactPath(s,
+        s"graft_dedup_index_keys_h${MinHash.NumHashes}_r${MinHash.Rows}", dir,
+        "documents"))(
       bandKeysOf(Tables.documents(s, dir)
         .where(!(col("doc_id") % IngestMod === IngestRem)))
-    }
+        .write.partitionBy("band"))
 
   /** Fold a screened batch's band keys into the PERSISTED index at
     * `path` — the st8 upsert device applied to the band-key store,
@@ -1341,12 +1344,11 @@ object DedupOps {
     * pay the exact-Jaccard check against these stored sets instead of
     * re-shingling corpus text. Same write-once discipline as the keys. */
   private[graft] def dedupIndexShingles(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.writeOnce(s, "graft_dedup_index_shingles", dir,
-        "documents") {
+    Layouts.publish(Layouts.artifactPath(s, "graft_dedup_index_shingles", dir,
+        "documents"))(
       withShingleHashes(Tables.documents(s, dir)
         .where(!(col("doc_id") % IngestMod === IngestRem)))
-        .select(col("doc_id"), col("hs"))
-    }
+        .select(col("doc_id"), col("hs")).write)
 
   /** Verified near-dup HITS of `batch` (doc_id, text) against the
     * persisted index: band keys computed per row, candidates from the

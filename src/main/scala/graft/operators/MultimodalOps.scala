@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{Layouts, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -492,19 +492,19 @@ object MultimodalOps {
     * the queries then decode with). One corpus pass each, per corpus state,
     * like every other one-time layout build. */
   private def pngBlobs(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.writeOnce(s, "graft_png_blobs", dir, "documents") {
+    Layouts.publish(Layouts.artifactPath(s, "graft_png_blobs", dir, "documents")) {
       import s.implicits._
       withBlob(s, dir).select(col("doc_id"), col("blob")).as[(Long, Array[Byte])]
         .mapPartitions(_.map { case (id, b) => (id, pngStrip(b)) })
-        .toDF("doc_id", "blob")
+        .toDF("doc_id", "blob").write
     }
 
   private def wavBlobs(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.writeOnce(s, "graft_wav_blobs", dir, "documents") {
+    Layouts.publish(Layouts.artifactPath(s, "graft_wav_blobs", dir, "documents")) {
       import s.implicits._
       withBlob(s, dir).select(col("doc_id"), col("blob")).as[(Long, Array[Byte])]
         .mapPartitions(_.map { case (id, b) => (id, wavContainer(b)) })
-        .toDF("doc_id", "blob")
+        .toDF("doc_id", "blob").write
     }
 
   /** m2r: [[m2ImageFeatures]]'s batch path with the REAL [[ImageIoCodec]]

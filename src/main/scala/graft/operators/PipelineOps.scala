@@ -1031,14 +1031,8 @@ object PipelineOps {
     cutStores.getOrBuild(s, dir, s"v$ver", path) {
       sweepStaleCutRoots(s"graft_release_cut_v${ver}_", dirTag, name)
       sweepStaleCutRoots("graft_release_cut_f", dirTag, name)
-      def tolerateRace(body: => Unit): Unit =
-        try body
-        catch { case _: GenStore.ConcurrentFoldException => () }
-      if (GenStore.currentGen(path).isEmpty)
-        tolerateRace(GenStore.fold(s, path, releaseCutRelation(s, dir, stages),
-          partCol = "cut_part", idCol = "doc_id", mode = GenStore.Manifest))
-      tolerateRace(GenStore.compact(s, path, targetFiles = 1, maxFiles = 4,
-        mode = GenStore.Manifest))
+      GenStore.foldCompacted(s, path, releaseCutRelation(s, dir, stages),
+        partCol = "cut_part", idCol = "doc_id", mode = GenStore.Manifest)
       path
     }
   }

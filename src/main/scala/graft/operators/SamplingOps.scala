@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{Layouts, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -567,7 +567,7 @@ object SamplingOps {
   }
 
   private[graft] def dsirModelPath(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.artifactPath(s,
+    Layouts.artifactPath(s,
       s"graft_dsir_v${DsirVersion}_d${TextOps.ClfBuckets}", dir, "documents")
 
   private val dsirMemo = new graft.sources.FingerprintMemo[Array[Long]]
@@ -581,10 +581,8 @@ object SamplingOps {
     val path = dsirModelPath(s, dir)
     dsirMemo.getOrBuild(s, dir, "", path) {
         import s.implicits._
-        if (!graft.sources.Layouts.completedTable(path)) {
-          val rdf = dsirRatiosOf(Tables.documents(s, dir))
-          graft.sources.Layouts.publishAtomically(rdf, path, files = 1)
-        }
+        Layouts.publish(path)(
+          dsirRatiosOf(Tables.documents(s, dir)).repartition(1).write)
         val rows = s.read.schema("b LONG, r LONG").parquet(path)
           .as[(Long, Long)].collect()
         require(rows.nonEmpty,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{Layouts, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -160,8 +160,8 @@ object SimilarityOps {
     * the persisted table's fingerprint-named path. Centroids are
     * DETERMINISTIC per (corpus, k) — seeded sample, fixed init, fixed
     * iteration count — so the memo is pure caching of a one-time index
-    * build, exactly the role [[graft.sources.Layouts.writeOncePartitioned]]
-    * plays for the cell layout. Before this, s2/s3/s4 each re-trained the
+    * build, exactly the role [[Layouts.publish]] plays for
+    * the cell layout. Before this, s2/s3/s4 each re-trained the
     * same quantizer and re-counted the same corpus inside one suite run
     * (3 trainings + 3 counts + the training collect()s — most of the ANN
     * tier's bench cost). In a real deployment the coarse quantizer is
@@ -170,10 +170,10 @@ object SimilarityOps {
   private val trainedCentroids = new graft.sources.FingerprintMemo[Array[Array[Double]]]
   private val corpusCounts = new graft.sources.FingerprintMemo[Long]
 
-  /** [[graft.sources.Layouts.artifactPath]] of an index artifact over
+  /** [[Layouts.artifactPath]] of an index artifact over
     * `dir`'s embeddings corpus. */
   private def indexPath(s: SparkSession, name: String, dir: String): String =
-    graft.sources.Layouts.artifactPath(s, name, dir, "embeddings")
+    Layouts.artifactPath(s, name, dir, "embeddings")
 
   /** Corpus row count — memoized per session AND persisted as a tiny
     * fingerprint-named sidecar file under target/, so a fresh process
@@ -220,16 +220,17 @@ object SimilarityOps {
     * corpus I/O, so a warm process can resolve and probe the table before
     * touching the corpus at all), and the dir tag. */
   private[graft] def centroidsPath(s: SparkSession, dir: String, k: Int): String =
-    indexPath(s, s"graft_ivf_centroids_v${TrainerVersion}_k$k", dir)
+    indexPath(s, centroidsName(k), dir)
 
-  // The atomic table-publish device lives in [[graft.sources.Layouts]]
-  // (shared with the TextOps bigram-LM persistence); these are the
-  // local names the index trainers use.
-  private def completedTable(path: String): Boolean =
-    graft.sources.Layouts.completedTable(path)
+  private[graft] def centroidsName(k: Int): String =
+    s"graft_ivf_centroids_v${TrainerVersion}_k$k"
 
-  private def publishAtomically(df: DataFrame, path: String): Unit =
-    graft.sources.Layouts.publishAtomically(df, path)
+  /** Name of a table built from trained models: `base` followed by each
+    * model's artifact name. A model renamed by a new trainer version or
+    * shape therefore renames every table built from it, so a later
+    * process never serves rows assigned or encoded by an older model. */
+  private[graft] def builtFrom(base: String, models: String*): String =
+    (base +: models.map(_.stripPrefix("graft_"))).mkString("__")
 
   /** The (dir, k) quantizer — trained once, PERSISTED, then loaded: the
     * first use per (dir, k) anywhere trains and writes the centroid
@@ -240,29 +241,28 @@ object SimilarityOps {
     * warm-up. In-session reuse still short-circuits through the memo;
     * doubles round-trip parquet exactly, and content is deterministic
     * per (dir, k) (seeded sample, fixed init/iters), so load ≡ retrain
-    * — spec-asserted via a sentinel table. Load path trusts only a
-    * COMPLETE table ([[completedTable]]) and asserts the loaded row
-    * count equals k — a partial or foreign table fails loudly instead
-    * of poisoning every query in the JVM. */
+    * — spec-asserted via a sentinel table. A cold process publishes
+    * ([[Layouts.publish]]) and then loads like a warm
+    * one; the load trusts only a COMPLETE table and asserts the loaded
+    * row count equals k — a partial or foreign table fails loudly
+    * instead of poisoning every query in the JVM. */
   private[graft] def centroidsFor(s: SparkSession, dir: String, k: Int): Array[Array[Double]] = {
     val path = centroidsPath(s, dir, k)
     trainedCentroids.getOrBuild(s, dir, s"k$k", path) {
       import s.implicits._
-      if (completedTable(path)) {
-        val cs = Tables.read(s, path).orderBy($"cell_id")
-          .select($"c_vec").as[Seq[Double]].collect().map(_.toArray)
-        require(cs.length == k,
-          s"persisted quantizer at $path holds ${cs.length} centroids, expected $k")
-        cs
-      } else {
+      Layouts.publish(path) {
         val emb = Tables.embeddings(s, dir)
         val cs = if (k <= DriverTrainCap)
                    kmeans(emb, k, iters = 3, knownCount = corpusCount(s, dir))
                  else kmeansDistributed(emb, k, iters = 3)
-        publishAtomically(cs.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-          .toSeq.toDF("cell_id", "c_vec"), path)
-        cs
+        cs.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+          .toDF("cell_id", "c_vec").repartition(1).write
       }
+      val cs = Tables.read(s, path).orderBy($"cell_id")
+        .select($"c_vec").as[Seq[Double]].collect().map(_.toArray)
+      require(cs.length == k,
+        s"persisted quantizer at $path holds ${cs.length} centroids, expected $k")
+      cs
     }
   }
 
@@ -588,17 +588,18 @@ object SimilarityOps {
   /** Path of the cell-partitioned copy of `embeddings` — the corpus
     * bucketed ONCE by nearest centroid and written `partitionBy("cell")`,
     * exactly the layout SCALING.md prescribes for IVF at 100 TB. Written
-    * on first use per (k, corpus state) via the shared write-once
-    * helper — k is part of the layout name because the cell assignment
-    * baked into the directories depends on the quantizer size.
+    * on first use per (quantizer, corpus state) via the shared publish
+    * gate — the quantizer's name ([[builtFrom]]) is part of the layout
+    * name because the cell assignment baked into the directories
+    * depends on it.
     * Deterministic content (seeded quantizer), so reuse mirrors the
     * one-time index build it stands for. */
   private[graft] def embeddingsByCell(s: SparkSession, dir: String, k: Int,
       centroids: Array[Array[Double]]): String =
-    graft.sources.Layouts.writeOncePartitioned(s, s"graft_emb_by_cell_k$k", dir,
-        "cell", "embeddings") {
+    Layouts.publish(indexPath(s,
+        builtFrom("graft_emb_by_cell", centroidsName(k)), dir))(
       assignCells(Tables.embeddings(s, dir), "vec_id", "embedding", centroids)
-    }
+        .write.partitionBy("cell"))
 
   /** s3: the online-serving ANN path — ONE query (vec_id 0) probed
     * against the cell-partitioned layout. The probe's `cell IN (...)`
@@ -792,7 +793,10 @@ object SimilarityOps {
     * [[centroidsPath]] (trainer version + hyperparameters + corpus file
     * fingerprint + dir tag). */
   private[graft] def pqCodebooksPath(s: SparkSession, dir: String): String =
-    indexPath(s, s"graft_pq_codebooks_v${TrainerVersion}_m${PqM}_k$PqK", dir)
+    indexPath(s, pqCodebooksName, dir)
+
+  private[graft] def pqCodebooksName: String =
+    s"graft_pq_codebooks_v${TrainerVersion}_m${PqM}_k$PqK"
 
   /** The M per-subspace codebooks — trained on ONE collected sample,
     * PERSISTED as `(m, code, c_vec)`, loaded by later JVMs (same
@@ -804,25 +808,23 @@ object SimilarityOps {
     val path = pqCodebooksPath(s, dir)
     trainedBooks.getOrBuild(s, dir, "", path) {
       import s.implicits._
-      if (completedTable(path)) {
-        val rows = Tables.read(s, path)
-          .select($"m", $"code", $"c_vec").as[(Int, Int, Seq[Double])]
-          .collect() // M×K rows — bounded by the codebook size, never data
-        require(rows.length == PqM * PqK,
-          s"persisted codebooks at $path hold ${rows.length} rows, expected ${PqM * PqK}")
-        val byM = rows.groupBy(_._1)
-        require((0 until PqM).forall(m => byM.get(m).exists(_.length == PqK)),
-          s"persisted codebooks at $path missing a subspace (need $PqK codes per m in 0..${PqM - 1})")
-        Array.tabulate(PqM)(m =>
-          byM(m).sortBy(_._2).map(_._3.toArray))
-      } else {
+      Layouts.publish(path) {
         val books = pqCodebooks(Tables.embeddings(s, dir),
           knownCount = corpusCount(s, dir))
-        publishAtomically(books.zipWithIndex.flatMap { case (book, m) =>
+        books.zipWithIndex.flatMap { case (book, m) =>
           book.zipWithIndex.map { case (c, code) => (m, code, c.toSeq) }
-        }.toSeq.toDF("m", "code", "c_vec"), path)
-        books
+        }.toSeq.toDF("m", "code", "c_vec").repartition(1).write
       }
+      val rows = Tables.read(s, path)
+        .select($"m", $"code", $"c_vec").as[(Int, Int, Seq[Double])]
+        .collect() // M×K rows — bounded by the codebook size, never data
+      require(rows.length == PqM * PqK,
+        s"persisted codebooks at $path hold ${rows.length} rows, expected ${PqM * PqK}")
+      val byM = rows.groupBy(_._1)
+      require((0 until PqM).forall(m => byM.get(m).exists(_.length == PqK)),
+        s"persisted codebooks at $path missing a subspace (need $PqK codes per m in 0..${PqM - 1})")
+      Array.tabulate(PqM)(m =>
+        byM(m).sortBy(_._2).map(_._3.toArray))
     }
   }
   private[graft] def pqCodebooks(emb: DataFrame,
@@ -941,11 +943,13 @@ object SimilarityOps {
     * s1. */
   /** Path of the write-once PQ code table — "the serving table you
     * persist" made literal: (vec_id, codes, vnorm) parquet, built once
-    * per corpus state. Deterministic content (memoized codebooks). */
+    * per (codebooks, corpus state) — the codebooks' name is part of the
+    * table name ([[builtFrom]]). Deterministic content (memoized
+    * codebooks). */
   private[graft] def pqCodesTable(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.writeOnce(s, "graft_pq_codes", dir, "embeddings") {
-      pqEncode(Tables.embeddings(s, dir), pqCodebooksFor(s, dir))
-    }
+    Layouts.publish(indexPath(s,
+        builtFrom("graft_pq_codes", pqCodebooksName), dir))(
+      pqEncode(Tables.embeddings(s, dir), pqCodebooksFor(s, dir)).write)
 
   /** The query batch as a LOCAL relation with driver-computed LUT and
     * norm — (query_id, q_emb, lut, qnorm), NQueries rows. No expression
@@ -1017,16 +1021,17 @@ object SimilarityOps {
     * `partitionBy(cell)`, so a probe reads only its nprobe cell
     * directories AND each candidate row is ~12 B of codes instead of
     * 256 B of floats. One corpus pass builds it: assign cell, encode
-    * codes, keep the true norm. k is part of the layout name because the
-    * directory routing depends on the quantizer size. */
+    * codes, keep the true norm. Both models' names ([[builtFrom]]) are
+    * part of the layout name: the directory routing depends on the
+    * quantizer and the codes on the codebooks. */
   private[graft] def ivfPqTable(s: SparkSession, dir: String, k: Int): String =
-    graft.sources.Layouts.writeOncePartitioned(s, s"graft_ivfpq_codes_k$k", dir,
-        "cell", "embeddings") {
+    Layouts.publish(indexPath(s, builtFrom("graft_ivfpq_codes",
+        centroidsName(k), pqCodebooksName), dir))(
       pqEncode(
         assignCells(Tables.embeddings(s, dir), "vec_id", "embedding",
           centroidsFor(s, dir, k)),
         pqCodebooksFor(s, dir), keep = Seq("cell"))
-    }
+        .write.partitionBy("cell"))
 
   /** [[s7IvfPq]] with corpus-derived sizing, mirroring s2. */
   def s7IvfPq(s: SparkSession, dir: String): DataFrame = {
@@ -1151,13 +1156,13 @@ object SimilarityOps {
     // the root name carries the corpus fingerprint and validates the
     // memo: a regenerated corpus rolls the root, which replaces the entry
     // and builds fresh
-    val root = indexPath(s,
-      s"graft_ann_gen_index_v${TrainerVersion}_k$k", dir)
+    val root = indexPath(s, builtFrom("graft_ann_gen_index",
+      centroidsName(k), pqCodebooksName), dir)
     foldedIndexRoots.getOrBuild(s, dir, s"k$k", root) {
       // the build is TWO folds (standing corpus, then the ingest batch),
       // so the store is complete only at generation >= 2. A store an
       // earlier process committed through generation 2 is trusted as-is
-      // (content is deterministic per root — the writeOnce discipline):
+      // (content is deterministic per root — the publish discipline):
       // a warm process pays zero index-build jobs. A store that stopped
       // at generation 1 is a build that CRASHED between the two commits —
       // trusting it would silently serve an index missing the whole

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{Layouts, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -274,7 +274,7 @@ object TextOps {
   }
 
   private[graft] def langProfilePath(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.artifactPath(s,
+    Layouts.artifactPath(s,
       s"graft_t2b_profiles_v${ProfileVersion}_m${ProfileTopM}", dir, "documents")
 
   private val profileMemo = new graft.sources.FingerprintMemo[Seq[(String, String, Long)]]
@@ -287,10 +287,8 @@ object TextOps {
     val path = langProfilePath(s, dir)
     profileMemo.getOrBuild(s, dir, "", path) {
         import s.implicits._
-        if (!graft.sources.Layouts.completedTable(path)) {
-          graft.sources.Layouts.publishAtomically(
-            langProfilesOf(Tables.documents(s, dir)), path, files = 1)
-        }
+        Layouts.publish(path)(
+          langProfilesOf(Tables.documents(s, dir)).repartition(1).write)
         val rows = s.read.schema("lang STRING, g STRING, w LONG").parquet(path)
           .as[(String, String, Long)].collect().toSeq
           .sortBy(r => (r._1, r._2))
@@ -767,7 +765,7 @@ object TextOps {
   }
 
   private[graft] def t4cVocabPath(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.artifactPath(s,
+    Layouts.artifactPath(s,
       s"graft_t4c_vocab_v${BpeTrainVersion}_n${BpeMerges}", dir, "documents")
 
   private val t4cMemo = new graft.sources.FingerprintMemo[Seq[String]]
@@ -781,7 +779,7 @@ object TextOps {
     val path = t4cVocabPath(s, dir)
     t4cMemo.getOrBuild(s, dir, "", path) {
         import s.implicits._
-        if (!graft.sources.Layouts.completedTable(path)) {
+        Layouts.publish(path) {
           val wc = Tables.documents(s, dir)
             .select(explode(regexp_extract_all(
               lower($"text"), lit(BpeTokenRe), lit(0))).as("w"))
@@ -793,9 +791,8 @@ object TextOps {
               bpeTrainMerges(wc.as[(String, Long)].collect().toSeq, BpeMerges)
             else bpeTrainMergesDistributed(wc, BpeMerges)
           } finally wc.unpersist()
-          graft.sources.Layouts.publishAtomically(
-            pieces.zipWithIndex.map { case (p, i) => (i, p) }
-              .toDF("rank", "piece"), path, files = 1)
+          pieces.zipWithIndex.map { case (p, i) => (i, p) }
+            .toDF("rank", "piece").repartition(1).write
         }
         val rows = s.read.schema("rank INT, piece STRING").parquet(path)
           .orderBy($"rank").as[(Int, String)].collect()
@@ -1121,7 +1118,7 @@ object TextOps {
     * never be scored against a stale model (the
     * [[SimilarityOps.centroidsPath]] discipline applied to the LM). */
   private[graft] def lmModelPath(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.artifactPath(s,
+    Layouts.artifactPath(s,
       s"graft_bigram_lm_v${LmVersion}", dir, "documents")
 
   /** The TRAINED bigram model `(ch, bh, pq)`: per distinct bigram, its
@@ -1154,7 +1151,7 @@ object TextOps {
       Tables.documents(s, dir).where(col("doc_id") % DecontMod === 0))
 
   private[graft] def refLmModelPath(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.artifactPath(s,
+    Layouts.artifactPath(s,
       s"graft_ref_bigram_lm_v${LmVersion}", dir, "documents")
 
   // `train` is BY-NAME: the corpus relation must not even be resolved on
@@ -1164,7 +1161,7 @@ object TextOps {
   private def lmModelAt(s: SparkSession, path: String,
       train: => DataFrame): DataFrame = {
     import s.implicits._
-    if (!graft.sources.Layouts.completedTable(path)) {
+    Layouts.publish(path) {
       import org.apache.spark.sql.expressions.Window
       val counts = train
         .select(explode(bigramPairs($"text")).as("p"))
@@ -1174,7 +1171,7 @@ object TextOps {
         .withColumn("c2", sum($"m").over(Window.partitionBy($"bh")))
         .withColumn("c1", sum($"m").over(Window.partitionBy($"ch")))
         .select($"ch", $"bh", expr("(c2 * 1000000L) div c1").as("pq"))
-      graft.sources.Layouts.publishAtomically(model, path, files = 4)
+      model.repartition(4).write
     }
     // explicit schema: skips footer-inference, so a warm resolution is
     // zero Spark jobs (the model schema is fixed by construction)
@@ -1828,7 +1825,7 @@ object TextOps {
     * corpus — fingerprint-named like [[lmModelPath]], so a regenerated
     * corpus rolls the name and can never serve stale retrieval stats. */
   private[graft] def bm25StatsPath(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.artifactPath(s,
+    Layouts.artifactPath(s,
       s"graft_bm25_stats_v${Bm25Version}", dir, "documents")
 
   /** Driver-side retrieval scalars, persisted per corpus fingerprint
@@ -1848,7 +1845,7 @@ object TextOps {
     val path = bm25StatsPath(s, dir)
     bm25Memo.getOrBuild(s, dir, "", path) {
         import s.implicits._
-        if (!graft.sources.Layouts.completedTable(path)) {
+        Layouts.publish(path) {
           val docs = Tables.documents(s, dir)
           val row = docs.agg(count(lit(1)), sum(size(words($"text"))),
             max(size(words($"text")))).head()
@@ -1863,10 +1860,10 @@ object TextOps {
             .orderBy($"df".desc, $"term")
             .limit(Bm25QueryTerms)
             .as[(String, Long)].collect()
-          val stats = top.zipWithIndex.toSeq.map { case ((t, df), i) =>
+          top.zipWithIndex.toSeq.map { case ((t, df), i) =>
             (i / 3, t, df, n, tot / n, maxdl)
           }.toDF("query_id", "term", "df", "n", "avgdl", "maxdl")
-          graft.sources.Layouts.publishAtomically(stats, path, files = 1)
+            .repartition(1).write
         }
         val rows = s.read
           .schema("query_id INT, term STRING, df LONG, n LONG, avgdl LONG, maxdl LONG")
@@ -2504,7 +2501,7 @@ object TextOps {
   }
 
   private[graft] def clfModelPath(s: SparkSession, dir: String): String =
-    graft.sources.Layouts.artifactPath(s,
+    Layouts.artifactPath(s,
       s"graft_clf_v${ClfVersion}_d${ClfBuckets}", dir, "documents")
 
   private val clfMemo = new graft.sources.FingerprintMemo[Array[Long]]
@@ -2518,10 +2515,8 @@ object TextOps {
     val path = clfModelPath(s, dir)
     clfMemo.getOrBuild(s, dir, "", path) {
         import s.implicits._
-        if (!graft.sources.Layouts.completedTable(path)) {
-          val wdf = classifierWeightsOf(Tables.documents(s, dir))
-          graft.sources.Layouts.publishAtomically(wdf, path, files = 1)
-        }
+        Layouts.publish(path)(
+          classifierWeightsOf(Tables.documents(s, dir)).repartition(1).write)
         val rows = s.read.schema("b LONG, w LONG").parquet(path)
           .as[(Long, Long)].collect()
         require(rows.nonEmpty,

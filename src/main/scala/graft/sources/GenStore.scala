@@ -402,6 +402,23 @@ object GenStore {
     sweep(path, genNum, newGen, prevGen = Some(g))
   }
 
+  /** Build a compacted store whose content is deterministic per `path`
+    * (a fingerprint-named root): fold `batch` if nothing is committed
+    * yet, then [[compact]] it. A racer building the same root commits
+    * identical content, so a lost claim (fold or compact) is the winner
+    * doing our work — tolerated, and the committed view serves. The
+    * compact is idempotent (a no-op on a compact store), so it doubles
+    * as the resume step of a build that crashed between fold and
+    * compact. */
+  def foldCompacted(s: SparkSession, path: String, batch: => DataFrame,
+      partCol: String, idCol: String, mode: Mode): Unit = {
+    def tolerateRace(body: => Unit): Unit =
+      try body catch { case _: ConcurrentFoldException => () }
+    if (currentGen(path).isEmpty)
+      tolerateRace(fold(s, path, batch, partCol, idCol, mode))
+    tolerateRace(compact(s, path, targetFiles = 1, maxFiles = 4, mode = mode))
+  }
+
   /** A zero-row fold writes NO partition directories, and a generation
     * holding no parquet at all cannot be read back — schema inference
     * has nothing to look at (hit live in round 17: a funnel ruleset

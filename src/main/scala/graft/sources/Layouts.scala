@@ -18,8 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Layouts {
 
-  private val written = new FingerprintMemo[String]
-
   /** Absolute path of the driver-side artifact `name` derived from
     * `dir`'s testdata `tables`: `target/<name>_f<fingerprint>_<dirTag>`
     * under the working directory, the fingerprint being the tables'
@@ -27,44 +25,22 @@ object Layouts {
     * path: it never overwrites a path an earlier plan still reads, and a
     * persisted artifact is never loaded stale. `name` must encode every
     * other parameter that changes the artifact's content (trainer
-    * version, k, ...). */
+    * version, k, ...). Artifacts outlive the session and the process
+    * that wrote them ([[publish]] reuses any complete table), so a
+    * change to an artifact's producer (its rows, partitioning or file
+    * shape) must rename the artifact, as the `*Version` constants in the
+    * model names do; otherwise a later process serves the old
+    * producer's table. A table built from a trained model names that
+    * model too (`SimilarityOps.builtFrom`), so retraining renames it. */
   def artifactPath(s: SparkSession, name: String, dir: String,
       tables: String*): String =
     java.nio.file.Paths.get("target",
       s"${name}_f${Tables.tablesId(s, dir, tables: _*)}_${dirTag(dir)}")
       .toAbsolutePath.toString
 
-  /** Write-once partitioned layout: materializes `df`, derived from
-    * `dir`'s testdata `tables`, partitioned by `partCol` at its
-    * [[artifactPath]] on first use per (session, name, dir, corpus state)
-    * and returns the path; a rewrite of any of `tables` writes a fresh
-    * copy. Deterministic producers only: rewriting must give identical
-    * rows, so reuse across queries/bench passes mirrors the write-once
-    * table this stands in for. */
-  def writeOncePartitioned(s: SparkSession, name: String, dir: String,
-      partCol: String, tables: String*)(df: => DataFrame): String =
-    writeLayout(s, name, dir, tables)(df.write.partitionBy(partCol))
-
-  /** Unpartitioned write-once layout — same contract as
-    * [[writeOncePartitioned]] for tables with no routing column (e.g. the
-    * PQ code table, keyed only by vec_id). */
-  def writeOnce(s: SparkSession, name: String, dir: String,
-      tables: String*)(df: => DataFrame): String =
-    writeLayout(s, name, dir, tables)(df.write)
-
-  private def writeLayout(s: SparkSession, name: String, dir: String,
-      tables: Seq[String])(w: => DataFrameWriter[Row]): String = {
-    val out = artifactPath(s, name, dir, tables: _*)
-    written.getOrBuild(s, dir, name, out) {
-      w.mode("overwrite").parquet(out)
-      out
-    }
-  }
-
   /** Recursive delete of a local path tree (no-op if absent) — shared by
-    * the atomic-publish devices that must clear torn staging directories
-    * ([[graft.operators.DedupOps.indexUpsert]] generations and the
-    * SimilarityOps index-table publisher). */
+    * [[publish]] (torn tables, lost staging directories), the
+    * generational store's sweep and the st8 upsert store. */
   private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
       import scala.jdk.CollectionConverters._
@@ -73,48 +49,55 @@ object Layouts {
       all.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
     }
 
-  /** Load gate for a persisted model/index table: only a COMPLETE write
-    * counts — the committer's _SUCCESS marker must exist. A crashed
-    * writer's partial directory is treated as absent and republished; it
-    * is never loaded. */
+  /** Load gate for a persisted table: only a COMPLETE write counts — the
+    * committer's _SUCCESS marker must exist. A crashed writer's partial
+    * directory is treated as absent and republished; it is never
+    * loaded. */
   private[graft] def completedTable(path: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS"))
 
-  /** Publish a model/index table ATOMICALLY: write to a pid-suffixed side
-    * path (where the committer drops _SUCCESS), then rename into place —
-    * a same-filesystem directory move, so a concurrent or later reader
-    * sees no table or the whole table, never a torn one. If a concurrent
-    * trainer in another process won the rename, ours is discarded —
-    * content is deterministic per path, so either copy is correct.
-    * `files` sizes the table's file count: 1 for scalar-sized artifacts
-    * (centroids, codebooks), more for vocab-sized model tables whose
-    * single-file write would bottleneck on one task. */
-  private[graft] def publishAtomically(df: DataFrame, path: String,
-      files: Int = 1): Unit = {
-    val tmp = java.nio.file.Paths.get(
-      path + "_stage" + java.lang.ProcessHandle.current().pid())
-    val target = java.nio.file.Paths.get(path)
-    df.repartition(files).write.mode("overwrite").parquet(tmp.toString)
-    try java.nio.file.Files.move(tmp, target,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.io.IOException =>
-      if (completedTable(path)) {
-        // a concurrent trainer won the rename; its content equals ours
-        deleteRecursively(tmp)
-      } else {
-        // torn leftover from a crashed writer blocks the rename: clear it
-        // and retry once; if ANOTHER process raced us to the same repair,
-        // whichever rename lands is complete and correct
-        deleteRecursively(target)
-        try java.nio.file.Files.move(tmp, target,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.io.IOException =>
+  /** The one way to persist a derived parquet table — layouts, indexes
+    * and trained models alike. If `path` holds a complete table
+    * ([[completedTable]]) it returns at once and never evaluates
+    * `write`, so no session rewrites files under another session's
+    * reader. Otherwise `write` runs into a staging sibling unique to this
+    * call (pid plus a random suffix, so two threads of one JVM racing
+    * the same build never share one) that is then renamed into place — a
+    * same-filesystem directory move, so a concurrent or later reader
+    * sees no table or the whole table, never a torn one. If a racer won
+    * the rename, ours is discarded: content is deterministic per path,
+    * so either copy is correct. The caller shapes the writer
+    * (`df.repartition(n).write`, `df.write.partitionBy(c)`). Returns
+    * `path`. */
+  def publish(path: String)(write: => DataFrameWriter[Row]): String = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    if (!completedTable(path)) {
+      val tmp = Paths.get(s"${path}_stage${ProcessHandle.current().pid()}_" +
+        java.util.UUID.randomUUID().toString.take(8))
+      val target = Paths.get(path)
+      // a failed or interrupted write leaves no orphan staging directory
+      try write.parquet(tmp.toString)
+      catch { case e: Throwable => deleteRecursively(tmp); throw e }
+      try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+      catch { case _: java.io.IOException =>
+        if (completedTable(path)) {
+          // a racer won the rename; its content equals ours
           deleteRecursively(tmp)
-          require(completedTable(path),
-            s"atomic publish of $path failed with no complete table present")
+        } else {
+          // torn leftover from a crashed writer blocks the rename: clear
+          // it and retry once; if a racer made the same repair, whichever
+          // rename lands is complete and correct
+          deleteRecursively(target)
+          try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+          catch { case _: java.io.IOException =>
+            deleteRecursively(tmp)
+            require(completedTable(path),
+              s"atomic publish of $path failed with no complete table present")
+          }
         }
       }
     }
+    path
   }
 
   /** 64-bit md5-prefix tag of a source dir for on-disk layout names.
@@ -126,10 +109,8 @@ object Layouts {
 
   /** Path of the by-source partitioned copy of `documents`. */
   def documentsBySource(s: SparkSession, dir: String): String =
-    writeOncePartitioned(s, "graft_docs_by_source", dir, "source",
-        "documents") {
-      Tables.documents(s, dir)
-    }
+    publish(artifactPath(s, "graft_docs_by_source", dir, "documents"))(
+      Tables.documents(s, dir).write.partitionBy("source"))
 
   /** src1: single-slice stats off the partitioned layout. The
     * `source IN (...)` predicate becomes a scan PartitionFilter — only
@@ -160,24 +141,23 @@ object Layouts {
     * encodes EVERY layout parameter — (table, bucket key, bucket count,
     * corpus fingerprint, source dir) — so a second identical call is a
     * metadata hit while any differing parameter, or a rewritten table, is
-    * a different table (same-table-different-key must never alias). */
+    * a different table (same-table-different-key must never alias). The
+    * gate is the catalog, which every `newSession()` shares, not
+    * [[publish]]: the table exists for a reader only once registered. */
   def bucketedTable(s: SparkSession, dir: String, table: String,
                     key: String, buckets: Int): String = {
-    val name = s"graft_${table}_${key}_bk$buckets"
-    val path = artifactPath(s, name, dir, table)
+    val path = artifactPath(s, s"graft_${table}_${key}_bk$buckets", dir, table)
     val tname = java.nio.file.Paths.get(path).getFileName.toString
-    written.getOrBuild(s, dir, name, path) {
-      if (!s.catalog.tableExists(tname)) {
-        Tables.load(s, dir, table).write
-          .mode("overwrite")
-          .bucketBy(buckets, key)
-          .sortBy(key)
-          .option("path", path)
-          .format("parquet")
-          .saveAsTable(tname)
-      }
-      tname
+    if (!s.catalog.tableExists(tname)) {
+      Tables.load(s, dir, table).write
+        .mode("overwrite")
+        .bucketBy(buckets, key)
+        .sortBy(key)
+        .option("path", path)
+        .format("parquet")
+        .saveAsTable(tname)
     }
+    tname
   }
 
   /** src2: shuffle-free fact-fact join off co-bucketed layouts — lineitem
@@ -276,8 +256,7 @@ object Layouts {
       val (uSpan, tSpan) = (uMax - uMin + 1, tMax - tMin + 1)
       val uW = math.max(1L, (uSpan + ZCells - 1) / ZCells)
       val tW = math.max(1L, (tSpan + ZCells - 1) / ZCells)
-      val path = writeOncePartitioned(s, "graft_events_zorder", dir, "zb",
-          "events") {
+      val path = publish(artifactPath(s, "graft_events_zorder", dir, "events")) {
         val ub = expr(s"(user_id - ${uMin}L) div ${uW}L")
         val tb = expr(s"(unix_micros(ts) - ${tMin}L) div ${tW}L")
         // the sort MUST lead with zb: FileFormatWriter requires its
@@ -288,6 +267,7 @@ object Layouts {
           .withColumn("zb", zInterleaveCol(ub, tb).cast("int"))
           .repartition(col("zb"))
           .sortWithinPartitions(col("zb"), col("user_id"), col("ts"))
+          .write.partitionBy("zb")
       }
       ZGrid(path, uMin, uSpan, uW, tMin, tSpan, tW)
     }
@@ -363,24 +343,11 @@ object Layouts {
     * file per trigger per partition). */
   private[graft] val FragmentFiles = 200
 
-  /** Total on-disk bytes of a layout's parquet files. Driver-side file
-    * listing — at fixture scale a bounded walk; at 100 TB this number
-    * comes from the table manifest/catalog, not a filesystem walk (the
-    * walk IS the small-files tax this operator exists to remove). */
-  private[graft] def layoutBytes(path: String): Long = {
-    val root = java.nio.file.Paths.get(path)
-    val s = java.nio.file.Files.walk(root)
-    try s.filter(p => p.toString.endsWith(".parquet"))
-      .mapToLong(p => java.nio.file.Files.size(p)).sum()
-    finally s.close()
-  }
-
   /** The fragmented ingest layout: events deliberately written as
     * [[FragmentFiles]] tiny files. */
   private[graft] def fragmentedEvents(s: SparkSession, dir: String): String =
-    writeOnce(s, "graft_events_fragmented", dir, "events") {
-      Tables.events(s, dir).repartition(FragmentFiles)
-    }
+    publish(artifactPath(s, "graft_events_fragmented", dir, "events"))(
+      Tables.events(s, dir).repartition(FragmentFiles).write)
 
   /** Write-once compacted copy: the file count is sized from the REAL
     * byte total (ceil(bytes / target)), and the rewrite is `coalesce`,
@@ -391,14 +358,13 @@ object Layouts {
     * steady-state small-files janitor, and at 100 TB zero-shuffle is the
     * difference between rewriting bytes once and moving them across the
     * cluster twice. */
-  private[graft] def compactedEvents(s: SparkSession, dir: String): String = {
-    val frag = fragmentedEvents(s, dir)
-    val parts = math.max(1,
-      math.ceil(layoutBytes(frag).toDouble / CompactTargetBytes).toInt)
-    writeOnce(s, "graft_events_compacted", dir, "events") {
-      Tables.read(s, frag).coalesce(parts)
+  private[graft] def compactedEvents(s: SparkSession, dir: String): String =
+    publish(artifactPath(s, "graft_events_compacted", dir, "events")) {
+      val frag = fragmentedEvents(s, dir)
+      val parts = math.max(1, math.ceil(
+        Tables.fingerprint(s, frag).bytes.toDouble / CompactTargetBytes).toInt)
+      Tables.read(s, frag).coalesce(parts).write
     }
-  }
 
   /** src4: small-file compaction, end-to-end. The registered output is a
     * content fingerprint of the COMPACTED table (per-type counts, exact
@@ -437,30 +403,18 @@ object Layouts {
 
   /** A [[GenStore]] of `documents` partitioned by source, built
     * FRAGMENTED (the initial fold runs with [[StoreFragFiles]] write
-    * tasks) and then compacted through [[GenStore.compact]] — the store
+    * tasks) and then compacted ([[GenStore.foldCompacted]]) — the store
     * maintenance loop, materialized once per corpus fingerprint. The
     * fingerprint-named root means a regenerated corpus can never serve a
-    * stale store; the compact call is idempotent (metadata-only no-op on
-    * an already-compact store), so it doubles as the resume step for a
-    * build that crashed between fold and compact. */
+    * stale store. */
   private[graft] def compactedDocStore(s: SparkSession, dir: String,
       mode: GenStore.Mode = GenStore.Links): String = {
     val name = if (mode == GenStore.Manifest) "graft_doc_store_m" else "graft_doc_store"
     val path = artifactPath(s, name, dir, "documents")
     docStores.getOrBuild(s, dir, name, path) {
-      // Deterministic content per fingerprint-named root: a racing
-      // process building the same store commits identical content, so a
-      // lost claim (fold or compact) is the winner doing our work —
-      // tolerate it and serve the committed view.
-      def tolerateRace(body: => Unit): Unit =
-        try body
-        catch { case _: GenStore.ConcurrentFoldException => () }
-      if (GenStore.currentGen(path).isEmpty)
-        tolerateRace(GenStore.fold(s, path,
-          Tables.documents(s, dir).repartition(StoreFragFiles),
-          partCol = "source", idCol = "doc_id", mode = mode))
-      tolerateRace(GenStore.compact(s, path, targetFiles = 1, maxFiles = 4,
-        mode = mode))
+      GenStore.foldCompacted(s, path,
+        Tables.documents(s, dir).repartition(StoreFragFiles),
+        partCol = "source", idCol = "doc_id", mode = mode)
       path
     }
   }

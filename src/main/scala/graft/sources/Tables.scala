@@ -304,7 +304,4 @@ object Det {
   /** DuckDB-side fragment equivalent of [[dsum]]. */
   def dsumSql(expr: String, scale: Int = 2): String =
     s"CAST(SUM(CAST($expr AS DECIMAL(18,$scale))) AS DOUBLE)"
-
-  def davgSql(expr: String, scale: Int = 2): String =
-    s"(${dsumSql(expr, scale)} / COUNT(*))"
 }

@@ -28,7 +28,4 @@ private[graft] object TrainedOracle {
 
   /** The spliced SQL, or the loud schema-correct-but-empty fallback. */
   def sqlFor(name: String, fallback: String): String = m.getOrElse(name, fallback)
-
-  /** Test hook. */
-  def reset(): Unit = m.clear()
 }

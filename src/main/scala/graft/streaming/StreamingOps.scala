@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.Tables
+import graft.sources.{Layouts, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -216,10 +216,9 @@ object StreamingOps {
     * result). Downstream readers get partition pruning on event_type
     * for free — the sink IS a layout. */
   def st6StreamSink(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Layouts.writeOncePartitioned(s,
-      "graft_st6_sink", dir, "event_type", "events") {
-      hourlyTypeCounts(Tables.events(s, dir))
-    }
+    val path = Layouts.publish(Layouts.artifactPath(s, "graft_st6_sink", dir,
+        "events"))(
+      hourlyTypeCounts(Tables.events(s, dir)).write.partitionBy("event_type"))
     Tables.read(s, path).select(
       col("hour_start"), col("event_type"), col("n_events"),
       col("min_value"), col("max_value"))
@@ -404,7 +403,7 @@ object StreamingOps {
       val survivors = merged.select(col("kb")).distinct()
         .collect().map(_.getLong(0)).toSet
       touched.filterNot(survivors).foreach(b =>
-        deleteRecursively(s"$path/kb=$b"))
+        Layouts.deleteRecursively(java.nio.file.Paths.get(path, s"kb=$b")))
     }
   }
 
@@ -419,11 +418,11 @@ object StreamingOps {
     * [[upsertBatch]] body through a MemoryStream's foreachBatch and
     * proves mode equality plus re-delivery idempotence. */
   def st8UpsertSink(s: SparkSession, dir: String): DataFrame = {
-    val p = graft.sources.Layouts.artifactPath(s, "graft_st8_store", dir,
-      "orders")
+    val p = Layouts.artifactPath(s, "graft_st8_store", dir, "orders")
     val path = upsertStores.getOrBuild(s, dir, "", p) {
-      deleteRecursively(p) // a fresh fold IS the operator; stale stores
-                           // from prior sessions would resurrect tombstones
+      // a fresh fold IS the operator; stale stores from prior sessions
+      // would resurrect tombstones
+      Layouts.deleteRecursively(java.nio.file.Paths.get(p))
       graft.operators.RelationalQueries.cdcBatches(s, dir)
         .foreach(b => upsertBatch(s, p, b))
       p
@@ -875,16 +874,6 @@ object StreamingOps {
        |  (only_in_ingest OR only_in_standing
        |    OR abs(share_delta_micro) > $DriftAlarmMicro) AS drift_alarm
        |FROM (${graft.operators.SketchOps.k8Sql})""".stripMargin
-
-  private def deleteRecursively(path: String): Unit = {
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root)) {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "st1_stream_window" -> st1StreamWindow _,

@@ -231,7 +231,7 @@ class LayoutsSpec extends SparkSpec {
     val nComp = parquetFiles(comp)
     assert(nFrag === Layouts.FragmentFiles, s"fragmented files: $nFrag")
     val expected = math.max(1, math.ceil(
-      Layouts.layoutBytes(frag).toDouble / Layouts.CompactTargetBytes).toInt)
+      Tables.fingerprint(spark, frag).bytes.toDouble / Layouts.CompactTargetBytes).toInt)
     assert(nComp === expected, s"compacted files: $nComp, expected $expected")
     assert(nComp < nFrag / 10, s"no real compaction: $nFrag -> $nComp")
 
@@ -280,6 +280,87 @@ class LayoutsSpec extends SparkSpec {
       .as[(String, Long)].collect().toSet
     assert(got === want)
     assert(got.nonEmpty)
+  }
+
+  /** A temp corpus holding sf's documents, for specs that build and
+    * break their own layouts. */
+  private def tempDocs(tag: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(tag).toString
+    Tables.documents(spark, sf).write.parquet(Tables.path(dir, "documents"))
+    dir
+  }
+
+  /** Relative paths of the parquet files under `root`. */
+  private def partFiles(root: String): Set[String] = {
+    val base = java.nio.file.Paths.get(root)
+    val walk = java.nio.file.Files.walk(base)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+        .map(base.relativize(_).toString).toSet
+    } finally walk.close()
+  }
+
+  test("a new session reuses a published layout: an earlier session's frame keeps its files") {
+    val dir = tempDocs("graft_publish_reuse")
+    val q = Layouts.src1PartitionPrune(spark, dir)
+    val path = Layouts.documentsBySource(spark, dir)
+    val files = partFiles(path)
+    assert(Layouts.documentsBySource(spark.newSession(), dir) === path)
+    assert(q.collect().length === 2,
+      "the first session's frame must still read the layout it listed")
+    assert(partFiles(path) === files, "the second session must not rewrite the layout")
+    Seq(path, dir).foreach(p => Layouts.deleteRecursively(java.nio.file.Paths.get(p)))
+  }
+
+  test("a layout whose _SUCCESS marker is gone is rebuilt by the next session") {
+    val dir = tempDocs("graft_publish_torn")
+    val path = Layouts.documentsBySource(spark, dir)
+    val files = partFiles(path)
+    // the crashed-writer state: no marker and a part file missing
+    java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_SUCCESS"))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(path, files.head))
+    val fresh = spark.newSession()
+    assert(Layouts.documentsBySource(fresh, dir) === path)
+    assert(Layouts.completedTable(path))
+    val rebuilt = partFiles(path)
+    assert(rebuilt.nonEmpty && (rebuilt & files).isEmpty,
+      s"expected freshly written part files, kept ${rebuilt & files}")
+    assert(Tables.read(fresh, path).count() === Tables.documents(spark, sf).count())
+    Seq(path, dir).foreach(p => Layouts.deleteRecursively(java.nio.file.Paths.get(p)))
+  }
+
+  test("two threads racing one publish leave one complete table and no staging directory") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val root = java.nio.file.Files.createTempDirectory("graft_publish_race")
+    val path = root.resolve("t").toString
+    val racers = Seq.fill(2)(Future(Layouts.publish(path)(
+      spark.range(1000).toDF().repartition(4).write)))
+    racers.foreach(f => assert(Await.result(f, scala.concurrent.duration.Duration.Inf) === path))
+    assert(Layouts.completedTable(path))
+    assert(Tables.read(spark, path).count() === 1000)
+    assert(root.toFile.list().toSet === Set("t"), "a staging directory was left behind")
+    Layouts.deleteRecursively(root)
+  }
+
+  test("a publish whose write fails leaves no table and no staging directory") {
+    val root = java.nio.file.Files.createTempDirectory("graft_publish_fail")
+    val path = root.resolve("t").toString
+    val failing = spark.range(8).toDF()
+      .select(when(col("id") > 3, raise_error(lit("boom"))).otherwise(col("id")).as("id"))
+    // no shuffle before the write: the failure must come from the write
+    // job's own tasks, after the staging directory exists
+    intercept[Exception](Layouts.publish(path)(failing.write))
+    assert(root.toFile.list().isEmpty, "a failed write left a staging directory behind")
+    Layouts.deleteRecursively(root)
+  }
+
+  test("one publish gate: completedTable( only in Layouts, writeOnce nowhere in src/main") {
+    assert(SourceScan.matches("""completedTable\(""".r, "src/main/scala").keySet ===
+      Set("graft/sources/Layouts.scala"),
+      "persist a derived table through Layouts.publish, not a hand-rolled gate")
+    assert(SourceScan.matches("writeOnce".r, "src/main/scala") === Map.empty)
   }
 
   test("FingerprintMemo: a rolled fingerprint rebuilds and evicts the stale entry") {

@@ -390,6 +390,36 @@ class SimilarityOpsSpec extends SparkSpec {
       "index-table names must roll with the corpus fingerprint")
   }
 
+  test("tables built from a trained model are named by that model: a renamed model rolls them") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_built_from").toString
+    clustered().write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val k = 4
+    val quantizer = SimilarityOps.centroidsName(k)
+    val books = SimilarityOps.pqCodebooksName
+    def named(path: String, models: String*) = {
+      val name = java.nio.file.Paths.get(path).getFileName.toString
+      models.foreach(m => assert(name.contains(m.stripPrefix("graft_")),
+        s"$name is built from $m but does not name it"))
+    }
+    val built = Seq(
+      SimilarityOps.embeddingsByCell(spark, dir, k,
+        SimilarityOps.centroidsFor(spark, dir, k)) -> Seq(quantizer),
+      SimilarityOps.pqCodesTable(spark, dir) -> Seq(books),
+      SimilarityOps.ivfPqTable(spark, dir, k) -> Seq(quantizer, books))
+    built.foreach { case (path, models) => named(path, models: _*) }
+
+    // a new trainer version renames the model, hence every table built
+    // from it: an old process's layout is never served to the new model
+    val bumped = quantizer.replace(s"_v${SimilarityOps.TrainerVersion}_",
+      s"_v${SimilarityOps.TrainerVersion + 1}_")
+    assert(bumped !== quantizer)
+    assert(SimilarityOps.builtFrom("graft_emb_by_cell", bumped) !==
+      SimilarityOps.builtFrom("graft_emb_by_cell", quantizer))
+    (built.map(_._1) ++ Seq(SimilarityOps.centroidsPath(spark, dir, k),
+        SimilarityOps.pqCodebooksPath(spark, dir), dir))
+      .foreach(p => graft.sources.Layouts.deleteRecursively(java.nio.file.Paths.get(p)))
+  }
+
   test("s8: folded index content equals a from-scratch full-corpus index; serve is recall-green") {
     import graft.sources.{GenStore, Tables}
     val dir = sf
