@@ -63,7 +63,8 @@ def main():
     if not skip_run:
         r = subprocess.run(
             ["sbt", "-batch", f'runMain graft.Verify {sfdir} {outdir}'],
-            capture_output=True, text=True, cwd="/root/repo")
+            capture_output=True, text=True,
+            cwd=Path(__file__).resolve().parents[1])
         tail = "\n".join((r.stdout + r.stderr).splitlines()[-15:])
         if r.returncode != 0:
             print(tail)

@@ -37,6 +37,9 @@ import java.nio.file.{Files, Paths}
   *
   * Output: one JSON line (stdout + target/scale_bench.json) with
   * per-query seconds, output rows, and contract-boolean status.
+  * `SPARK_GRAFT_ONLY=a,b,c` narrows the run to those queries
+  * ([[Session.selectedQueries]]); such a record says `"partial":true`
+  * and lists the queries it ran.
   * Methodology is Bench's ([[Session.passes]]): full warm-up pass, then
   * three timed passes, per-query median, cold cache per timed query.
   */
@@ -101,7 +104,8 @@ object ScaleBench {
     // Progress marker per (phase, query) on stderr — when a scale leg
     // dies mid-suite (r19: an 80× executor OOM), the last marker names
     // the culprit; without it the failure is an anonymous stage id.
-    val runs = Session.passes(SparkEntry.queries.toSeq) { (phase, n, fn) =>
+    val selected = Session.selectedQueries
+    val runs = Session.passes(selected) { (phase, n, fn) =>
       System.err.println(s"[scalebench] $phase $n")
       var built: DataFrame = null
       val outcome = Session.run(spark, n, fn, out,
@@ -130,8 +134,12 @@ object ScaleBench {
     }.mkString("{", ",", "}")
     val total = results.values.collect { case (t, _, _) if t >= 0 => t }.sum
     val allOk = results.values.forall { case (t, _, ok) => t >= 0 && ok }
+    val partial =
+      if (selected.size == SparkEntry.queries.size) ""
+      else s""","partial":true,"only":""" +
+        selected.map(q => Session.jsonString(q._1)).sorted.mkString("[", ",", "]")
     val json = s"""{"metric":"scale_total","value":${f"$total%.2f"},"unit":"sec",""" +
-      s""""factor":$factor,"base":"$base","all_contracts_ok":$allOk,"queries":$qsJson}"""
+      s""""factor":$factor,"base":"$base","all_contracts_ok":$allOk$partial,"queries":$qsJson}"""
     Files.createDirectories(Paths.get("target"))
     Files.writeString(Paths.get("target/scale_bench.json"), json + "\n")
     spark.stop()

@@ -264,12 +264,14 @@ object DedupOps {
   }
 
   /** Connected-component labels, memoized per (session, corpus
-    * fingerprint, graph variant): the CC iteration runs its actions
-    * EAGERLY at build time (one localCheckpoint per propagation round),
-    * so an unmemoized caller re-labels an identical graph on every
+    * fingerprint, graph variant): [[connectedComponents]] runs its jobs
+    * EAGERLY at build time (one localCheckpoint per star round), so an
+    * unmemoized caller re-labels an identical graph on every
     * construction; the fingerprint validates the entry, so a corpus
     * rewrite rebuilds and replaces it. The labels are checkpointed, not
-    * cached: the ContextCleaner frees a replaced entry's blocks. */
+    * cached: their plan reads no scan and no scope-owned relation, so a
+    * memo hit never re-runs the candidate pipeline, and the
+    * ContextCleaner frees a replaced entry's blocks. */
   private val ccMemo = new graft.sources.FingerprintMemo[DataFrame]
 
   private def ccLabelsFor(s: SparkSession, dir: String, table: String,
@@ -884,16 +886,17 @@ object DedupOps {
   /** d9: embedding-CLUSTER dedup — the SemDeDup shape (semantic dedup a
     * training pipeline runs where text dedup cannot see the duplication:
     * re-encodes, paraphrases, format shifts). d5's verified cosine ≥ 0.9
-    * pairs become edges, [[connectedComponents]] labels each semantic
-    * cluster with its min vec_id, and exactly the cluster root is kept —
-    * the embedding-space twin of d7 (same transitive-keep semantics: A~B,
-    * B~C drops BOTH B and C even when A~C was never observed). Candidate
-    * generation stays sign-LSH-bucketed, verify candidates-only, and the
-    * CC iteration moves (id, label) pairs — nothing here ever shuffles an
-    * embedding twice. On this corpus d5 finds no pairs, so every vector
-    * is its own kept cluster — the structure is exercised by the oracle
-    * either way, and DedupOpsSpec proves cluster/keep behavior on planted
-    * near-identical vector families (the d5 precedent). */
+    * pairs become edges, [[connectedComponents]] (large-star/small-star,
+    * O(log n) rounds) labels each semantic cluster with its min vec_id,
+    * and exactly the cluster root is kept — the embedding-space twin of
+    * d7 (same transitive-keep semantics: A~B, B~C drops BOTH B and C even
+    * when A~C was never observed). Candidate generation stays
+    * sign-LSH-bucketed, verify candidates-only, and the CC rounds move
+    * (id, id) edges — nothing here ever shuffles an embedding twice. On
+    * this corpus d5 finds no pairs, so every vector is its own kept
+    * cluster — the structure is exercised by the oracle either way, and
+    * DedupOpsSpec proves cluster/keep behavior on planted near-identical
+    * vector families (the d5 precedent). */
   def d9EmbeddingClusterDedup(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val labels = ccLabelsFor(s, dir, "embeddings", "sign-lsh")(
@@ -985,173 +988,104 @@ object DedupOps {
 
   // ------------------------------------- connected-components clustering
 
-  /** Iterative min-label propagation over an undirected edge list —
-    * GraphFrames-free connected components. Returns (node, cluster) for
-    * every node that appears in an edge; cluster = the component's min
-    * node id. Each iteration is one equi-join + min-aggregate, with the
-    * label relation persisted and the previous one unpersisted so the
-    * lineage cannot snowball; convergence is detected by counting changed
-    * labels (min-labels decrease monotonically, so termination is
-    * guaranteed in ≤ diameter iterations).
-    *
-    * Scale: per-iteration cost is one shuffle of (edge endpoints ×
-    * labels) — linear. Iteration COUNT is the graph diameter; near-dup
-    * clusters are shallow (a handful of hops), so propagation wins on
-    * constant factors. For adversarially deep graphs (million-link
-    * chains) the known fix is alternating large-star/small-star rounds
-    * (O(log n) rounds, same join primitive); this corpus never gets
-    * close, so the simple kernel is the shipped plan. */
-  /** Observation names must be session-unique; d7 runs many rounds per
+  /** Observation names must be session-unique; CC runs many rounds per
     * call and Bench/specs invoke it repeatedly in one JVM. */
   private val ccObsId = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private[graft] def connectedComponents(edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist(lvl)
-    // Eager localCheckpoint, NOT persist: each round references the label
-    // relation twice (directly + under the neighbor join), so a cached-but-
-    // lineage-carrying plan DOUBLES per round — an exponential Catalyst
-    // tree by round ~15 (OOMs the planner; found by the random-graph
-    // property spec). Checkpointing truncates the logical plan to the
-    // materialized rows; superseded checkpoint blocks are released by the
-    // ContextCleaner once the old DataFrame is unreferenced. On a real
-    // cluster prefer `checkpoint()` to a reliable dir for fault tolerance.
-    // ONE job per round: the convergence signal rides the checkpoint
-    // materialization as an observed metric (`Dataset.observe` collects
-    // aggregates during the action that materializes the plan — codegen-
-    // friendly, no second scan, no separate count job; previously each
-    // round paid label-materialize + count = 2 jobs of scheduler
-    // overhead, the dominant cost of this operator at sf0.1).
-    def observed(df: DataFrame, metric: org.apache.spark.sql.Column): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation(
-        s"graft_cc_${ccObsId.incrementAndGet()}")
-      val out = df.observe(obs, metric.as("m")).localCheckpoint(true)
-      (out, obs.get.apply("m").asInstanceOf[Long])
-    }
-    var (labels, changed) = observed(
-      sym.groupBy(col("src").as("node")).agg(min(col("dst")).as("nbl"))
-        .select(col("node"), least(col("node"), col("nbl")).as("lbl")),
-      count(lit(1))) // row count: 0 on an empty graph — skip the loop
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val nbr = sym.join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
-        .groupBy(col("src").as("node")).agg(min(col("lbl")).as("nbl"))
-      val (next, c) = observed(
-        labels.withColumnRenamed("lbl", "old")
-          .join(nbr, Seq("node"), "left")
-          .select(col("node"), col("old"),
-            least(col("old"), coalesce(col("nbl"), col("old"))).as("lbl")),
-        count(when(col("lbl") =!= col("old"), lit(1))))
-      changed = c
-      labels = next.select(col("node"), col("lbl"))
-      iter += 1
-    }
-    // unpersist BEFORE the convergence check: a require-throw must not
-    // leave the 2×edges relation pinned in the executor store (callers
-    // like Bench catch and retry — each leaked copy would accumulate)
-    sym.unpersist()
-    require(changed == 0,
-      s"connectedComponents: not converged after $maxIter iterations " +
-        "(graph deeper than expected — switch to large-star/small-star)")
-    labels
-  }
-
-  /** The deep-graph switch for [[connectedComponents]]: alternating
-    * large-star/small-star rounds (Kiveris et al., "Connected Components
-    * in MapReduce and Beyond") — O(log n) ROUNDS instead of O(diameter)
-    * iterations, same join primitive, SAME output (DedupOpsSpec asserts
-    * equality on random graphs incl. self-loops and runs a 120-node
-    * diameter-119 path the propagation kernel's iteration cap cannot
-    * cross). Each round:
+  /** Connected components over an undirected edge list (doc_a, doc_b),
+    * GraphFrames-free: alternating large-star/small-star rounds (Kiveris
+    * et al., "Connected Components in MapReduce and Beyond", SoCC 2014).
+    * Returns (node, lbl) for every node that appears in an edge, self-
+    * loops included; lbl = the component's min node id.
+    *
+    * Rounds are O(log n), not O(diameter): near-dup chains (templated
+    * pages, drifting mirrors) grow with the crawl, so a kernel with one
+    * round per hop fails exactly where the corpus is largest. Each round,
+    * over canonical (hi > lo) edges:
     *
     *  - large-star: every node u links its LARGER neighbors to
     *    m = min(Γ(u) ∪ u) — long chains contract toward small ids;
     *  - small-star: every node links its smaller neighbors and itself to
     *    the minimum of that set — stars flatten.
     *
-    * Edges are kept canonical (hi > lo), deduped, and localCheckpoint'ed
-    * per round (same lineage discipline as the propagation kernel);
-    * convergence = the edge relation reaching a fixpoint, detected by a
-    * (count, order-free hash-sum) signature — at fixpoint every edge is
-    * (node, component-min), which is exactly the label set. Like
-    * [[d4PrefixJaccard]], this is the measured-switch variant: shallow
-    * near-dup graphs favor the propagation kernel's constants; true
-    * million-link chains need this one. */
-  private[graft] def connectedComponentsStar(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
-    // every node appearing in the input — preserved to the output even if
-    // its only edges are self-loops (which the canonical edge set drops),
-    // keeping the output contract identical to [[connectedComponents]]
-    val nodes = edges
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("node"))
-      .distinct()
-    // checkpoint + fixpoint signature in ONE job (same Observation device
-    // as the propagation kernel): bit_xor is order-free and overflow-free
-    // (a SUM of hashes overflows long under ANSI mode)
+    * Both minima are `min OVER (PARTITION BY ...)` windows, not an
+    * aggregate joined back, so no relation inside a round feeds two
+    * consumers and a round is ONE action: its edges are
+    * localCheckpoint'ed and the fixpoint signature (count, order-free
+    * hash) is observed on that same action. At the fixpoint every edge
+    * is (node, component-min).
+    *
+    * Lineage: the labels read only checkpointed rows. The node set comes
+    * from the first checkpoint, which keeps the self-loop rows the rounds
+    * drop, and the labels are checkpointed themselves, so a memoized label
+    * frame never re-runs the candidate pipeline behind `edges`
+    * ([[ccLabelsFor]]). localCheckpoint, not persist: a cached plan keeps
+    * its lineage, and the ContextCleaner releases a superseded round's
+    * blocks once its frame is unreferenced. On a real cluster prefer
+    * `checkpoint()` to a reliable dir for fault tolerance. */
+  private[graft] def connectedComponents(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
+    val loopFree = col("hi") =!= col("lo")
+    // checkpoint + signature of the loop-free rows in ONE job: bit_xor is
+    // order-free and overflow-free (a SUM of hashes overflows long under
+    // ANSI mode)
     def checkpointed(df: DataFrame): (DataFrame, (Long, Long)) = {
       val obs = org.apache.spark.sql.Observation(
         s"graft_cc_${ccObsId.incrementAndGet()}")
-      val out = df.observe(obs, count(lit(1)).as("n"),
-        expr("bit_xor(xxhash64(hi, lo))").as("h")).localCheckpoint(true)
+      val out = df.observe(obs, count(when(loopFree, lit(1))).as("n"),
+        bit_xor(when(loopFree, xxhash64(col("hi"), col("lo")))).as("h"))
+        .localCheckpoint(true)
       val m = obs.get
       (out, (m("n").asInstanceOf[Long],
         m.get("h").collect { case h: Long => h }.getOrElse(0L)))
     }
-    var (e, sig) = checkpointed(edges
+    val (canon, canonSig) = checkpointed(edges
       .select(greatest(col("doc_a"), col("doc_b")).as("hi"),
         least(col("doc_a"), col("doc_b")).as("lo"))
-      .where(col("hi") =!= col("lo"))
       .dropDuplicates("hi", "lo"))
+    var (e, sig) = (canon.where(loopFree), canonSig)
     var rounds = 0
     var converged = sig._1 == 0
     while (!converged && rounds < maxRounds) {
-      val sym = e.select(col("hi").as("u"), col("lo").as("v"))
+      // large-star: (v, m_u) for every neighbor v > u
+      val ls = e.select(col("hi").as("u"), col("lo").as("v"))
         .union(e.select(col("lo").as("u"), col("hi").as("v")))
-      val mins = sym.groupBy(col("u"))
-        .agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      // large-star: (v, m_u) for every neighbor v > u. Checkpointed —
-      // it feeds BOTH the small-star min aggregate and its join; without
-      // materialization the shuffle join below would execute twice.
-      val ls = sym.join(mins, Seq("u"))
+        .select(col("u"), col("v"), least(col("u"),
+          min(col("v")).over(Window.partitionBy("u"))).as("m"))
         .where(col("v") > col("u"))
         .select(col("v").as("hi"), col("m").as("lo"))
-        .dropDuplicates("hi", "lo")
-        .localCheckpoint(true)
-      // small-star over the canonical (child > parent) edges of ls:
-      // every node's smaller neighbors AND itself link to their minimum
-      val minsS = ls.groupBy(col("hi")).agg(min(col("lo")).as("m"))
-      val (ss, nextSig) = checkpointed(ls.join(minsS, Seq("hi"))
+      // small-star over ls's canonical (child > parent) edges: every
+      // node's smaller neighbors AND itself link to their minimum
+      val (ss, nextSig) = checkpointed(ls
+        .select(col("hi"), col("lo"),
+          min(col("lo")).over(Window.partitionBy("hi")).as("m"))
         .select(explode(array(
           struct(col("lo").as("c"), col("m")),
           struct(col("hi").as("c"), col("m")))).as("p"))
         .select(col("p.c").as("hi"), col("p.m").as("lo"))
-        .where(col("hi") =!= col("lo"))
+        .where(loopFree)
         .dropDuplicates("hi", "lo"))
       converged = nextSig == sig
       sig = nextSig
       e = ss
       rounds += 1
     }
-    require(converged || sig._1 == 0,
-      s"connectedComponentsStar: no fixpoint after $maxRounds rounds")
-    // fixpoint edges are stars (node, component-min): the label set is
-    // children plus the roots themselves; self-loop-only nodes (absent
-    // from the canonical edges) label to themselves
-    val star = e.select(col("hi").as("node"), col("lo").as("lbl"))
-      .union(e.select(col("lo").as("node"), col("lo").as("lbl")))
-      .groupBy(col("node")).agg(min(col("lbl")).as("lbl"))
-    nodes.join(star, Seq("node"), "left")
-      .select(col("node"), coalesce(col("lbl"), col("node")).as("lbl"))
+    require(converged, s"connectedComponents: no fixpoint after $maxRounds rounds")
+    // fixpoint edges are stars (node, component-min). Every node of
+    // `canon` also offers itself as its label, which wins only for a root
+    // (absent as `hi`) and a self-loop-only node (absent from `e`)
+    e.select(col("hi").as("node"), col("lo").as("lbl"))
+      .union(canon.select(explode(array(col("hi"), col("lo"))).as("node"))
+        .select(col("node"), col("node").as("lbl")))
+      .groupBy("node").agg(min(col("lbl")).as("lbl"))
+      .localCheckpoint(true)
   }
 
   /** d7: transitive-closure dedup clustering — the case d6's greedy rule
     * deliberately skips. Exact-dup groups collapse to their canonical,
     * verified near-dup pairs among canonicals (d2 machinery) form the
-    * edge list, and [[connectedComponents]] labels every component with
-    * its min doc_id. Output: every document with its cluster id (via its
+    * edge list, and [[connectedComponents]] (large-star/small-star, so a
+    * long near-dup chain costs O(log n) rounds) labels every component
+    * with its min doc_id. Output: every document with its cluster id (via its
     * canonical) and the transitive keep bit — keep exactly the cluster
     * root, so A~B, B~C drops BOTH B and C even when A~C was never
     * observed as a pair. */

@@ -126,6 +126,9 @@ object Tables {
     (s.read.schema(schema).parquet(path), listing)
   }
 
+  /** Input bytes per floor partition in [[fillCores]]. */
+  private val FillCoresTargetPartitionBytes = 32768L
+
   /** Scale-adaptive scan-parallelism floor — guide §2.5's unsplittable-
     * input remedy ("one huge unsplittable file … repartition immediately
     * after the read"), made conditional on input size so it can never
@@ -166,10 +169,10 @@ object Tables {
     * `defaultParallelism` AND the table is big enough for the shuffle to
     * pay (≥ `spark.graft.scan.fillCores.minBytes`, default 256 KB) — at
     * 100 TB a table has ~10⁶ splits and the scan shape is byte-identical
-    * to before. Gated by `spark.graft.scan.fillCores` (default on); the
-    * plan-pinning specs turn it off so they keep auditing the at-scale
-    * plan shape. Catalyst still prunes columns and pushes filters below
-    * the added RepartitionByExpression (TablesFillCoresSpec pins
+    * to before. The test session sets `minBytes` to Long.MaxValue, so
+    * the plan-pinning specs keep auditing the at-scale plan shape.
+    * Catalyst still prunes columns and pushes filters below the added
+    * RepartitionByExpression (TablesFillCoresSpec pins
     * ReadSchema staying narrow), and results cannot change: no
     * registered query depends on physical partitioning (p1's two-stage
     * top-k is partition-independent by spec). `bytes` is the table's
@@ -177,35 +180,31 @@ object Tables {
     * rewritten table is never sized from a stale count. */
   private[graft] def fillCores(s: SparkSession, df: DataFrame,
       bytes: Long, key: String): DataFrame = {
-    if (!s.conf.get("spark.graft.scan.fillCores", "true").toBoolean) df
-    else {
-      val minBytes =
-        s.conf.get("spark.graft.scan.fillCores.minBytes", "262144").toLong
-      val cores = s.sparkContext.defaultParallelism
-      val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
-      val splits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
-      if (bytes >= minBytes && splits < cores) {
-        // A/B'd and rejected: persist()ing the repartitioned scan so a
-        // composition query's 20–30 documents subtrees share one
-        // materialization. The InMemoryRelation's stats are the
-        // DECOMPRESSED batch bytes, so every downstream join that
-        // broadcast its (doc_id, flag) side under the parquet scan's
-        // 584 KB estimate re-planned as a 32-partition sort-merge join —
-        // e9 went 6.8 → 11.5 s and its summed task time 10×. The floor
-        // keeps the parquet scan's stats untouched.
-        // Partition count derives from input size (guide §2: scale-
-        // adaptive, never a local-core constant): one floor partition
-        // per targetPartitionBytes of input, clamped to the machine.
-        // 32 KB/partition reflects the text kernels' work-per-byte —
-        // the parts sweep at sf0.1 (8/16/32 on t24/e5/e9/d6) put the
-        // knee at ~16 of the 584 KB table, and bytes-derived sizing
-        // keeps the driver's lower-core scaling runs meaningful.
-        val target = s.conf.get(
-          "spark.graft.scan.fillCores.targetPartitionBytes", "32768").toLong
-        val parts = math.max(2L, math.min(cores.toLong, bytes / target)).toInt
-        df.repartition(parts, col(key))
-      } else df
-    }
+    val minBytes =
+      s.conf.get("spark.graft.scan.fillCores.minBytes", "262144").toLong
+    val cores = s.sparkContext.defaultParallelism
+    val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
+    val splits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
+    if (bytes >= minBytes && splits < cores) {
+      // A/B'd and rejected: persist()ing the repartitioned scan so a
+      // composition query's 20–30 documents subtrees share one
+      // materialization. The InMemoryRelation's stats are the
+      // DECOMPRESSED batch bytes, so every downstream join that
+      // broadcast its (doc_id, flag) side under the parquet scan's
+      // 584 KB estimate re-planned as a 32-partition sort-merge join —
+      // e9 went 6.8 → 11.5 s and its summed task time 10×. The floor
+      // keeps the parquet scan's stats untouched.
+      // Partition count derives from input size (guide §2: scale-
+      // adaptive, never a local-core constant): one floor partition
+      // per FillCoresTargetPartitionBytes of input, clamped to the machine.
+      // 32 KB/partition reflects the text kernels' work-per-byte —
+      // the parts sweep at sf0.1 (8/16/32 on t24/e5/e9/d6) put the
+      // knee at ~16 of the 584 KB table, and bytes-derived sizing
+      // keeps lower-core scaling runs meaningful.
+      val parts = math.max(2L,
+        math.min(cores.toLong, bytes / FillCoresTargetPartitionBytes)).toInt
+      df.repartition(parts, col(key))
+    } else df
   }
 
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")

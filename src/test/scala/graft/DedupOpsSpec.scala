@@ -344,16 +344,18 @@ class DedupOpsSpec extends SparkSpec {
         val root = find(v.toInt)
         touched.filter(u => find(u.toInt) == root).min
       }).toMap
-      val got = DedupOps.connectedComponents(edges.toDF("doc_a", "doc_b"))
-        .as[(Long, Long)].collect().toMap
+      val df = edges.toDF("doc_a", "doc_b")
+      val got = DedupOps.connectedComponents(df).as[(Long, Long)].collect().toMap
       assert(got === want, s"trial=$trial n=$n m=$m")
+      val ref = CcReference.propagate(df).as[(Long, Long)].collect().toMap
+      assert(ref === want, s"reference: trial=$trial n=$n m=$m")
     }
   }
 
   test("connectedComponents: empty edge list yields empty labels") {
     val edges = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     assert(DedupOps.connectedComponents(edges).count() === 0)
-    assert(DedupOps.connectedComponentsStar(edges).count() === 0)
+    assert(CcReference.propagate(edges).count() === 0)
   }
 
   test("large-star/small-star CC equals propagation CC on random graphs") {
@@ -366,26 +368,63 @@ class DedupOpsSpec extends SparkSpec {
         val a = rng.nextInt(n).toLong; val b = rng.nextInt(n).toLong
         if (a == b) (a, (b + 1) % n) else (a, b)
       } :+ (n.toLong + 5, n.toLong + 5)).toDF("doc_a", "doc_b")
-      val prop = DedupOps.connectedComponents(edges)
+      val prop = CcReference.propagate(edges)
         .as[(Long, Long)].collect().toMap
-      val star = DedupOps.connectedComponentsStar(edges)
+      val star = DedupOps.connectedComponents(edges)
         .as[(Long, Long)].collect().toMap
+      assert(prop(n.toLong + 5) === n.toLong + 5)
       assert(star === prop, s"trial=$trial n=$n")
     }
   }
 
   test("star CC crosses a 120-node path the propagation iteration cap cannot") {
-    // 120 nodes, diameter 119 >> propagation's maxIter=30; the star
-    // algorithm needs only O(log n) rounds — the deep-graph case it
-    // exists for
+    // 120 nodes, diameter 119 >> propagation's 30-iteration cap; the star
+    // rounds need only O(log n)
     val chain = (0L until 119L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val star = DedupOps.connectedComponentsStar(chain)
+    val star = DedupOps.connectedComponents(chain)
       .as[(Long, Long)].collect()
     assert(star.length === 120)
     assert(star.forall(_._2 == 0L), "every node must label to the path head")
-    intercept[IllegalArgumentException] {
-      DedupOps.connectedComponents(chain).count()
-    }
+  }
+
+  test("connectedComponents labels are lineage-free: no parquet scan, no cached relation") {
+    // edges behind a parquet scan AND a scope-owned cached relation, the
+    // shape d7's candidate pipeline hands the kernel; a memo hit on the
+    // labels must re-run neither once the scope has released them
+    val dir = java.nio.file.Files.createTempDirectory("graft_cc_lineage")
+    try {
+      Seq((1L, 2L), (2L, 3L), (3L, 3L), (7L, 8L)).toDF("doc_a", "doc_b")
+        .write.parquet(s"$dir/edges.parquet")
+      val edges = Materialize(graft.sources.Tables.read(spark, s"$dir/edges.parquet"))
+      val labels = DedupOps.connectedComponents(edges)
+      val plan = labels.queryExecution.optimizedPlan
+      val leaves = plan.collectLeaves().map(_.nodeName)
+      assert(leaves.nonEmpty && leaves.forall(_ == "LogicalRDD"),
+        s"labels must read only checkpointed rows, no scan or InMemoryRelation:\n$plan")
+      assert(labels.as[(Long, Long)].collect().toMap ===
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
+    } finally graft.sources.Layouts.deleteRecursively(dir)
+  }
+
+  test("d7: a 48-document near-dup chain, deeper than 30 hops, clusters to its head") {
+    // doc i is a 92-token window of unique words shifted 8 tokens from
+    // doc i-1: adjacent trigram Jaccard 82/98 ≈ 0.84 (an edge at 0.8),
+    // two steps apart 74/106 ≈ 0.70 (none), so the verified pair graph
+    // is one 47-hop path
+    val n = 48
+    val docs = (0 until n).map(i =>
+      (i.toLong + 1, (8 * i until 8 * i + 92).map(w => s"w$w").mkString(" ")))
+    val dir = java.nio.file.Files.createTempDirectory("graft_d7_chain")
+    try {
+      docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      val got = DedupOps.d7CcDedup(spark, dir.toString)
+        .as[(Long, Long, Boolean)].collect()
+      assert(got.length === n)
+      got.foreach { case (id, cl, keep) =>
+        assert(cl === 1L, s"doc $id must cluster to the chain head")
+        assert(keep === (id == 1L))
+      }
+    } finally graft.sources.Layouts.deleteRecursively(dir)
   }
 
   test("d7: cluster ids are component minima; keep set is within d6's") {

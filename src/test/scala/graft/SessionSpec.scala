@@ -16,7 +16,7 @@ class SessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "4096")
     assert(spark.conf.get("spark.ui.enabled") === "false")
-    assert(spark.conf.get("spark.graft.scan.fillCores") === "false")
+    assert(spark.conf.get("spark.graft.scan.fillCores.minBytes") === Long.MaxValue.toString)
   }
 
   test("a query that throws while building reports its error class and message") {
@@ -183,10 +183,9 @@ class SessionSpec extends SparkSpec {
   test("eager persists go through Materialize; nothing in src/main clears the whole cache") {
     assert(SourceScan.matches("""\.persist\(""".r, "src/main/scala") === Map(
       "graft/sources/Materialize.scala" -> 1,
-      // self-releasing try/finally persists: k3, k5, t4c's BPE counts, CC
+      // self-releasing try/finally persists: k3, k5, t4c's BPE counts
       "graft/operators/SketchOps.scala" -> 2,
-      "graft/operators/TextOps.scala" -> 1,
-      "graft/operators/DedupOps.scala" -> 1),
+      "graft/operators/TextOps.scala" -> 1),
       "materialize through graft.sources.Materialize, which a query scope releases")
     assert(SourceScan.matches("clearCache".r, "src/main/scala") === Map.empty,
       "a query releases what it owns through its Materialize scope")

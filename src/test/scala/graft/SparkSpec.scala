@@ -11,9 +11,10 @@ object TestSpark {
       java.nio.file.Files.createTempDirectory("graft_wh").toString,
     // the plan-pinning suites audit the AT-SCALE plan shape; the
     // small-input parallelism floor (Tables.fillCores, round 18) would
-    // put a Repartition over every fixture scan. TablesFillCoresSpec
-    // covers the floor's own behavior by toggling the conf per-test.
-    "spark.graft.scan.fillCores" -> "false")
+    // put a Repartition over every fixture scan, so its byte bar is set
+    // out of reach. TablesFillCoresSpec covers the floor's own behavior
+    // by lowering the bar per test.
+    "spark.graft.scan.fillCores.minBytes" -> Long.MaxValue.toString)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -13,22 +13,21 @@ import graft.sources.Tables
 class TablesFillCoresSpec extends SparkSpec {
 
   test("fillCores on: sub-split-size documents gain a doc_id hash repartition; off: plain scan") {
-    val on = withConfs("spark.graft.scan.fillCores" -> "true",
-        "spark.graft.scan.fillCores.minBytes" -> "1") {
+    val on = withConfs("spark.graft.scan.fillCores.minBytes" -> "1") {
       Tables.documents(spark, sf).queryExecution.optimizedPlan.toString
     }
     assert(on.contains("RepartitionByExpression") && on.contains("doc_id"),
       s"expected a doc_id hash repartition over the sub-split-size scan:\n$on")
-    val off = withConfs("spark.graft.scan.fillCores" -> "false") {
+    val off = withConfs("spark.graft.scan.fillCores.minBytes" -> Long.MaxValue.toString) {
       Tables.documents(spark, sf).queryExecution.optimizedPlan.toString
     }
-    assert(!off.contains("Repartition"), s"floor must be conf-gated:\n$off")
+    assert(!off.contains("Repartition"), s"floor must stay off under an unreachable byte bar:\n$off")
   }
 
   test("guard derives from input size: silent below min-bytes and past the split threshold") {
-    // below the min-bytes bar (the sf0.001 fixture is ~64 KB): the
-    // shuffle cannot pay for itself on a table this small
-    val small = withConfs("spark.graft.scan.fillCores" -> "true") {
+    // below the default min-bytes bar, 256 KB (the sf0.001 fixture is
+    // ~64 KB): the shuffle cannot pay for itself on a table this small
+    val small = withConfs("spark.graft.scan.fillCores.minBytes" -> "262144") {
       Tables.documents(spark, sf).queryExecution.optimizedPlan.toString
     }
     assert(!small.contains("Repartition"),
@@ -36,8 +35,7 @@ class TablesFillCoresSpec extends SparkSpec {
     // past the split threshold (the at-scale condition, simulated by
     // shrinking maxPartitionBytes): the scan shape must be byte-identical
     // to the floor being off
-    val atScale = withConfs("spark.graft.scan.fillCores" -> "true",
-        "spark.graft.scan.fillCores.minBytes" -> "1",
+    val atScale = withConfs("spark.graft.scan.fillCores.minBytes" -> "1",
         "spark.sql.files.maxPartitionBytes" -> "1024") {
       Tables.documents(spark, sf).queryExecution.optimizedPlan.toString
     }
@@ -46,8 +44,7 @@ class TablesFillCoresSpec extends SparkSpec {
   }
 
   test("column pruning reaches the scan below the added repartition") {
-    withConfs("spark.graft.scan.fillCores" -> "true",
-        "spark.graft.scan.fillCores.minBytes" -> "1") {
+    withConfs("spark.graft.scan.fillCores.minBytes" -> "1") {
       val plan = Tables.documents(spark, sf)
         .select("doc_id", "lang").queryExecution.executedPlan.toString
       val read = plan.split("\n").find(_.contains("ReadSchema"))
@@ -66,8 +63,7 @@ class TablesFillCoresSpec extends SparkSpec {
     // plan carries the floor's doc_id repartition — if the floor's guard
     // or Verify's conf drifts, the oracle silently stops covering the
     // floored path and this fails first.
-    withConfs("spark.graft.scan.fillCores" -> "true",
-        "spark.graft.scan.fillCores.minBytes" -> "1") {
+    withConfs("spark.graft.scan.fillCores.minBytes" -> "1") {
       val p = SparkEntry.queries("t24_lang_stopwords")(spark, sf)
         .queryExecution.executedPlan.toString
       assert(p.contains("REPARTITION_BY_COL") || p.contains("hashpartitioning(doc_id"),
@@ -78,8 +74,8 @@ class TablesFillCoresSpec extends SparkSpec {
   test("results are identical with the floor on and off (layout independence)") {
     import org.apache.spark.sql.functions._
     def rollup(on: Boolean): Seq[(String, Long)] =
-      withConfs("spark.graft.scan.fillCores" -> on.toString,
-          "spark.graft.scan.fillCores.minBytes" -> "1") {
+      withConfs("spark.graft.scan.fillCores.minBytes" ->
+          (if (on) "1" else Long.MaxValue.toString)) {
         import spark.implicits._
         Tables.documents(spark, sf)
           .groupBy($"lang").agg(count(lit(1)).as("n"))
@@ -98,8 +94,7 @@ class TablesFillCoresSpec extends SparkSpec {
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     }
     def floored: Boolean =
-      withConfs("spark.graft.scan.fillCores" -> "true",
-          "spark.graft.scan.fillCores.minBytes" -> "65536") {
+      withConfs("spark.graft.scan.fillCores.minBytes" -> "65536") {
         Tables.documents(spark, dir).queryExecution.optimizedPlan.toString
           .contains("RepartitionByExpression")
       }
