@@ -1254,15 +1254,15 @@ object DedupOps {
     * ATOMIC via the shared generational store
     * ([[graft.sources.GenStore]]): immutable band partitions, latest-wins
     * replace of re-ingested doc_ids (the q23 discipline — a re-screened
-    * doc REPLACES its signature), hard-linked carry-over of untouched
-    * bands, and a pointer-swap commit, so a fold killed mid-write leaves
-    * readers fully pre-fold (spec-proven). Touched bands are bounded by
-    * [[MinHash.Bands]] = 32 — a layout constant, never data; every doc
-    * emits one key per band, so the partition bound is the REWRITE-side
-    * bound: each fold rewrites 1/32 of the index per band and links the
-    * rest. Idempotent per batch (re-folding the same keys commits
-    * identical content — the at-least-once guarantee the streaming front
-    * door st7/st9 needs). */
+    * doc REPLACES its signature), `_MANIFEST`-reference carry-over of
+    * untouched bands, and a create-no-overwrite commit, so a fold killed
+    * mid-write leaves readers fully pre-fold (spec-proven). Touched bands
+    * are bounded by [[MinHash.Bands]] = 32 — a layout constant, never
+    * data; every doc emits one key per band, so the partition bound is
+    * the REWRITE-side bound: each fold rewrites 1/32 of the index per
+    * band and carries the rest by reference. Idempotent per batch
+    * (re-folding the same keys commits identical content — the
+    * at-least-once guarantee the streaming front door st7/st9 needs). */
   private[graft] def indexUpsert(s: SparkSession, path: String,
       batchKeys: DataFrame): Unit =
     graft.sources.GenStore.fold(s, path,

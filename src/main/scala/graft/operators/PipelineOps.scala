@@ -938,9 +938,9 @@ object PipelineOps {
 
   /** The committed release-cut store (fingerprint-named root, built once
     * per corpus snapshot): the cut relation folded through
-    * [[graft.sources.GenStore]] in Manifest mode (the object-store-
-    * portable claim/sweep protocol — src5/s8's device) and compacted to
-    * one file per training shard. The fingerprint-named root means a
+    * [[graft.sources.GenStore]] (the object-store-portable claim/sweep
+    * protocol — src5/s8's device) and compacted to one file per training
+    * shard. The fingerprint-named root means a
     * regenerated corpus can never serve a stale cut; compact doubles as
     * the resume step for a build that crashed between fold and
     * compact, and a racing builder's lost claim is the winner doing
@@ -1032,7 +1032,7 @@ object PipelineOps {
       sweepStaleCutRoots(s"graft_release_cut_v${ver}_", dirTag, name)
       sweepStaleCutRoots("graft_release_cut_f", dirTag, name)
       GenStore.foldCompacted(s, path, releaseCutRelation(s, dir, stages),
-        partCol = "cut_part", idCol = "doc_id", mode = GenStore.Manifest)
+        partCol = "cut_part", idCol = "doc_id")
       path
     }
   }
@@ -1045,8 +1045,8 @@ object PipelineOps {
     * survives, e5 says what each survivor is, p8 says when it trains,
     * src5/s8's store says how it ships. e10 materializes the survivors
     * + sheet + coordinates through the generational store as ONE
-    * committed generation (Manifest mode, one file per training shard
-    * after compaction) and registers a per-(stage, shard) content
+    * committed generation (one file per training shard after
+    * compaction) and registers a per-(stage, shard) content
     * fingerprint of the COMMITTED store — docs, tokens, id extrema and
     * sums, coordinate sums, and the sheet's quality-score mass —
     * hash-checked against the fully declarative survivor replay (the

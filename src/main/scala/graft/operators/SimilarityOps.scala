@@ -1148,15 +1148,16 @@ object SimilarityOps {
     * device) as generation 1, then folds the batch's rows as
     * generation 2 through [[graft.sources.GenStore]]: latest-wins per
     * vec_id, only touched cell partitions rewritten, untouched cells
-    * hard-linked, pointer-swap commit — a reader mid-fold sees the
-    * whole old index or the whole new one. Folding is idempotent and
-    * deterministic (shipped quantizer + codebooks), so the write-once
-    * reuse mirrors the standing service it stands for. */
+    * carried by `_MANIFEST` reference to generation 1, create-no-
+    * overwrite commit — a reader mid-fold sees the whole old index or the
+    * whole new one. Folding is idempotent and deterministic (shipped
+    * quantizer + codebooks), so the write-once reuse mirrors the standing
+    * service it stands for. */
   private[graft] def annIndexFolded(s: SparkSession, dir: String, k: Int): String = {
     // the root name carries the corpus fingerprint and validates the
     // memo: a regenerated corpus rolls the root, which replaces the entry
     // and builds fresh
-    val root = indexPath(s, builtFrom("graft_ann_gen_index",
+    val root = indexPath(s, builtFrom("graft_ann_gen_index_m",
       centroidsName(k), pqCodebooksName), dir)
     foldedIndexRoots.getOrBuild(s, dir, s"k$k", root) {
       // the build is TWO folds (standing corpus, then the ingest batch),

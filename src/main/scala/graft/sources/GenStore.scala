@@ -23,20 +23,17 @@ import org.apache.spark.sql.functions._
   * log turns an accidental violation from silent data loss into a
   * loud [[ConcurrentFoldException]]. Concurrent readers are always safe.
   *
-  * Two carry modes for the partitions a fold does NOT touch:
-  *
-  *  - [[Links]] (default): untouched partition directories carry into
-  *    the new generation as hard links — metadata-only, POSIX-only.
-  *  - [[Manifest]]: link-free and object-store-portable. A generation
-  *    directory holds only the partitions its fold actually wrote, plus
-  *    a `_MANIFEST` mapping every live partition directory to the
-  *    generation that owns its files; untouched partitions carry as
-  *    manifest references to their original writer (the Iceberg
-  *    manifest-re-listing device). On a real object store the commit
-  *    file becomes a conditional PUT (S3 `If-None-Match`, GCS
-  *    `ifGenerationMatch 0`), which carries its content atomically; the
-  *    local simulation's `CREATE_NEW` open has a theoretical
-  *    crash-between-create-and-write window documented on [[fold]].
+  * Partitions a fold does NOT touch carry by manifest reference —
+  * link-free and object-store-portable. A generation directory holds
+  * only the partitions its fold actually wrote, plus a `_MANIFEST`
+  * mapping every live partition directory to the generation that owns
+  * its files; untouched partitions carry as references to their
+  * original writer (the Iceberg manifest-re-listing device). On a real
+  * object store the commit file becomes a conditional PUT (S3
+  * `If-None-Match`, GCS `ifGenerationMatch 0`), which carries its
+  * content atomically; the local simulation's `CREATE_NEW` open has a
+  * theoretical crash-between-create-and-write window documented on
+  * [[fold]].
   *
   * Latest-wins replacement reads only the partitions the batch touches,
   * so by default a re-ingested id must keep its partition assignment
@@ -47,14 +44,6 @@ import org.apache.spark.sql.functions._
   * locates and rewrites the partitions holding the ids' old rows.
   */
 object GenStore {
-
-  /** How a fold carries the partitions it does not rewrite. */
-  sealed trait Mode
-  /** Hard-link untouched partition dirs into the new generation (POSIX). */
-  case object Links extends Mode
-  /** Carry untouched partitions by `_MANIFEST` reference — no links, no
-    * renames; portable to object stores. */
-  case object Manifest extends Mode
 
   /** Two folds raced onto the same generation number; this fold lost the
     * commit and its staging directory was left for the sweep. */
@@ -88,19 +77,11 @@ object GenStore {
   }
 
   /** Name of the committed generation under `path`, if any: the highest
-    * non-empty commit-log entry, falling back to the legacy `CURRENT`
-    * pointer file for stores written before the commit log existed. An
-    * empty commit file (a commit whose content write died mid-flight —
-    * see [[fold]]) never became visible and is skipped. */
-  def currentGen(path: String): Option[String] = {
+    * non-empty commit-log entry. An empty commit file (a commit whose
+    * content write died mid-flight — see [[fold]]) never became visible
+    * and is skipped. */
+  def currentGen(path: String): Option[String] =
     nonEmptyCommits(path).headOption
-      .orElse {
-        val cur = java.nio.file.Paths.get(path, "CURRENT")
-        if (java.nio.file.Files.exists(cur))
-          Some(java.nio.file.Files.readString(cur).trim)
-        else None
-      }
-  }
 
   /** Non-empty commit contents (generation names), newest first — the
     * ONE home of the dead-claim-skipping discipline shared by
@@ -167,40 +148,28 @@ object GenStore {
   def loadPrevious(s: SparkSession, path: String): Option[DataFrame] =
     previousGen(path).map(loadGen(s, path, _))
 
-  /** partition-dir name -> owning generation dir, for generation `gen`:
-    * the `_MANIFEST` if one exists (Manifest-mode fold), else every
-    * `col=value` child of the generation dir owned by itself. */
+  /** partition-dir name -> owning generation dir, for generation `gen`,
+    * read from its `_MANIFEST`. Every generation a fold or compaction
+    * writes carries one, so a missing manifest fails loudly. */
   private def ownerMap(path: String, gen: String): Map[String, String] = {
     import scala.jdk.CollectionConverters._
     val mf = java.nio.file.Paths.get(path, gen, ManifestFile)
-    if (java.nio.file.Files.exists(mf))
-      java.nio.file.Files.readAllLines(mf).asScala
-        .filter(_.nonEmpty)
-        .map { line =>
-          val i = line.indexOf('\t')
-          require(i > 0, s"malformed manifest line in $mf: '$line'")
-          line.substring(0, i) -> line.substring(i + 1)
-        }.toMap
-    else
-      children(java.nio.file.Paths.get(path, gen))
-        .map(_.getFileName.toString)
-        .filter(_.contains("="))
-        .map(d => d -> gen).toMap
-  }
-
-  private def writeManifest(path: String, gen: String,
-      owners: Map[String, String]): Unit = {
-    val body = owners.toSeq.sorted.map { case (d, o) => s"$d\t$o" }
-      .mkString("", "\n", "\n")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, gen, ManifestFile), body)
+    require(java.nio.file.Files.exists(mf),
+      s"generation $gen at $path has no $ManifestFile — not a GenStore generation")
+    java.nio.file.Files.readAllLines(mf).asScala
+      .filter(_.nonEmpty)
+      .map { line =>
+        val i = line.indexOf('\t')
+        require(i > 0, s"malformed manifest line in $mf: '$line'")
+        line.substring(0, i) -> line.substring(i + 1)
+      }.toMap
   }
 
   /** Generation `gen` as a DataFrame: its partition dirs read from their
     * owning generation dirs (one basePath-scoped read per owner, so
-    * partition-column filters still prune at the scan), unioned. For a
-    * Links-mode generation every partition is self-owned and this is a
-    * single read of the generation dir's partitions. */
+    * partition-column filters still prune at the scan), unioned. A
+    * generation with an empty manifest is the zero-row store
+    * ([[ensureLoadableGen]]) and reads its own root. */
   private def loadGen(s: SparkSession, path: String, gen: String): DataFrame = {
     val byOwner = ownerMap(path, gen).toSeq.groupBy(_._2)
     if (byOwner.isEmpty) Tables.read(s, s"$path/$gen")
@@ -235,8 +204,8 @@ object GenStore {
     *     its rows), union the batch, write as the touched partitions of
     *     a NEW generation. Reading old and writing new are different
     *     paths — no checkpoint needed, no read-overwrite hazard;
-    *  3. carry the untouched partitions per `mode` — hard links
-    *     ([[Links]]) or manifest references ([[Manifest]]);
+    *  3. carry the untouched partitions by `_MANIFEST` reference to
+    *     the generations that own their files;
     *  4. commit by creating the next numbered `_commits/` entry with
     *     create-no-overwrite; a racing fold that lost the number throws
     *     [[ConcurrentFoldException]] and its staging directory is left
@@ -255,8 +224,8 @@ object GenStore {
     * Crash safety: every pre-commit crash leaves only uncommitted
     * staging (swept later, store readable throughout); a crash after the
     * commit-file create IS a completed commit. Sole documented window:
-    * in [[Manifest]] mode the local `CREATE_NEW` simulation opens the
-    * commit file and then writes its content — death exactly between the
+    * the local `CREATE_NEW` simulation opens the commit file and then
+    * writes its content — death exactly between the
     * two syscalls leaves an empty claim on that number. Readers skip it,
     * and the next fold SELF-HEALS by numbering PAST it: an empty claim
     * settled longer than [[DeadClaimSettleMs]] is skipped on the number
@@ -268,11 +237,9 @@ object GenStore {
     * (the slower one's delete lands on the faster one's freshly
     * committed non-empty entry and silently replaces its generation).
     * A real object store's conditional PUT carries the content
-    * atomically and has no such window. [[Links]] mode commits by
-    * hard-linking a fully-written temp file and is window-free. */
+    * atomically and has no such window. */
   def fold(s: SparkSession, path: String, batch: DataFrame,
-      partCol: String, idCol: String, mode: Mode = Links,
-      strictReplace: Boolean = false): Unit = {
+      partCol: String, idCol: String, strictReplace: Boolean = false): Unit = {
     import java.nio.file.{Files, Paths}
     val root = Paths.get(path)
     Files.createDirectories(root)
@@ -294,12 +261,10 @@ object GenStore {
     val newGen = f"gen-$genNum%06d-p${ProcessHandle.current().pid()}" +
       s"s${stagingSeq.incrementAndGet()}"
     val newPath = s"$path/$newGen"
-    curGen match {
+    val carried = curGen match {
       case None =>
         batch.write.mode("overwrite").partitionBy(partCol).parquet(newPath)
-        ensureLoadableGen(batch, newPath, carried = Map.empty)
-        if (mode == Manifest)
-          writeManifest(path, newGen, writtenParts(newPath).map(_ -> newGen).toMap)
+        Map.empty[String, String]
       case Some(g) =>
         val prev = loadGen(s, path, g)
         val batchIds = batch.select(col(idCol)).distinct()
@@ -329,35 +294,24 @@ object GenStore {
           .unionByName(batch)
           .write.mode("overwrite").partitionBy(partCol).parquet(newPath)
         val touchedOnDisk = touchedDirs ++ writtenParts(newPath)
-        val carried = ownerMap(path, g).filterNot { case (d, _) => touchedOnDisk(d) }
-        ensureLoadableGen(batch, newPath, carried)
-        carry(path, newGen, carried, mode)
+        ownerMap(path, g).filterNot { case (d, _) => touchedOnDisk(d) }
     }
-    commit(path, genNum, newGen, mode)
+    ensureLoadableGen(batch, newPath, carried)
+    carry(path, newGen, carried)
+    commit(path, genNum, newGen)
     sweep(path, genNum, newGen, prevGen = curGen)
   }
 
-  /** Carry the partitions a new generation did NOT rewrite: hard links
-    * into the generation dir ([[Links]]) or a `_MANIFEST` referencing
-    * each partition's owner, with the generation's own written
-    * partitions recorded as self-owned ([[Manifest]]). */
+  /** Carry the partitions a new generation did NOT rewrite: its
+    * `_MANIFEST` references each carried partition's owner and records
+    * the generation's own written partitions as self-owned. */
   private def carry(path: String, newGen: String,
-      carried: Map[String, String], mode: Mode): Unit = {
-    import java.nio.file.{Files, Paths}
-    mode match {
-      case Links =>
-        carried.foreach { case (partDir, owner) =>
-          val srcDir = Paths.get(path, owner, partDir)
-          val dst = Paths.get(path, newGen, partDir)
-          Files.createDirectories(dst)
-          children(srcDir)
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .foreach(f => Files.createLink(dst.resolve(f.getFileName), f))
-        }
-      case Manifest =>
-        writeManifest(path, newGen,
-          carried ++ writtenParts(s"$path/$newGen").map(_ -> newGen))
-    }
+      carried: Map[String, String]): Unit = {
+    val owners = carried ++ writtenParts(s"$path/$newGen").map(_ -> newGen)
+    val body = owners.toSeq.sorted.map { case (d, o) => s"$d\t$o" }
+      .mkString("", "\n", "\n")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(path, newGen, ManifestFile), body)
   }
 
   /** Maintenance compaction — the store's small-files janitor. Steady
@@ -368,8 +322,8 @@ object GenStore {
     * every partition of the CURRENT generation holding more than
     * `maxFiles` parquet files down to `targetFiles`, commits the result
     * as a new generation through the same claim/sweep protocol as
-    * [[fold]], and carries already-compact partitions untouched per
-    * `mode` — content is bit-for-bit unchanged (spec-asserted), only
+    * [[fold]], and carries already-compact partitions by manifest
+    * reference — content is bit-for-bit unchanged (spec-asserted), only
     * the file layout moves. Each fragmented partition is rewritten by
     * its own narrow coalesce job: ZERO shuffle (compaction that must
     * also re-cluster is a different operation — that's what folding
@@ -379,7 +333,7 @@ object GenStore {
     * readable; re-running converges, and a compacted store re-compacts
     * to a no-op (no new generation when nothing is fragmented). */
   def compact(s: SparkSession, path: String, targetFiles: Int = 1,
-      maxFiles: Int = 4, mode: Mode = Links): Unit = {
+      maxFiles: Int = 4): Unit = {
     val g = currentGen(path).getOrElse(
       sys.error(s"no committed generation at $path"))
     val owners = ownerMap(path, g)
@@ -396,9 +350,8 @@ object GenStore {
       Tables.read(s, s"$path/$o/$d").coalesce(targetFiles)
         .write.mode("overwrite").parquet(s"$path/$newGen/$d")
     }
-    carry(path, newGen, owners.filterNot { case (d, _) => fragmented.contains(d) },
-      mode)
-    commit(path, genNum, newGen, mode)
+    carry(path, newGen, owners.filterNot { case (d, _) => fragmented.contains(d) })
+    commit(path, genNum, newGen)
     sweep(path, genNum, newGen, prevGen = Some(g))
   }
 
@@ -411,12 +364,12 @@ object GenStore {
     * as the resume step of a build that crashed between fold and
     * compact. */
   def foldCompacted(s: SparkSession, path: String, batch: => DataFrame,
-      partCol: String, idCol: String, mode: Mode): Unit = {
+      partCol: String, idCol: String): Unit = {
     def tolerateRace(body: => Unit): Unit =
       try body catch { case _: ConcurrentFoldException => () }
     if (currentGen(path).isEmpty)
-      tolerateRace(fold(s, path, batch, partCol, idCol, mode))
-    tolerateRace(compact(s, path, targetFiles = 1, maxFiles = 4, mode = mode))
+      tolerateRace(fold(s, path, batch, partCol, idCol))
+    tolerateRace(compact(s, path, targetFiles = 1, maxFiles = 4))
   }
 
   /** A zero-row fold writes NO partition directories, and a generation
@@ -429,7 +382,7 @@ object GenStore {
     * nothing written AND nothing carried — write the batch's empty
     * relation un-partitioned into the generation root: an empty parquet
     * file still carries the full schema (the partition column rides as
-    * a regular column), and [[loadGen]]'s owner-less branch reads it as
+    * a regular column), and [[loadGen]]'s empty-manifest branch reads it as
     * the zero-row store view. A later non-empty fold reads that view as
     * its `prev` (schema-compatible) and the marker's generation retires
     * through the normal sweep. */
@@ -444,7 +397,7 @@ object GenStore {
       .map(_.getFileName.toString).filter(_.contains("="))
 
   /** An empty commit entry this much older than now is a DEAD CLAIM — a
-    * crashed Manifest-mode fold that died between the `CREATE_NEW` open
+    * crashed fold that died between the `CREATE_NEW` open
     * and the content write — not a racing writer's in-flight entry (the
     * gap between those two syscalls is microseconds; ten seconds of
     * settle is ~6 orders of magnitude of margin). */
@@ -475,12 +428,9 @@ object GenStore {
     math.max(base, deadMax) + 1
   }
 
-  /** The atomic claim-and-publish of generation `genNum`. [[Links]]:
-    * hard-link a fully-written temp file onto the commit name — link(2)
-    * fails with EEXIST atomically, so the claim and the content arrive
-    * together. [[Manifest]]: `CREATE_NEW` write, the faithful local
-    * stand-in for an object store's conditional PUT (link-free by
-    * design; window documented on [[fold]]). Hitting an EXISTING entry
+  /** The atomic claim-and-publish of generation `genNum`: a `CREATE_NEW`
+    * write, the faithful local stand-in for an object store's
+    * conditional PUT (window documented on [[fold]]). Hitting an EXISTING entry
     * is ALWAYS a loss: the number was chosen past every settled dead
     * claim ([[nextGenNumber]]), so whatever sits on it now is a true
     * concurrent writer (possibly mid-write) — or, vanishingly, a fold
@@ -488,24 +438,13 @@ object GenStore {
     * both fail loudly and nothing on the commit log is ever deleted or
     * renamed from the claim path (the repair-in-place alternatives are
     * TOCTOUs against a racing repairer — see [[nextGenNumber]]). */
-  private def commit(path: String, genNum: Long, newGen: String,
-      mode: Mode): Unit = {
+  private def commit(path: String, genNum: Long, newGen: String): Unit = {
     import java.nio.file.{Files, Paths, StandardOpenOption}
     val dir = Paths.get(path, CommitsDir)
     Files.createDirectories(dir)
     val target = dir.resolve(f"$genNum%06d")
-    def claim(): Unit = mode match {
-      case Links =>
-        val tmp = dir.resolve(
-          s".tmp-p${ProcessHandle.current().pid()}s${stagingSeq.incrementAndGet()}")
-        Files.writeString(tmp, newGen)
-        try Files.createLink(target, tmp)
-        finally Files.deleteIfExists(tmp)
-      case Manifest =>
-        Files.write(target, newGen.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-    }
-    try claim()
+    try Files.write(target, newGen.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
     catch {
       case e: java.nio.file.FileAlreadyExistsException =>
         throw new ConcurrentFoldException(
@@ -519,9 +458,8 @@ object GenStore {
   /** Remove what no retained commit can reach: generation dirs whose
     * files are referenced by neither the new commit nor its predecessor
     * (covers retired generations, crashed-fold staging, and racing-fold
-    * losers), commit-log entries older than the predecessor, and the
-    * legacy `CURRENT` pointer once the log owns the store. In Manifest
-    * mode a generation dir survives as long as ANY retained manifest
+    * losers) and commit-log entries older than the predecessor. A
+    * generation dir survives as long as ANY retained manifest
     * still references a partition it owns (cold partitions keep their
     * original writer alive — those files are live data, the Iceberg
     * unreferenced-file rule). */
@@ -541,6 +479,5 @@ object GenStore {
     commitEntries(path)
       .filter { case (n, _) => n < genNum - 1 }
       .foreach { case (_, p) => Files.deleteIfExists(p) }
-    Files.deleteIfExists(Paths.get(path, "CURRENT"))
   }
 }

@@ -407,14 +407,12 @@ object Layouts {
     * maintenance loop, materialized once per corpus fingerprint. The
     * fingerprint-named root means a regenerated corpus can never serve a
     * stale store. */
-  private[graft] def compactedDocStore(s: SparkSession, dir: String,
-      mode: GenStore.Mode = GenStore.Links): String = {
-    val name = if (mode == GenStore.Manifest) "graft_doc_store_m" else "graft_doc_store"
-    val path = artifactPath(s, name, dir, "documents")
-    docStores.getOrBuild(s, dir, name, path) {
+  private[graft] def compactedDocStore(s: SparkSession, dir: String): String = {
+    val path = artifactPath(s, "graft_doc_store_m", dir, "documents")
+    docStores.getOrBuild(s, dir, "", path) {
       GenStore.foldCompacted(s, path,
         Tables.documents(s, dir).repartition(StoreFragFiles),
-        partCol = "source", idCol = "doc_id", mode = mode)
+        partCol = "source", idCol = "doc_id")
       path
     }
   }
@@ -424,31 +422,16 @@ object Layouts {
     * maintenance paths live on. The registered output is a per-source
     * content fingerprint of the COMPACTED store checked against the raw
     * documents oracle, proving the fold + compact round-trip preserved
-    * every row while LayoutsSpec asserts the operational half (file
-    * count collapses to one per partition; the carry discipline holds;
-    * source pruning still reaches the scan through the generation
-    * indirection). */
+    * every row. `GenStore.load` resolves the `_MANIFEST` carry references
+    * into per-owner basePath-scoped scans, so this row also puts the
+    * manifest read path under the driver's hash gate. LayoutsSpec
+    * asserts the operational half (file count collapses to one per
+    * partition; a `_MANIFEST` in the committed generation; every data
+    * file nlink==1; source pruning still reaches the scan through the
+    * owner indirection). `src6_store_manifest` is registered as this same
+    * query, so the registered surface keeps its name. */
   def src5StoreCompaction(s: SparkSession, dir: String): DataFrame =
     GenStore.load(s, compactedDocStore(s, dir))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("docs"),
-        sum(length(col("text"))).as("total_chars"),
-        min(col("doc_id")).as("min_doc_id"),
-        max(col("doc_id")).as("max_doc_id"))
-
-  /** src6: src5's fold + compact round-trip run in [[GenStore.Manifest]]
-    * carry mode — the link-free, object-store-portable discipline (no
-    * hard links, so it survives stores where link counts don't exist:
-    * S3-style object stores, some network filesystems). Same content
-    * claim, same raw-documents oracle; what this row proves end-to-end
-    * is the MANIFEST read path — `GenStore.load` resolving `_MANIFEST`
-    * carry references into per-owner basePath-scoped scans — under the
-    * driver's hash gate, where src5/d8/s8 only ever exercise Links.
-    * LayoutsSpec asserts the operational half (a `_MANIFEST` exists in
-    * the committed generation; data files are nlink==1; source pruning
-    * still reaches the scan through the owner indirection). */
-  def src6StoreManifest(s: SparkSession, dir: String): DataFrame =
-    GenStore.load(s, compactedDocStore(s, dir, GenStore.Manifest))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("docs"),
         sum(length(col("text"))).as("total_chars"),
@@ -470,7 +453,7 @@ object Layouts {
     "src3_zorder_prune" -> src3ZorderPrune _,
     "src4_compaction" -> src4Compaction _,
     "src5_store_compaction" -> src5StoreCompaction _,
-    "src6_store_manifest" -> src6StoreManifest _)
+    "src6_store_manifest" -> src5StoreCompaction _)
 
   val oracleSql: Map[String, String] = Map(
     "src1_partition_prune" -> src1Sql,

@@ -154,67 +154,46 @@ class LayoutsSpec extends SparkSpec {
 
   test("src5: the generational doc store compacts to one file per source; content and pruning survive") {
     import graft.sources.GenStore
+    import scala.jdk.CollectionConverters._
     val root = Layouts.compactedDocStore(spark, sf)
     val gen = GenStore.currentGen(root).get
     // the fold ran fragmented, so compaction must have committed gen 2+
     assert(gen.stripPrefix("gen-").takeWhile(_.isDigit).toLong >= 2, gen)
-    // one file per source partition in the committed generation
-    import scala.jdk.CollectionConverters._
-    val genDir = java.nio.file.Paths.get(root, gen)
-    val partDirs = {
-      val st = java.nio.file.Files.list(genDir)
-      try st.iterator().asScala.filter(
-        _.getFileName.toString.startsWith("source=")).toList
-      finally st.close()
-    }
-    assert(partDirs.nonEmpty)
-    partDirs.foreach { d =>
-      val st = java.nio.file.Files.list(d)
+    // the committed generation is manifest-carried: every source
+    // partition resolves through its _MANIFEST to one owner dir
+    val manifest = java.nio.file.Paths.get(root, gen, "_MANIFEST")
+    assert(java.nio.file.Files.exists(manifest),
+      s"no _MANIFEST in committed generation $gen")
+    val owners = java.nio.file.Files.readAllLines(manifest).asScala
+      .filter(_.nonEmpty).map(_.split('\t')).map(a => a(0) -> a(1)).toSeq
+    assert(owners.nonEmpty && owners.forall(_._1.startsWith("source=")), owners)
+    // one file per source partition after compaction
+    owners.foreach { case (d, owner) =>
+      val st = java.nio.file.Files.list(java.nio.file.Paths.get(root, owner, d))
       val n = try st.iterator().asScala.count(
         _.getFileName.toString.endsWith(".parquet")) finally st.close()
-      assert(n === 1, s"partition $d holds $n files after compaction")
+      assert(n === 1, s"partition $owner/$d holds $n files after compaction")
     }
-    // content: every doc exactly once, equal to the raw table
-    val a = GenStore.load(spark, root).select($"doc_id").as[Long].collect().sorted
-    val b = Tables.documents(spark, sf).select($"doc_id").as[Long].collect().sorted
-    assert(a.toSeq === b.toSeq, "compaction must preserve every row exactly once")
-    // source pruning reaches the scan through the generation indirection
-    val plan = GenStore.load(spark, root).where($"source" === "src3")
-      .queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*source".r.findFirstIn(plan).isDefined,
-      s"expected source partition pruning on the store scan in:\n$plan")
-  }
-
-  test("src6: the Manifest-mode doc store serves the same content link-free through _MANIFEST carry") {
-    import graft.sources.GenStore
-    import scala.jdk.CollectionConverters._
-    val root = Layouts.compactedDocStore(spark, sf, GenStore.Manifest)
-    val gen = GenStore.currentGen(root).get
-    assert(gen.stripPrefix("gen-").takeWhile(_.isDigit).toLong >= 2, gen)
-    // the committed generation is manifest-carried, and every data file
-    // in the store is nlink==1 — no hard links anywhere (object-store
-    // portability is the point of the mode)
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(root, gen, "_MANIFEST")),
-      s"no _MANIFEST in committed generation $gen")
+    // every data file in the store is nlink==1 — no hard links anywhere
+    // (object-store portability is the point of the manifest carry)
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
     try walk.iterator().asScala
       .filter(_.toString.endsWith(".parquet"))
       .foreach { f =>
         val n = java.nio.file.Files.getAttribute(f, "unix:nlink")
           .asInstanceOf[Number].intValue()
-        assert(n === 1, s"$f has nlink=$n — Manifest mode must not link")
+        assert(n === 1, s"$f has nlink=$n — the store must not link")
       }
     finally walk.close()
-    // content equals the raw table exactly (every doc exactly once)
+    // content: every doc exactly once, equal to the raw table
     val a = GenStore.load(spark, root).select($"doc_id").as[Long].collect().sorted
     val b = Tables.documents(spark, sf).select($"doc_id").as[Long].collect().sorted
-    assert(a.toSeq === b.toSeq)
-    // source pruning still reaches the scan through the owner indirection
+    assert(a.toSeq === b.toSeq, "compaction must preserve every row exactly once")
+    // source pruning reaches the scan through the owner indirection
     val plan = GenStore.load(spark, root).where($"source" === "src3")
       .queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*source".r.findFirstIn(plan).isDefined,
-      s"expected source partition pruning on the manifest store scan in:\n$plan")
+      s"expected source partition pruning on the store scan in:\n$plan")
   }
 
   test("src4: compaction collapses the file count with a zero-shuffle plan") {

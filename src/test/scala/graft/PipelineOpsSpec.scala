@@ -431,9 +431,9 @@ class PipelineOpsSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft_e10").toString
     val rel = want
     GenStore.fold(spark, tmp, rel.where($"doc_id" % 2 === 0),
-      partCol = "cut_part", idCol = "doc_id", mode = GenStore.Manifest)
+      partCol = "cut_part", idCol = "doc_id")
     GenStore.fold(spark, tmp, rel.where($"doc_id" % 2 === 1),
-      partCol = "cut_part", idCol = "doc_id", mode = GenStore.Manifest)
+      partCol = "cut_part", idCol = "doc_id")
     assert(rows(GenStore.load(spark, tmp)) === wantRows)
 
     // 4. crash debris: an uncommitted staging dir (a fold that died
@@ -445,7 +445,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(rows(GenStore.load(spark, tmp)) === wantRows,
       "uncommitted staging must be invisible")
     GenStore.fold(spark, tmp, rel.where($"doc_id" % 2 === 1),
-      partCol = "cut_part", idCol = "doc_id", mode = GenStore.Manifest)
+      partCol = "cut_part", idCol = "doc_id")
     assert(rows(GenStore.load(spark, tmp)) === wantRows,
       "re-folding the same rows is idempotent")
     assert(!java.nio.file.Files.exists(stray), "crash staging swept")

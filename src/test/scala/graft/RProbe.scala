@@ -6,9 +6,11 @@ package graft
 object RProbe {
   def main(args: Array[String]): Unit = {
     val spark = Session.local()
-    val dirs = if (args.nonEmpty) args.toSeq else Seq(
-      "/root/testdata/sf0.1", "/root/repo/target/scale10x",
-      "/root/repo/target/scale20x", "/root/repo/target/scale80x")
+    // the replicas resolve under this checkout's target/, where
+    // ScaleBench writes them
+    val dirs = if (args.nonEmpty) args.toSeq else "/root/testdata/sf0.1" +:
+      Seq(10, 20, 80).map(f =>
+        java.nio.file.Paths.get("target", s"scale${f}x").toAbsolutePath.toString)
     for (d <- dirs if java.nio.file.Files.exists(java.nio.file.Paths.get(d))) {
       val (s1, s2) = graft.operators.DedupOps.dfSkewStats(spark, d)
       println(s"RPROBE $d R=${s2 / math.max(s1, 1L)} sumDf=$s1 " +

@@ -453,11 +453,35 @@ class SimilarityOpsSpec extends SparkSpec {
     served.foreach { case (q, ok) => assert(ok, s"query $q recall from folded index") }
 
     // the probe over the GENERATION directory must prune cell partitions,
-    // the s3/s7 contract carried through the pointer-swap indirection
+    // the s3/s7 contract carried through the manifest indirection
     val plan = GenStore.load(spark, root)
       .where($"cell".isin(0, 1)).queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [cell"),
       s"expected cell partition pruning on the folded index scan in:\n$plan")
+
+    // the fold carried the untouched cells by manifest reference: no
+    // store root holds a hard link, and every retained generation
+    // (generation 1 still owns the cells the ingest batch missed) has
+    // a _MANIFEST
+    import scala.jdk.CollectionConverters._
+    val base = java.nio.file.Paths.get(root)
+    val walk = java.nio.file.Files.walk(base)
+    try walk.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .foreach { f =>
+        val n = java.nio.file.Files.getAttribute(f, "unix:nlink")
+          .asInstanceOf[Number].intValue()
+        assert(n === 1, s"$f has nlink=$n — the folded index must not link")
+      }
+    finally walk.close()
+    val gens = {
+      val st = java.nio.file.Files.list(base)
+      try st.iterator().asScala.filter(_.getFileName.toString.startsWith("gen-")).toList
+      finally st.close()
+    }
+    assert(gens.nonEmpty)
+    gens.foreach(g => assert(java.nio.file.Files.exists(g.resolve("_MANIFEST")),
+      s"retained generation $g has no _MANIFEST"))
   }
 
   test("s2 checked: recall_ok flips false when the approx side is broken") {

@@ -6,12 +6,14 @@ import graft.sources.Tables
 /** Dev probe (test scope, never shipped): times t21's two paths head to
   * head on a scale replica, to size [[SimilarityOps.EvalBroadcastCap]]
   * from measurement rather than guesswork (the m10 pre-ship-probe
-  * discipline). Run after a ScaleBench build:
-  *   sbt "Test/runMain graft.T21ScaleProbe /root/repo/target/scale80x"
+  * discipline). Run after a ScaleBench build; the replica defaults to
+  * this checkout's `target/scale80x`, where ScaleBench writes it:
+  *   sbt "Test/runMain graft.T21ScaleProbe"
   */
 object T21ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/repo/target/scale80x")
+    val dir = args.headOption.getOrElse(
+      java.nio.file.Paths.get("target", "scale80x").toAbsolutePath.toString)
     val spark = Session.local()
     val emb = Tables.embeddings(spark, dir)
     println(s"N=${emb.count()}")
