@@ -1046,9 +1046,189 @@ case class NormalizeText(child: Expression)
     copy(child = newChild)
 }
 
+/** A trained (lang, gram, weight) character-trigram profile packed for
+  * [[LangProfileScores]] — the ONE reference object the kernel ships.
+  * Each gram's three code points are packed 21 bits apiece into a long
+  * (`a << 42 | b << 21 | c`; U+10FFFF fits 21 bits, so distinct
+  * trigrams never collide), `grams` holds the distinct packings sorted
+  * for binary search, and `weights` is row-major gram × language, the
+  * languages in ascending code order. A gram that is not exactly three
+  * code points can never equal a text trigram and is dropped; duplicate
+  * (lang, gram) entries sum, as a join against the rows would.
+  *
+  * Code points are decoded from the UTF-8 bytes (lead-byte widths as
+  * `UTF8String.numBytesForFirstByte` gives them), on the text and on the
+  * profile side alike; on valid UTF-8 that is exactly the cut Spark's
+  * `split`/`length`/`substr` make. */
+final class PackedLangProfile private (
+    val langs: Array[String],
+    val grams: Array[Long],
+    val weights: Array[Long]) extends Serializable {
+  import org.apache.spark.unsafe.types.UTF8String
+
+  /** Scores `s` (already lowered) into the kernel's struct row: one
+    * summed weight per language, then n_hits and n_tri. Words are the
+    * runs between `' '` bytes (empty words contribute nothing), each
+    * word `w` yields the length(w) code-point trigrams of
+    * `' ' + w + ' '`. Every trigram occurrence counts into n_tri; one
+    * found in the profile counts into n_hits and adds its weight per
+    * language. The walk allocates nothing; the row is the only
+    * allocation. */
+  def eval(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
+    val nl = langs.length
+    val acc = new Array[Long](nl + 2)
+    val n = s.numBytes
+    var hits = 0L
+    var tri = 0L
+    var i = 0
+    while (i < n) {
+      if (s.getByte(i) == ' ') i += 1
+      else {
+        var a = 32L
+        var w = PackedLangProfile.cpWidth(s, i)
+        var b = PackedLangProfile.codePoint(s, i, w)
+        i += w
+        var last = false
+        while (!last) {
+          val c =
+            if (i >= n || s.getByte(i) == ' ') { last = true; 32L }
+            else {
+              w = PackedLangProfile.cpWidth(s, i)
+              val cp = PackedLangProfile.codePoint(s, i, w)
+              i += w
+              cp
+            }
+          tri += 1
+          val g = java.util.Arrays.binarySearch(grams, (a << 42) | (b << 21) | c)
+          if (g >= 0) {
+            hits += 1
+            var l = 0
+            val base = g * nl
+            while (l < nl) { acc(l) += weights(base + l); l += 1 }
+          }
+          a = b
+          b = c
+        }
+      }
+    }
+    acc(nl) = hits
+    acc(nl + 1) = tri
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      acc.map(v => v: Any))
+  }
+
+  private val hash = java.util.Arrays.hashCode(grams) * 31 +
+    java.util.Arrays.hashCode(weights) * 17 + langs.toSeq.hashCode
+
+  override def hashCode: Int = hash
+  override def equals(o: Any): Boolean = o match {
+    case p: PackedLangProfile => langs.sameElements(p.langs) &&
+      java.util.Arrays.equals(grams, p.grams) &&
+      java.util.Arrays.equals(weights, p.weights)
+    case _ => false
+  }
+  override def toString: String =
+    s"profile(${langs.mkString(",")}; ${grams.length} grams)"
+}
+
+object PackedLangProfile {
+  import org.apache.spark.unsafe.types.UTF8String
+
+  private def cpWidth(s: UTF8String, i: Int): Int =
+    math.min(UTF8String.numBytesForFirstByte(s.getByte(i)), s.numBytes - i)
+
+  private def codePoint(s: UTF8String, i: Int, w: Int): Long = {
+    val b0 = s.getByte(i) & 0xFF
+    if (w == 1) b0.toLong
+    else {
+      var cp = b0 & (0x7F >> w)
+      var j = 1
+      while (j < w) { cp = (cp << 6) | (s.getByte(i + j) & 0x3F); j += 1 }
+      (cp & 0x1FFFFF).toLong
+    }
+  }
+
+  /** `g`'s packing, or -1 when it is not exactly three code points. */
+  private def pack(g: String): Long = {
+    val s = UTF8String.fromString(g)
+    var k = 0L
+    var units = 0
+    var i = 0
+    while (i < s.numBytes) {
+      val w = cpWidth(s, i)
+      k = (k << 21) | codePoint(s, i, w)
+      units += 1
+      i += w
+    }
+    if (units == 3) k else -1L
+  }
+
+  def apply(profile: Seq[(String, String, Long)]): PackedLangProfile = {
+    val langs = profile.map(_._1).distinct.sorted.toArray
+    val langIx = langs.zipWithIndex.toMap
+    val keyed = profile.flatMap { case (l, g, w) =>
+      val k = pack(g)
+      if (k < 0) None else Some((k, langIx(l), w))
+    }
+    val grams = keyed.map(_._1).distinct.sorted.toArray
+    val weights = new Array[Long](grams.length * langs.length)
+    keyed.foreach { case (k, l, w) =>
+      weights(java.util.Arrays.binarySearch(grams, k) * langs.length + l) += w
+    }
+    new PackedLangProfile(langs, grams, weights)
+  }
+}
+
+/** Per-row language-profile scoring — the Cavnar–Trenkle scorer t2b,
+  * t22, t24, t26, e5, e9 and st13 share, as one narrow codegen'd
+  * kernel. The child is `lower(text)` (see
+  * [[GraftColumns.langProfileScores]]), so the lowering is Spark's own;
+  * the kernel splits on `' '`, walks each space-padded word's code-point
+  * trigrams and looks each one up in the [[PackedLangProfile]]. It
+  * returns `struct<s_<lang>…, n_hits, n_tri>` (all bigint): one summed
+  * profile weight per language in ascending code order, the trigram
+  * occurrences found in the profile, and all trigram occurrences. A null
+  * text gives a null struct.
+  *
+  * Why an `Expression` and not explode + profile join + pivot aggregate
+  * (the compositional spelling the test tree keeps as
+  * `LangScoreReference`): the score is a pure per-row function, and the
+  * composition turned it into one row per trigram, a broadcast join, a
+  * doc-keyed aggregate and a join back to the documents. Here the
+  * profile ships as one reference object and the scan is a single pass
+  * over the UTF-8 bytes. Both eval paths call [[PackedLangProfile.eval]]
+  * (the [[NormalizeText]] pattern). */
+case class LangProfileScores(child: Expression, profile: PackedLangProfile)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = StructType(
+    (profile.langs.toSeq.map(l => s"s_$l") ++ Seq("n_hits", "n_tri"))
+      .map(StructField(_, LongType, nullable = false)))
+  override def prettyName: String = "lang_profile_scores"
+
+  override protected def nullSafeEval(a: Any): Any =
+    profile.eval(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("langProfile", profile,
+      classOf[PackedLangProfile].getName)
+    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = $ref.eval($x);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): LangProfileScores =
+    copy(child = newChild)
+}
+
 object GraftColumns {
   def normalizeText(text: Column): Column =
     ExpressionUtils.column(NormalizeText(ExpressionUtils.expression(text)))
+
+  def langProfileScores(text: Column, profile: Seq[(String, String, Long)]): Column =
+    ExpressionUtils.column(LangProfileScores(
+      ExpressionUtils.expression(org.apache.spark.sql.functions.lower(text)),
+      PackedLangProfile(profile)))
 
   def cosineSim(a: Column, b: Column): Column =
     ExpressionUtils.column(

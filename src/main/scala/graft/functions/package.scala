@@ -56,6 +56,13 @@ package object functions {
   def bpeTokenIds(text: Column, vocab: Seq[String]): Column =
     org.apache.spark.sql.graftext.GraftColumns.bpeTokenIds(text, vocab)
 
+  /** Per-row character-trigram language scores of a string column under a
+    * trained (lang, gram, weight) profile: `struct<s_<lang>…, n_hits,
+    * n_tri>` over `lower(text)`, one codegen'd narrow kernel (see
+    * [[org.apache.spark.sql.graftext.LangProfileScores]]). */
+  def langProfileScores(text: Column, profile: Seq[(String, String, Long)]): Column =
+    org.apache.spark.sql.graftext.GraftColumns.langProfileScores(text, profile)
+
   /** Unicode text normalization (NFC → combining-mark strip → whitespace
     * collapse/trim — CCNet's pre-dedup canonicalization) as one codegen'd
     * narrow expression (see

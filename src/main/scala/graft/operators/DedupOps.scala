@@ -598,22 +598,32 @@ object DedupOps {
     * at bounded trigram df; see [[d4NgramJaccard]]'s scale note). */
   private[graft] def d4InvertedJaccard(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sh = withShingleHashes(Tables.documents(s, dir))
-      .select($"doc_id", explode($"hs").as("h"))
-    val sz = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
+    sharedTrigramCounts(Tables.documents(s, dir))
+      .select($"doc_a", $"doc_b",
+        ($"c" / ($"n_a" + $"n_b" - $"c")).as("jaccard"))
+      .where($"jaccard" >= 0.5)
+  }
+
+  /** The exact inverted-index join d4's and d15's naive arms share:
+    * (doc_a < doc_b, n_a, n_b, c) for every pair sharing ≥ 1 trigram
+    * hash, c = |A∩B| and n = |A|, |B|. Each exploded (doc_id, h) row
+    * carries its doc's set size (`hs` is array_distinct and never empty,
+    * so size(hs) is the distinct count a per-doc aggregate would give),
+    * so the sizes ride the pair count's grouping key: no size aggregate,
+    * no size joins (V-SMART-Join's cardinality-carrying similarity
+    * phase). */
+  private def sharedTrigramCounts(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    val sh = withShingleHashes(docs)
+      .select($"doc_id", size($"hs").cast("long").as("n"), explode($"hs").as("h"))
     // SHUFFLE_HASH: equi-join on a high-cardinality hash key gains nothing
     // from sort order, and the sort of both shuffled sides is the join's
     // dominant cost; per-partition hash tables are small by construction.
-    val shared = sh.as("a").join(sh.as("b").hint("SHUFFLE_HASH"),
+    sh.as("a").join(sh.as("b").hint("SHUFFLE_HASH"),
         $"a.h" === $"b.h" && $"a.doc_id" < $"b.doc_id")
-      .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
+      .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"),
+        $"a.n".as("n_a"), $"b.n".as("n_b"))
       .agg(count(lit(1)).as("c"))
-    shared
-      .join(sz.as("sa"), $"doc_a" === $"sa.doc_id")
-      .join(sz.as("sb"), $"doc_b" === $"sb.doc_id")
-      .select($"doc_a", $"doc_b",
-        ($"c" / ($"sa.n" + $"sb.n" - $"c")).as("jaccard"))
-      .where($"jaccard" >= 0.5)
   }
 
   /** The df-skew switch for [[d4NgramJaccard]]: SAME exact output
@@ -699,22 +709,15 @@ object DedupOps {
     else containmentPairsOf(Tables.documents(s, dir), ContainTau)
 
   /** The d15 kernel over any (doc_id, text) relation — d4's exact
-    * inverted-index geometry with per-side denominators. */
+    * inverted-index join ([[sharedTrigramCounts]]) with per-side
+    * denominators. */
   private[graft] def containmentPairsOf(docs: DataFrame, tau: Double): DataFrame = {
     import docs.sparkSession.implicits._
-    val sh = withShingleHashes(docs).select($"doc_id", explode($"hs").as("h"))
-    val sz = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val shared = sh.as("a").join(sh.as("b").hint("SHUFFLE_HASH"),
-        $"a.h" === $"b.h" && $"a.doc_id" < $"b.doc_id")
-      .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-      .agg(count(lit(1)).as("c"))
-    shared
-      .join(sz.as("sa"), $"doc_a" === $"sa.doc_id")
-      .join(sz.as("sb"), $"doc_b" === $"sb.doc_id")
+    sharedTrigramCounts(docs)
       .select($"doc_a", $"doc_b",
-        ($"c" / $"sa.n").as("cont_a"),
-        ($"c" / $"sb.n").as("cont_b"),
-        ($"c" / ($"sa.n" + $"sb.n" - $"c")).as("jaccard"))
+        ($"c" / $"n_a").as("cont_a"),
+        ($"c" / $"n_b").as("cont_b"),
+        ($"c" / ($"n_a" + $"n_b" - $"c")).as("jaccard"))
       .where(greatest($"cont_a", $"cont_b") >= tau)
   }
 

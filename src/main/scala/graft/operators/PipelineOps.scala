@@ -243,7 +243,7 @@ object PipelineOps {
     // ONE shared scoring pass carries BOTH language-keyed gates (t24's
     // stopword polarity and t26's banned-word polarity, round 18) —
     // the sheet pays one profile subtree, not two
-    val gates = TextOps.langGates(s, dir)
+    val gates = TextOps.langScored(s, dir)
       .select($"doc_id", $"pred_lang", $"stop_hits", $"stop_keep",
         $"block_hits", $"block_keep")
     rulesClf.join(tier, Seq("doc_id")).join(spans, Seq("doc_id"))
@@ -722,7 +722,8 @@ object PipelineOps {
     * joining (the e3 discipline) — the heavy machinery is each stage's
     * own audited plan; the composition adds one full-text base scan
     * (token counts + the sha2-window exact bit, e6's device), one
-    * broadcast-profile scoring scan, and id-width joins. The CASE fold
+    * per-row profile-scoring scan ([[TextOps.langScored]]), and id-width
+    * joins. The CASE fold
     * and the (≤ stages+1)-row kill aggregate collapse map-side; the tiny
     * per-stage relation is materialized so the totals row and the
     * funnel arithmetic both read ONE aggregate, and every window
@@ -771,7 +772,7 @@ object PipelineOps {
   /** e9's per-doc signal frame — the funnel's only corpus-width relation,
     * exposed so PlanAuditSpec can pin its plan shape (one base scan
     * carrying the per-row rule/classifier/url bits, ONE shared
-    * langSignals scoring pass, plus d10/d6/t10's own audited machinery —
+    * langScored scoring pass, plus d10/d6/t10's own audited machinery —
     * and, since round 19, NO t17 subtree); everything the funnel adds
     * above it is the ≤ |stages|-row arithmetic. */
   private[graft] def e9SignalFrame(s: SparkSession, dir: String): DataFrame = {
@@ -787,7 +788,7 @@ object PipelineOps {
     // shape rules and the classifier bit are per-row expressions riding
     // the base scan's pre-window projection (url_blocked's device — one
     // scan, zero joins; only bools cross the sha2 window's exchange),
-    // and conf_micro comes from the SAME langSignals pass that carries
+    // and conf_micro comes from the SAME langScored pass that carries
     // the stopword/blockword bits. Every stage bit keeps its stage's
     // expression verbatim and every joined relation still covers every
     // doc_id, so rows and values are unchanged — the driver's oracle
@@ -801,7 +802,7 @@ object PipelineOps {
         Window.partitionBy(sha2($"text", 256)))).as("exact_canon") +:
       UrlOps.urlBlockedCol.as("url_blocked") +:
       ruleCols) :+ TextOps.clfKeepCol(s, dir, $"text").as("clf_keep"): _*)
-    val sig = TextOps.langSignals(s, dir)
+    val sig = TextOps.langScored(s, dir)
       .select($"doc_id", $"conf_micro", $"stop_keep", $"block_keep")
     val spans = DedupOps.d10SpanDedup(s, dir)
       .select($"doc_id", $"has_dup")

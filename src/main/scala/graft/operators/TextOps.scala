@@ -157,22 +157,20 @@ object TextOps {
     * Scale shape: training is one map-side-combined (lang, gram)
     * aggregate over the REFERENCE slice only, windowed per lang over
     * the lang-vocab-bounded count relation, persisted fingerprint-named
-    * ([[lmModel]] discipline — warm processes train nothing). Scoring:
-    * the ≤ langs×[[ProfileTopM]] profile relation broadcasts; doc
-    * trigrams never shuffle as strings — the broadcast join tags them
-    * and ONE map-side-combined aggregate reduces to ≤ langs rows per
-    * doc, pivoted to per-lang columns so the argmax is t2's
-    * strictly-greater literal fold (narrow). The only exchanges move
-    * (doc_id, small ints). */
+    * ([[lmModel]] discipline — warm processes train nothing). Scoring
+    * is a pure narrow map over ONE documents scan: the codegen'd
+    * [[graft.functions.langProfileScores]] kernel carries the
+    * ≤ langs×[[ProfileTopM]] profile as one packed reference object and
+    * scores each row's trigrams in place, and the argmax is t2's
+    * strictly-greater literal fold over its per-language fields. No
+    * trigram row, join or exchange exists at any corpus size. */
   def t2bLangIdTrained(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val profile = langProfileRows(s, dir)
-    val langs = profileLangs(profile)
-    val docs = Tables.documents(s, dir)
-    val best = bestLangStruct(langs)
-    docs.select($"doc_id", $"lang".as("labeled_lang"))
-      .join(profileScores(docs, $"text", Seq($"doc_id"), profile),
-        Seq("doc_id"), "left")
+    val best = bestLangStruct(profileLangs(profile), $"sc")
+    Tables.documents(s, dir)
+      .select($"doc_id", $"lang".as("labeled_lang"),
+        graft.functions.langProfileScores($"text", profile).as("sc"))
       .select($"doc_id", $"labeled_lang",
         best.getField("c").as("pred_lang"),
         best.getField("s").as("score_micro"))
@@ -194,65 +192,13 @@ object TextOps {
   private[graft] def profileLangs(profile: Seq[(String, String, Long)]): Seq[String] =
     profile.map(_._1).distinct.sorted
 
-  /** The broadcast-profile trigram scorer shared by t2b (per doc), t22
-    * (per segment) and st13 (per incoming doc): `text`'s trigram
-    * occurrences tagged by the broadcast ≤ langs×[[ProfileTopM]] profile
-    * and collapsed in ONE map-side-combined aggregate over `keys`,
-    * pivoted to per-language `s_<lang>` columns. Rows without a single
-    * profile hit are ABSENT (inner gram join) — consumers left-join and
-    * let [[bestLangStruct]]'s coalesce treat them as all-zero.
-    *
-    * `withNTri = true` (st13's and e9's shape) keeps ONE scan and ONE
-    * aggregate while also emitting total trigram occurrences as `n_tri`
-    * with EVERY input row present: n_tri is computed BEFORE the explode
-    * (post-join rows fan out on grams shared across language profiles)
-    * and folded by first(); the LEFT profile join is immediately
-    * re-filtered to profile HITS plus ONE sentinel row per input row
-    * (pos 0, or the null row explode_outer emits for empty text) — the
-    * sentinel keeps zero-hit rows present with all-zero scores while
-    * the wide pivot aggregate still consumes only hit-volume input.
-    * (The first cut of this path aggregated ALL gram occurrences and
-    * benched 20× slower than the two-subtree shape it replaced — the
-    * inner-join filtering, not the scan count, is what the scorer's
-    * speed lives on.) */
-  private[graft] def profileScores(rel: DataFrame, text: Column,
-      keys: Seq[Column], profile: Seq[(String, String, Long)],
-      withNTri: Boolean = false): DataFrame = {
-    val s = rel.sparkSession
-    import s.implicits._
-    val prof = profile.toDF("p_lang", "g", "w")
-    val pivots = profileLangs(profile).map(l =>
-      sum(when($"p_lang" === l, $"w").otherwise(0L)).as(s"s_$l"))
-    if (withNTri)
-      // the trigram array is materialized in its OWN projection and
-      // referenced twice above (size + posexplode): CollapseProject
-      // refuses to inline a non-cheap expression used twice, so the
-      // array builds ONCE per input row BELOW the Generate. Spelling
-      // size(charTrigrams(text)) directly in the generator's select
-      // collapsed the array build above the Generate — rebuilt per
-      // exploded GRAM, O(len²) per doc (the withShingleHashes trap;
-      // benched 20× slow before this shape).
-      rel.select(keys :+ charTrigrams(text).as("__tri"): _*)
-        .select(keys ++ Seq(
-          size($"__tri").cast("long").as("n_tri"),
-          posexplode_outer($"__tri").as(Seq("pos", "g"))): _*)
-        .join(broadcast(prof), Seq("g"), "left")
-        .where($"p_lang".isNotNull || $"pos" === 0 || $"pos".isNull)
-        .groupBy(keys: _*)
-        .agg(first($"n_tri").as("n_tri"), pivots: _*)
-    else
-      rel.select(keys :+ explode(charTrigrams(text)).as("g"): _*)
-        .join(broadcast(prof), Seq("g"))
-        .groupBy(keys: _*)
-        .agg(pivots.head, pivots.tail: _*)
-  }
-
-  /** The deterministic argmax over [[profileScores]]' pivot columns: a
-    * strictly-greater fold over langs in ASC order, so ties keep the
-    * earlier (smaller) code — every oracle's (score DESC, lang ASC). */
-  private[graft] def bestLangStruct(langs: Seq[String]): Column =
+  /** The deterministic argmax over a [[graft.functions.langProfileScores]]
+    * struct `sc`: a strictly-greater fold over langs in ASC order, so ties
+    * keep the earlier (smaller) code — every oracle's (score DESC, lang
+    * ASC). A null `sc` (null text) scores 0 everywhere. */
+  private[graft] def bestLangStruct(langs: Seq[String], sc: Column): Column =
     langs.map { l =>
-      struct(coalesce(col(s"s_$l"), lit(0L)).as("s"), lit(l).as("c"))
+      struct(coalesce(sc.getField(s"s_$l"), lit(0L)).as("s"), lit(l).as("c"))
     }.reduce((a, b) => when(b("s") > a("s"), b).otherwise(a))
 
   /** The trained (lang, gram, weight) profile relation over any labeled
@@ -369,12 +315,13 @@ object TextOps {
     * flagged (the screen flags measured disagreement, not absence of
     * evidence).
     *
-    * Scale shape: t2b's exactly — the ≤ langs×[[ProfileTopM]] profile
-    * broadcasts, segment trigrams are tagged by the broadcast join and
-    * collapse in ONE map-side-combined (doc_id, seg_id) aggregate
-    * (grams never shuffle as strings), then (doc_id, lang) vote rows;
-    * the only windows run per doc over ≤ langs vote rows. Exchanges
-    * carry id-width rows at any corpus size. */
+    * Scale shape: t2b's kernel per segment — each doc's segment array
+    * is scored in place by [[graft.functions.langProfileScores]] and
+    * kept where `n_hits > 0` (at least one of the segment's trigram
+    * occurrences is a profile gram), then exploded, so the first
+    * exchange already carries (doc_id, lang) vote partials; the only
+    * windows run per doc over ≤ langs vote rows. Exchanges carry
+    * id-width rows at any corpus size. */
   def t22SegmentLangmix(s: SparkSession, dir: String): DataFrame =
     segmentLangMixOf(Tables.documents(s, dir), langProfileRows(s, dir))
 
@@ -386,12 +333,16 @@ object TextOps {
     val s = docs.sparkSession
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val hits = profileScores(
-      docs.select($"doc_id",
-        posexplode(DedupOps.segmentsOf($"text")).as(Seq("seg_id", "seg"))),
-      $"seg", Seq($"doc_id", $"seg_id"), profile)
-    val best = bestLangStruct(profileLangs(profile))
-    val votes = hits.select($"doc_id", best.getField("c").as("seg_lang"))
+    val best = bestLangStruct(profileLangs(profile), $"sc")
+    // scored and filtered inside the segment array: a Filter over the
+    // scoring projection would be pushed below it and run the kernel twice
+    val scored = filter(
+      transform(DedupOps.segmentsOf($"text"),
+        seg => graft.functions.langProfileScores(seg, profile)),
+      sc => sc("n_hits") > 0)
+    val votes = docs
+      .select($"doc_id", explode(scored).as("sc"))
+      .select($"doc_id", best.getField("c").as("seg_lang"))
       .groupBy($"doc_id", $"seg_lang").agg(count(lit(1)).as("n"))
     val byDoc = Window.partitionBy($"doc_id")
     val top = votes
@@ -2631,68 +2582,44 @@ object TextOps {
     * 2.4% fail rate spread across all five predicted languages (the
     * e7 row shows the same, closing VERDICT r16's solo-kill ask).
     *
-    * Scale shape: t2b's scoring budget exactly (broadcast
-    * ≤ langs×[[ProfileTopM]] profile, ONE map-side-combined aggregate,
-    * id-width exchanges) plus a narrow literal-fold projection — the
-    * stop lists ride the plan as literals, never a join. */
+    * Scale shape: [[langScored]]'s — one documents scan and one narrow
+    * projection (t2b's per-row kernel, then the literal folds); the stop
+    * lists ride the plan as literals, never a join, and nothing
+    * shuffles. */
   def t24LangStopwords(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    langGates(s, dir)
+    langScored(s, dir)
       .select($"doc_id", $"pred_lang", $"stop_hits", $"stop_keep")
   }
 
-  /** The fused language-signal relation behind e9's funnel frame (round
-    * 19 — previously the frame ran TWO scoring passes: the gates' and a
-    * second one just for conf_micro): ONE profile-scoring pass (t2b's
-    * broadcast-profile aggregate, the expensive part) in the `withNTri`
-    * shape, so the SAME aggregate yields the argmax language, both
-    * literal word-list folds, and the per-trigram confidence e9's
-    * lang_gate thresholds. Emits (doc_id, pred_lang, conf_micro,
-    * stop_hits, stop_keep, block_hits, block_keep). Consumers that do
-    * NOT read conf_micro (t24/t26/e5 via [[langGates]]) keep the
-    * cheaper inner-join scorer — see the note there.
+  /** The language-signal relation behind t24, t26, the e5 sheet and
+    * e9's funnel frame: (doc_id, pred_lang, conf_micro, stop_hits,
+    * stop_keep, block_hits, block_keep), one row per document.
     *
-    * Equivalence to the two passes it replaces (pinned in
-    * TextOpsSpec): the withNTri scorer keeps every input row via its
-    * sentinel, so zero-hit docs carry all-zero pivot sums — exactly
-    * what the old inner-join + LEFT-join + coalesce spelling produced
-    * for pred_lang — and conf_micro is the e9 spelling verbatim
-    * (best score div greatest(n_tri, 1)). */
-  private[graft] def langSignals(s: SparkSession, dir: String): DataFrame =
-    langScored(s, dir, withNTri = true)
-
-  /** The gate-only relation behind t24, t26 and the e5 sheet — the
-    * ORIGINAL inner-join scorer, deliberately NOT a view of
-    * [[langSignals]]: the withNTri shape pays `first(n_tri)` plus one
-    * sentinel row per doc through the pivot aggregate, which the 20×
-    * scale leg measured at +36% on t24 (4.97 → 6.74 s) when r19 first
-    * routed the gates through it. Consumers that need conf_micro (the
-    * funnel frame) take [[langSignals]]; consumers that don't keep the
-    * cheap pass. */
-  private[graft] def langGates(s: SparkSession, dir: String): DataFrame =
-    langScored(s, dir, withNTri = false)
-
-  /** The shared body of [[langSignals]] and [[langGates]]: one profile
-    * scoring pass (its shape chosen by `withNTri`, which also adds
-    * conf_micro), then the common tail — pred_lang → stop/block hit
-    * folds → keep flags. */
-  private def langScored(s: SparkSession, dir: String, withNTri: Boolean): DataFrame = {
+    * Scale shape: ONE documents scan and one narrow projection. The
+    * [[graft.functions.langProfileScores]] kernel scores each row
+    * against the trained profile; pred_lang is [[bestLangStruct]]'s
+    * argmax over its fields, conf_micro = best score div
+    * greatest(n_tri, 1) (the average profile weight per trigram
+    * occurrence that e9's lang_gate and st13 threshold), and the
+    * stop/block hit folds read pred_lang and the text in the same row.
+    * Nothing shuffles and nothing joins back to the corpus; a consumer
+    * that reads only some columns gets the rest pruned by Catalyst.
+    * Every document is present, a zero-hit one scoring 0 in every
+    * language (so it predicts the first code, as every oracle does). */
+  private[graft] def langScored(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val profile = langProfileRows(s, dir)
-    val best = bestLangStruct(profileLangs(profile))
-    val docs = Tables.documents(s, dir)
-    val (scoreCols, confCols) =
-      if (withNTri) (Seq(best.getField("s").as("sc"), $"n_tri"),
-        Seq(expr("sc div greatest(n_tri, 1)").as("conf_micro")))
-      else (Nil, Nil)
-    docs.select($"doc_id", $"text")
-      .join(profileScores(docs, $"text", Seq($"doc_id"), profile, withNTri),
-        Seq("doc_id"), "left")
-      .select(Seq($"doc_id", best.getField("c").as("pred_lang")) ++ scoreCols :+
-        $"text": _*)
-      .select(Seq($"doc_id", $"pred_lang") ++ confCols ++ Seq(
+    val best = bestLangStruct(profileLangs(profile), $"sc")
+    Tables.documents(s, dir)
+      .select($"doc_id", $"text",
+        graft.functions.langProfileScores($"text", profile).as("sc"))
+      .select($"doc_id", $"text", best.getField("c").as("pred_lang"),
+        best.getField("s").as("score_micro"), $"sc.n_tri".as("n_tri"))
+      .select($"doc_id", $"pred_lang",
+        expr("score_micro div greatest(n_tri, 1)").as("conf_micro"),
         stopHitsExpr($"pred_lang", $"text").as("stop_hits"),
-        blockHitsExpr($"pred_lang", $"text").as("block_hits")): _*)
+        blockHitsExpr($"pred_lang", $"text").as("block_hits"))
       .withColumn("stop_keep", $"stop_hits" >= LangStopsMinHits)
       .withColumn("block_keep", $"block_hits" === 0)
   }
@@ -2799,17 +2726,17 @@ object TextOps {
     *
     * Output: (doc_id, pred_lang, block_hits, block_keep) with
     * block_keep = (hits == 0). Rides the e5 sheet (through the shared
-    * [[langGates]] relation — one scoring pass serves t24 AND t26),
+    * [[langScored]] relation — one scoring pass serves t24 AND t26),
     * e7's ablation, and e9's funnel as the stage after lang_stopwords;
     * its addition bumps [[PipelineOps.FunnelVersion]] to 3, giving
     * e11's registered changelog its first naturally NON-empty diff.
     *
-    * Scale shape: identical to t24 — t2b's scoring budget plus a
-    * narrow literal-fold projection; the banned lists ride the plan as
+    * Scale shape: identical to t24 — one scan, t2b's per-row kernel and
+    * a narrow literal-fold projection; the banned lists ride the plan as
     * literals, never a join. */
   def t26LangBlockwords(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    langGates(s, dir)
+    langScored(s, dir)
       .select($"doc_id", $"pred_lang", $"block_hits", $"block_keep")
   }
 
@@ -2852,7 +2779,7 @@ object TextOps {
 
   /** BOTH gates off one spelling of the shared chain — what the e5
     * sheet oracle splices (mirroring the Spark side's single
-    * [[langGates]] relation: one profile chain, both folds). */
+    * [[langScored]] relation: one profile chain, both folds). */
   private[operators] lazy val langGatesSql =
     s"WITH $t26CtesSql\n" +
       """SELECT o.doc_id, o.pred_lang, o.stop_hits, o.stop_keep,

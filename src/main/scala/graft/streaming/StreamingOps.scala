@@ -748,24 +748,23 @@ object StreamingOps {
     * Emits per doc: pred_lang, score_micro, n_tri, conf_micro,
     * lang_admit.
     *
-    * Scale shape: t2b's scoring geometry per micro-batch — the profile
-    * broadcasts, grams collapse map-side in ONE (doc_id) aggregate; the
-    * per-doc aggregation runs through foreachBatch (st8/st11/st12's
-    * device), zero state store, nothing accumulates across batches. */
+    * Scale shape: t2b's per-row kernel over each micro-batch — one
+    * narrow projection ([[graft.functions.langProfileScores]] carries
+    * both the per-language scores and n_tri), so a batch is gated in
+    * the stage that reads it: no exchange, no join, zero state store,
+    * nothing accumulates across batches (st8/st11/st12's foreachBatch
+    * device). One output row per incoming row. */
   def langGate(incoming: DataFrame,
       profile: Seq[(String, String, Long)]): DataFrame = {
     import graft.operators.TextOps
-    val langs = TextOps.profileLangs(profile)
-    val best = TextOps.bestLangStruct(langs)
-    // ONE scan, ONE (doc_id) aggregate producing both n_tri and the
-    // per-lang scores (ADVICE r14: the old two-subtree + re-join shape
-    // scanned each micro-batch twice and fanned out on duplicate ids)
-    TextOps.profileScores(incoming, col("text"), Seq(col("doc_id")),
-        profile, withNTri = true)
+    val best = TextOps.bestLangStruct(TextOps.profileLangs(profile), col("sc"))
+    incoming
+      .select(col("doc_id"),
+        graft.functions.langProfileScores(col("text"), profile).as("sc"))
       .select(col("doc_id"),
         best.getField("c").as("pred_lang"),
         best.getField("s").as("score_micro"),
-        col("n_tri"))
+        col("sc.n_tri").as("n_tri"))
       .withColumn("conf_micro", expr("score_micro div greatest(n_tri, 1)"))
       .withColumn("lang_admit", col("conf_micro") >= LangGateTauMicro)
   }

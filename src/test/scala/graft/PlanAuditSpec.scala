@@ -19,6 +19,30 @@ class PlanAuditSpec extends SparkSpec {
   private def scansOf(p: String, table: String): Int =
     s"$table\\.parquet".r.findAllIn(p).length
 
+  private object aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** The per-row language scorer's shape in `name`'s executed plan:
+    * exactly one lang_profile_scores kernel (never a copy made by
+    * projection collapsing or filter pushdown), no trigram array build
+    * (so no trigram Generate), and no profile relation to broadcast (it
+    * was the one local relation these plans carried). Returns the plan
+    * string. */
+  private def kernelScorerPlan(name: String): String = {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.graftext.LangProfileScores
+    val exec = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
+    val p = exec.toString
+    val kernels = aqe.flatMap(exec)(_.expressions.flatMap(_.collect {
+      case k: LangProfileScores => k
+    })).size
+    assert(kernels === 1, s"$name: $kernels lang_profile_scores, want 1:\n$p")
+    assert(!p.contains("flatten(transform(filter(split(lower("),
+      s"$name builds the trigram array again:\n$p")
+    assert(aqe.collect(exec) { case l: LocalTableScanExec => l }.isEmpty,
+      s"$name plans a profile relation:\n$p")
+    p
+  }
+
   test("e3: the capstone composition adds ZERO corpus scans over the sum of its stages") {
     // e3 joins four stage relations; the claim its scaladoc makes is that
     // composing them is id-width only — every documents/embeddings scan
@@ -471,17 +495,21 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
   }
 
-  test("t2b: profile broadcasts; doc trigrams never shuffle as strings") {
-    val p = plan("t2b_lang_id_trained")
-    // the only hash exchanges carry doc_id-keyed rows (the pivot partials
-    // and the final labeled join) — never the exploded gram stream
-    val keys = "Exchange hashpartitioning\\(([a-z_#0-9L, ]+), \\d+\\)".r
-      .findAllMatchIn(p).map(_.group(1).replaceAll("#\\d+L?", "")).toSeq
-    assert(keys.nonEmpty && keys.forall(_ == "doc_id"),
-      s"unexpected exchange keys $keys:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"the langs x 300 profile relation must broadcast:\n$p")
-    assert(!p.contains("CartesianProduct"), p)
+  test("t2b: per-row kernel — one scan, zero exchanges") {
+    // scoring is one narrow projection: the lang_profile_scores kernel
+    // carries the profile, so no trigram row, profile broadcast, pivot
+    // aggregate or join back to the documents is left to plan
+    val p = kernelScorerPlan("t2b_lang_id_trained")
+    assert(scansOf(p, "documents") === 1, p)
+    assert(!p.contains("Exchange"), s"t2b must not move data:\n$p")
+  }
+
+  test("t24: per-row kernel — one scan, zero exchanges") {
+    // langScored, the relation behind t24, t26, e5 and e9: the kernel,
+    // the argmax and the word-list folds ride one projection
+    val p = kernelScorerPlan("t24_lang_stopwords")
+    assert(scansOf(p, "documents") === 1, p)
+    assert(!p.contains("Exchange"), s"t24 must not move data:\n$p")
   }
 
   test("p6: DSIR scoring is a PURE narrow map — zero exchanges, one documents scan") {
@@ -601,19 +629,12 @@ class PlanAuditSpec extends SparkSpec {
     assert(!f.contains("CartesianProduct"), f)
   }
 
-  test("st13: the trigram array builds ONCE below the Generate — the scorer's n_tri rides an attribute, never a rebuild") {
-    // regression pin for the round-15 CollapseProject trap: spelling
-    // size(charTrigrams(text)) beside the generator collapsed the array
-    // build ABOVE the Generate — rebuilt per exploded gram, O(len²) per
-    // doc, a measured 20× on st13 and 25× on e9. The fixed shape
-    // materializes the array in its own projection (referenced twice,
-    // so CollapseProject must keep it); the plan therefore spells the
-    // trigram construction exactly once.
-    val p = plan("st13_stream_lang_gate")
-    val builds = "flatten\\(transform\\(filter\\(split\\(lower\\(".r
-      .findAllIn(p).length
-    assert(builds === 1,
-      s"the trigram array must be constructed exactly once, found $builds:\n$p")
+  test("st13: one lang_profile_scores, no trigram Generate") {
+    // the round-15 trap (a trigram array rebuilt per exploded gram) has
+    // no array left to rebuild: the plan must carry exactly one kernel
+    // (no collapsed or pushed-down copy) and no Generate at all
+    val p = kernelScorerPlan("st13_stream_lang_gate")
+    assert(!p.contains("Generate"), s"st13 must not explode anything:\n$p")
   }
 
   test("p8: one (stage, shard) window over id-width rows; text never reaches it") {
@@ -750,29 +771,22 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Window"), s"no window — the min is a broadcast scalar:\n$p")
   }
 
-  test("t22: profile broadcasts; segment grams never shuffle as strings; windows are per-doc vote rows") {
-    val p = plan("t22_segment_langmix")
-    // t2b's geometry at segment granularity: the only hash exchanges
-    // carry (doc_id[, seg_id|seg_lang])-keyed small rows — the exploded
-    // gram stream collapses map-side before anything moves
+  test("t22: kernel per segment; id-width exchanges only") {
+    val p = kernelScorerPlan("t22_segment_langmix")
+    // the segments are scored where they are exploded: the only hash
+    // exchanges carry (doc_id[, seg_lang])-keyed small rows
     val keys = "Exchange hashpartitioning\\(([a-z_#0-9L, ]+), \\d+\\)".r
       .findAllMatchIn(p).map(_.group(1).replaceAll("#\\d+L?", "")).toSeq
     assert(keys.nonEmpty && keys.forall(k =>
       k == "doc_id" || k == "doc_id, seg_id" || k == "doc_id, seg_lang"),
       s"unexpected exchange keys $keys:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"the langs x 300 profile relation must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), p)
   }
 
-  test("st13: t2b's scoring geometry at the front door — profile broadcasts, doc_id-keyed exchanges only") {
-    val p = plan("st13_stream_lang_gate")
-    val keys = "Exchange hashpartitioning\\(([a-z_#0-9L, ]+), \\d+\\)".r
-      .findAllMatchIn(p).map(_.group(1).replaceAll("#\\d+L?", "")).toSeq
-    assert(keys.nonEmpty && keys.forall(_ == "doc_id"),
-      s"unexpected exchange keys $keys:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"the langs x 300 profile relation must broadcast:\n$p")
+  test("st13: per-row kernel — one scan, zero exchanges") {
+    val p = kernelScorerPlan("st13_stream_lang_gate")
+    assert(scansOf(p, "documents") === 1, p)
+    assert(!p.contains("Exchange"), s"the front-door gate must not move data:\n$p")
     assert(!p.contains("CartesianProduct"), p)
   }
 

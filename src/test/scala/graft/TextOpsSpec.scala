@@ -1251,35 +1251,71 @@ class TextOpsSpec extends SparkSpec {
     assert(fails < got.length / 2, "and must not absorb the corpus")
   }
 
-  test("langSignals: the fused single-pass scorer equals the two passes it replaced (pred_lang = t2b's, conf_micro = e9's old spelling)") {
-    // round 19 fused e9's conf_micro scoring pass into the t24/t26 gate
-    // pass (one withNTri aggregate serves all three consumers); this
-    // pins the fusion against independently-spelled replays of BOTH
-    // retired derivations, per doc over the full fixture.
+  test("lang kernel: t2b/t24/t22/st13/e9 equal the reference scorer") {
+    // every consumer of the per-row kernel against the same rollup over
+    // LangScoreReference (explode + profile join + pivot aggregate), per
+    // doc (per segment for t22) over the full fixture
+    import graft.sources.Tables
     val profile = TextOps.langProfileRows(spark, sf)
     val langs = TextOps.profileLangs(profile)
-    val best = TextOps.bestLangStruct(langs)
-    val docs = graft.sources.Tables.documents(spark, sf)
-    val got = TextOps.langSignals(spark, sf)
-      .select($"doc_id", $"pred_lang", $"conf_micro")
-      .as[(Long, String, Long)].collect().sortBy(_._1)
-    // e9's retired standalone conf pass: its exact spelling
-    val conf = TextOps.profileScores(docs, $"text", Seq($"doc_id"),
-        profile, withNTri = true)
-      .select($"doc_id", best.getField("s").as("sc"), $"n_tri")
-      .select($"doc_id", expr("sc div greatest(n_tri, 1)").as("conf_micro"))
-      .as[(Long, Long)].collect().toMap
-    // t24's retired gate-side pred pass: inner-join scorer + left join
-    val pred = docs.select($"doc_id")
-      .join(TextOps.profileScores(docs, $"text", Seq($"doc_id"), profile),
-        Seq("doc_id"), "left")
-      .select($"doc_id", best.getField("c").as("pred_lang"))
-      .as[(Long, String)].collect().toMap
-    assert(got.nonEmpty)
-    got.foreach { case (id, pl, cm) =>
-      assert(pl === pred(id), s"pred_lang drift at doc $id")
-      assert(cm === conf(id), s"conf_micro drift at doc $id")
-    }
+    val best = TextOps.bestLangStruct(langs, $"sc")
+    val docs = Tables.documents(spark, sf)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val ref = graft.sources.Materialize(
+      LangScoreReference.scores(docs, $"text", Seq($"doc_id"), profile)
+        .join(docs.select($"doc_id", $"lang", $"text"), "doc_id")
+        .select($"doc_id", $"lang", $"text",
+          best.getField("c").as("pred_lang"),
+          best.getField("s").as("score_micro"), $"sc.n_tri".as("n_tri"))
+        .withColumn("conf_micro", expr("score_micro div greatest(n_tri, 1)"))
+        .withColumn("stop_hits", TextOps.stopHitsExpr($"pred_lang", $"text"))
+        .withColumn("block_hits", TextOps.blockHitsExpr($"pred_lang", $"text"))
+        .withColumn("stop_keep", $"stop_hits" >= TextOps.LangStopsMinHits)
+        .withColumn("block_keep", $"block_hits" === 0))
+    assert(ref.count() === docs.count())
+    // t2b
+    assert(rows(TextOps.t2bLangIdTrained(spark, sf)) ===
+      rows(ref.select($"doc_id", $"lang", $"pred_lang", $"score_micro")))
+    // the shared relation behind t24, t26, e5 and e9, and t24 itself
+    assert(rows(TextOps.langScored(spark, sf)) ===
+      rows(ref.select($"doc_id", $"pred_lang", $"conf_micro", $"stop_hits",
+        $"block_hits", $"stop_keep", $"block_keep")))
+    assert(rows(TextOps.t24LangStopwords(spark, sf)) ===
+      rows(ref.select($"doc_id", $"pred_lang", $"stop_hits", $"stop_keep")))
+    // e9's signal frame reads conf_micro and both keeps from it
+    assert(rows(graft.operators.PipelineOps.e9SignalFrame(spark, sf)
+        .select($"doc_id", $"conf_micro", $"stop_keep", $"block_keep")) ===
+      rows(ref.select($"doc_id", $"conf_micro", $"stop_keep", $"block_keep")))
+    // st13 over the ingest slice
+    val slice = $"doc_id" % graft.operators.DedupOps.IngestMod ===
+      graft.operators.DedupOps.IngestRem
+    assert(rows(graft.streaming.StreamingOps.st13StreamLangGate(spark, sf)) ===
+      rows(ref.where(slice).select($"doc_id", $"pred_lang", $"score_micro",
+        $"n_tri", $"conf_micro",
+        ($"conf_micro" >= TextOps.LangGateTauMicro).as("lang_admit"))))
+    // t22: a segment votes when the reference finds >= 1 profile hit in it
+    val votes = LangScoreReference.scores(
+        docs.select($"doc_id", posexplode(graft.operators.DedupOps.segmentsOf($"text"))
+          .as(Seq("seg_id", "seg"))),
+        $"seg", Seq($"doc_id", $"seg_id"), profile)
+      .where($"sc.n_hits" > 0)
+      .select($"doc_id", best.getField("c").as("seg_lang"))
+      .as[(Long, String)].collect().groupBy(_._1)
+    val want = docs.select($"doc_id").as[Long].collect().map { id =>
+      votes.get(id) match {
+        case None => (id, 0L, "??", 0L, 1000000L, false)
+        case Some(vs) =>
+          val (lang, n) = vs.groupBy(_._2).map { case (l, v) => (l, v.length.toLong) }
+            .toSeq.minBy { case (l, c) => (-c, l) }
+          val mix = n * 1000000L / vs.length
+          (id, vs.length.toLong, lang, n, mix, mix < TextOps.SegMixTau)
+      }
+    }.sortBy(_._1).toSeq
+    val got = TextOps.t22SegmentLangmix(spark, sf)
+      .as[(Long, Long, String, Long, Long, Boolean)].collect().sortBy(_._1).toSeq
+    assert(got === want)
+    assert(want.exists(_._2 > 1L), "the fixture exercises multi-segment docs")
   }
 
   test("t26: any OWN-list banned entry kills — adjacency-exact phrases, word boundaries, wrong-list and unknown-lang pass") {
