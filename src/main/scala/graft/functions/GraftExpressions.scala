@@ -1221,7 +1221,145 @@ case class LangProfileScores(child: Expression, profile: PackedLangProfile)
     copy(child = newChild)
 }
 
+/** The word-trigram hash set of a text, computed by [[ShingleHashes]].
+  * Bit for bit it is the compositional chain the dedup tier used before
+  * (the test tree keeps it as `ShingleHashReference`):
+  *
+  *  - tokens are the `' '`-split pieces of the text, empty pieces kept
+  *    (Spark's `split(text, " ")`), each hashed with `xxhash64` (seed 42);
+  *  - a trigram's hash is `xxhash64(xxhash64(a, b), c)` over three
+  *    consecutive token hashes;
+  *  - duplicates are dropped keeping first-occurrence order
+  *    (`array_distinct`);
+  *  - a text of fewer than three tokens gives `[xxhash64(text)]`, so a
+  *    null text gives `[42]`, the seed.
+  *
+  * Tokens are cut at the `' '` bytes of the UTF-8 buffer and hashed in
+  * place. On valid UTF-8 that is the cut `split` makes; an invalid
+  * buffer is split the way `split` does it, through its decoded string,
+  * so even then the tokens hash to the same values. */
+object ShingleHasher {
+  import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
+  import org.apache.spark.unsafe.Platform
+  import org.apache.spark.unsafe.types.UTF8String
+
+  /** `xxhash64`'s seed. */
+  private val Seed = 42L
+
+  def hashes(s: UTF8String): ArrayData = {
+    if (s == null) return UnsafeArrayData.fromPrimitiveArray(Array(Seed))
+    val th = tokenHashes(s)
+    val m = th.length - 2
+    if (m < 1) return UnsafeArrayData.fromPrimitiveArray(Array(hash(s)))
+    // open-addressing set over the trigram hashes, at most half full
+    var cap = 4
+    while (cap < 2 * m) cap <<= 1
+    val mask = cap - 1
+    val keys = new Array[Long](cap)
+    val used = new Array[Boolean](cap)
+    val out = new Array[Long](m)
+    var k = 0
+    var j = 0
+    while (j < m) {
+      val h = XXH64.hashLong(th(j + 2),
+        XXH64.hashLong(XXH64.hashLong(th(j + 1), XXH64.hashLong(th(j), Seed)), Seed))
+      var slot = (h ^ (h >>> 32)).toInt & mask
+      while (used(slot) && keys(slot) != h) slot = (slot + 1) & mask
+      if (!used(slot)) {
+        used(slot) = true
+        keys(slot) = h
+        out(k) = h
+        k += 1
+      }
+      j += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out, Platform.LONG_ARRAY_OFFSET, k, 8)
+  }
+
+  /** `xxhash64(s)`. */
+  private def hash(s: UTF8String): Long =
+    XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, Seed)
+
+  /** `xxhash64` of every `' '`-split token of `s`, in order. */
+  private def tokenHashes(s: UTF8String): Array[Long] = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    var spaces = 0
+    var bits = 0
+    var i = 0
+    while (i < n) {
+      val b = Platform.getByte(base, off + i)
+      if (b == ' ') spaces += 1
+      bits |= b
+      i += 1
+    }
+    // a byte with its high bit set may start an invalid sequence
+    if (bits < 0 && !s.isValid)
+      return s.toString.split(" ", -1)
+        .map(t => hash(UTF8String.fromString(t)))
+    val th = new Array[Long](spaces + 1)
+    var t = 0
+    var start = 0
+    i = 0
+    while (i < n) {
+      if (Platform.getByte(base, off + i) == ' ') {
+        th(t) = XXH64.hashUnsafeBytes(base, off + start, i - start, Seed)
+        t += 1
+        start = i + 1
+      }
+      i += 1
+    }
+    th(t) = XXH64.hashUnsafeBytes(base, off + start, n - start, Seed)
+    th
+  }
+}
+
+/** Distinct word-trigram hashes of a text column as one codegen'd
+  * per-row kernel: `array<bigint>`, never null and never empty (see
+  * [[ShingleHasher]] for the contract). d2, d4, d6, d7, d8 and d15 build
+  * their trigram sets with it.
+  *
+  * Why an `Expression` and not the `transform`/`zip_with`/`array_distinct`
+  * chain it replaces: `ArrayTransform` and `ZipWith` are
+  * `CodegenFallback`, so the chain ran interpreted per element inside
+  * every codegen'd stage, and it built three sliced arrays per row. The
+  * kernel hashes tokens in place in the UTF-8 buffer and emits one
+  * primitive array. Both eval paths call [[ShingleHasher.hashes]] (the
+  * [[NormalizeText]] pattern); a null text is an input, not a null
+  * result, so the kernel overrides `eval` rather than `nullSafeEval`. */
+case class ShingleHashes(child: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "shingle_hashes"
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    ShingleHasher.hashes(
+      child.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
+      |  org.apache.spark.sql.graftext.ShingleHasher.hashes(${c.isNull} ? null : ${c.value});
+      """.stripMargin,
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
+    copy(child = newChild)
+}
+
 object GraftColumns {
+  def shingleHashes(text: Column): Column =
+    ExpressionUtils.column(ShingleHashes(ExpressionUtils.expression(text)))
+
   def normalizeText(text: Column): Column =
     ExpressionUtils.column(NormalizeText(ExpressionUtils.expression(text)))
 

@@ -63,6 +63,14 @@ package object functions {
   def langProfileScores(text: Column, profile: Seq[(String, String, Long)]): Column =
     org.apache.spark.sql.graftext.GraftColumns.langProfileScores(text, profile)
 
+  /** Distinct word-trigram hashes of a string column in first-occurrence
+    * order (`array<bigint>`, never null or empty; a text of fewer than
+    * three `' '`-split tokens gives its own hash) — the dedup tier's
+    * trigram sets as one codegen'd narrow kernel (see
+    * [[org.apache.spark.sql.graftext.ShingleHashes]]). */
+  def shingleHashes(text: Column): Column =
+    org.apache.spark.sql.graftext.GraftColumns.shingleHashes(text)
+
   /** Unicode text normalization (NFC → combining-mark strip → whitespace
     * collapse/trim — CCNet's pre-dedup canonicalization) as one codegen'd
     * narrow expression (see

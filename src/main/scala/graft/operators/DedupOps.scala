@@ -31,16 +31,20 @@ import scala.util.hashing.MurmurHash3
   */
 object DedupOps {
 
-  /** Word n-gram shingle set as a native (codegen'd) column — no UDF.
-    * Documents shorter than n tokens contribute their whole text as the
-    * single shingle so every doc has a non-empty set.
+  /** Word n-gram shingle STRING set as a native column — no UDF, but
+    * not codegen'd either: `zip_with` is `CodegenFallback`, so the chain
+    * runs interpreted inside its stage. Documents shorter than n tokens
+    * contribute their whole text as the single shingle so every doc has
+    * a non-empty set. The dedup tier hashes its trigram sets with the
+    * codegen'd [[graft.functions.shingleHashes]] instead (see
+    * [[withShingleHashes]]); these strings serve the queries that need
+    * the grams themselves.
     *
     * Built as a zip_with fold over n shifted slices of the token array,
     * NOT `transform(sequence(...), i -> concat_ws(slice(w, i, n)))`: in
     * the lambda form the token-array subtree is re-evaluated per element
-    * (the CollapseProject trap that made trigram hashing quadratic, see
-    * [[withShingleHashes]]) — measured 3.3× slower at sf0.1 with
-    * byte-identical output. */
+    * (the CollapseProject trap that made trigram hashing quadratic) —
+    * measured 3.3× slower at sf0.1 with byte-identical output. */
   def shingles(text: Column, n: Int = 3): Column = {
     val w = split(text, " ")
     val m = size(w) - lit(n - 1)
@@ -52,8 +56,8 @@ object DedupOps {
 
   /** [[shingles]] WITHOUT the distinct — grams in position order, so
     * `posexplode` recovers each gram's 0-based token start. Same
-    * zip_with ladder (no per-element token-array re-eval), same
-    * whole-text fallback below n words (one pseudo-gram at pos 0).
+    * interpreted zip_with ladder (no per-element token-array re-eval),
+    * same whole-text fallback below n words (one pseudo-gram at pos 0).
     * Shared by t19's surgical decontamination, which needs WHERE a
     * gram hit, not just whether. */
   private[graft] def posGrams(text: Column, n: Int): Column = {
@@ -256,7 +260,7 @@ object DedupOps {
     * d7. Building it RUNS the candidate stage (see [[verifiedSetMetrics]]). */
   private def minhashPairs(docs: DataFrame, threshold: Double): DataFrame = {
     val keyed = withShingleHashes(docs).select(col("doc_id"),
-      posexplode(graft.functions.minhashBandKeys(
+      posexplode_outer(graft.functions.minhashBandKeys(
         col("hs"), MinHash.NumHashes, MinHash.Rows)).as(Seq("band", "key")))
     verifiedSetMetrics(docs, bucketPairs(keyed))
       .where(col("jaccard") >= threshold)
@@ -471,26 +475,19 @@ object DedupOps {
        |WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= $threshold""".stripMargin
   }
 
-  /** Distinct 64-bit trigram hashes of `text`, never materializing shingle
-    * strings: tokens are xxhash64'd once, trigram hash = xxhash64 of three
-    * consecutive token hashes. Equivalent to hashing the distinct trigram
-    * STRINGS (modulo a ~1e-13 64-bit collision), ~5× cheaper than building
-    * ~n concatenated strings per document — and set sizes, intersections
-    * and Jaccard values over the hash sets equal those over the string
-    * sets, so results stay oracle-exact. Built with zip_with over three
-    * shifted slices — NOT element_at inside a transform lambda, which
-    * Catalyst's project-collapsing can turn into an O(tokens) re-eval of
-    * the token-hash array per trigram (quadratic per document). */
-  private[graft] def withShingleHashes(docs: DataFrame, n: Int = 3): DataFrame = {
-    val th = transform(split(col("text"), " "), t => xxhash64(t))
-    val m = size(th) - lit(n - 1) // trigram count
-    val tri = zip_with(
-      zip_with(slice(th, lit(1), m), slice(th, lit(2), m), (a, b) => xxhash64(a, b)),
-      slice(th, lit(3), m), (p, c) => xxhash64(p, c))
-    docs.select(col("doc_id"),
-      when(size(th) >= n, array_distinct(tri))
-        .otherwise(array(xxhash64(col("text")))).as("hs"))
-  }
+  /** `(doc_id, hs)`: each document's distinct word-trigram hash set,
+    * from the one codegen'd kernel [[graft.functions.shingleHashes]].
+    * Shingle strings never materialize: tokens are xxhash64'd once and a
+    * trigram's hash is xxhash64 of three consecutive token hashes, so set
+    * sizes, intersections and Jaccard values over the hash sets equal
+    * those over the string sets (modulo a ~1e-13 64-bit collision) and
+    * results stay oracle-exact. `hs` is never null or empty, and
+    * neither are its MinHash band keys, so consumers explode both with
+    * the `_outer` generators, which give the same rows here: a plain
+    * `explode` makes Catalyst infer a `size(...) > 0` filter and push it
+    * into the scan, which runs the kernels a second time per row. */
+  private[graft] def withShingleHashes(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), graft.functions.shingleHashes(col("text")).as("hs"))
 
   /** d4: exact n-gram Jaccard near-dup — the non-approximate kernel, fully
     * native and fully numeric (no UDF, no shingle strings: tokens and
@@ -566,7 +563,7 @@ object DedupOps {
   private[graft] def dfSkewStatsOf(shingled: DataFrame): (Long, Long) = {
     import shingled.sparkSession.implicits._
     val row = shingled
-      .select(explode($"hs").as("h"))
+      .select(explode_outer($"hs").as("h"))
       .groupBy($"h").agg(count(lit(1)).as("df"))
       .agg(sum($"df").as("s1"),
         sum($"df".cast("decimal(38,0)") * $"df").as("s2"))
@@ -607,15 +604,28 @@ object DedupOps {
   /** The exact inverted-index join d4's and d15's naive arms share:
     * (doc_a < doc_b, n_a, n_b, c) for every pair sharing ≥ 1 trigram
     * hash, c = |A∩B| and n = |A|, |B|. Each exploded (doc_id, h) row
-    * carries its doc's set size (`hs` is array_distinct and never empty,
-    * so size(hs) is the distinct count a per-doc aggregate would give),
+    * carries its doc's set size (`hs` is distinct and never empty, so
+    * size(hs) is the distinct count a per-doc aggregate would give),
     * so the sizes ride the pair count's grouping key: no size aggregate,
     * no size joins (V-SMART-Join's cardinality-carrying similarity
-    * phase). */
+    * phase).
+    *
+    * The exploded rows are repartitioned on `h` to
+    * `spark.sql.shuffle.partitions` explicitly, and both join sides
+    * reuse that one exchange. The join's fan-out (Σdf² pair rows, fed
+    * straight into the partial pair-count aggregate) is the stage's
+    * work, not the exchange's bytes, so AQE's byte-based coalescing
+    * squeezed it onto fewer tasks than cores (2 of 4 on a 1.7 MB
+    * exchange). A `REPARTITION_BY_NUM` exchange is never coalesced. The
+    * price: AQE cannot split a skewed partition of this join either.
+    * Skew is the prefix arms' job: [[usePrefixPlan]] sends a corpus
+    * there once R = Σdf²/Σdf passes [[PrefixSwitchRatio]]. */
   private def sharedTrigramCounts(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
+    val s = docs.sparkSession
+    import s.implicits._
     val sh = withShingleHashes(docs)
-      .select($"doc_id", size($"hs").cast("long").as("n"), explode($"hs").as("h"))
+      .select($"doc_id", size($"hs").cast("long").as("n"), explode_outer($"hs").as("h"))
+      .repartition(s.sessionState.conf.numShufflePartitions, $"h")
     // SHUFFLE_HASH: equi-join on a high-cardinality hash key gains nothing
     // from sort order, and the sort of both shuffled sides is the join's
     // dominant cost; per-partition hash tables are small by construction.
@@ -658,7 +668,7 @@ object DedupOps {
     import docs.sparkSession.implicits._
     // Set size n rides along from the array stage — no second window.
     val sh = withShingleHashes(docs)
-      .select($"doc_id", size($"hs").as("n"), explode($"hs").as("h"))
+      .select($"doc_id", size($"hs").as("n"), explode_outer($"hs").as("h"))
     val dfRel = sh.groupBy($"h").agg(count(lit(1)).as("df"))
     val prefix = sh
       .join(dfRel.hint("SHUFFLE_HASH"), Seq("h"))
@@ -747,7 +757,7 @@ object DedupOps {
   private[graft] def containPrefixCandidates(docs: DataFrame, tau: Double): DataFrame = {
     import docs.sparkSession.implicits._
     val sh = withShingleHashes(docs)
-      .select($"doc_id", size($"hs").as("n"), explode($"hs").as("h"))
+      .select($"doc_id", size($"hs").as("n"), explode_outer($"hs").as("h"))
     val dfRel = sh.groupBy($"h").agg(count(lit(1)).as("df"))
     val prefix = sh
       .join(dfRel.hint("SHUFFLE_HASH"), Seq("h"))
@@ -872,10 +882,13 @@ object DedupOps {
     pairs
       .join(candEmb.select($"vec_id".as("vec_a"), $"embedding".as("emb_a")), Seq("vec_a"))
       .join(candEmb.select($"vec_id".as("vec_b"), $"embedding".as("emb_b")), Seq("vec_b"))
-      .withColumn("cos_sim",
-        round(graft.functions.cosineSim($"emb_a", $"emb_b"), 6))
+      // Scored in a one-element Generate, which the threshold filter
+      // cannot be pushed below: over a projected cos_sim, Catalyst moved
+      // the filter into the join condition and every candidate pair ran
+      // the kernel twice (join condition, then projection).
+      .select($"vec_a", $"vec_b", explode_outer(array(
+        round(graft.functions.cosineSim($"emb_a", $"emb_b"), 6))).as("cos_sim"))
       .where($"cos_sim" >= 0.9)
-      .select("vec_a", "vec_b", "cos_sim")
   }
 
   private val d5Sql =
@@ -1229,7 +1242,7 @@ object DedupOps {
     * persisted index stores and an incoming batch computes fresh. */
   private[graft] def bandKeysOf(docs: DataFrame): DataFrame =
     withShingleHashes(docs).select(col("doc_id"),
-      posexplode(graft.functions.minhashBandKeys(
+      posexplode_outer(graft.functions.minhashBandKeys(
         col("hs"), MinHash.NumHashes, MinHash.Rows)).as(Seq("band", "key")))
 
   /** Path of the PERSISTED dedup index: the standing corpus's (doc_id,
@@ -1302,7 +1315,7 @@ object DedupOps {
   private[graft] def nearDupHits(batch: DataFrame, indexKeys: DataFrame,
       corpusShingles: DataFrame, threshold: Double): DataFrame = {
     val keyed = withShingleHashes(batch).select(col("doc_id"), col("hs"),
-      posexplode(graft.functions.minhashBandKeys(
+      posexplode_outer(graft.functions.minhashBandKeys(
         col("hs"), MinHash.NumHashes, MinHash.Rows)).as(Seq("band", "key")))
     val inter = size(array_intersect(col("hs"), col("hs_b")))
     keyed

@@ -1373,8 +1373,8 @@ object TextOps {
     * suite). This is the standard n-gram-overlap contamination check run
     * before LLM training.
     *
-    * Scale shape: grams ride [[DedupOps.shingles]] (the codegen'd
-    * zip_with fold shared with d2/d4 — no lambda re-eval, no UDF) and are
+    * Scale shape: grams ride [[DedupOps.shingles]] (the native zip_with
+    * fold — no lambda re-eval, no UDF, though interpreted) and are
     * hashed to 8 bytes BEFORE any exchange, so the corpus-side shuffle —
     * when one happens at all — moves (doc_id, hash) pairs, never text. A
     * real eval set is tiny and fixed (a benchmark suite, not a corpus
@@ -1714,7 +1714,7 @@ object TextOps {
     * BIGINT end-to-end and the flag is integer arithmetic (5·n_common ≥
     * n_grams, i.e. ratio ≥ 0.2), so the FULL output hash-compares.
     *
-    * Scale shape: grams ride [[DedupOps.shingles]] (the shared codegen'd
+    * Scale shape: grams ride [[DedupOps.shingles]] (the shared zip_with
     * fold, distinct per doc) and are xxhash64'd to 8 bytes before any
     * exchange — the df aggregation and the join back both move (gh, df)
     * longs, map-side combined, never gram strings (t8's h60 discipline;
@@ -1949,7 +1949,7 @@ object TextOps {
     * source-column-only scan of documents (a dictionary-column pass — no
     * text read, no tokenization) broadcast as one row. Text is pruned at
     * the main scan to (source, text); the bigram fold is the shingle
-    * zip_with (codegen'd, no per-element subtree re-eval), kept
+    * zip_with (native, no per-element subtree re-eval), kept
     * multiplicity-preserving (no array_distinct — tf is an occurrence
     * count). */
   def t14TfidfTerms(s: SparkSession, dir: String): DataFrame = {

@@ -43,6 +43,73 @@ class PlanAuditSpec extends SparkSpec {
     p
   }
 
+  /** The naive inverted-index join's shape ([[graft.operators.DedupOps]]'s
+    * `sharedTrigramCounts`) in `df`'s FINAL adaptive plan (`df` is run):
+    * one documents scan, one shingle_hashes kernel and no second copy of
+    * it in an inferred `size(...) > 0` filter, no array lambdas, and one
+    * `REPARTITION_BY_NUM` exchange on the trigram hash that both join
+    * sides read (the second through exchange reuse), uncoalesced. */
+  private def trigramJoinPlan(name: String, df: DataFrame): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, ZipWith}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.InputAdapter
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    import org.apache.spark.sql.graftext.ShingleHashes
+    df.collect()
+    val exec = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec =>
+        assert(a.toString.contains("isFinalPlan=true"), s"$name did not run:\n$a")
+        a.executedPlan
+      case other => fail(s"$name: not an adaptive plan:\n$other")
+    }
+    val p = exec.toString
+    assert(scansOf(p, "documents") === 1, s"$name scans documents more than once:\n$p")
+    val exprs = aqe.flatMap(exec)(_.expressions.flatMap(_.collect { case e => e }))
+    assert(exprs.count(_.isInstanceOf[ShingleHashes]) === 1,
+      s"$name evaluates shingle_hashes more than once per scan:\n$p")
+    assert(!p.contains("size(shingle_hashes"), s"$name filters on the kernel:\n$p")
+    assert(!exprs.exists(e => e.isInstanceOf[ArrayTransform] || e.isInstanceOf[ZipWith]),
+      s"$name still runs an interpreted array lambda:\n$p")
+    val joins = aqe.collect(exec) { case j: ShuffledHashJoinExec => j }
+    assert(joins.size === 1, s"$name: one inverted-index join:\n$p")
+    val sides = joins.head.children.map {
+      case InputAdapter(c) => c
+      case c => c
+    }.map {
+      case st: ShuffleQueryStageExec => st.plan
+      case other => fail(s"$name: a join side reads ${other.nodeName}, not a bare " +
+        s"shuffle stage (coalesced or split):\n$p")
+    }
+    val exchanges = sides.map {
+      case e: ShuffleExchangeExec => e
+      case r: ReusedExchangeExec => r.child.asInstanceOf[ShuffleExchangeExec]
+      case other => fail(s"$name: ${other.nodeName} under a join side:\n$p")
+    }
+    assert(sides.count(_.isInstanceOf[ReusedExchangeExec]) === 1,
+      s"$name: the two join sides must share one exchange:\n$p")
+    assert(exchanges.forall(_.shuffleOrigin == REPARTITION_BY_NUM), s"$name:\n$p")
+    assert(exchanges.forall(_.numPartitions ==
+      spark.sessionState.conf.numShufflePartitions), s"$name:\n$p")
+  }
+
+  test("d15 and d4's naive arm: one scan, one kernel, one uncoalesced trigram exchange read by both join sides") {
+    assert(!graft.operators.DedupOps.usePrefixPlan(spark, sf),
+      "the fixture must dispatch d15 to the naive arm")
+    trigramJoinPlan("d15_containment", SparkEntry.queries("d15_containment")(spark, sf))
+    trigramJoinPlan("d4 naive arm", graft.operators.DedupOps.d4InvertedJaccard(spark, sf))
+  }
+
+  test("d5: cosine_similarity runs once per candidate pair") {
+    import org.apache.spark.sql.graftext.CosineSimilarity
+    val exec = SparkEntry.queries("d5_embedding_neardup")(spark, sf)
+      .queryExecution.executedPlan
+    val kernels = aqe.flatMap(exec)(_.expressions.flatMap(_.collect {
+      case k: CosineSimilarity => k
+    })).size
+    assert(kernels === 1, s"d5: $kernels cosine_similarity, want 1:\n$exec")
+  }
+
   test("e3: the capstone composition adds ZERO corpus scans over the sum of its stages") {
     // e3 joins four stage relations; the claim its scaladoc makes is that
     // composing them is id-width only — every documents/embeddings scan

@@ -6,8 +6,9 @@ import graft.sources.Tables
   * single-row-group parquet table yields a one-task scan at any core
   * count, so when the estimated split count cannot fill the machine the
   * documents loader hash-repartitions on doc_id to defaultParallelism.
-  * These tests pin (1) the guard fires exactly when estimated splits <
-  * cores and the table clears the min-bytes bar, (2) column pruning
+  * These tests pin (1) the guard fires exactly when the estimated scan
+  * partitions, max(data files, byte splits), are fewer than the cores
+  * and the table clears the min-bytes bar, (2) column pruning
   * still reaches the scan below the added repartition, and (3) results
   * are partition-layout-independent. */
 class TablesFillCoresSpec extends SparkSpec {
@@ -102,5 +103,53 @@ class TablesFillCoresSpec extends SparkSpec {
     assert(!floored, "a table below minBytes must not be floored")
     write(2000) // ~600 KB of random text: above the bar
     assert(floored, "the rewritten, larger table must be sized afresh and floored")
+  }
+  /** Writes `files` parquet part files of random text under a fresh
+    * temp dir's `documents.parquet`; returns the dir. */
+  private def corpus(tag: String, files: Int): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory(tag).toString
+    val rnd = new scala.util.Random(files)
+    (0 until 400).map(i => (i.toLong, rnd.alphanumeric.take(400).mkString))
+      .toDF("doc_id", "text")
+      .repartition(files).write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  private def floored(dir: String): Boolean =
+    withConfs("spark.graft.scan.fillCores.minBytes" -> "65536") {
+      Tables.documents(spark, dir).queryExecution.optimizedPlan.toString
+        .contains("RepartitionByExpression")
+    }
+
+  test("a table with at least as many data files as cores scans unfloored; a one-file table of the same bytes is floored") {
+    val cores = spark.sparkContext.defaultParallelism
+    val many = corpus("graft_floor_many", cores)
+    val one = corpus("graft_floor_one", 1)
+    def dataFiles(d: String) = Tables.fingerprint(spark, Tables.path(d, "documents")).dataFiles
+    try {
+      assert(dataFiles(many) === cores && dataFiles(one) === 1)
+      assert(!floored(many), s"$cores files already fill $cores cores: no floor")
+      assert(floored(one), "one file of the same ~160 KB stays floored")
+    } finally Seq(many, one).foreach(d =>
+      graft.sources.Layouts.deleteRecursively(java.nio.file.Paths.get(d)))
+  }
+
+  test("_SUCCESS, .crc and hidden files are not data files") {
+    val dir = corpus("graft_floor_hidden", 1)
+    val root = java.nio.file.Paths.get(Tables.path(dir, "documents"))
+    for (name <- Seq(".hidden", "_committed_1", "_started_1", ".extra.crc", "_tmp/part-9.parquet",
+        ".staging/part-8.parquet")) {
+      val f = root.resolve(name)
+      java.nio.file.Files.createDirectories(f.getParent)
+      java.nio.file.Files.write(f, Array.fill[Byte](10)(1))
+    }
+    val fp = Tables.fingerprint(spark, root.toString)
+    try {
+      assert(fp.dataFiles === 1, s"only the part file counts: $fp")
+      assert(fp.files >= spark.sparkContext.defaultParallelism,
+        s"the listing holds enough files to matter: $fp")
+      assert(floored(dir), "skipped files must not switch the floor off")
+    } finally graft.sources.Layouts.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 }
