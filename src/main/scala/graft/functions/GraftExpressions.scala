@@ -1221,6 +1221,60 @@ case class LangProfileScores(child: Expression, profile: PackedLangProfile)
     copy(child = newChild)
 }
 
+/** The `' '`-split tokens of a text, cut in place in its UTF-8 buffer —
+  * the tokens Spark's `split(text, " ")` makes, empty pieces kept. On
+  * valid UTF-8 the `' '` bytes are that cut; a buffer that is not valid
+  * UTF-8 is re-encoded from its decoded string first, which is the
+  * string `split` cuts. [[ShingleHasher]] and [[SpanHasher]] hash over
+  * these tokens. */
+object SpaceTokens {
+  import org.apache.spark.unsafe.Platform
+  import org.apache.spark.unsafe.types.UTF8String
+
+  /** `s`, or its decoded string re-encoded when `s` is not valid UTF-8
+    * (checked only when a byte has its high bit set). */
+  def valid(s: UTF8String): UTF8String = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    var bits = 0
+    var i = 0
+    while (i < s.numBytes) {
+      bits |= Platform.getByte(base, off + i)
+      i += 1
+    }
+    if (bits < 0 && !s.isValid) UTF8String.fromString(s.toString) else s
+  }
+
+  /** The exclusive byte end of every `' '`-split token of `s`; token `k`
+    * starts one byte past token `k - 1`'s end. */
+  def ends(s: UTF8String): Array[Int] = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    var spaces = 0
+    var i = 0
+    while (i < n) {
+      if (Platform.getByte(base, off + i) == ' ') spaces += 1
+      i += 1
+    }
+    val ends = new Array[Int](spaces + 1)
+    var t = 0
+    i = 0
+    while (i < n) {
+      if (Platform.getByte(base, off + i) == ' ') {
+        ends(t) = i
+        t += 1
+      }
+      i += 1
+    }
+    ends(t) = n
+    ends
+  }
+
+  /** The first byte of token `k`, given its [[ends]]. */
+  @inline def start(ends: Array[Int], k: Int): Int = if (k == 0) 0 else ends(k - 1) + 1
+}
+
 /** The word-trigram hash set of a text, computed by [[ShingleHashes]].
   * Bit for bit it is the compositional chain the dedup tier used before
   * (the test tree keeps it as `ShingleHashReference`):
@@ -1234,10 +1288,7 @@ case class LangProfileScores(child: Expression, profile: PackedLangProfile)
   *  - a text of fewer than three tokens gives `[xxhash64(text)]`, so a
   *    null text gives `[42]`, the seed.
   *
-  * Tokens are cut at the `' '` bytes of the UTF-8 buffer and hashed in
-  * place. On valid UTF-8 that is the cut `split` makes; an invalid
-  * buffer is split the way `split` does it, through its decoded string,
-  * so even then the tokens hash to the same values. */
+  * Tokens are [[SpaceTokens]], hashed in place in the UTF-8 buffer. */
 object ShingleHasher {
   import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
   import org.apache.spark.unsafe.Platform
@@ -1282,35 +1333,15 @@ object ShingleHasher {
 
   /** `xxhash64` of every `' '`-split token of `s`, in order. */
   private def tokenHashes(s: UTF8String): Array[Long] = {
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val n = s.numBytes
-    var spaces = 0
-    var bits = 0
-    var i = 0
-    while (i < n) {
-      val b = Platform.getByte(base, off + i)
-      if (b == ' ') spaces += 1
-      bits |= b
-      i += 1
+    val t = SpaceTokens.valid(s)
+    val ends = SpaceTokens.ends(t)
+    val th = new Array[Long](ends.length)
+    var k = 0
+    while (k < ends.length) {
+      val st = SpaceTokens.start(ends, k)
+      th(k) = XXH64.hashUnsafeBytes(t.getBaseObject, t.getBaseOffset + st, ends(k) - st, Seed)
+      k += 1
     }
-    // a byte with its high bit set may start an invalid sequence
-    if (bits < 0 && !s.isValid)
-      return s.toString.split(" ", -1)
-        .map(t => hash(UTF8String.fromString(t)))
-    val th = new Array[Long](spaces + 1)
-    var t = 0
-    var start = 0
-    i = 0
-    while (i < n) {
-      if (Platform.getByte(base, off + i) == ' ') {
-        th(t) = XXH64.hashUnsafeBytes(base, off + start, i - start, Seed)
-        t += 1
-        start = i + 1
-      }
-      i += 1
-    }
-    th(t) = XXH64.hashUnsafeBytes(base, off + start, n - start, Seed)
     th
   }
 }
@@ -1356,9 +1387,190 @@ case class ShingleHashes(child: Expression)
     copy(child = newChild)
 }
 
+/** The span tier's two per-row functions, computed by [[SpanHashes]] and
+  * [[SpanCut]] over the text's [[SpaceTokens]]. Bit for bit they are the
+  * compositional chains d10-d12 used before (the test tree keeps them as
+  * `SpanHashReference` and `SpanCutReference`). */
+object SpanHasher {
+  import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
+  import org.apache.spark.unsafe.Platform
+  import org.apache.spark.unsafe.types.UTF8String
+
+  /** `xxhash64`'s seed. */
+  private val Seed = 42L
+
+  /** The hash of every `n`-token window of `s`, in start order:
+    * `xxhash64(slice(split(s, " "), i + 1, n))`, that is seed 42 chained
+    * through each token's bytes. Empty below `n` tokens and for null. */
+  def hashes(s: UTF8String, n: Int): ArrayData = {
+    val out = if (s == null) Array.emptyLongArray else {
+      val t = SpaceTokens.valid(s)
+      val ends = SpaceTokens.ends(t)
+      val base = t.getBaseObject
+      val off = t.getBaseOffset
+      val hs = new Array[Long](math.max(0, ends.length - n + 1))
+      var i = 0
+      while (i < hs.length) {
+        var h = Seed
+        var k = i
+        while (k < i + n) {
+          val st = SpaceTokens.start(ends, k)
+          h = XXH64.hashUnsafeBytes(base, off + st, ends(k) - st, h)
+          k += 1
+        }
+        hs(i) = h
+        i += 1
+      }
+      hs
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** `s` without the tokens the `(st, en)` intervals of `ivs` cover (token
+    * `i` is cut when `st <= i < en`), the kept tokens re-joined with
+    * `' '`: `concat_ws(" ", filter(split(s, " "), (t, i) -> !exists(ivs,
+    * v -> i >= v.st and i < v.en)))`. A null `ivs` returns `s` unchanged;
+    * a null bound, like a null interval, leaves that side open, as the
+    * three-valued `exists` does. */
+  def cut(s: UTF8String, ivs: ArrayData): UTF8String = {
+    if (ivs == null) return s
+    if (s == null) return UTF8String.EMPTY_UTF8
+    val t = SpaceTokens.valid(s)
+    val ends = SpaceTokens.ends(t)
+    val n = ends.length
+    val gone = new Array[Boolean](n)
+    var j = 0
+    while (j < ivs.numElements()) {
+      var lo = 0
+      var hi = n
+      if (!ivs.isNullAt(j)) {
+        val v = ivs.getStruct(j, 2)
+        if (!v.isNullAt(0)) lo = math.max(lo, v.getInt(0))
+        if (!v.isNullAt(1)) hi = math.min(hi, v.getInt(1))
+      }
+      while (lo < hi) { gone(lo) = true; lo += 1 }
+      j += 1
+    }
+    val base = t.getBaseObject
+    val off = t.getBaseOffset
+    val out = new Array[Byte](t.numBytes)
+    var len = 0
+    var kept = 0
+    var k = 0
+    while (k < n) {
+      if (!gone(k)) {
+        if (kept > 0) { out(len) = ' '; len += 1 }
+        val st = SpaceTokens.start(ends, k)
+        Platform.copyMemory(base, off + st, out, Platform.BYTE_ARRAY_OFFSET + len, ends(k) - st)
+        len += ends(k) - st
+        kept += 1
+      }
+      k += 1
+    }
+    UTF8String.fromBytes(out, 0, len)
+  }
+}
+
+/** The hash of every `n`-token window of a text column, in start order,
+  * as one codegen'd per-row kernel: `array<bigint>`, never null, empty
+  * below `n` tokens (see [[SpanHasher.hashes]] for the contract). d10,
+  * d11 and d12 `posexplode` it, so the position is the window's 0-based
+  * start token.
+  *
+  * Why an `Expression` and not the `transform(sequence(...), i ->
+  * xxhash64(slice(split(text, " "), i + 1, n)))` chain it replaces:
+  * `ArrayTransform` is `CodegenFallback`, and nothing hoisted the split
+  * out of the lambda, so every window re-split the whole text (quadratic
+  * in document length). The kernel cuts the tokens once and hashes each
+  * window in place in the UTF-8 buffer. Both eval paths call
+  * [[SpanHasher.hashes]] (the [[ShingleHashes]] pattern). */
+case class SpanHashes(child: Expression, n: Int)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with ExpectsInputTypes {
+  require(n >= 1, s"span_hashes window must hold at least one token, got $n")
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "span_hashes"
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    SpanHasher.hashes(
+      child.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
+      |  org.apache.spark.sql.graftext.SpanHasher.hashes(${c.isNull} ? null : ${c.value}, $n);
+      """.stripMargin,
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): SpanHashes =
+    copy(child = newChild)
+}
+
+/** A text column with the token intervals of an `array<struct<st: int,
+  * en: int>>` column cut out, as one codegen'd per-row kernel (see
+  * [[SpanHasher.cut]] for the contract): d12's `clean_text`.
+  *
+  * Why an `Expression` and not the `filter`/`exists` rewrite it replaces:
+  * both are `CodegenFallback`, the rewrite split the text into a token
+  * array and tested every token against every interval through two
+  * nested lambdas. The kernel marks the cut tokens once and copies the
+  * kept bytes. Both eval paths call [[SpanHasher.cut]]. */
+case class SpanCut(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, ArrayType)
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    right.dataType match {
+      case ArrayType(StructType(Array(StructField(_, IntegerType, _, _),
+          StructField(_, IntegerType, _, _))), _) => super.checkInputDataTypes()
+      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"span_cut wants array<struct<st: int, en: int>> intervals, got ${other.simpleString}")
+    }
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = left.nullable && right.nullable
+  override def prettyName: String = "span_cut"
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    SpanHasher.cut(
+      left.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
+      right.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val t = left.genCode(ctx)
+    val v = right.genCode(ctx)
+    ev.copy(code = code"""
+      |${t.code}
+      |${v.code}
+      |org.apache.spark.unsafe.types.UTF8String ${ev.value} =
+      |  org.apache.spark.sql.graftext.SpanHasher.cut(
+      |    ${t.isNull} ? null : ${t.value}, ${v.isNull} ? null : ${v.value});
+      |boolean ${ev.isNull} = ${ev.value} == null;
+      """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SpanCut =
+    copy(left = newLeft, right = newRight)
+}
+
 object GraftColumns {
   def shingleHashes(text: Column): Column =
     ExpressionUtils.column(ShingleHashes(ExpressionUtils.expression(text)))
+
+  def spanHashes(text: Column, n: Int): Column =
+    ExpressionUtils.column(SpanHashes(ExpressionUtils.expression(text), n))
+
+  def spanCut(text: Column, ivs: Column): Column =
+    ExpressionUtils.column(
+      SpanCut(ExpressionUtils.expression(text), ExpressionUtils.expression(ivs)))
 
   def normalizeText(text: Column): Column =
     ExpressionUtils.column(NormalizeText(ExpressionUtils.expression(text)))

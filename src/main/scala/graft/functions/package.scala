@@ -71,6 +71,21 @@ package object functions {
   def shingleHashes(text: Column): Column =
     org.apache.spark.sql.graftext.GraftColumns.shingleHashes(text)
 
+  /** The `xxhash64` of every `n`-token window of a string column's
+    * `' '`-split tokens, in start order (`array<bigint>`, never null;
+    * empty below `n` tokens and for a null text) — the span-dedup tier's
+    * window hashes as one codegen'd narrow kernel (see
+    * [[org.apache.spark.sql.graftext.SpanHashes]]). */
+  def spanHashes(text: Column, n: Int): Column =
+    org.apache.spark.sql.graftext.GraftColumns.spanHashes(text, n)
+
+  /** A string column with the `' '`-split token intervals of an
+    * `array<struct<st: int, en: int>>` column (`st <= i < en`) cut out,
+    * the kept tokens re-joined with `' '`; a null interval list keeps
+    * the text as it is (see [[org.apache.spark.sql.graftext.SpanCut]]). */
+  def spanCut(text: Column, ivs: Column): Column =
+    org.apache.spark.sql.graftext.GraftColumns.spanCut(text, ivs)
+
   /** Unicode text normalization (NFC → combining-mark strip → whitespace
     * collapse/trim — CCNet's pre-dedup canonicalization) as one codegen'd
     * narrow expression (see

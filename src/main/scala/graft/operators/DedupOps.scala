@@ -1417,27 +1417,6 @@ object DedupOps {
     * quoted passages — pass every one of them untouched). */
   private[graft] val SpanN = 50
 
-  /** Positional `n`-token window HASHES of `text`: for every start
-    * position IN ORDER (so `posexplode` yields the 0-based start token
-    * index), the xxhash64 of that window's token-array slice —
-    * duplicates within a doc retained, the non-distinct sibling of
-    * [[shingles]], because span dedup must count and locate every
-    * occurrence, not membership. Hashing the SLICE rather than a joined
-    * string skips materializing an ~n·word_len char string per window
-    * (the dominant narrow-scan cost at n = 50); since split tokens
-    * cannot contain the separator, array equality and joined-string
-    * equality define the SAME window classes, so the oracle's
-    * string-replay discipline is unchanged. Whole-text fallback below
-    * `n` words (a short doc is one window — exact-dup short docs still
-    * flag; a single-element fallback array can never share a class with
-    * a true n-token window). */
-  private[graft] def spanHashes(text: Column, n: Int): Column = {
-    val w = split(text, " ")
-    val hs = transform(sequence(lit(0), size(w) - lit(n)),
-      i => xxhash64(slice(w, i + lit(1), lit(n))))
-    when(size(w) >= n, hs).otherwise(array(xxhash64(text)))
-  }
-
   /** d10: substring-level exact dedup — flag, per document, every
     * [[SpanN]]-token window whose exact token sequence occurs at least
     * twice ANYWHERE in the corpus (other documents or elsewhere in the
@@ -1446,14 +1425,25 @@ object DedupOps {
     * downstream substring once offsets are known, and flags keep the
     * operator SQL-oracle-expressible.
     *
-    * Scale shape: windows are hashed to 8 bytes at the scan
-    * ([[org.apache.spark.sql.functions.xxhash64]] — the t12 device; the
-    * oracle replays on strings, proving the hashed plan faithful, and a
-    * birthday collision at 10¹⁰ grams is ~10⁻² expected extra flags on a
-    * KEEP/DROP screen), so the occurrence-count aggregate and the join
-    * back both move (gh, pos) longs, map-side combined, never span
-    * text. The duplicated-hash relation broadcasts while it fits and
-    * degrades to a hash join on the 8-byte key past that. The one
+    * Windows are every [[SpanN]]-token run of the `' '`-split text, one
+    * per start position and duplicates within a doc kept (span dedup
+    * counts and locates every occurrence, not membership), each hashed
+    * by the [[graft.functions.spanHashes]] kernel; `posexplode` yields
+    * the 0-based start token. A doc below [[SpanN]] tokens is one
+    * whole-text window (`xxhash64(text)`), so exact-dup short docs still
+    * flag; a one-element fallback can never share a class with a true
+    * window.
+    *
+    * Scale shape: windows are hashed to 8 bytes at the scan by one
+    * codegen'd kernel that cuts the tokens once and hashes each window
+    * in place in the UTF-8 buffer, linear in document length for a
+    * fixed [[SpanN]] (`xxhash64` of the token slice — the t12 device;
+    * the oracle replays on strings, proving the hashed plan faithful,
+    * and a birthday collision at 10¹⁰ grams is ~10⁻² expected extra
+    * flags on a KEEP/DROP screen), so the occurrence-count aggregate and
+    * the join back both move (gh, pos) longs, map-side combined, never
+    * span text. The duplicated-hash relation broadcasts while it fits
+    * and degrades to a hash join on the 8-byte key past that. The one
     * text-width exchange is the final doc_id join that converts the
     * first dup window's token index into a char offset against the
     * words array — the same class of exchange as d1's content-hash
@@ -1462,8 +1452,11 @@ object DedupOps {
   def d10SpanDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
+    val windows = when(size(split($"text", " ")) >= SpanN,
+      graft.functions.spanHashes($"text", SpanN))
+      .otherwise(array(xxhash64($"text")))
     val sh = docs
-      .select($"doc_id", posexplode(spanHashes($"text", SpanN)))
+      .select($"doc_id", posexplode(windows))
       .select($"doc_id", $"pos", $"col".as("gh"))
     val dup = sh.groupBy($"gh").agg(count(lit(1)).as("c"))
       .where($"c" >= 2).select($"gh", lit(true).as("dup"))
@@ -1523,28 +1516,31 @@ object DedupOps {
     * start lies past the running max end of everything before it), each
     * emitted with its char [start_off, end_off) and token length — the
     * relation a span-removal pass consumes directly (substring cuts),
-    * where d10 only says "this doc has spans". Restricted to docs with
-    * ≥ [[SpanN]] tokens: a shorter doc has no sub-spans to cut — a
-    * duplicated short doc is WHOLLY a duplicate, which is d1/d10's
-    * whole-doc verdict (and its fallback pseudo-window can never equal
-    * a true 50-token window's class, so the duplicated-window set here
-    * is identical to d10's over these docs).
+    * where d10 only says "this doc has spans". Only docs with
+    * ≥ [[SpanN]] tokens have windows (the kernel emits none below that):
+    * a shorter doc has no sub-spans to cut — a duplicated short doc is
+    * WHOLLY a duplicate, which is d1/d10's whole-doc verdict (and d10's
+    * fallback pseudo-window can never equal a true 50-token window's
+    * class, so the duplicated-window set here is identical to d10's over
+    * these docs).
     *
-    * Scale shape: the window/df machinery is d10's (8-byte hashes at
-    * the scan, map-side-combined count, dup relation broadcast while it
-    * fits); the islands pass sorts DUPLICATED windows only — (doc_id,
-    * pos) pairs, a relation the df ≥ 2 filter has already collapsed to
-    * a sliver of the corpus — and the interval aggregate reuses the
-    * same doc_id partitioning (no extra exchange). The final doc_id
-    * join against the words array prices the char conversion exactly
-    * like d10's. */
+    * Scale shape: the window/df machinery is d10's (8-byte hashes from
+    * the codegen'd kernel at the scan, map-side-combined count, dup
+    * relation broadcast while it fits). Windows are exploded from the
+    * unfiltered documents relation, so the window stream and the final
+    * join read the same relation, and under the [[Tables.fillCores]]
+    * floor the same exchange. The islands pass sorts DUPLICATED windows
+    * only — (doc_id, pos) pairs, a relation the df ≥ 2 filter has
+    * already collapsed to a sliver of the corpus — and the interval
+    * aggregate reuses the same doc_id partitioning (no extra exchange).
+    * The final doc_id join against the words array prices the char
+    * conversion exactly like d10's. */
   def d11SpanIntervals(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, dir)
-      .where(size(split($"text", " ")) >= SpanN)
     val sh = docs
-      .select($"doc_id", posexplode(spanHashes($"text", SpanN)))
+      .select($"doc_id", posexplode(graft.functions.spanHashes($"text", SpanN)))
       .select($"doc_id", $"pos", $"col".as("gh"))
     val dup = sh.groupBy($"gh").agg(count(lit(1)).as("c"))
       .where($"c" >= 2).select($"gh")
@@ -1626,23 +1622,27 @@ object DedupOps {
     * keeps the content).
     *
     * Scale shape: d10/d11's machinery end-to-end (windows hashed to 8
-    * bytes at the scan, map-side-combined class counts, dup relation
-    * broadcast while it fits), plus the one thing keep-first adds: a
-    * rank window keyed on the window class — taken over the SEMI-JOINED
-    * sliver only (occurrences of duplicated classes), never the full
-    * corpus window stream. Interval collection per doc is bounded by
-    * doc length; the final doc_id join prices the text rewrite exactly
-    * like d10/d11's char conversion, and the cleaned corpus streams out
-    * with no further exchange. The oracle replays the identical
+    * bytes at the scan by the codegen'd kernel, map-side-combined class
+    * counts, dup relation broadcast while it fits), plus the one thing
+    * keep-first adds: a rank window keyed on the window class — taken
+    * over the SEMI-JOINED sliver only (occurrences of duplicated
+    * classes), never the full corpus window stream. The corpus is read
+    * once: the class count, the semi-join and the final join all read
+    * the one unfiltered documents relation (short docs simply emit no
+    * windows), so under the [[Tables.fillCores]] floor they share one
+    * floor exchange. Interval collection per doc is bounded by doc
+    * length; the final doc_id join prices the text rewrite exactly like
+    * d10/d11's char conversion, the rewrite itself is the codegen'd
+    * [[graft.functions.spanCut]] kernel, and the cleaned corpus streams
+    * out with no further exchange. The oracle replays the identical
     * keep-first rule on gram STRINGS (ranking needs only class identity
     * and (doc_id, pos) order, both hash-faithful — the d10 argument). */
   def d12SpanRemoval(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val all = Tables.documents(s, dir).select($"doc_id", $"text")
-    val docs = all.where(size(split($"text", " ")) >= SpanN)
-    val sh = docs
-      .select($"doc_id", posexplode(spanHashes($"text", SpanN)))
+    val sh = all
+      .select($"doc_id", posexplode(graft.functions.spanHashes($"text", SpanN)))
       .select($"doc_id", $"pos", $"col".as("gh"))
     val dup = sh.groupBy($"gh").agg(count(lit(1)).as("c"))
       .where($"c" >= 2).select($"gh")
@@ -1667,11 +1667,7 @@ object DedupOps {
     all
       .join(ivd, Seq("doc_id"), "left")
       .select($"doc_id",
-        when($"ivs".isNull, $"text").otherwise(
-          concat_ws(" ", filter(split($"text", " "), (t, i) =>
-            !exists($"ivs", v =>
-              i >= v.getField("st") && i < v.getField("en")))))
-          .as("clean_text"),
+        graft.functions.spanCut($"text", $"ivs").as("clean_text"),
         coalesce($"n_spans_cut", lit(0)).as("n_spans_cut"),
         coalesce($"n_tokens_cut", lit(0)).as("n_tokens_cut"),
         (size(split($"text", " ")) - coalesce($"n_tokens_cut", lit(0)))

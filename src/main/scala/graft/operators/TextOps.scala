@@ -822,7 +822,7 @@ object TextOps {
     docs.withColumn("ids", graft.functions.bpeTokenIds(text, BpeVocab))
       .withColumn("n_ids", size(col("ids")))
       .withColumn("ids_sig",
-        md5(array_join(transform(col("ids"), _.cast("string")), ",")))
+        md5(array_join(col("ids").cast("array<string>"), ",")))
       .drop("ids")
 
   /** The oracle's token-id CTE chain over a caller-defined CTE `docCte`

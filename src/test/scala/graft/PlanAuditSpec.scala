@@ -318,8 +318,11 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("d12: the keep-first rank window runs over the semi-joined dup sliver; the rewrite never explodes tokens") {
+    import org.apache.spark.sql.catalyst.expressions.PosExplode
     import org.apache.spark.sql.catalyst.plans.LeftSemi
     import org.apache.spark.sql.catalyst.plans.logical.{Join, Window => LWindow}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GenerateExec}
+    import org.apache.spark.sql.graftext.SpanHashes
     val qe = SparkEntry.queries("d12_span_removal")(spark, sf).queryExecution
     val opt = qe.optimizedPlan
     // the scale claim: ranking happens AFTER the df >= 2 semi-join has
@@ -331,20 +334,66 @@ class PlanAuditSpec extends SparkSpec {
       case j: Join if j.joinType == LeftSemi => j
     }.nonEmpty),
       s"the rank window must sit above the dup semi-join (sliver only):\n$opt")
-    val p = qe.executedPlan.toString
+    val exec = qe.executedPlan
+    val p = exec.toString
     assert(!p.contains("CartesianProduct"), p)
-    // the cleaned-text rewrite is a per-row array filter against the
-    // doc's collected interval list — token-level Generate nodes exist
-    // only for the window/pos stream (spanHashes), never for the final
-    // text reconstruction, so every Generate in the plan is a
-    // posexplode of the hashed windows
+    // the cleaned-text rewrite is the span_cut kernel against the doc's
+    // collected interval list, and no array lambda is left in the plan
+    assert(p.contains("span_cut"), s"expected the span_cut kernel in the projection:\n$p")
+    assert(!p.contains("lambdafunction"), s"d12 still runs an array lambda:\n$p")
+    // the window hashes run once per consumer of the window stream (the
+    // class count and the semi-join), each as the input of a posexplode,
+    // never again in an inferred filter or a scan's data filters
+    def spans(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Int =
+      es.map(_.collect { case k: SpanHashes => k }.size).sum
+    assert(spans(aqe.flatMap(exec)(_.expressions)) === 2, s"d12: want 2 span_hashes:\n$p")
+    val inGenerate = aqe.collect(exec) {
+      case g: GenerateExec if g.generator.isInstanceOf[PosExplode] => spans(Seq(g.generator))
+    }.sum
+    assert(inGenerate === 2, s"every span_hashes must feed a Generate posexplode:\n$p")
+    assert(spans(aqe.collect(exec) { case f: FilterExec => f.condition }) === 0,
+      s"a filter evaluates span_hashes:\n$p")
+    assert(spans(aqe.flatMap(exec) { case f: FileSourceScanExec => f.dataFilters
+      case _ => Nil }) === 0, s"a scan filters on span_hashes:\n$p")
     val gens = "Generate (\\w+)".r.findAllMatchIn(p).map(_.group(1)).toSeq
     assert(gens.nonEmpty && gens.forall(_ == "posexplode"),
       s"unexpected token-level explode in the rewrite: $gens\n$p")
-    // and the rewrite itself rides as a higher-order lambda, not a join
-    // of exploded tokens
-    assert(p.contains("lambdafunction"),
-      s"expected the array-filter lambda in the projection:\n$p")
+  }
+
+  test("d12 under the scan floor: one documents floor exchange, which its other consumers reuse") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.SparkPlan
+    val listing = graft.sources.Tables.fingerprint(spark,
+      graft.sources.Tables.path(sf, "documents"))
+    assert(listing.dataFiles === 1, s"the fixture must be a one-file table: $listing")
+    def readsDocuments(plan: SparkPlan): Boolean = plan.collectFirst {
+      case f: FileSourceScanExec if f.relation.location.rootPaths
+        .exists(_.getName == "documents.parquet") => f
+    }.nonEmpty
+    withConfs("spark.graft.scan.fillCores.minBytes" -> "1") {
+      val df = SparkEntry.queries("d12_span_removal")(spark, sf)
+      df.collect()
+      val exec = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec =>
+          assert(a.toString.contains("isFinalPlan=true"), s"d12 did not run:\n$a")
+          a.executedPlan
+        case other => fail(s"d12: not an adaptive plan:\n$other")
+      }
+      val p = exec.toString
+      val floors = aqe.collect(exec) {
+        case e: ShuffleExchangeExec
+            if e.shuffleOrigin == REPARTITION_BY_NUM && readsDocuments(e.child) => e
+      }
+      assert(floors.size === 1, s"d12 must read documents through one floor exchange:\n$p")
+      val reused = aqe.collect(exec) {
+        case r: ReusedExchangeExec if readsDocuments(r.child) => r
+      }
+      assert(reused.size === 2,
+        s"the class count, the semi-join and the final join must share the floor:\n$p")
+      assert(reused.forall(_.child.canonicalized == floors.head.canonicalized), p)
+    }
   }
 
   test("t19: islands merge over the eval-semi-joined hit sliver; grams shuffle hashed, never as text") {
