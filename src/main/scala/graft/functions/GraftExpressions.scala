@@ -1225,8 +1225,8 @@ case class LangProfileScores(child: Expression, profile: PackedLangProfile)
   * the tokens Spark's `split(text, " ")` makes, empty pieces kept. On
   * valid UTF-8 the `' '` bytes are that cut; a buffer that is not valid
   * UTF-8 is re-encoded from its decoded string first, which is the
-  * string `split` cuts. [[ShingleHasher]] and [[SpanHasher]] hash over
-  * these tokens. */
+  * string `split` cuts. [[SpanHasher]] hashes and cuts over these
+  * tokens. */
 object SpaceTokens {
   import org.apache.spark.unsafe.Platform
   import org.apache.spark.unsafe.types.UTF8String
@@ -1288,7 +1288,10 @@ object SpaceTokens {
   *  - a text of fewer than three tokens gives `[xxhash64(text)]`, so a
   *    null text gives `[42]`, the seed.
   *
-  * Tokens are [[SpaceTokens]], hashed in place in the UTF-8 buffer. */
+  * Tokens are cut at the `' '` bytes of the UTF-8 buffer and hashed in
+  * place. On valid UTF-8 that is the cut `split` makes; an invalid
+  * buffer is split the way `split` does it, through its decoded string,
+  * so even then the tokens hash to the same values. */
 object ShingleHasher {
   import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
   import org.apache.spark.unsafe.Platform
@@ -1333,15 +1336,35 @@ object ShingleHasher {
 
   /** `xxhash64` of every `' '`-split token of `s`, in order. */
   private def tokenHashes(s: UTF8String): Array[Long] = {
-    val t = SpaceTokens.valid(s)
-    val ends = SpaceTokens.ends(t)
-    val th = new Array[Long](ends.length)
-    var k = 0
-    while (k < ends.length) {
-      val st = SpaceTokens.start(ends, k)
-      th(k) = XXH64.hashUnsafeBytes(t.getBaseObject, t.getBaseOffset + st, ends(k) - st, Seed)
-      k += 1
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    var spaces = 0
+    var bits = 0
+    var i = 0
+    while (i < n) {
+      val b = Platform.getByte(base, off + i)
+      if (b == ' ') spaces += 1
+      bits |= b
+      i += 1
     }
+    // a byte with its high bit set may start an invalid sequence
+    if (bits < 0 && !s.isValid)
+      return s.toString.split(" ", -1)
+        .map(t => hash(UTF8String.fromString(t)))
+    val th = new Array[Long](spaces + 1)
+    var t = 0
+    var start = 0
+    i = 0
+    while (i < n) {
+      if (Platform.getByte(base, off + i) == ' ') {
+        th(t) = XXH64.hashUnsafeBytes(base, off + start, i - start, Seed)
+        t += 1
+        start = i + 1
+      }
+      i += 1
+    }
+    th(t) = XXH64.hashUnsafeBytes(base, off + start, n - start, Seed)
     th
   }
 }
@@ -1515,7 +1538,7 @@ case class SpanHashes(child: Expression, n: Int)
 
 /** A text column with the token intervals of an `array<struct<st: int,
   * en: int>>` column cut out, as one codegen'd per-row kernel (see
-  * [[SpanHasher.cut]] for the contract): d12's `clean_text`.
+  * [[SpanHasher.cut]] for the contract): d12's and t19's `clean_text`.
   *
   * Why an `Expression` and not the `filter`/`exists` rewrite it replaces:
   * both are `CodegenFallback`, the rewrite split the text into a token

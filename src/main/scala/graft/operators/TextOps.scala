@@ -1465,9 +1465,9 @@ object TextOps {
     * semi-join on 8-byte keys past that. The island pass windows over
     * the SEMI-JOINED sliver only — (doc_id, pos) pairs of actual hits,
     * a relation the eval join has already collapsed to ~0 rows on a
-    * clean corpus — and the rewrite is d12's per-row array filter
-    * against the broadcast-joined interval list, one doc_id-keyed
-    * exchange total. */
+    * clean corpus — and the rewrite is d12's `span_cut` kernel against
+    * the broadcast-joined interval list, one doc_id-keyed exchange
+    * total. */
   def t19SpanDecontaminate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -1492,25 +1492,26 @@ object TextOps {
       .groupBy($"doc_id", $"island")
       .agg(greatest(min($"pos") - ScrubMargin, lit(0)).as("st"),
         (max($"pos") + g + ScrubMargin).as("en"))
+    // islands are disjoint (each starts past the run end before it), so
+    // the cut is their summed length less the last one's overhang past
+    // the text's final token
     val ivd = iv.groupBy($"doc_id")
       .agg(collect_list(struct($"st", $"en")).as("ivs"),
-        count(lit(1)).cast("int").as("n_spans_cut"))
+        count(lit(1)).cast("int").as("n_spans_cut"),
+        sum($"en" - $"st").as("span_toks"),
+        max($"en").as("span_end"))
     docs
       .select($"doc_id", ($"doc_id" % DecontMod === 0).as("is_eval"),
         $"text")
       .join(ivd, Seq("doc_id"), "left")
-      .withColumn("cleanw", filter(split($"text", " "), (_, i) =>
-        !exists($"ivs", v =>
-          i >= v.getField("st") && i < v.getField("en"))))
+      .withColumn("n_tokens", size(split($"text", " ")))
+      .withColumn("n_cut", coalesce(
+        $"span_toks" - greatest($"span_end" - $"n_tokens", lit(0)), lit(0)))
       .select($"doc_id", $"is_eval",
-        when($"ivs".isNull, $"text")
-          .otherwise(concat_ws(" ", $"cleanw")).as("clean_text"),
+        graft.functions.spanCut($"text", $"ivs").as("clean_text"),
         coalesce($"n_spans_cut", lit(0)).as("n_spans_cut"),
-        when($"ivs".isNull, lit(0))
-          .otherwise(size(split($"text", " ")) - size($"cleanw"))
-          .cast("int").as("n_tokens_cut"),
-        when($"ivs".isNull, size(split($"text", " ")))
-          .otherwise(size($"cleanw")).cast("int").as("n_tokens_kept"))
+        $"n_cut".cast("int").as("n_tokens_cut"),
+        ($"n_tokens" - $"n_cut").cast("int").as("n_tokens_kept"))
   }
 
   /** DuckDB replays grams on STRINGS with positions (t10's gram CTE +

@@ -71,7 +71,7 @@ class CodegenSurfaceSpec extends SparkSpec {
     "t16_gopher_rules" -> Set("filter", "transform"),
     "t17_ppl_buckets" -> Set("zip_with"),
     "t18_quality_classifier" -> Set("aggregate", "transform"),
-    "t19_span_decontaminate" -> Set("exists", "filter", "zip_with"),
+    "t19_span_decontaminate" -> Set("zip_with"),
     "t20_ingest_novelty" -> Set("zip_with"),
     "t22_segment_langmix" -> Set("aggregate", "filter", "transform"),
     "t23_domain_rollup" -> Set("filter"),

@@ -418,8 +418,8 @@ class PlanAuditSpec extends SparkSpec {
     val gens = "Generate (\\w+)".r.findAllMatchIn(p).map(_.group(1)).toSeq
     assert(gens.nonEmpty && gens.forall(_ == "posexplode"),
       s"unexpected token-level explode in the rewrite: $gens\n$p")
-    assert(p.contains("lambdafunction"),
-      s"expected the array-filter lambda in the projection:\n$p")
+    assert(p.contains("span_cut"),
+      s"expected the span_cut kernel in the projection:\n$p")
   }
 
   test("p7: corpus scanned once (cached supply relation); totals broadcast") {
