@@ -566,6 +566,140 @@ case class PqEncodeCodes(child: Expression, books: Array[Array[Array[Double]]])
     copy(child = newChild)
 }
 
+/** The rounded-cosine nearest centroid of one vector: for centroids c_0 ..
+  * c_{k-1}, the cell whose `round(cosine_similarity(v, c), 6)` is largest,
+  * ties toward the higher cell, with that rounded score. Bit for bit it is
+  * `max_by(cell_id, struct(round(cosine_similarity(v, c_vec), 6), cell_id))`
+  * and `max(...)` over a cross join with the centroid relation, grouped
+  * per vector (the test tree keeps that chain as `CentroidArgmaxReference`):
+  *   - each raw score is [[CosineSimilarity]]'s `dot / (√Σv² · √Σc²)`, every
+  *     sum a left-to-right fold over the first `min(|v|, dim)` elements
+  *     widened to double. `√Σc²` is computed once here for a full-length
+  *     vector and per row only for a short one; `√Σv²` once per row, so a
+  *     (row, centroid) pair costs one dot product;
+  *   - rounding is `round(x, 6)`'s: NaN and ±∞ pass, everything else is
+  *     the HALF_UP decimal of `Double.toString(x)`. That map is monotone,
+  *     so the winning rounded score is the round of the raw maximum, and
+  *     only raw scores within [[CentroidScorer.Slack]] of it can round to
+  *     it (two scores that round alike are less than 1e-6 apart): only
+  *     those are rounded;
+  *   - Spark's order puts NaN above every number, so a row with a NaN
+  *     score (a zero or empty vector) goes to the highest NaN cell with
+  *     score NaN. A null vector scores null against every cell, and the
+  *     struct order then leaves the highest cell with score null.
+  */
+final class CentroidScorer(centroids: Array[Array[Float]]) extends Serializable {
+  require(centroids.nonEmpty && centroids.forall(_.length == centroids(0).length),
+    "centroid_argmax wants a non-empty rectangular centroid matrix")
+
+  private val k = centroids.length
+  private val dim = centroids(0).length
+  private val flat: Array[Double] = centroids.flatMap(_.map(_.toDouble))
+  private val norms: Array[Double] = Array.tabulate(k)(prefixNorm(_, dim))
+
+  private def prefixNorm(c: Int, n: Int): Double = {
+    var nb = 0.0
+    var i = 0
+    while (i < n) { val q = flat(c * dim + i); nb += q * q; i += 1 }
+    math.sqrt(nb)
+  }
+
+  private def row(cell: Int, score: Any): org.apache.spark.sql.catalyst.InternalRow =
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](cell, score))
+
+  /** The result for a null vector. */
+  def nullRow(): org.apache.spark.sql.catalyst.InternalRow = row(k - 1, null)
+
+  def argmax(v: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
+    val n = math.min(v.numElements(), dim)
+    val x = new Array[Double](n)
+    var na = 0.0
+    var i = 0
+    while (i < n) { val p = v.getFloat(i).toDouble; x(i) = p; na += p * p; i += 1 }
+    val sa = math.sqrt(na)
+    val scores = new Array[Double](k)
+    var mx = Double.NegativeInfinity
+    var nan = -1
+    var c = 0
+    while (c < k) {
+      var dot = 0.0
+      val o = c * dim
+      i = 0
+      while (i < n) { dot += x(i) * flat(o + i); i += 1 }
+      val s = dot / (sa * (if (n == dim) norms(c) else prefixNorm(c, n)))
+      scores(c) = s
+      if (s.isNaN) nan = c else if (s > mx) mx = s
+      c += 1
+    }
+    if (nan >= 0) return row(nan, Double.NaN)
+    val top = CentroidScorer.round6(mx)
+    c = k - 1
+    while (c >= 0) {
+      val s = scores(c)
+      if (s == mx || (s >= mx - CentroidScorer.Slack && CentroidScorer.round6(s) == top))
+        return row(c, top)
+      c -= 1
+    }
+    throw new IllegalStateException("unreachable: the raw maximum rounds to itself")
+  }
+}
+
+object CentroidScorer {
+  /** Raw scores this far below the maximum are never rounded: 1e-6, the
+    * width of a 6-dp rounding class, plus room for the doubles' error. */
+  val Slack = 2e-6
+
+  /** Spark's `round(x, 6)` on a double. */
+  def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+}
+
+/** `struct<cell: int, score: double>`: the rounded-cosine nearest centroid
+  * of an `array<float>` vector and its 6-dp score, as one codegen'd
+  * per-row kernel (see [[CentroidScorer]] for the contract). The result is
+  * never null; its score is null for a null vector.
+  *
+  * Why an `Expression` and not the cross join it replaces (s9, s10, e8):
+  * that chain fanned every vector out to k rows, ran k cosines and k
+  * decimal roundings, and merged the fan-out back with a `max_by`
+  * aggregate keyed on the vector id, an exchange. Here the centroids ride
+  * as one reference object, a row costs k dot products and, as a rule,
+  * one rounding, and no exchange is needed. Both eval paths call
+  * [[CentroidScorer.argmax]]. */
+case class CentroidArgmax(child: Expression, scorer: CentroidScorer)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
+  override def dataType: DataType = StructType(Seq(
+    StructField("cell", IntegerType, nullable = false),
+    StructField("score", DoubleType, nullable = true)))
+  override def nullable: Boolean = false
+  override def prettyName: String = "centroid_argmax"
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val v = child.eval(input)
+    if (v == null) scorer.nullRow() else scorer.argmax(v.asInstanceOf[ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val ref = ctx.addReferenceObj("centroidScorer", scorer, classOf[CentroidScorer].getName)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |org.apache.spark.sql.catalyst.InternalRow ${ev.value} =
+      |  ${c.isNull} ? $ref.nullRow() : $ref.argmax(${c.value});
+      """.stripMargin,
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): CentroidArgmax =
+    copy(child = newChild)
+}
+
 /** Greedy longest-match subword token count of a string column under a
   * driver-known vocabulary — the classic BPE/WordPiece *inference* scan
   * (Sennrich et al. 2016's merge table applied greedily; the segmenter
@@ -1614,6 +1748,10 @@ object GraftColumns {
   def pqEncodeCodes(v: Column, books: Array[Array[Array[Double]]]): Column =
     ExpressionUtils.column(
       PqEncodeCodes(ExpressionUtils.expression(v), books))
+
+  def centroidArgmax(v: Column, centroids: Array[Array[Float]]): Column =
+    ExpressionUtils.column(
+      CentroidArgmax(ExpressionUtils.expression(v), new CentroidScorer(centroids)))
 
   def signLshBandKeys(v: Column, bands: Int, bandBits: Int, dim: Int, seed: Long): Column =
     ExpressionUtils.column(

@@ -41,6 +41,14 @@ package object functions {
   def pqEncodeCodes(v: Column, books: Array[Array[Array[Double]]]): Column =
     org.apache.spark.sql.graftext.GraftColumns.pqEncodeCodes(v, books)
 
+  /** The rounded-cosine nearest centroid of an `array<float>` vector,
+    * `struct<cell: int, score: double>`: the cell with the largest
+    * `round(cosine_similarity(v, c), 6)`, ties toward the higher cell, and
+    * that score. One codegen'd per-row kernel; the result is never null
+    * (see [[org.apache.spark.sql.graftext.CentroidArgmax]]). */
+  def centroidArgmax(v: Column, centroids: Array[Array[Float]]): Column =
+    org.apache.spark.sql.graftext.GraftColumns.centroidArgmax(v, centroids)
+
   /** Greedy longest-match subword token count of a string column under a
     * driver-known vocabulary of 2..8-letter lowercase ASCII pieces — the
     * BPE-inference scan as one codegen'd per-row kernel (see

@@ -1619,17 +1619,21 @@ object DedupOps {
     * appears exactly once, untouched docs (short, or no late
     * occurrences) pass through verbatim with zero counts. A doc whose
     * whole text is a later copy cleans to '' (its first-occurrence twin
-    * keeps the content).
+    * keeps the content). `doc_id` is the documents key: a row without
+    * one has no place in the (doc_id, pos) order and is left out.
     *
     * Scale shape: d10/d11's machinery end-to-end (windows hashed to 8
     * bytes at the scan by the codegen'd kernel, map-side-combined class
-    * counts, dup relation broadcast while it fits), plus the one thing
-    * keep-first adds: a rank window keyed on the window class — taken
-    * over the SEMI-JOINED sliver only (occurrences of duplicated
-    * classes), never the full corpus window stream. The corpus is read
-    * once: the class count, the semi-join and the final join all read
-    * the one unfiltered documents relation (short docs simply emit no
-    * windows), so under the [[Tables.fillCores]] floor they share one
+    * counts, dup relation broadcast while it fits). Keep-first rides the
+    * class aggregate: next to its count, each class carries its first
+    * occurrence, the minimum of (doc_id, pos), and an occurrence is cut
+    * iff its (doc_id, pos) is greater — the same cut as ranking the
+    * class by (doc_id, pos) and dropping rank 1, since (doc_id, pos) is
+    * unique. The cut is the condition of the join that brings the
+    * duplicated classes to the window stream, so no sort or window is
+    * keyed on the window class. The corpus is read once: the class
+    * count, the cut join and the final join all read the one documents
+    * relation (short docs simply emit no windows), so under the [[Tables.fillCores]] floor they share one
     * floor exchange. Interval collection per doc is bounded by doc
     * length; the final doc_id join prices the text rewrite exactly like
     * d10/d11's char conversion, the rewrite itself is the codegen'd
@@ -1640,17 +1644,15 @@ object DedupOps {
   def d12SpanRemoval(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val all = Tables.documents(s, dir).select($"doc_id", $"text")
+    // doc_id is the key. Filtered here, every consumer reads the same
+    // scan; otherwise the final join's inferred isnotnull(doc_id) reaches
+    // the cut's scan alone, which then needs a floor exchange of its own
+    val all = Tables.documents(s, dir).where($"doc_id".isNotNull)
+      .select($"doc_id", $"text")
     val sh = all
       .select($"doc_id", posexplode(graft.functions.spanHashes($"text", SpanN)))
       .select($"doc_id", $"pos", $"col".as("gh"))
-    val dup = sh.groupBy($"gh").agg(count(lit(1)).as("c"))
-      .where($"c" >= 2).select($"gh")
-    val cw = sh.join(dup, Seq("gh"), "left_semi")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy($"gh").orderBy($"doc_id", $"pos")))
-      .where($"rk" >= 2)
-      .select($"doc_id", $"pos")
+    val cw = keepFirstCuts(sh)
     val byPos = Window.partitionBy($"doc_id").orderBy($"pos")
     val runEnd = max($"pos" + SpanN)
       .over(byPos.rowsBetween(Window.unboundedPreceding, -1))
@@ -1672,6 +1674,27 @@ object DedupOps {
         coalesce($"n_tokens_cut", lit(0)).as("n_tokens_cut"),
         (size(split($"text", " ")) - coalesce($"n_tokens_cut", lit(0)))
           .cast("int").as("n_tokens_kept"))
+  }
+
+  /** d12's keep-first cut over a window stream `sh(doc_id, pos, gh)`:
+    * the (doc_id, pos) of every occurrence of a duplicated class `gh`
+    * but its first in (doc_id, pos) order. The class aggregate carries
+    * the first occurrence next to the count, and the cut is the
+    * condition of the join that brings the duplicated classes back: no
+    * sort or window keyed on `gh` (the rank-window spelling it replaced
+    * is the test tree's `KeepFirstReference`). (doc_id, pos) is packed
+    * into one decimal in lexicographic order (0 <= pos < 2^32) so the
+    * minimum is a hash aggregate; a struct minimum would sort the
+    * stream by class. */
+  private[graft] def keepFirstCuts(sh: DataFrame): DataFrame = {
+    val occ = (col("doc_id").cast("decimal(20,0)") * lit(BigDecimal(1L << 32)) +
+      col("pos")).as("occ")
+    val occs = sh.select(col("doc_id"), col("pos"), col("gh"), occ)
+    val cls = occs.groupBy(col("gh"))
+      .agg(count(lit(1)).as("c"), min(col("occ")).as("first"))
+      .where(col("c") >= 2).select(col("gh").as("dup_gh"), col("first"))
+    occs.join(cls, col("gh") === col("dup_gh") && col("occ") > col("first"))
+      .select(col("doc_id"), col("pos"))
   }
 
   private[operators] val d12Sql =

@@ -176,8 +176,9 @@ object PipelineOps {
     * the span cutter left.
     *
     * Plan shape: d12's machinery end-to-end (8-byte window hashes at the
-    * scan, class counts map-side combined, keep-first rank over the
-    * semi-joined duplicated sliver only); the composition adds the
+    * scan, class counts map-side combined with each class's first
+    * occurrence, the keep-first cut as the condition of the join that
+    * brings the duplicated classes back); the composition adds the
     * token-id kernel as a narrow map over d12's clean_text output and
     * exactly one exchange — the per-shard packing window over (doc_id,
     * n_tokens, 32-char sig); the id array never enters an exchange. */
@@ -539,41 +540,42 @@ object PipelineOps {
     * its cluster's repeat factor (salt channel "e8:") — the capstone
     * emits the materialization-ready per-document relation in one pass.
     *
-    * Scale shape: s9's assignment machinery (broadcast k-row centroids,
-    * map-side-combined argmax over the ONE embeddings scan), one
-    * documents scan pruned to (doc_id, token count) at the scan, one
-    * vec_id equi-join between them — the (vec_id, cluster, t) relation
-    * is materialized (20-byte rows; both the k-row supply aggregate and
-    * the final output read it, and without it the N·k assignment
-    * subtree would plan TWICE). The plan itself is k rows: aggregate
-    * broadcast, scalar min attached as a broadcast 1-row cross join
-    * (p3's device), draw a narrow map.
-    * Nothing downstream of the aggregate scales with data. */
+    * `vec_id` is the embeddings key, as in s9: the assignment emits one
+    * row per embeddings row.
+    *
+    * Scale shape: s9's assignment ([[SimilarityOps.topicCells]], one
+    * narrow [[graft.functions.centroidArgmax]] map over the embeddings
+    * scan, no fan-out, no `vec_id` exchange), one documents scan pruned to
+    * (doc_id, token count) at the scan, one vec_id equi-join between
+    * them. The k-row supply aggregate and the output rows each read
+    * that join in a pass of their own (the output's documents scan reads
+    * doc_id alone); nothing is persisted, so no cache holds the corpus
+    * and the draw streams. The plan itself is k rows: the supply
+    * aggregate, coalesced to one partition so the scalar min is a window
+    * over those k rows with no exchange, the result broadcast back; the
+    * draw is a narrow map. Nothing downstream of the aggregate scales
+    * with data. */
   def e8TopicMix(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    import org.apache.spark.sql.expressions.Window
     val n = SimilarityOps.corpusCount(s, dir)
     val k = SimilarityOps.ivfK(n)
     val cf: Array[Array[Float]] =
       SimilarityOps.centroidsFor(s, dir, k).map(_.map(_.toFloat))
     graft.sources.TrainedOracle.publish("e8_topic_mix", e8SqlFor(cf, k))
-    val cent = cf.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq) }.toDF("cell_id", "c_vec")
-    val assign = Tables.embeddings(s, dir)
-      .crossJoin(broadcast(cent))
-      .select($"vec_id", $"cell_id",
-        round(SimilarityOps.cosineCol($"embedding", $"c_vec"), 6).as("sc"))
-      .groupBy($"vec_id")
-      .agg(max_by($"cell_id", struct($"sc", $"cell_id")).as("cluster"))
+    val assign = SimilarityOps.topicCells(Tables.embeddings(s, dir), cf)
     val toks = Tables.documents(s, dir)
       .select($"doc_id".as("vec_id"),
         size(split($"text", " ")).cast("long").as("t"))
-    val withT = graft.sources.Materialize(assign.join(toks, Seq("vec_id")))
-    val perC = withT.groupBy($"cluster")
+    val withT = assign.join(toks, Seq("vec_id"))
+    // k rows: one partition holds them all, so the scalar min is a
+    // window with no exchange of its own
+    val plan = withT.groupBy($"cluster")
       .agg(sum($"t").as("cluster_tokens"), count(lit(1)).as("cluster_docs"))
-    val plan = perC
-      .crossJoin(broadcast(perC.agg(
-        min($"cluster_tokens".cast("double") * SamplingOps.MaxEpochs
-          * k.toDouble).as("mix_total"))))
+      .coalesce(1)
+      .withColumn("mix_total",
+        min($"cluster_tokens".cast("double") * SamplingOps.MaxEpochs * k.toDouble)
+          .over(Window.partitionBy()))
       .select($"cluster", $"cluster_docs", $"cluster_tokens",
         ($"mix_total" / k.toDouble).as("need_tokens"),
         ($"mix_total" / k.toDouble / $"cluster_tokens".cast("double"))

@@ -140,7 +140,7 @@ object SimilarityOps {
           }
           val score = dot / math.sqrt(norm)
           // >= : ties break toward the higher cell id, matching the
-          // struct-max ordering of nearestCell below.
+          // struct-max ordering of the nearestCells kernel.
           if (score >= bestScore) { best = c; bestScore = score }
           c += 1
         }
@@ -266,15 +266,6 @@ object SimilarityOps {
     }
   }
 
-  /** Index (0-based) of the nearest centroid — the codegen'd
-    * [[graft.functions.nearestCells]] kernel at nprobe = 1. Ties
-    * (measure-zero on real vectors) break toward the higher cell id,
-    * the struct-max ordering of the compositional path this replaced
-    * (r11: the k-branch aggregate(zip_with) tree was the measured
-    * dominant fixed cost of every ANN pass — see NearestCells scaladoc). */
-  private[graft] def nearestCell(v: Column, centroids: Array[Array[Double]]): Column =
-    element_at(graft.functions.nearestCells(v, centroids, 1), 1)
-
   /** Distributed Lloyd training — the k > [[DriverTrainCap]] path, and
     * the piece that removes the last driver-side bound from the IVF tier.
     * Assignment reuses [[assignCells]] (which itself dispatches to the
@@ -349,9 +340,14 @@ object SimilarityOps {
     aggregate(zip_with(v, col("c_vec"), (p, q) => p.cast("double") * q),
       lit(0.0), (acc, x) => acc + x) / col("c_norm")
 
-  /** `df(idCol, embCol)` + nearest-centroid `cell` column. k ≤ cap: one
-    * codegen'd per-row projection (no exchange). k > cap: cross-join the
-    * k-row BROADCAST centroid relation (bounded fan-out — k rows per
+  /** `df(idCol, embCol)` + nearest-centroid `cell` column (0-based; ties,
+    * measure-zero on real vectors, toward the higher cell id). k ≤ cap:
+    * the codegen'd [[graft.functions.nearestCells]] kernel at nprobe = 1,
+    * its one cell taken by a one-element `explode_outer` (no exchange):
+    * an equi-join on `cell` infers `isnotnull(cell)`, and the Generate
+    * keeps that filter above the kernel, which would otherwise run once
+    * in the pushed-down filter and again in the projection. k > cap:
+    * cross-join the k-row BROADCAST centroid relation (bounded fan-out — k rows per
     * input row, never corpus×corpus), then per-id argmax. `max_by` over
     * struct(score, cell_id) keeps the inline path's tie order;
     * `any_value(emb)` is safe because every fanned-out row of an id
@@ -362,7 +358,8 @@ object SimilarityOps {
   private[graft] def assignCells(df: DataFrame, idCol: String, embCol: String,
       centroids: Array[Array[Double]]): DataFrame =
     if (centroids.length <= InlineCentroidCap)
-      df.select(col(idCol), col(embCol), nearestCell(col(embCol), centroids).as("cell"))
+      df.select(col(idCol), col(embCol),
+        explode_outer(graft.functions.nearestCells(col(embCol), centroids, 1)).as("cell"))
     else {
       val rank = struct(relCellScore(col(embCol)).as("s"), col("cell_id").as("i"))
       df.crossJoin(broadcast(centroidRelation(df.sparkSession, centroids)))
@@ -1324,6 +1321,18 @@ object SimilarityOps {
 
   // --------------------------------------------- doc-topic clusters (s9)
 
+  /** Every embeddings row's topic cell under the float-cast quantizer
+    * `cf`: `(vec_id, cluster, cos_proto)`, the rounded-cosine argmax and
+    * its 6-dp score from the codegen'd [[graft.functions.centroidArgmax]]
+    * kernel — s9's, s10's and e8's one assignment. One row per embeddings
+    * row: `vec_id` is the key. The kernel sits in a one-element
+    * `inline_outer`, so a filter inferred from a join on `cluster` or
+    * `cos_proto` stays above it instead of running it a second time. */
+  private[graft] def topicCells(emb: DataFrame, cf: Array[Array[Float]]): DataFrame =
+    emb.select(col("vec_id"),
+        inline_outer(array(graft.functions.centroidArgmax(col("embedding"), cf))))
+      .select(col("vec_id"), col("cell").as("cluster"), col("score").as("cos_proto"))
+
   /** s9: document-topic clustering — the Dolma/DCLM topic-balance
     * primitive: every document's embedding is assigned to its cell of
     * the PERSISTED s2 coarse quantizer ([[centroidsFor]] at the corpus'
@@ -1334,7 +1343,7 @@ object SimilarityOps {
     * hash-bucket device) can stratify by cluster.
     *
     * Oracle discipline — the one deliberate divergence from
-    * [[nearestCell]]: the argmax here runs over the 6-dp ROUNDED cosine
+    * [[assignCells]]: the argmax here runs over the 6-dp ROUNDED cosine
     * (ties toward the higher cell id), because round-6 cosine equality
     * is the established engine↔DuckDB contract (s1/d5) while unrounded
     * argmax is not replayable. The centroids are deterministic
@@ -1345,10 +1354,16 @@ object SimilarityOps {
     * and printed as their EXACT widened-double reprs so both engines
     * score identical values.
     *
-    * Scale shape: one broadcast of the k-row centroid relation, one
-    * corpus-linear scan with the k-way fan-out collapsed by a
-    * map-side-combined argmax aggregate (the [[assignCells]] > cap
-    * shape), one k-bounded size aggregate broadcast back. No window
+    * `vec_id` is the embeddings table's key: the assignment emits one
+    * row per embeddings row, so a duplicated id would appear once per
+    * copy (the oracle's per-id ranking would merge them).
+    *
+    * Scale shape: the assignment is [[topicCells]], the codegen'd
+    * [[graft.functions.centroidArgmax]] kernel as a narrow map over the
+    * embeddings scan (k dot products per row, the centroids one
+    * reference object); no fan-out, no `vec_id` exchange. The one
+    * exchange is the map-side-combined k-bounded size aggregate,
+    * broadcast back to a second pass of the same narrow map. No window
     * over doc-granular rows, nothing driver-side beyond the k×dim
     * centroids the quantizer already collects. */
   def s9TopicClusters(s: SparkSession, dir: String): DataFrame = {
@@ -1358,14 +1373,7 @@ object SimilarityOps {
     val cf: Array[Array[Float]] =
       centroidsFor(s, dir, k).map(_.map(_.toFloat))
     graft.sources.TrainedOracle.publish("s9_topic_clusters", s9SqlFor(cf, n))
-    val cent = cf.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq) }.toDF("cell_id", "c_vec")
-    val scored = Tables.embeddings(s, dir)
-      .crossJoin(broadcast(cent))
-      .select($"vec_id", $"cell_id",
-        round(cosineCol($"embedding", $"c_vec"), 6).as("sc"))
-    val assign = scored.groupBy($"vec_id")
-      .agg(max_by($"cell_id", struct($"sc", $"cell_id")).as("cluster"))
+    val assign = topicCells(Tables.embeddings(s, dir), cf)
     val sizes = assign.groupBy($"cluster")
       .agg(count(lit(1)).as("cluster_docs"))
     assign.join(broadcast(sizes), Seq("cluster"))
@@ -1421,14 +1429,20 @@ object SimilarityOps {
     * tie-break enters the contract), at the cost of the realized cut
     * overshooting when the boundary class is wide.
     *
-    * Scale shape: s9's assignment machinery verbatim (broadcast k-row
-    * centroids, map-side-combined argmax — no doc-granular window);
-    * pruning works over the (cluster, cos_proto) HISTOGRAM — bounded by
-    * k × the rounded-cosine domain, never by corpus size — with the
-    * cumulative window on that bounded relation only and the verdict
-    * applied as a broadcast boundary join (t17's cutoff device). Cluster
-    * count grows as √n under [[ivfK]], so per-cluster histogram slices
-    * stay balanced as the corpus scales. */
+    * `vec_id` is the embeddings key, as in s9: one output row per
+    * embeddings row.
+    *
+    * Scale shape: s9's assignment verbatim ([[topicCells]], one narrow
+    * [[graft.functions.centroidArgmax]] map whose score is `cos_proto`;
+    * no fan-out, no `vec_id` exchange, no doc-granular window); pruning
+    * works over the (cluster, cos_proto) HISTOGRAM — bounded by k × the
+    * rounded-cosine domain, never by corpus size — with the cumulative
+    * window and the cluster size (a second window over the same
+    * partitioning) on that bounded relation only, and the verdict
+    * applied to a second pass of the narrow map as a broadcast boundary
+    * join (t17's cutoff device). Cluster count grows as √n under
+    * [[ivfK]], so per-cluster histogram slices stay balanced as the
+    * corpus scales. */
   def s10ProtoPrune(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -1437,31 +1451,18 @@ object SimilarityOps {
     val cf: Array[Array[Float]] =
       centroidsFor(s, dir, k).map(_.map(_.toFloat))
     graft.sources.TrainedOracle.publish("s10_proto_prune", s10SqlFor(cf))
-    val cent = cf.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq) }.toDF("cell_id", "c_vec")
-    val scored = Tables.embeddings(s, dir)
-      .crossJoin(broadcast(cent))
-      .select($"vec_id", $"cell_id",
-        round(cosineCol($"embedding", $"c_vec"), 6).as("sc"))
-    // the winning sc IS max(sc): max_by orders by (sc, cell_id), so the
-    // chosen cell's score is maximal (score ties pick the higher cell,
-    // same score)
-    val assign = scored.groupBy($"vec_id").agg(
-      max_by($"cell_id", struct($"sc", $"cell_id")).as("cluster"),
-      max($"sc").as("cos_proto"))
-    val sizes = assign.groupBy($"cluster").agg(count(lit(1)).as("cluster_docs"))
+    val assign = topicCells(Tables.embeddings(s, dir), cf)
     val hist = assign.groupBy($"cluster", $"cos_proto")
       .agg(count(lit(1)).as("hc"))
     val wHigher = Window.partitionBy($"cluster").orderBy($"cos_proto".desc)
       .rowsBetween(Window.unboundedPreceding, -1)
     val cut = hist
       .withColumn("higher", coalesce(sum($"hc").over(wHigher), lit(0L)))
-      .join(broadcast(sizes), Seq("cluster"))
-      .select($"cluster", $"cos_proto",
+      .withColumn("cluster_docs", sum($"hc").over(Window.partitionBy($"cluster")))
+      .select($"cluster", $"cos_proto", $"cluster_docs",
         ($"higher" < expr(s"(cluster_docs + ${ProtoPruneDen - 1}) div $ProtoPruneDen"))
           .as("proto"))
-    assign.join(broadcast(sizes), Seq("cluster"))
-      .join(broadcast(cut), Seq("cluster", "cos_proto"))
+    assign.join(broadcast(cut), Seq("cluster", "cos_proto"))
       .select($"vec_id", $"cluster", $"cos_proto", $"cluster_docs",
         (!$"proto").as("keep"))
   }

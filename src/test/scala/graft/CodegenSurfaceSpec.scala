@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction, ScalaUDF}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
@@ -99,18 +99,46 @@ class CodegenSurfaceSpec extends SparkSpec {
     case p => p +: (p.children ++ p.subqueries).flatMap(nodes)
   }
 
-  private lazy val surfaces: Map[String, Seq[Expression]] = SparkEntry.queries.toSeq
+  private lazy val plans: Map[String, Seq[SparkPlan]] = SparkEntry.queries.toSeq
     .filterNot { case (k, _) => planless(k) }
-    .map { case (name, fn) =>
-      name -> nodes(fn(spark, sf).queryExecution.executedPlan)
-        .flatMap(_.expressions.flatMap(_.collect { case e => e }))
-    }.toMap
+    .map { case (name, fn) => name -> nodes(fn(spark, sf).queryExecution.executedPlan) }
+    .toMap
+
+  private lazy val surfaces: Map[String, Seq[Expression]] = plans.map { case (name, ns) =>
+    name -> ns.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+  }
+
+  /** The canonical forms of the graft kernels (the `GraftExpressions`
+    * package) inside `es`. */
+  private def kernels(es: Seq[Expression]): Set[Expression] = es.flatMap(_.collect {
+    case k if k.getClass.getPackage.getName == "org.apache.spark.sql.graftext" => k.canonicalized
+  }).toSet
 
   test("every non-exempt query plan is UDF-free") {
     val offenders = surfaces.collect {
       case (name, es) if !documentedUdfQueries(name) && es.exists(_.isInstanceOf[ScalaUDF]) => name
     }
     assert(offenders.isEmpty, s"unexpected UDFs in: ${offenders.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("kernel once: no graft kernel runs both in a filter and in a projection of one query") {
+    // Catalyst copies a projected expression into a filter it pushes
+    // below the projection (an inferred isnotnull, a threshold pushed into
+    // a join or a scan), and the kernel then runs twice per row
+    val twice = plans.toSeq.sortBy(_._1).flatMap { case (name, ns) =>
+      val filtered = kernels(ns.flatMap {
+        case f: FilterExec => Seq(f.condition)
+        case f: FileSourceScanExec => f.dataFilters
+        case _ => Nil
+      })
+      val projected = kernels(ns.flatMap {
+        case p: ProjectExec => p.projectList
+        case _ => Nil
+      })
+      (filtered intersect projected).map(k => s"$name: ${k.prettyName}")
+    }
+    assert(twice.isEmpty, s"kernels evaluated in a filter and again in a projection:\n" +
+      twice.mkString("\n"))
   }
 
   test("higher-order functions appear only in the queries the inventory lists") {

@@ -317,32 +317,49 @@ class PlanAuditSpec extends SparkSpec {
     assert(!"Exchange hashpartitioning\\(col#".r.findAllIn(p).hasNext, p)
   }
 
-  test("d12: the keep-first rank window runs over the semi-joined dup sliver; the rewrite never explodes tokens") {
-    import org.apache.spark.sql.catalyst.expressions.PosExplode
-    import org.apache.spark.sql.catalyst.plans.LeftSemi
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, Window => LWindow}
-    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GenerateExec}
+  test("d12: keep-first rides the class count, no window or sort on gh, the cut is a broadcast join condition; the rewrite never explodes tokens") {
+    import org.apache.spark.sql.catalyst.expressions.{GreaterThan, PosExplode}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Min}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GenerateExec, SortExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.graftext.SpanHashes
     val qe = SparkEntry.queries("d12_span_removal")(spark, sf).queryExecution
     val opt = qe.optimizedPlan
-    // the scale claim: ranking happens AFTER the df >= 2 semi-join has
-    // collapsed the window stream to duplicated occurrences — the rank
-    // window's child subtree must contain the LeftSemi join
-    val rankWindows = opt.collect { case w: LWindow => w }
-    assert(rankWindows.nonEmpty, s"expected the keep-first rank window in:\n$opt")
-    assert(rankWindows.exists(_.child.collectFirst {
-      case j: Join if j.joinType == LeftSemi => j
-    }.nonEmpty),
-      s"the rank window must sit above the dup semi-join (sliver only):\n$opt")
+    def onClass(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Boolean =
+      es.exists(_.references.exists(a => a.name == "gh" || a.name == "dup_gh"))
+    // keep-first needs no ranking: no window is keyed on the window class
+    // (the islands windows are keyed on doc_id)
+    val windows = opt.collect { case w: LWindow => w }
+    assert(windows.nonEmpty && windows.forall(w => !onClass(w.partitionSpec)),
+      s"a window is keyed on the window class:\n$opt")
+    // the class count carries the first occurrence: one aggregate keyed
+    // on gh computes both the count and the minimum
+    val classAggs = opt.collect {
+      case a: Aggregate if onClass(a.groupingExpressions) => a.aggregateExpressions
+        .flatMap(_.collect { case ae: AggregateExpression => ae.aggregateFunction })
+    }
+    assert(classAggs.size === 1 && classAggs.head.exists(_.isInstanceOf[Count]) &&
+      classAggs.head.exists(_.isInstanceOf[Min]),
+      s"expected one class aggregate with count and min:\n$opt")
     val exec = qe.executedPlan
     val p = exec.toString
-    assert(!p.contains("CartesianProduct"), p)
+    // the cut is the condition of the broadcast join on the class, and
+    // nothing sorts the window stream by class (a struct min would)
+    val cut = aqe.collect(exec) {
+      case j: BroadcastHashJoinExec if onClass(j.leftKeys) && onClass(j.rightKeys) => j
+    }
+    assert(cut.size === 1 && cut.head.condition.exists(_.isInstanceOf[GreaterThan]),
+      s"the keep-first cut must be a broadcast join condition:\n$p")
+    assert(!aqe.collect(exec) { case s: SortExec => s }.exists(s =>
+      onClass(s.sortOrder.map(_.child))), s"a sort is keyed on the window class:\n$p")
+    assert(!p.contains("SortAggregate") && !p.contains("CartesianProduct"), p)
     // the cleaned-text rewrite is the span_cut kernel against the doc's
     // collected interval list, and no array lambda is left in the plan
     assert(p.contains("span_cut"), s"expected the span_cut kernel in the projection:\n$p")
     assert(!p.contains("lambdafunction"), s"d12 still runs an array lambda:\n$p")
     // the window hashes run once per consumer of the window stream (the
-    // class count and the semi-join), each as the input of a posexplode,
+    // class count and the cut join), each as the input of a posexplode,
     // never again in an inferred filter or a scan's data filters
     def spans(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Int =
       es.map(_.collect { case k: SpanHashes => k }.size).sum
@@ -597,18 +614,40 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
   }
 
-  test("s9: argmax collapses map-side; sizes broadcast back; no doc-granular window") {
-    val p = plan("s9_topic_clusters")
-    // exchanges carry (vec_id) partials and (cluster) counts only — the
-    // k-way centroid fan-out must collapse BEFORE any exchange
+  /** The topic assignment's shape in `name`'s executed plan: every
+    * centroid_argmax runs once per embeddings pass, inside the one-element
+    * Generate directly over that scan (so no filter copies it), no
+    * centroid relation is planned, and no exchange is keyed on vec_id.
+    * Returns the plan string. */
+  private def topicAssignPlan(name: String): String = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, LocalTableScanExec}
+    import org.apache.spark.sql.graftext.CentroidArgmax
+    val exec = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
+    val p = exec.toString
+    val kernels = aqe.flatMap(exec)(_.expressions.flatMap(_.collect { case k: CentroidArgmax => k }))
+    val inGenerate = aqe.collect(exec) {
+      case g: GenerateExec if g.generator.collectFirst { case k: CentroidArgmax => k }.nonEmpty &&
+          g.child.collectFirst { case f: FileSourceScanExec => f }.nonEmpty => g
+    }
+    assert(kernels.nonEmpty && kernels.size === scansOf(p, "embeddings") &&
+      inGenerate.size === kernels.size,
+      s"$name: want one centroid_argmax per embeddings pass, each in its Generate:\n$p")
+    assert(aqe.collect(exec) { case l: LocalTableScanExec => l }.isEmpty,
+      s"$name plans a centroid relation:\n$p")
+    assert(!"Exchange hashpartitioning\\(vec_id".r.findFirstIn(p).isDefined,
+      s"$name: the assignment must not shuffle by vec_id:\n$p")
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
+    p
+  }
+
+  test("s9: one centroid_argmax per pass, no vec_id exchange; sizes broadcast back; no doc-granular window") {
+    val p = topicAssignPlan("s9_topic_clusters")
+    // the one exchange carries the (cluster) counts of the size aggregate
     val keys = "Exchange hashpartitioning\\(([a-z_#0-9L, ]+), \\d+\\)".r
       .findAllMatchIn(p).map(_.group(1).replaceAll("#\\d+L?", "")).toSeq
-    assert(keys.nonEmpty && keys.forall(k => k == "vec_id" || k == "cluster"),
-      s"unexpected exchange keys $keys:\n$p")
-    assert(!p.contains("Window"), s"no per-doc window — argmax is an aggregate:\n$p")
-    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
-      s"centroids and sizes must broadcast:\n$p")
-    assert(!p.contains("CartesianProduct"), p)
+    assert(keys === Seq("cluster"), s"unexpected exchange keys $keys:\n$p")
+    assert(!p.contains("Window"), s"no per-doc window — sizes are an aggregate:\n$p")
+    assert(p.contains("BroadcastHashJoin"), s"sizes must broadcast:\n$p")
   }
 
   test("t2b: per-row kernel — one scan, zero exchanges") {
@@ -785,14 +824,12 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("s10: s9's exchange geometry + windows only over the bounded histogram") {
-    val p = plan("s10_proto_prune")
-    // exchanges carry (vec_id) argmax partials, (cluster) or the
-    // (cluster, cos_proto) histogram keys only — never a doc-granular
-    // window partition
+    val p = topicAssignPlan("s10_proto_prune")
+    // exchanges carry the (cluster, cos_proto) histogram keys or
+    // (cluster) only — never a doc-granular window partition
     val keys = "Exchange hashpartitioning\\(([a-z_#0-9L, ]+), \\d+\\)".r
       .findAllMatchIn(p).map(_.group(1).replaceAll("#\\d+L?", "")).toSeq
-    assert(keys.nonEmpty && keys.forall(k =>
-      k == "vec_id" || k == "cluster" || k == "cluster, cos_proto"),
+    assert(keys.nonEmpty && keys.forall(k => k == "cluster" || k == "cluster, cos_proto"),
       s"unexpected exchange keys $keys:\n$p")
     // the cumulative window sits above the (cluster, cos_proto) histogram
     // aggregate (t17's bounded-relation discipline)
@@ -839,22 +876,32 @@ class PlanAuditSpec extends SparkSpec {
       s"m10 exchanges must be band-bucket, pair, or id keyed: $keys\n$p")
   }
 
-  test("e8: every consumer reads the cached assignment relation; nothing above the cache touches the corpus") {
-    val p = plan("e8_topic_mix")
-    // the (vec_id, cluster, t) relation feeds the output rows, the
-    // supply aggregate, and the scalar min — three cache reads; the
-    // N·k assignment + token-count subtree runs ONCE at persist time
-    // (its FileScan lines are echoes inside the InMemoryRelation print,
-    // the k5b convention)
-    assert("InMemoryTableScan".r.findAllIn(p).length === 3,
-      s"all three consumers must read the cached assignment:\n$p")
-    val live = p.take(p.indexOf("InMemoryRelation") max 0)
-    assert(live.nonEmpty, s"assignment relation must be cached:\n$p")
-    assert(scansOf(live, "embeddings") === 0 && scansOf(live, "documents") === 0,
-      s"nothing above the cache may re-scan the corpus:\n$live")
-    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
-      s"centroids and the k-row plan must broadcast:\n$p")
-    assert(!p.contains("CartesianProduct"), p)
+  test("e8: nothing cached, no nested-loop join, no corpus exchange run twice; the k-row plan broadcasts") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val p = topicAssignPlan("e8_topic_mix")
+    // the (vec_id, cluster, t) relation is re-planned for its two
+    // readers, not cached; the scalar min is a window over the k-row
+    // aggregate, not a 1-row cross join
+    assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"),
+      s"e8 must not cache the assignment:\n$p")
+    assert(p.contains("BroadcastHashJoin"), s"the k-row plan must broadcast:\n$p")
+    // run it: in the final plan no exchange over a corpus scan runs twice
+    // (a repeated one must be a ReusedExchange)
+    val df = SparkEntry.queries("e8_topic_mix")(spark, sf)
+    df.collect()
+    val fin = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => fail(s"e8: not an adaptive plan:\n$other")
+    }
+    def readsCorpus(plan: SparkPlan): Boolean = plan.collectFirst {
+      case f: FileSourceScanExec if f.relation.location.rootPaths.exists(r =>
+        r.getName == "documents.parquet" || r.getName == "embeddings.parquet") => f
+    }.nonEmpty
+    val corpus = aqe.collect(fin) { case e: Exchange if readsCorpus(e.child) => e }
+    assert(corpus.nonEmpty && corpus.map(_.canonicalized).distinct.size === corpus.size,
+      s"a corpus exchange runs twice:\n$fin")
   }
 
   test("st7b: the bloom probe prescreens BEFORE the digest join; branches recombine by union") {

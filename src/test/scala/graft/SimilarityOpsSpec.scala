@@ -136,8 +136,8 @@ class SimilarityOpsSpec extends SparkSpec {
         .collect().toMap
     val viaRelation = cellsOf(
       SimilarityOps.assignCells(emb, "vec_id", "embedding", centroids))
-    val viaInline = cellsOf(emb.select($"vec_id",
-      SimilarityOps.nearestCell($"embedding", centroids).as("cell")))
+    val viaInline = cellsOf(
+      SimilarityOps.probeCellsInline(emb, "vec_id", "embedding", centroids, 1))
     assert(viaRelation.size === 400)
     assert(viaRelation === viaInline)
 

@@ -209,6 +209,26 @@ class TablesReadSpec extends SparkSpec {
     assert(fp(s"${tmp("fp")}/missing.parquet").files === 0)
   }
 
+  test("a memo holds its session weakly: a dropped session's entries go once it is collected") {
+    import java.lang.ref.WeakReference
+    val memo = new graft.sources.FingerprintMemo[Array[Byte]]
+    memo.getOrBuild(spark, "t", "v", "f0")(Array[Byte](1))
+    // the new session is reachable only from this frame
+    def buildInNewSession(): WeakReference[org.apache.spark.sql.SparkSession] = {
+      val s2 = spark.newSession()
+      memo.getOrBuild(s2, "t", "v", "f0")(new Array[Byte](1 << 10))
+      assert(memo.getOrBuild(s2, "t", "v", "f0")(fail("a hit must not rebuild")).length === 1 << 10)
+      new WeakReference(s2)
+    }
+    val ref = buildInNewSession()
+    assert(memo.size === 2)
+    var tries = 0
+    while (ref.get != null && tries < 50) { System.gc(); Thread.sleep(100); tries += 1 }
+    assert(ref.get == null, s"the dropped session is still reachable after $tries collections")
+    assert(memo.size === 1, "the dropped session's entry must go with it")
+    assert(memo.getOrBuild(spark, "t", "v", "f0")(fail("a hit must not rebuild")).head === 1)
+  }
+
   test("one memo device and one listing: no TrieMap outside TrainedOracle, no listFiles in src/main") {
     // driver-side state is a FingerprintMemo over Tables.fingerprint;
     // TrainedOracle is Verify's ordering registry, keyed on query names
